@@ -6,17 +6,23 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.ColumnReader
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.parquet.schema.PrimitiveType
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Manifest-backed file catalog for corpora beyond driver-listing scale
   * (round-10 directive; round-12 rebuild for typed multi-column zone maps
@@ -76,8 +82,9 @@ object Manifest {
     * own SUM result for that column ([[sumType]]). Parquet footers do not
     * carry sums, but the manifest writer sees the data at write time —
     * [[build]] folds them into its bootstrap scan for free, and [[update]]
-    * runs a column-pruned scan over ONLY the novel files (the
-    * `graft.manifest.recordSums` write-time trade) — so repeated
+    * folds them out of ONLY the novel files, in the same per-file pass that
+    * reads their footers (the `graft.manifest.recordSums` write-time
+    * trade) — so repeated
     * aggregate-fingerprint validations (`SUM(key)` — the reference's
     * validator layer 4) become catalog-speed metadata reads instead of
     * table scans. NULL sum + known null count < rows = unknown = the
@@ -86,17 +93,17 @@ object Manifest {
     * ([[append]] aligns both directions). */
   val SumsColumn = "sums"
 
-  /** Session conf: record per-file sums during [[update]] via a
-    * column-pruned data scan of the novel files (default on — at write
-    * time those files are page-cache hot and the scan reads only the
-    * numeric key columns). `false` restores the strictly footer-only
+  /** Session conf: record per-file sums during [[update]] by reading the
+    * novel files' numeric key columns in the footer pass (default on — at
+    * write time those files are page-cache hot and only the key columns'
+    * chunks are fetched). `false` restores the strictly footer-only
     * update. */
   val RecordSumsConf = "graft.manifest.recordSums"
 
-  /** Session conf: largest novel-file batch the sums scan will
-    * materialize driver-side as a path list (`spark.read.parquet` needs
-    * one). Past the cap the batch's sums stay NULL — SUM answers decline,
-    * costing performance only. */
+  /** Session conf: largest novel-file batch whose sums [[update]]
+    * records. Past the cap the batch's sums stay NULL — SUM answers
+    * decline, costing performance only; `--backfill-sums` pages them in
+    * later, bounded by the same cap per pass. */
   val SumScanMaxFilesConf = "graft.manifest.sumScanMaxFiles"
   val SumScanMaxFilesDefault = 100000
 
@@ -141,7 +148,7 @@ object Manifest {
     * manifest that predates it, null-filled for entries that lack it), so
     * the sums rollout never strands an existing catalog. */
   def append(spark: SparkSession, entries: DataFrame, manifestPath: String): Unit = {
-    val have = existingSchema(spark, manifestPath)
+    val have = catalogSchema(spark, manifestPath)
     val sumsAligned = have match {
       case Some(h) if !h.fieldNames.contains(SumsColumn) &&
           entries.columns.contains(SumsColumn) =>
@@ -166,24 +173,56 @@ object Manifest {
       .write.mode("append").parquet(manifestPath)
   }
 
-  private def existingSchema(spark: SparkSession, manifestPath: String): Option[StructType] = {
+  /** The catalog's schema, read from ONE part file's footer on the driver
+    * (`spark.read.parquet(dir).schema` runs a schema-inference job per
+    * call, and maintenance asks several times per update). Every part file
+    * shares one schema — [[append]]'s gate — so one footer speaks for all.
+    * None when the directory is absent or holds no committed part file
+    * yet: another writer's FIRST append is mid-flight (committer
+    * _temporary only). Semantically an empty catalog — the caller's diff
+    * then treats every file as novel, and the pre-mutation fence catches
+    * any displacement before a write could land (round-17 review: a
+    * displaced writer's re-diff racing the reclaimer's bootstrap append
+    * died here instead of fencing out and retrying). */
+  private def catalogSchema(spark: SparkSession, manifestPath: String): Option[StructType] = {
     val p = new Path(manifestPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else
-      try Some(spark.read.parquet(manifestPath).schema)
-      catch {
-        // the directory can exist with no readable footer yet: another
-        // writer's FIRST append is mid-flight (committer _temporary
-        // only). Semantically an empty catalog — the caller's diff then
-        // treats every file as novel, and the pre-mutation fence catches
-        // any displacement before a write could land (round-17 review:
-        // a displaced writer's re-diff racing the reclaimer's bootstrap
-        // append died here instead of fencing out and retrying)
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-      }
+    val conf = spark.sessionState.newHadoopConf()
+    val parts =
+      try p.getFileSystem(conf).listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    parts.find(s => s.isFile && visible(s.getPath.getName))
+      .map(s => footerSchema(spark, Seq(s.getPath), conf))
   }
+
+  /** Spark's schema for parquet files, merged across their footers read on
+    * the driver — the inference `spark.read.option("mergeSchema", "true")`
+    * runs (the Spark row metadata a Spark writer left in the footer first,
+    * the converted parquet schema otherwise), without its Spark job.
+    * Fields merge by name in first-seen order; one name with two types
+    * (int vs bigint) fails loudly, as parquet's own merge does. */
+  private def footerSchema(spark: SparkSession, paths: Seq[Path],
+                           conf: Configuration): StructType = {
+    require(paths.nonEmpty, "footerSchema needs at least one path")
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    paths.map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case st: StructType => st }
+        .getOrElse(converter.convert(meta.getSchema))
+    }.reduce { (a, b) =>
+      b.foreach(f => a.find(_.name == f.name).foreach(g =>
+        require(g.dataType.simpleString == f.dataType.simpleString,
+          s"failed to merge incompatible types for ${f.name}: " +
+            s"${g.dataType.simpleString} vs ${f.dataType.simpleString}")))
+      StructType(a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name)))
+    }
+  }
+
+  /** Entries Spark's file index hides (_SUCCESS, _manifest, ._copying). */
+  private def visible(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
 
   /** Build manifest entries for one fixture table directory by scanning it
     * once — the bootstrap path for corpora that predate their manifest.
@@ -242,25 +281,31 @@ object Manifest {
     // each parquet statistic must be converted into
     val dataSchema = spark.read.parquet(paths: _*).schema
     val slices = math.max(1, math.min(paths.size, 64))
-    fromFootersRdd(spark, spark.sparkContext.parallelize(paths, slices),
-      table, keyCols, dataSchema)
+    val (rows, schema) = footerRows(spark,
+      spark.sparkContext.parallelize(paths, slices), table, keyCols, dataSchema,
+      sums = false)
+    spark.createDataFrame(rows, schema)
   }
 
-  /** Core of [[fromFooters]], over an RDD of paths: the path set flows
-    * from wherever it was computed (a parallelized Seq, or [[updateDir]]'s
-    * distributed listing-vs-manifest anti-join) straight into per-task
-    * footer reads — it never has to exist on the driver. */
-  private def fromFootersRdd(spark: SparkSession,
-                             paths: org.apache.spark.rdd.RDD[String],
-                             table: String, keyCols: Seq[String],
-                             dataSchema: StructType): DataFrame = {
+  /** Core of [[fromFooters]] and [[updateDir]]'s write-time pass, over an
+    * RDD of paths: the path set flows from wherever it was computed (a
+    * parallelized Seq, or the distributed listing⟗catalog diff) straight
+    * into per-task footer reads — it never has to exist on the driver.
+    * With `sums`, each task also folds the numeric key columns' per-file
+    * sums from the file it already has open ([[fileSums]]), so footer
+    * stats and sums cost ONE pass; without, [[SumsColumn]] is a struct of
+    * NULLs (unknown). */
+  private def footerRows(spark: SparkSession, paths: RDD[String],
+                         table: String, keyCols: Seq[String],
+                         dataSchema: StructType,
+                         sums: Boolean): (RDD[Row], StructType) = {
     val keyFields = keyCols.map(k => dataSchema.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(
         s"key column $k not in data schema ${dataSchema.simpleString}")))
     val keyStruct = StructType(keyFields.map(f => StructField(f.name, f.dataType)))
     val nullStruct = StructType(keyFields.map(f => StructField(f.name, LongType)))
-    val sumFields = keyFields.flatMap(f =>
-      sumType(f.dataType).map(st => StructField(f.name, st)))
+    val sumKeys = keyFields.flatMap(f =>
+      sumType(f.dataType).map(st => (f.name, st)))
     val outSchema = StructType(Seq(
       StructField("path", StringType, nullable = false),
       StructField("table", StringType, nullable = false),
@@ -269,99 +314,239 @@ object Manifest {
       StructField("mins", keyStruct),
       StructField("maxs", keyStruct),
       StructField("nulls", nullStruct)) ++
-      // footers carry no sums: the column exists (schema-stable with the
-      // data-scan build) but stays NULL until the update-path sums scan
-      // fills it
-      (if (sumFields.isEmpty) Nil
-       else Seq(StructField(SumsColumn, StructType(sumFields)))))
+      // schema-stable with the data-scan build whether or not this pass
+      // records the sums
+      (if (sumKeys.isEmpty) Nil
+       else Seq(StructField(SumsColumn,
+         StructType(sumKeys.map { case (k, st) => StructField(k, st) })))))
     val hconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val keyTypes = keyFields.map(f => (f.name, f.dataType))
-    val nSums = sumFields.size
-    val rows = paths.map { p =>
+    val rows = paths.mapPartitions { it =>
       val conf = hconf.value
-      val hp = new Path(new java.net.URI(p))
-      val len = hp.getFileSystem(conf).getFileStatus(hp).getLen
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(hp, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val nRows = blocks.map(_.getRowCount).sum
-        val stats = keyTypes.map { case (k, dt) => footerMinMax(blocks, k, dt) }
-        val nulls = keyTypes.map { case (k, _) => footerNulls(blocks, k) }
-        val base = Seq[Any](p, table, nRows, len,
-          Row(stats.map(_._1): _*), Row(stats.map(_._2): _*),
-          Row(nulls: _*))
-        Row.fromSeq(
-          if (nSums == 0) base
-          else base :+ Row.fromSeq(Seq.fill[Any](nSums)(null)))
-      } finally reader.close()
+      it.map(p => fileEntry(p, conf, table, keyTypes, sumKeys, sums))
     }
-    spark.createDataFrame(rows, outSchema)
+    (rows, outSchema)
+  }
+
+  /** One catalog row for the parquet file at `p`, from a single open of
+    * it: row count, length and key min/max/nulls from the footer, and
+    * (with `sums`) the key sums from its data pages. The sums cell keeps
+    * the data-scan shapes exactly: an empty file has no row to group, so
+    * its whole struct is NULL; unrecorded sums are a struct of NULLs. */
+  private def fileEntry(p: String, conf: Configuration, table: String,
+                        keyTypes: Seq[(String, DataType)],
+                        sumKeys: Seq[(String, DataType)], sums: Boolean): Row = {
+    val in = HadoopInputFile.fromPath(new Path(new java.net.URI(p)), conf)
+    val reader = ParquetFileReader.open(in)
+    try {
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val nRows = blocks.map(_.getRowCount).sum
+      val stats = keyTypes.map { case (k, dt) => footerMinMax(blocks, k, dt) }
+      val nulls = keyTypes.map { case (k, _) => footerNulls(blocks, k) }
+      val base = Seq[Any](p, table, nRows, in.getLength,
+        Row(stats.map(_._1): _*), Row(stats.map(_._2): _*), Row(nulls: _*))
+      Row.fromSeq(
+        if (sumKeys.isEmpty) base
+        else if (!sums) base :+ Row.fromSeq(Seq.fill[Any](sumKeys.size)(null))
+        else if (nRows == 0) base :+ null
+        else base :+ Row.fromSeq(fileSums(reader, sumKeys)))
+    } finally reader.close()
+  }
+
+  /** Per-key `try_sum` over one open file's key columns, read page by page
+    * through parquet's column readers (only the key columns' chunks are
+    * fetched). A key absent from the file, or stored in a physical form
+    * [[SumAcc]] does not map, sums to NULL — unknown, so SUM answers
+    * decline — never to a wrong value. */
+  private def fileSums(reader: ParquetFileReader,
+                       keys: Seq[(String, DataType)]): Seq[Any] = {
+    val meta = reader.getFooter.getFileMetaData
+    val schema = meta.getSchema
+    val accs = keys.map { case (k, st) =>
+      if (!schema.containsField(k)) None
+      else {
+        val t = schema.getType(schema.getFieldIndex(k))
+        if (!t.isPrimitive || t.isRepetition(Type.Repetition.REPEATED)) None
+        else SumAcc(t.asPrimitiveType, st).map(k -> _)
+      }
+    }
+    val live = accs.flatten
+    if (live.nonEmpty) {
+      val proj = new MessageType(schema.getName,
+        live.map(a => schema.getType(schema.getFieldIndex(a._1))).asJava)
+      reader.setRequestedSchema(proj)
+      // the readers never push values into a converter; they need one to
+      // exist for each projected column
+      val leaf = new PrimitiveConverter {}
+      val root = new GroupConverter {
+        def getConverter(i: Int): Converter = leaf
+        def start(): Unit = ()
+        def end(): Unit = ()
+      }
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val store = new ColumnReadStoreImpl(pages, root, proj, meta.getCreatedBy)
+        live.foreach { case (k, acc) =>
+          val cr = store.getColumnReader(proj.getColumnDescription(Array(k)))
+          val defined = cr.getDescriptor.getMaxDefinitionLevel
+          var i = 0L
+          val n = cr.getTotalValueCount
+          while (i < n) {
+            if (cr.getCurrentDefinitionLevel == defined) acc.add(cr)
+            cr.consume()
+            i += 1
+          }
+        }
+        pages = reader.readNextRowGroup()
+      }
+    }
+    accs.map(_.fold(null: Any)(_._2.result))
+  }
+
+  /** `try_sum` over one column, row by row in file order — the order a
+    * per-file scan adds them, so the result equals the data scan's:
+    * integral values into a long, NULL once a step overflows; float and
+    * double into a double; decimals exactly at the column's scale, NULL
+    * once a step exceeds the result precision (Spark's aggregation buffer
+    * nulls an overflowing decimal the same way). No non-null value: NULL. */
+  private final class SumAcc(read: ColumnReader => Any, st: DataType) {
+    private var acc: Any = null
+    private var overflow = false
+    private val limit = st match {
+      case d: DecimalType => java.math.BigInteger.TEN.pow(d.precision)
+      case _ => null
+    }
+    def add(cr: ColumnReader): Unit = if (!overflow) {
+      val v = read(cr)
+      acc = (acc, v) match {
+        // Spark's SUM starts a double from 0.0, so a lone -0.0 sums to 0.0
+        case (null, x: Double) => 0.0 + x
+        case (null, x) => x
+        case (a: Long, x: Long) =>
+          val r = a + x
+          // signs agree and the result's sign flipped: two's-complement overflow
+          if (((a ^ r) & (x ^ r)) < 0) overflow = true
+          r
+        case (a: Double, x: Double) => a + x
+        case (a: java.math.BigDecimal, x: java.math.BigDecimal) => a.add(x)
+        case (a, x) => throw new IllegalStateException(s"sum of $a and $x")
+      }
+      acc match {
+        case d: java.math.BigDecimal if d.unscaledValue.abs.compareTo(limit) >= 0 =>
+          overflow = true
+        case _ =>
+      }
+    }
+    def result: Any = if (overflow) null else acc
+  }
+
+  private object SumAcc {
+    /** The accumulator for a column stored as `t` whose sum is typed `st`,
+      * or None when the physical form has no exact mapping here. */
+    def apply(t: PrimitiveType, st: DataType): Option[SumAcc] = {
+      val unsigned = t.getLogicalTypeAnnotation match {
+        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => !i.isSigned
+        case _ => false
+      }
+      val scale = t.getLogicalTypeAnnotation match {
+        case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => Some(d.getScale)
+        case _ => None
+      }
+      def dec(unscaled: ColumnReader => java.math.BigInteger, s: Int) =
+        Some(new SumAcc(cr => new java.math.BigDecimal(unscaled(cr), s), st))
+      def big(v: Long) = java.math.BigInteger.valueOf(v)
+      (t.getPrimitiveTypeName, st) match {
+        // UINT_32 is a Spark long: the INT32 bits read unsigned
+        case (PrimitiveTypeName.INT32, LongType) if scale.isEmpty =>
+          Some(new SumAcc(cr =>
+            if (unsigned) Integer.toUnsignedLong(cr.getInteger) else cr.getInteger.toLong, st))
+        case (PrimitiveTypeName.INT64, LongType) if scale.isEmpty && !unsigned =>
+          Some(new SumAcc(_.getLong, st))
+        case (PrimitiveTypeName.FLOAT, DoubleType) =>
+          Some(new SumAcc(_.getFloat.toDouble, st))
+        case (PrimitiveTypeName.DOUBLE, DoubleType) =>
+          Some(new SumAcc(_.getDouble, st))
+        case (PrimitiveTypeName.INT32, d: DecimalType) if scale.contains(d.scale) =>
+          dec(cr => big(cr.getInteger.toLong), d.scale)
+        case (PrimitiveTypeName.INT64, d: DecimalType) if scale.contains(d.scale) =>
+          dec(cr => big(cr.getLong), d.scale)
+        case (PrimitiveTypeName.BINARY | PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
+              d: DecimalType) if scale.contains(d.scale) =>
+          dec(cr => new java.math.BigInteger(cr.getBinary.getBytes), d.scale)
+        case _ => None
+      }
+    }
   }
 
   /** Distributed recursive listing of the data files under `dir`, one row
-    * per file (round-12 verdict item 5). The driver only ever holds
-    * DIRECTORY names — bounded by tree width — while EXECUTORS stream each
-    * directory's entries through `listStatusIterator`, so a flat
-    * 10^8-file table neither materializes a path array on the driver nor
-    * a status array anywhere. Hidden entries (`_`/`.` prefixes: _SUCCESS,
-    * _manifest, ._copying) are skipped, matching what Spark's own file
-    * index exposes; path strings render via `Path.toUri` — byte-identical
-    * to `input_file_name()`/`DataFrame.inputFiles`, which is what keyed
-    * the manifest's existing rows. */
+    * per file (round-12 verdict item 5), materialized and persisted; the
+    * CALLER unpersists it. See [[listFiles]]. */
   private[sources] def listFilesDF(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val (files, levels) = listFiles(spark, dir)
+    // materialize the union off the level caches once, then release them
+    try {
+      val out = files.toDF("path").persist()
+      out.count()
+      out
+    } finally levels.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The driver only ever holds DIRECTORY names — bounded by tree width —
+    * while EXECUTORS stream each directory's entries through
+    * `listStatusIterator`, so a flat 10^8-file table neither materializes
+    * a path array on the driver nor a status array anywhere. Hidden
+    * entries ([[visible]]) are skipped, matching what Spark's own file
+    * index exposes; path strings render via `Path.toUri` — byte-identical
+    * to `input_file_name()`/`DataFrame.inputFiles`, which is what keyed
+    * the manifest's existing rows. Returns the file paths (read off
+    * per-level caches) and those caches: the caller materializes what it
+    * derives from the paths, then unpersists the levels. */
+  private def listFiles(spark: SparkSession,
+                        dir: String): (RDD[String], Seq[RDD[(Boolean, String)]]) = {
     val hconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    def visible(name: String): Boolean =
-      !name.startsWith("_") && !name.startsWith(".")
-    // one executor pass per tree LEVEL: emits ("f", path) rows for files
-    // and ("d", path) rows for subdirectories; only the (tree-width-
-    // bounded) directory side is collected to plan the next level
+    // one executor pass per tree LEVEL: emits (isDir, path) for every
+    // visible entry; only the (tree-width-bounded) directory side is
+    // collected to plan the next level
     def level(dirs: Seq[String]) = {
       val slices = math.max(1, math.min(dirs.size, 64))
       spark.sparkContext.parallelize(dirs, slices).mapPartitions { it =>
         val conf = hconf.value
         it.flatMap { d =>
           val dp = new Path(new java.net.URI(d))
-          val fs = dp.getFileSystem(conf)
-          val entries = fs.listStatusIterator(dp)
-          new Iterator[(String, String)] {
+          val entries = dp.getFileSystem(conf).listStatusIterator(dp)
+          new Iterator[(Boolean, String)] {
             def hasNext = entries.hasNext
             def next() = {
               val st = entries.next()
-              val tag = if (st.isDirectory) "d" else "f"
-              (tag, st.getPath.toUri.toString)
+              (st.isDirectory, st.getPath.toUri.toString)
             }
           }.filter(e => visible(new Path(e._2).getName))
         }
-      }.toDF("tag", "path")
+      }.persist(StorageLevel.MEMORY_AND_DISK)
     }
     val rootUri = new Path(dir).getFileSystem(hconf.value)
       .makeQualified(new Path(dir)).toUri.toString
     var frontier = Seq(rootUri)
-    var files: Option[DataFrame] = None
-    val levels = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val levels = scala.collection.mutable.ListBuffer.empty[RDD[(Boolean, String)]]
     // a walk that dies partway (directory deleted between levels, terminal
     // task failure) must not leak its per-level caches — the streaming
-    // ingest path calls this every micro-batch, and leaked blocks would
+    // ingest path lists every micro-batch, and leaked blocks would
     // accumulate across transient failures (round-13 review)
     try {
       while (frontier.nonEmpty) {
         // each level is listed ONCE (persisted): the directory side drives
         // the next level, the file side feeds the result union
-        val lv = level(frontier).persist()
+        val lv = level(frontier)
         levels += lv
-        val lvFiles = lv.filter(col("tag") === "f").select("path")
-        files = Some(files.fold(lvFiles)(_.unionByName(lvFiles)))
-        frontier = lv.filter(col("tag") === "d")
-          .select("path").as[String].collect().toSeq
+        frontier = lv.filter(_._1).map(_._2).collect().toSeq
       }
-      // materialize the union off the level caches once, then release
-      // them; the CALLER unpersists the returned frame when its
-      // maintenance pass is done
-      val out = files.get.persist()
-      out.count()
-      out
-    } finally levels.foreach(_.unpersist(blocking = false))
+      (spark.sparkContext.union(levels.toSeq.map(_.filter(!_._1).map(_._2))), levels.toSeq)
+    } catch {
+      case e: Throwable =>
+        levels.foreach(_.unpersist(blocking = false))
+        throw e
+    }
   }
 
   /** Fold one column's min/max across row-group statistics; (null, null)
@@ -456,80 +641,138 @@ object Manifest {
     * set against the manifest by path, footer-scan only the novel files,
     * append their entries, and drop entries whose files no longer exist
     * (a SaveMode.Overwrite rewrote the directory under fresh part names).
-    * Returns (filesAdded, filesRemoved).
-    *
-    * Fully distributed (round-12 verdict item 5 — the old driver-side
-    * `inputFiles` array + novel-path `collect()` capped a table at ~10^6
-    * files per update): [[listFilesDF]] walks the directory tree with
-    * executors streaming each directory's entries, the novel/stale diff is
-    * a pair of anti-joins, and the novel files flow straight into
-    * distributed footer reads ([[fromFootersRdd]]) — no path set ever
-    * materializes on the driver; only the two COUNTS come back. Path
-    * strings render via `Path.toUri`, byte-identical to what [[build]]'s
-    * `input_file_name()` recorded — Hadoop's `FileStatus.getPath.toString`
-    * renders `file:/` where Spark renders `file:///`, and a mismatched
-    * diff would re-add every file forever ([[listFilesDF]] pins parity in
-    * ManifestSpec).
-    *
-    * When stale rows exist the manifest is rewritten through a temp dir +
-    * rename (parquet cannot delete rows in place); this is a single-writer
-    * maintenance op by design, like compaction. */
+    * Returns (filesAdded, filesRemoved). See [[updateDir]]. */
   def update(spark: SparkSession, dataDir: String, table: String,
              keyCols: Seq[String], manifestPath: String): (Long, Long) =
     updateDir(spark, s"$dataDir/$table.parquet", table, keyCols, manifestPath)
 
   /** [[update]] against a table directory named directly (the streaming
     * ingest path owns its corpus dir without the `dir/table.parquet`
-    * layout convention). */
+    * layout convention). Runs [[commitDir]]: four Spark jobs on an
+    * uncontended flat directory, whatever its file count, and a commit
+    * claim that reuses the pre-pass diff while the catalog's existence and
+    * `__version` are unchanged. */
   def updateDir(spark: SparkSession, tableDir: String, table: String,
                 keyCols: Seq[String], manifestPath: String): (Long, Long) = {
-    val current = listFilesDF(spark, tableDir) // persisted by the lister
-    // PRE-PASS, outside the commit section (round-15 verdict item 6: the
-    // claim hold time bounds multi-writer throughput, and footer scans
-    // were the only non-metadata cost inside it): diff against the
-    // manifest's CURRENT state and footer-scan the novel files now, while
-    // nobody is blocked on the ring. Inside the claim only a cheap
-    // RE-DIFF runs: pre-scanned entries whose paths are still novel are
-    // reused; paths that became novel since (a concurrent same-table
-    // writer rewrote the catalog under us) are footer-scanned inside —
-    // the rare case, bounded by actual contention.
-    var preEntries: Option[DataFrame] = None
+    val c = commitDir(spark, tableDir, table, keyCols, manifestPath)
+    (c.added, c.removed)
+  }
+
+  /** What one [[commitDir]] committed: files added and removed, and the
+    * table's row total in the catalog after the commit — None when a
+    * kept entry's row count is unknown. */
+  final case class Commit(added: Long, removed: Long, tableRows: Option[Long])
+
+  /** [[updateDir]], also returning the table's committed row total — a
+    * write-time sink reports it as the rows it holds instead of listing
+    * and counting the directory again.
+    *
+    * Job budget (uncontended, flat table directory): FOUR Spark jobs
+    * whatever the file count — the listing pass, the diff pass, the footer
+    * pass (sums folded in) and the append write. A partitioned layout adds
+    * one listing job per directory level; stale entries turn the append
+    * into a rewrite of the catalog. The shape:
+    *
+    *  - [[listFiles]] walks the directory tree with executors streaming
+    *    each directory's entries; no path set is ever collected;
+    *  - ONE listing⟗catalog cogroup ([[diff]]) tags every path novel,
+    *    stale or kept, persisted; one pass over it ([[summarize]]) yields
+    *    the novel and stale counts, the kept rows' total and ≤8 probe
+    *    paths, whose footers the driver reads for the key types (no
+    *    inference job);
+    *  - ONE footer pass over the novel files ([[footerRows]]) reads each
+    *    file's footer and, with [[RecordSumsConf]] on and the batch within
+    *    [[SumScanMaxFilesConf]], its key-column sums, from one open;
+    *  - inside the commit claim the pre-pass diff is REUSED when the
+    *    catalog's existence and `__version` are unchanged since the
+    *    pre-pass read them — every catalog mutation ([[commitDir]],
+    *    [[compact]], [[backfillSumsPass]], [[clear]]) moves one of the
+    *    two. Only when one moved (a concurrent writer committed, or this
+    *    section's own earlier attempt landed unstamped) does the claim
+    *    re-diff, reusing the pre-scanned entries whose paths are still
+    *    novel and footer-scanning only paths that became novel since —
+    *    the rare case, bounded by actual contention.
+    *
+    * Path strings render via `Path.toUri`, byte-identical to what
+    * [[build]]'s `input_file_name()` recorded — Hadoop's
+    * `FileStatus.getPath.toString` renders `file:/` where Spark renders
+    * `file:///`, and a mismatched diff would re-add every file forever
+    * ([[listFilesDF]] pins parity in ManifestSpec).
+    *
+    * When stale rows exist the manifest is rewritten through a temp dir +
+    * rename (parquet cannot delete rows in place), like compaction. */
+  def commitDir(spark: SparkSession, tableDir: String, table: String,
+                keyCols: Seq[String], manifestPath: String): Commit = {
+    // read BEFORE the catalog itself: a commit landing after this point
+    // moves the state, so an equal state at claim time means the diff
+    // below was taken against the catalog as committed
+    val state0 = catalogState(spark, manifestPath)
+    val (files, levels) = listFiles(spark, tableDir)
+    val cached = scala.collection.mutable.ListBuffer[RDD[_]](levels: _*)
+    def keep[T](rdd: RDD[T]): RDD[T] = {
+      cached += rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd
+    }
     // set once a physical append/rewrite may have landed without its
     // version stamp (a fence failure between write and bump): the retry
-    // section must stamp even when its own re-diff finds nothing to do,
-    // or a version-poller could miss the landed mutation
+    // section must re-diff (its own rows are in the catalog now) and
+    // stamp even when the re-diff finds nothing to do, or a
+    // version-poller could miss the landed mutation
     var appliedUnstamped = false
     try {
-      preEntries = footerEntries(spark,
-        novelFiles(spark, current, table, manifestPath), table, keyCols)
-      preEntries.foreach { e => e.persist(); e.count() } // force footer tasks NOW
+      val pre = keep(diff(spark, files, table, manifestPath))
+      val s0 = summarize(pre)
+      levels.foreach(_.unpersist(blocking = false))
+      // PRE-PASS, outside the commit section (round-15 verdict item 6:
+      // the claim hold time bounds multi-writer throughput): the footer
+      // pass over the novel files runs while nobody is blocked on the ring
+      val preEntries =
+        if (s0.novel == 0) None
+        else Some(scanFooters(spark, novelPaths(pre), s0.probes, table, keyCols,
+          sums = spark.conf.get(RecordSumsConf, "true").toBoolean &&
+            s0.novel <= spark.conf.get(SumScanMaxFilesConf,
+              SumScanMaxFilesDefault.toString).toInt, keep))
       withCommitLock(spark, manifestPath) {
-        val novel = novelFiles(spark, current, table, manifestPath)
-        val stale = staleEntries(spark, current, table, manifestPath)
-        val novelN = novel.count()
-        val staleN = stale.count()
-        val entries =
-          if (novelN == 0L) None
-          else preEntries match {
-            case Some(pre) =>
-              val matched = pre.join(novel.select("path"), Seq("path"), "left_semi")
-              val residual = novel.join(pre.select("path"), Seq("path"), "left_anti")
-              // residual files (same-table contention only) footer-scan
-              // inside the claim but SKIP the sums data scan — claim hold
-              // time stays metadata-bounded; `--backfill-sums` fills them
-              // later (round-16 review)
-              footerEntries(spark, residual, table, keyCols, enrich = false) match {
-                case Some(extra) => Some(matched.unionByName(extra))
-                case None => Some(matched)
+        val (s, d, entries) =
+          if (!appliedUnstamped && catalogState(spark, manifestPath) == state0)
+            (s0, pre, preEntries)
+          else {
+            // the catalog moved under the pre-pass: re-diff the same
+            // listing against it
+            val d = keep(diff(spark, pre.filter(_.tag != Stale).map(_.path),
+              table, manifestPath))
+            val s = summarize(d)
+            val entries =
+              if (s.novel == 0) None
+              else preEntries match {
+                case Some(pe) =>
+                  val novel = pathsDF(spark, novelPaths(d))
+                  val matched = pe.df.join(novel, Seq("path"), "left_semi")
+                  val residual = novel.join(pe.df.select("path"), Seq("path"), "left_anti")
+                    .as[String](Encoders.STRING)
+                  // residual files (same-table contention only) footer-scan
+                  // inside the claim but SKIP the sums — claim hold time
+                  // stays metadata-bounded; `--backfill-sums` fills them
+                  // later (round-16 review)
+                  val probes = residual.take(ProbeFiles).toSeq
+                  val all =
+                    if (probes.isEmpty) matched
+                    else matched.unionByName(scanFooters(spark, residual.rdd, probes,
+                      table, keyCols, sums = false, keep).df)
+                  Some(Entries(all,
+                    all.agg(coalesce(sum(col("rows")), lit(0L))).head.getLong(0)))
+                case None =>
+                  // the pre-pass saw nothing novel but the claim-time diff
+                  // does: a concurrent rewrite dropped rows — scan inside
+                  Some(scanFooters(spark, novelPaths(d), s.probes, table, keyCols,
+                    sums = false, keep))
               }
-            case None =>
-              // the pre-pass saw nothing novel but the claim-time diff
-              // does: a concurrent rewrite dropped rows — scan inside
-              footerEntries(spark, novel, table, keyCols, enrich = false)
+            (s, d, entries)
           }
         fenceClaim(spark, manifestPath)
-        if (staleN > 0) {
-          val kept = spark.read.parquet(manifestPath)
+        if (s.stale > 0) {
+          val stale = pathsDF(spark, d.filter(_.tag == Stale).map(_.path))
+          val kept = readCatalog(spark, manifestPath)
             .join(stale.withColumnRenamed("path", "__stale"),
               col("path") === col("__stale"), "left_anti")
           // align ONLY the optional sums column (a manifest that predates
@@ -538,7 +781,7 @@ object Manifest {
           // would null-fill divergent KEY struct fields too, silently
           // committing the half-typed catalog that append()'s schema gate
           // exists to reject (round-16 review)
-          val merged = entries.fold(kept) { e =>
+          val merged = entries.map(_.df).fold(kept) { e =>
             val keptHas = kept.columns.contains(SumsColumn)
             val eHas = e.columns.contains(SumsColumn)
             val (k2, e2) =
@@ -564,7 +807,7 @@ object Manifest {
           appliedUnstamped = true
         } else {
           entries.foreach { e =>
-            append(spark, e, manifestPath)
+            append(spark, e.df, manifestPath)
             appliedUnstamped = true
           }
           // batch-path auto-compaction (round-13 verdict item 5): streaming
@@ -586,94 +829,145 @@ object Manifest {
         // state (round-16 review — the one fence at section entry left the
         // write-to-bump window unguarded). `appliedUnstamped` covers the
         // retry whose prior attempt's append landed but never stamped.
-        if (novelN > 0 || staleN > 0 || appliedUnstamped) {
+        if (s.novel > 0 || s.stale > 0 || appliedUnstamped) {
           fenceClaim(spark, manifestPath)
           bumpVersion(spark, manifestPath)
           appliedUnstamped = false
         }
-        (novelN, staleN)
+        Commit(s.novel, s.stale,
+          if (s.keptRowsKnown) Some(s.keptRows + entries.fold(0L)(_.rows)) else None)
       }
-    } finally {
-      current.unpersist(blocking = false)
-      preEntries.foreach(_.unpersist(blocking = false))
+    } finally cached.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Drop a catalog as one committed mutation: deleted under the commit
+    * claim and stamped with a version bump, so a [[commitDir]] whose
+    * pre-pass diffed against the dropped rows sees the catalog state move
+    * and re-diffs instead of reusing that diff. */
+  def clear(spark: SparkSession, manifestPath: String): Unit = {
+    val p = new Path(manifestPath)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    var deleted = false
+    withCommitLock(spark, manifestPath) {
+      if (fs.exists(p)) {
+        fenceClaim(spark, manifestPath)
+        fs.delete(p, true)
+        deleted = true
+      }
+      // a retry whose earlier attempt deleted but lost its claim before
+      // the bump still stamps
+      if (deleted) {
+        fenceClaim(spark, manifestPath)
+        bumpVersion(spark, manifestPath)
+      }
     }
   }
 
-  /** Footer-scan entries for a novel-path frame, or None when it is
-    * empty. The schema probe reads a bounded SAMPLE of novel footers, not
-    * `spark.read.parquet(tableDir)` — that would re-list the whole table
-    * directory on the driver, re-introducing the exact ceiling the
-    * distributed diff removes (round-13 review finding). A single-file
-    * probe (the round-13 shape) could miss a key column absent from the
-    * one file it happened to hit; merging k footers handles added-column
-    * evolution, and any divergence the merge cannot express stays LOUD —
-    * parquet's merge rejects a width change (int vs bigint) outright, a
-    * key missing from every sampled footer throws in [[fromFootersRdd]],
-    * and [[append]]'s schema check rejects a divergent struct before it
-    * can corrupt the manifest. Manifest-maintained tables must therefore
-    * be TYPE-stable on key columns (round-13 advice). */
-  private def footerEntries(spark: SparkSession, novel: DataFrame,
-                            table: String, keyCols: Seq[String],
-                            enrich: Boolean = true): Option[DataFrame] = {
-    val probes = novel.select(col("path")).as[String](Encoders.STRING)
-      .take(8).toIndexedSeq
-    if (probes.isEmpty) None
-    else {
-      ringProbe.foreach(_("footers"))
-      // mergeSchema: without it Spark infers from ONE arbitrary footer
-      // of the sample, defeating the widening this probe exists for
-      val dataSchema =
-        spark.read.option("mergeSchema", "true").parquet(probes: _*).schema
-      val entries = fromFootersRdd(spark, novel.as[String](Encoders.STRING).rdd,
-        table, keyCols, dataSchema)
-      Some(if (enrich) enrichSums(spark, entries, novel, keyCols, dataSchema)
-           else entries)
-    }
+  /** Novel paths listed and probed per diff pass: the schema probe reads
+    * this many footers, enough to see a key column that some files lack
+    * (added-column evolution), never a table-sized array. */
+  private val ProbeFiles = 8
+
+  private val Novel = 'N' // listed, not cataloged
+  private val Stale = 'S' // cataloged, no longer listed
+  private val Kept = 'K'  // both
+
+  /** One path of the listing⟗catalog diff; `rows` is the catalog's row
+    * count for stale and kept paths (null when unknown, and for novel). */
+  private final case class DiffRow(path: String, tag: Char, rows: java.lang.Long)
+
+  /** The catalog's commit-visible state: (exists, version). */
+  private def catalogState(spark: SparkSession, manifestPath: String): (Boolean, Long) = {
+    val p = new Path(manifestPath)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p),
+      version(spark, manifestPath))
   }
 
-  /** Fill [[SumsColumn]] for freshly footer-scanned entries via a
-    * column-pruned data scan of the novel files — the one write-time step
-    * that reads data pages, and only the numeric key columns of files
-    * this very write produced (page-cache hot). Disabled by
-    * [[RecordSumsConf]]; batches beyond [[SumScanMaxFilesConf]] keep NULL
-    * sums (SUM metadata answers then decline — performance, never rows),
-    * because the scan needs a driver-side path list. */
-  private def enrichSums(spark: SparkSession, entries: DataFrame,
-                         novel: DataFrame, keyCols: Seq[String],
-                         dataSchema: StructType): DataFrame = {
-    val sumCols = keyCols.flatMap(k => dataSchema.find(_.name == k)
-      .flatMap(f => sumType(f.dataType).map(st => (k, st))))
-    if (sumCols.isEmpty ||
-        !spark.conf.get(RecordSumsConf, "true").toBoolean) entries
-    else {
-      val cap = spark.conf
-        .get(SumScanMaxFilesConf, SumScanMaxFilesDefault.toString).toInt
-      val paths = novel.select(col("path")).as[String](Encoders.STRING)
-        .take(cap + 1).toIndexedSeq
-      if (paths.size > cap) entries
-      else {
-        // try_sum, like [[build]]: overflow records NULL, never throws
-        val aggs = sumCols.map { case (k, st) => try_sum(col(k)).cast(st).as(k) }
-        // join on NORMALIZED paths (round-16 advice): the entries side
-        // keys by listFilesDF's `Path.toUri` rendering, the scan side by
-        // `input_file_name()` — byte-identical on the filesystems the
-        // specs pin, but a store where the two renderings diverge would
-        // silently miss the join and leave every sum NULL (SUM answers
-        // decline to the scan, undetectably) — normPath folds both into
-        // one canonical form
-        val np = udf((s: String) => ManifestSql.normPath(s))
-        val grouped = spark.read.schema(dataSchema).parquet(paths: _*)
-          .select(input_file_name().as("__sumpath") +: sumCols.map(c => col(c._1)): _*)
-          .groupBy(col("__sumpath"))
-          .agg(aggs.head, aggs.tail: _*)
-          .select(np(col("__sumpath")).as("__np"),
-            struct(sumCols.map(c => col(c._1)): _*).as(SumsColumn))
-        entries.drop(SumsColumn)
-          .withColumn("__np", np(col("path")))
-          .join(grouped, Seq("__np"), "left")
-          .drop("__np")
+  /** Tag every listed and every cataloged path of `table` in ONE cogroup
+    * — the distributed diff: neither side is collected. The catalog side
+    * reads only (path, rows) for the table, with its schema from a footer
+    * ([[catalogSchema]]); an absent catalog tags every listed path novel.
+    * Partitioned by the session's default parallelism, which also spreads
+    * the footer pass that reads the novel side. */
+  private def diff(spark: SparkSession, listed: RDD[String], table: String,
+                   manifestPath: String): RDD[DiffRow] = {
+    val catalog: RDD[(String, java.lang.Long)] =
+      knownRows(spark, table, manifestPath).rdd.map(r =>
+        (r.getString(0), if (r.isNullAt(1)) null else Long.box(r.getLong(1))))
+    listed.map(p => (p, ()))
+      .cogroup(catalog, new HashPartitioner(spark.sparkContext.defaultParallelism))
+      .flatMap { case (p, (ls, cs)) =>
+        if (cs.isEmpty) Iterator.single(DiffRow(p, Novel, null))
+        else {
+          val tag = if (ls.isEmpty) Stale else Kept
+          cs.iterator.map(r => DiffRow(p, tag, r))
+        }
       }
-    }
+  }
+
+  /** What one pass over a diff learns: counts, the kept rows' total (known
+    * only if every kept entry's count is), and up to [[ProbeFiles]] novel
+    * paths for the schema probe. */
+  private final case class DiffSummary(novel: Long, stale: Long, keptRows: Long,
+                                       keptRowsKnown: Boolean, probes: Vector[String]) {
+    def merge(o: DiffSummary): DiffSummary =
+      DiffSummary(novel + o.novel, stale + o.stale, keptRows + o.keptRows,
+        keptRowsKnown && o.keptRowsKnown, (probes ++ o.probes).take(ProbeFiles))
+  }
+
+  /** One job: folds per-partition summaries; the driver holds at most
+    * 2 × [[ProbeFiles]] paths at any time. */
+  private def summarize(d: RDD[DiffRow]): DiffSummary =
+    d.mapPartitions { it =>
+      var s = DiffSummary(0L, 0L, 0L, keptRowsKnown = true, Vector.empty)
+      it.foreach { r =>
+        s = r.tag match {
+          case Novel =>
+            s.copy(novel = s.novel + 1,
+              probes = if (s.probes.size < ProbeFiles) s.probes :+ r.path else s.probes)
+          case Stale => s.copy(stale = s.stale + 1)
+          case _ =>
+            if (r.rows == null) s.copy(keptRowsKnown = false)
+            else s.copy(keptRows = s.keptRows + r.rows)
+        }
+      }
+      Iterator.single(s)
+    }.fold(DiffSummary(0L, 0L, 0L, keptRowsKnown = true, Vector.empty))(_ merge _)
+
+  private def novelPaths(d: RDD[DiffRow]): RDD[String] =
+    d.filter(_.tag == Novel).map(_.path)
+
+  private def pathsDF(spark: SparkSession, paths: RDD[String]): DataFrame =
+    spark.createDataFrame(paths.map(Row(_)),
+      StructType(Seq(StructField("path", StringType, nullable = false))))
+
+  /** Footer-scanned catalog entries, persisted, and their row total. */
+  private final case class Entries(df: DataFrame, rows: Long)
+
+  /** One footer pass over `paths` (see [[footerRows]]), materialized by
+    * the job that totals its rows. The key types come from the merged
+    * footers of `probes`, a sample of those paths read on the driver —
+    * `spark.read.parquet(tableDir)` would re-list the whole table
+    * directory there, re-introducing the ceiling the distributed diff
+    * removes (round-13 review finding), and a single-file probe could miss
+    * a key column absent from the one file it hit. Any divergence the
+    * merge cannot express stays LOUD — parquet's merge rejects a width
+    * change (int vs bigint) outright, a key missing from every sampled
+    * footer throws in [[footerRows]], and [[append]]'s schema check
+    * rejects a divergent struct before it can corrupt the manifest.
+    * Manifest-maintained tables must therefore be TYPE-stable on key
+    * columns (round-13 advice). Sums are recorded only when `sums`: the
+    * caller turns them off under [[RecordSumsConf]], past
+    * [[SumScanMaxFilesConf]], and for in-claim residual scans. */
+  private def scanFooters(spark: SparkSession, paths: RDD[String], probes: Seq[String],
+                          table: String, keyCols: Seq[String], sums: Boolean,
+                          keep: RDD[Row] => RDD[Row]): Entries = {
+    ringProbe.foreach(_("footers"))
+    val dataSchema = footerSchema(spark, probes.map(p => new Path(new java.net.URI(p))),
+      spark.sessionState.newHadoopConf())
+    val (rows, schema) = footerRows(spark, paths, table, keyCols, dataSchema, sums)
+    val total = keep(rows).map(_.getLong(2)).fold(0L)(_ + _)
+    Entries(spark.createDataFrame(rows, schema), total)
   }
 
   // ---- multi-writer commit ring (round-14 item 10; round-16 fencing) ----
@@ -684,9 +978,9 @@ object Manifest {
   // writer was mid-append into — silently dropping the other table's
   // fresh rows. The ring makes writers safe WITHOUT coordination: the
   // distributed DATA listing and the footer scans of the novel files run
-  // unserialized (the PRE-PASS), and the COMMIT section — a cheap re-diff
-  // against the then-current state plus the manifest write — claims the
-  // catalog via a marker-file create. A writer that loses the claim waits
+  // unserialized (the PRE-PASS), and the COMMIT section — the manifest
+  // write, preceded by a re-diff only when the catalog moved since the
+  // pre-pass — claims the catalog via a marker-file create. A writer that loses the claim waits
   // and then recomputes its diff against the winner's committed state,
   // which is exactly the optimistic-concurrency retry; disjoint-table
   // writers therefore both land, and same-table writers serialize into
@@ -1079,28 +1373,34 @@ object Manifest {
     }
   }
 
-  /** Listed-but-uncataloged file paths: listing ANTI-JOIN manifest — the
-    * distributed half of [[updateDir]]'s diff, exposed so the plan shape
-    * (a join over the listing, not a collected array) can be pinned. */
+  /** Listed-but-uncataloged file paths as a listing ANTI-JOIN over the
+    * catalog — the novel half of [[diff]] in DataFrame form, exposed so the
+    * plan shape (a join over the distributed listing, not a collected
+    * array) can be pinned. */
   private[sources] def novelFiles(spark: SparkSession, listing: DataFrame,
                                   table: String, manifestPath: String): DataFrame =
-    listing.join(knownPaths(spark, table, manifestPath), Seq("path"), "left_anti")
+    listing.join(knownRows(spark, table, manifestPath).select("path"),
+      Seq("path"), "left_anti")
 
-  /** Cataloged-but-vanished file paths: manifest ANTI-JOIN listing. */
-  private[sources] def staleEntries(spark: SparkSession, listing: DataFrame,
-                                    table: String, manifestPath: String): DataFrame =
-    knownPaths(spark, table, manifestPath).join(listing, Seq("path"), "left_anti")
-
-  private def knownPaths(spark: SparkSession, table: String,
-                         manifestPath: String): DataFrame =
-    existingSchema(spark, manifestPath) match {
-      case Some(_) =>
-        spark.read.parquet(manifestPath)
-          .filter(col("table") === table).select("path")
+  /** The catalog's (path, rows) for `table`; empty when there is no
+    * catalog yet. */
+  private def knownRows(spark: SparkSession, table: String,
+                        manifestPath: String): DataFrame =
+    catalogSchema(spark, manifestPath) match {
+      case Some(s) =>
+        spark.read.schema(s).parquet(manifestPath)
+          .filter(col("table") === table).select("path", "rows")
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(Seq(StructField("path", StringType))))
+          StructType(Seq(StructField("path", StringType), StructField("rows", LongType))))
     }
+
+  /** The whole catalog, schema from a footer ([[catalogSchema]]) — no
+    * inference job. */
+  private def readCatalog(spark: SparkSession, manifestPath: String): DataFrame =
+    spark.read.schema(catalogSchema(spark, manifestPath).getOrElse(
+      throw new java.io.FileNotFoundException(s"no manifest at $manifestPath")))
+      .parquet(manifestPath)
 
   /** Bounded re-plan-and-retry for manifest READS racing an [[update]]
     * rewrite (round-12 verdict item 7): [[rewrite]] swaps the directory
@@ -1342,8 +1642,8 @@ object Manifest {
           val base = if (hasSums) df else df.withColumn(SumsColumn,
             lit(null).cast(StructType(
               numeric.map { case (k, st) => StructField(k, st) })))
-          // join on NORMALIZED paths, like enrichSums (round-16 advice):
-          // manifest rows key by Path.toUri / input_file_name renderings
+          // join on NORMALIZED paths (round-16 advice): manifest rows
+          // key by Path.toUri / input_file_name renderings
           // that can diverge per store — a raw-string join would silently
           // match nothing and rewrite the catalog while filling zero sums
           val np = udf((s: String) => ManifestSql.normPath(s))

@@ -63,13 +63,18 @@ final class ParquetSource(dir: String) extends TableSource {
   *
   * `manifestKeys` (round-11 verdict item 2) keeps a
   * [[graft.sources.Manifest]] file catalog current AT WRITE TIME — the only
-  * moment the stats are free: after each write the sink diffs the table
-  * directory against `dir/_manifest/table` by path and footer-scans only
-  * the files this write produced (zero data pages read), so a growing
-  * corpus never pays the full-rescan bootstrap. Overwrite rewrites drop the
-  * stale rows the same pass. Keys must live in the data files, so they may
-  * not be Hive partition columns (those live in directory names, not
-  * footers — and directory pruning already covers them). */
+  * moment the stats are free: after each plain write, and after the last
+  * chunk of a chunked one, the sink runs [[graft.sources.Manifest.commitDir]]
+  * on the table directory against `dir/_manifest/table` — a constant
+  * handful of Spark jobs (four for a flat table directory, whatever its
+  * file count) that footer-scans only the files this write produced and
+  * folds their key sums from the same open (zero full-table scans), so a
+  * growing corpus never pays the full-rescan bootstrap. Overwrite rewrites
+  * drop the stale rows the same pass. [[countRows]] then answers with the
+  * row total that update committed for the table, without listing or
+  * counting the directory again. Keys must live in the data files, so
+  * they may not be Hive partition columns (those live in directory names,
+  * not footers — and directory pruning already covers them). */
 final class ParquetSink(dir: String, mode: SaveMode = SaveMode.Overwrite,
                         partitionColumns: Seq[String] = Nil,
                         compression: Option[String] = None,
@@ -77,6 +82,13 @@ final class ParquetSink(dir: String, mode: SaveMode = SaveMode.Overwrite,
   manifestKeys.foreach(ks => require(!ks.exists(partitionColumns.contains),
     s"manifest keys ${ks.mkString(",")} may not be Hive partition columns " +
       "(partition values live in directory names, not parquet footers)"))
+
+  /** Row total per table from its latest manifest commit, taken once by
+    * [[countRows]]; tables may transfer on parallel workers. */
+  private val committedRows =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  private def manifestPath(table: String) = s"$dir/_manifest/$table"
 
   // NOT fanned before the encode (round-18 A/B, same window, lineitem
   // single split): parquet encode is light enough that the round-robin
@@ -92,8 +104,9 @@ final class ParquetSink(dir: String, mode: SaveMode = SaveMode.Overwrite,
   /** Incremental manifest maintenance after a committed write. */
   private def updateManifest(spark: SparkSession, table: String): Unit =
     manifestKeys.foreach { ks =>
-      graft.sources.Manifest.update(
-        spark, dir, table, ks, s"$dir/_manifest/$table")
+      committedRows.remove(table)
+      graft.sources.Manifest.commitDir(spark, s"$dir/$table.parquet", table, ks,
+        manifestPath(table)).tableRows.foreach(n => committedRows.put(table, n))
     }
 
   /** Drop the table's catalog BEFORE an overwrite deletes its files
@@ -103,12 +116,11 @@ final class ParquetSink(dir: String, mode: SaveMode = SaveMode.Overwrite,
     * would fail or silently miss rows. No catalog beats a wrong catalog:
     * readers (Tables.load probe, ManifestPruneRule) degrade to the
     * unpruned-but-current scan, which is lossless, and the end-of-write
-    * update rebuilds from footers. */
+    * update rebuilds from footers. The drop is a committed, version-
+    * stamped catalog mutation ([[graft.sources.Manifest.clear]]), so a
+    * concurrent update's claim sees it and re-diffs. */
   private def clearManifest(spark: SparkSession, table: String): Unit =
-    manifestKeys.foreach { _ =>
-      val mp = new org.apache.hadoop.fs.Path(s"$dir/_manifest/$table")
-      mp.getFileSystem(spark.sessionState.newHadoopConf()).delete(mp, true)
-    }
+    manifestKeys.foreach(_ => graft.sources.Manifest.clear(spark, manifestPath(table)))
 
   def write(df: DataFrame, table: String): Unit = {
     if (mode == SaveMode.Overwrite) clearManifest(df.sparkSession, table)
@@ -129,8 +141,12 @@ final class ParquetSink(dir: String, mode: SaveMode = SaveMode.Overwrite,
   override def finish(spark: SparkSession, table: String): Unit =
     updateManifest(spark, table)
 
+  /** The row total the manifest update just committed for `table` (the
+    * catalog's rows for every file in the directory); without a manifest,
+    * or when a cataloged row count is unknown, a parquet count. */
   override def countRows(spark: SparkSession, table: String): Option[Long] =
-    Some(spark.read.parquet(s"$dir/$table.parquet").count())
+    Option(committedRows.remove(table)).map(_.longValue)
+      .orElse(Some(spark.read.parquet(s"$dir/$table.parquet").count()))
 }
 
 /** ORC endpoints — Spark's other built-in columnar format (the lake

@@ -39,9 +39,13 @@ class Validator(
 
   import Validator._
 
+  /** The source's row count, counted once: layer 1 reports it and layer 5
+    * sizes its sample by it. */
+  private lazy val sourceRows: Long = source.count()
+
   /** Layer 1: exact row count (validator.py:193-215). */
   def checkRowCount(): CheckResult = {
-    val s = source.count()
+    val s = sourceRows
     val t = target.count()
     CheckResult("row_count", Some(s == t), s.toString, t.toString,
       if (s == t) s"row counts match ($s)" else s"row count mismatch: $s vs $t")
@@ -130,37 +134,34 @@ class Validator(
     * reference pulls each sampled row with a point SELECT; an earlier
     * version here broadcast the whole target, which OOMs the driver at
     * scale.) Missing rows are derived by subtraction from one combined
-    * present/mismatch aggregate — a single pass over the join.
+    * present/mismatch aggregate — a single pass over the join. The sample
+    * holds min(`sampleSize`, source rows) rows, so its size comes from
+    * the source count layer 1 already took — the sample itself is built
+    * once, inside the join.
     */
   def checkRowSample(pkCols: Seq[String], sampleSize: Int = 100): CheckResult = {
     if (pkCols.isEmpty)
       return CheckResult("row_sample", None, message = "no primary key; skipped")
     val dataCols = source.columns.filterNot(pkCols.contains).toSeq
-    // one TakeOrderedAndProject over the source, cached: both the count
-    // and the join read it — building the sample twice would be a second
-    // full source scan purely for the sample size
-    val sample = buildSample(pkCols, sampleSize).cache()
-    try {
-      val sampleCount = sample.count()
-      val joined = joinTargetAgainst(sample, pkCols)
-      val fieldNeq: Column = dataCols
-        .map(c => !(col(c) <=> col(s"s_$c")))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      // DISTINCT sample keys, not join rows: a duplicate PK in the target
-      // (exactly what an at-least-once chunked resume can produce) would
-      // inflate a plain count and mask a genuinely missing sampled row
-      val row = joined.agg(
-        countDistinct(pkCols.head, pkCols.tail: _*).as("present"),
-        sum(when(fieldNeq, 1L).otherwise(0L)).as("mismatched")).collect()(0)
-      val present = row.getLong(0)
-      val mismatched = if (row.isNullAt(1)) 0L else row.getLong(1)
-      val missing = math.max(0L, sampleCount - present)
-      val passed = missing == 0 && mismatched == 0
-      CheckResult("row_sample", Some(passed),
-        message =
-          if (passed) s"all sampled rows present and equal"
-          else s"$missing missing rows, $mismatched rows with field mismatches")
-    } finally sample.unpersist()
+    val sampleCount = math.min(sampleSize.toLong, sourceRows)
+    val joined = joinTargetAgainst(buildSample(pkCols, sampleSize), pkCols)
+    val fieldNeq: Column = dataCols
+      .map(c => !(col(c) <=> col(s"s_$c")))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    // DISTINCT sample keys, not join rows: a duplicate PK in the target
+    // (exactly what an at-least-once chunked resume can produce) would
+    // inflate a plain count and mask a genuinely missing sampled row
+    val row = joined.agg(
+      countDistinct(pkCols.head, pkCols.tail: _*).as("present"),
+      sum(when(fieldNeq, 1L).otherwise(0L)).as("mismatched")).collect()(0)
+    val present = row.getLong(0)
+    val mismatched = if (row.isNullAt(1)) 0L else row.getLong(1)
+    val missing = math.max(0L, sampleCount - present)
+    val passed = missing == 0 && mismatched == 0
+    CheckResult("row_sample", Some(passed),
+      message =
+        if (passed) s"all sampled rows present and equal"
+        else s"$missing missing rows, $mismatched rows with field mismatches")
   }
 
   /** ORDER BY pk LIMIT n with data columns renamed `s_*` — deterministic

@@ -662,11 +662,10 @@ class ManifestSpec extends SparkSpec {
       val starts = jobStarts.toArray(Array.empty[java.lang.Long]).map(_.longValue())
       val inClaim = starts.count(t => t >= claimT && t <= releaseT)
       val total = starts.length
-      // ≤14: the two re-diff counts, the empty-residual probe, and the
-      // manifest write, each AQE-split into up to ~3 jobs — the listing,
-      // footer, and sums scans (the work that scales with ingest size)
-      // stay outside
-      assert(inClaim <= 14,
+      // ≤1: the manifest append write — an unchanged catalog reuses the
+      // pre-pass diff, so the listing, diff, footer and sums passes (the
+      // work that scales with ingest size) all stay outside
+      assert(inClaim <= 1,
         s"claim window ran $inClaim jobs (of $total) — expensive work leaked inside")
       assert(total > inClaim, "the pre-pass work must run outside the claim")
       assert(Manifest.rowCount(spark, mp, col("table") === "t") === 40L)
@@ -1036,6 +1035,154 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.ordCompare(supp, "\uE000") > 0)
     assert(Manifest.ordCompare("abc", "abc") === 0)
     assert(Manifest.ordCompare(Long.box(3L), Long.box(10L)) < 0)
+  }
+
+  /** Start times of the jobs submitted while `f` runs, and f's result. */
+  private def jobsDuring[T](f: => T): (Seq[Long], T) = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(j.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t0 = System.currentTimeMillis()
+      val r = f
+      val t1 = System.currentTimeMillis()
+      Thread.sleep(500) // let the listener bus drain
+      (starts.toArray(Array.empty[java.lang.Long]).map(_.longValue)
+        .filter(t => t >= t0 && t <= t1).toSeq, r)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("an uncontended update runs a constant handful of Spark jobs, whatever the file count") {
+    import spark.implicits._
+    // the job budget of write-time upkeep: one listing pass, one diff
+    // pass, one footer pass (sums folded in) and the append — the same
+    // count for 2 files as for 24, with sums on and the catalog absent
+    // (the sink's shape: it clears the catalog before an overwrite)
+    Seq(2, 24).foreach { n =>
+      val dir = s"$base/budget$n"
+      val mp = s"$base/budget${n}_manifest"
+      (0L until 20L * n).map(i => (i, s"v$i")).toDF("id", "v").repartition(n)
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val (jobs, (added, removed)) = jobsDuring(
+        Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id", "v"), mp))
+      assert(added === n.toLong && removed === 0L)
+      assert(jobs.size <= 8, s"$n-file update ran ${jobs.size} jobs")
+      info(s"$n novel files: ${jobs.size} jobs")
+      // a no-op re-run against the now-present catalog stays as cheap
+      val (again, r) = jobsDuring(
+        Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id", "v"), mp))
+      assert(r === ((0L, 0L)))
+      assert(again.size <= 8, s"$n-file no-op update ran ${again.size} jobs")
+      assert(Manifest.rowCount(spark, mp, col("table") === "t") === 20L * n)
+    }
+  }
+
+  test("update's one-pass catalog equals the build scan and the file lengths") {
+    import spark.implicits._
+    // every maintenance shape on one fixture: an int key (summed), a
+    // string key and a date key (footer stats only), nulls, an empty
+    // file, a batch over the sums cap, a batch with recordSums off, and
+    // an Overwrite whose stale entries force the rewrite path
+    val dir = s"$base/parity"
+    val tdir = s"$dir/t.parquet"
+    val mp = s"$base/parity_manifest"
+    val keys = Seq("id", "s", "d")
+    def day(i: Int) = java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i))
+    def batch(from: Int, n: Int, files: Int, mode: String = "append"): Unit =
+      (from until from + n).map { i =>
+        (if (i % 7 == 3) null else Int.box(i * 13 % 101 - 50),
+          if (i % 5 == 4) null else s"s${i % 9}", day(i % 40))
+      }.toDF("id", "s", "d").repartition(files).write.mode(mode).parquet(tdir)
+    def filesOf(): Set[String] = spark.read.parquet(tdir).inputFiles.toSet
+    def entries(): Map[String, org.apache.spark.sql.Row] =
+      spark.read.parquet(mp).filter(col("table") === "t").collect()
+        .map(r => r.getAs[String]("path") -> r).toMap
+    batch(0, 60, 3)
+    Seq.empty[(Integer, String, java.sql.Date)].toDF("id", "s", "d").coalesce(1)
+      .write.mode("append").parquet(tdir)
+    Manifest.updateDir(spark, tdir, "t", keys, mp)
+    val summed = filesOf()
+    spark.conf.set(Manifest.SumScanMaxFilesConf, "1")
+    try { batch(60, 30, 2); Manifest.updateDir(spark, tdir, "t", keys, mp) }
+    finally spark.conf.unset(Manifest.SumScanMaxFilesConf)
+    val overCap = filesOf() -- summed
+    assert(overCap.size === 2)
+    val before2 = filesOf()
+    spark.conf.set(Manifest.RecordSumsConf, "false")
+    try { batch(90, 20, 1); Manifest.updateDir(spark, tdir, "t", keys, mp) }
+    finally spark.conf.unset(Manifest.RecordSumsConf)
+    val unsummed = overCap ++ (filesOf() -- before2)
+
+    def check(recorded: Set[String]): Unit = {
+      val got = entries()
+      val built = Manifest.build(spark, dir, "t", keys).collect()
+        .map(r => r.getAs[String]("path") -> r).toMap
+      assert(got.keySet === filesOf(), "one entry per data file, no stale entry")
+      assert(got.values.head.schema("sums").dataType.simpleString === "struct<id:bigint>")
+      val fs = new org.apache.hadoop.fs.Path(tdir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      got.foreach { case (path, e) =>
+        assert(e.getAs[Long]("bytes") ===
+          fs.getFileStatus(new org.apache.hadoop.fs.Path(new java.net.URI(path))).getLen)
+        built.get(path) match {
+          case Some(b) =>
+            Seq("rows", "mins", "maxs", "nulls").foreach(c =>
+              assert(e.getAs[Any](c) === b.getAs[Any](c), s"$c of $path"))
+            if (recorded(path)) assert(e.getAs[Any]("sums") === b.getAs[Any]("sums"), path)
+            else assert(e.getAs[org.apache.spark.sql.Row]("sums") ===
+              org.apache.spark.sql.Row(null), s"unrecorded sums of $path")
+          case None =>
+            // an empty file: no data row to group, so the build has no
+            // entry; footers say 0 rows, unknown ranges, no nulls
+            assert(e.getAs[Long]("rows") === 0L, path)
+            val none = org.apache.spark.sql.Row(null, null, null)
+            assert(e.getAs[Any]("mins") === none && e.getAs[Any]("maxs") === none)
+            assert(e.getAs[Any]("nulls") === org.apache.spark.sql.Row(0L, 0L, 0L))
+            assert(e.isNullAt(e.fieldIndex("sums")), s"empty-file sums of $path")
+        }
+      }
+    }
+    check(filesOf() -- unsummed)
+    assert(entries().values.count(_.getAs[Long]("rows") == 0L) === 1,
+      "the fixture carries exactly one empty file")
+    // an Overwrite: every cataloged file is stale, the rewrite path drops
+    // them and lands the new batch, sums recorded
+    val v = Manifest.version(spark, mp)
+    batch(200, 40, 2, mode = "overwrite")
+    val (added, removed) = Manifest.updateDir(spark, tdir, "t", keys, mp)
+    assert(added === 2L && removed === summed.size + unsummed.size)
+    assert(Manifest.version(spark, mp) === v + 1)
+    check(filesOf())
+  }
+
+  test("update-path sums keep try_sum's semantics: overflow, wide decimals, -0.0, NaN") {
+    import spark.implicits._
+    // the write-time fold must equal Spark's own per-file try_sum (the
+    // build scan) on the shapes where hand-rolled arithmetic drifts: a
+    // long sum and a DECIMAL(38,0) sum that overflow mid-file, a file
+    // whose only double is -0.0, NaN, and floats widened to double
+    val dir = s"$base/sumedge"
+    val mp = s"$base/sumedge_manifest"
+    val nines = "9" * 38
+    def file(rows: Seq[(java.lang.Long, String, java.lang.Double, java.lang.Float)]): Unit =
+      rows.toDF("l", "m", "x", "f").select(col("l"), col("m").cast("decimal(38,0)").as("m"),
+        col("x"), col("f")).coalesce(1).write.mode("append").parquet(s"$dir/t.parquet")
+    file(Seq((Long.MaxValue, nines, 2.25, 1.5f), (1L, nines, null, null),
+      (-5L, "-" + nines, -0.5, 0.1f)))
+    file(Seq((7L, null, -0.0, null), (-9L, "-1", Double.NaN, -2.5f)))
+    file(Seq((3L, "4", -0.0, 0.25f)))
+    val keys = Seq("l", "m", "x", "f")
+    Manifest.updateDir(spark, s"$dir/t.parquet", "t", keys, mp)
+    def sums(df: org.apache.spark.sql.DataFrame) =
+      df.select("path", "sums").collect().map(r => r.getString(0) -> r.get(1)).toMap
+    val got = sums(spark.read.parquet(mp))
+    assert(got === sums(Manifest.build(spark, dir, "t", keys)))
+    assert(got.values.exists(_.asInstanceOf[org.apache.spark.sql.Row].isNullAt(0)),
+      "the overflowing long sum records NULL")
   }
 
   override def afterAll(): Unit = {

@@ -189,4 +189,60 @@ class TransferSpec extends SparkSpec {
     assert(spark.read.parquet(mp).select("path").as[String].collect().toSet ===
       spark.read.parquet(s"$out/t.parquet").inputFiles.toSet)
   }
+
+  test("ParquetSink.countRows answers from the manifest commit: plain, chunked, resumed") {
+    // the committed catalog already holds every file's row count: the
+    // count after a manifest-maintained write must equal a parquet count
+    // of the directory without listing or counting it again
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val out = Files.createTempDirectory("xfercount").toString
+    val sink = new ParquetSink(out, manifestKeys = Some(Seq("o_orderkey")))
+    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+    def onDisk(): Long = spark.read.parquet(s"$out/orders.parquet").count()
+
+    // plain write: the count is the commit's total, zero Spark jobs
+    sink.write(orders.repartition(3), "orders")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val counted = try sink.countRows(spark, "orders") finally {
+      Thread.sleep(500) // let the listener bus drain
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() === 0, "countRows after a manifest commit must not scan")
+    assert(counted === Some(onDisk()))
+
+    // chunked: the last chunk's finish commits, the engine's count reads it
+    class Crashing(crashAt: Int) extends TableSink {
+      var chunks = 0
+      def write(df: DataFrame, table: String): Unit = sink.write(df, table)
+      override def writeChunk(df: DataFrame, table: String, firstChunk: Boolean): Unit = {
+        if (chunks == crashAt) throw new RuntimeException("simulated mid-table crash")
+        chunks += 1
+        sink.writeChunk(df, table, firstChunk)
+      }
+      override def finish(spark: SparkSession, table: String): Unit = sink.finish(spark, table)
+      override def countRows(spark: SparkSession, table: String): Option[Long] =
+        sink.countRows(spark, table)
+    }
+    def engine(cp: String, crashAt: Int) = new TransferEngine(new ParquetSource(sfDir),
+      new Crashing(crashAt), Some(new CheckpointManager(cp, "sf", "pq")),
+      chunkColumns = Map("orders" -> "o_orderkey"), chunkCount = 5)
+    val clean = engine(s"$out/ckpt_clean.json", Int.MaxValue).transferTable(spark, "orders")
+    assert(clean.success, clean.errorMessage)
+    assert(clean.rowsTransferred === onDisk())
+
+    // resumed after a crash mid-chunks: the first run never reached
+    // finish, the rerun's single commit catalogs every chunk's files
+    val cp = s"$out/ckpt_resume.json"
+    assert(!engine(cp, crashAt = 2).transferTable(spark, "orders").success)
+    val resumed = engine(cp, Int.MaxValue).transferTable(spark, "orders")
+    assert(resumed.success, resumed.errorMessage)
+    assert(resumed.rowsTransferred === onDisk())
+    assert(resumed.rowsTransferred === orders.count())
+  }
 }
