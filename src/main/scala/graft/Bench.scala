@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main — one JSON line of per-query wall-clock seconds over
   * `SPARK_GRAFT_SF_DIR` (driver contract). Queries run in sorted name order
@@ -134,32 +136,12 @@ object Bench {
     }
   }
 
-  /** The `"queries":{…}` object of a detail JSON as name→seconds —
-    * balanced-brace extraction plus a number regex, no JSON library in
-    * the main tree. */
-  def parseQueriesMap(json: String): Map[String, Double] = {
-    val idx = json.indexOf("\"queries\":")
-    if (idx < 0) return Map.empty
-    val start = json.indexOf('{', idx)
-    if (start < 0) return Map.empty
-    var depth = 0
-    var i = start
-    var end = -1
-    while (i < json.length && end < 0) {
-      json.charAt(i) match {
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) end = i
-        case _ =>
-      }
-      i += 1
-    }
-    if (end < 0) Map.empty
-    else {
-      val kv = "\"([^\"]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
-      kv.findAllMatchIn(json.substring(start + 1, end))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
+  /** The `"queries"` object of a detail JSON as name→seconds; empty when
+    * the text is not JSON or carries no such object. */
+  def parseQueriesMap(json: String): Map[String, Double] =
+    scala.util.Try(Json.mapper.readTree(json).path("queries").properties().asScala
+      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+      .toMap).getOrElse(Map.empty)
 
   /** Whether one query's run sat in a contention window: the round-5 hard
     * probes (>3x the run-wide median, serial or parallel) OR the round-14
@@ -270,16 +252,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // Untimed warmup: touches every fixture file and exercises codegen,
     // including the noop write path used for timing.

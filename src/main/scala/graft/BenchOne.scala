@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local iteration harness: time a comma-separated subset of
   * [[SparkEntry.queries]] with the same session config / drain / repetition
   * discipline as [[Bench]], without paying for the whole roster.
@@ -32,16 +30,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try SparkEntry.queries.get("q01_pricing_summary")
       .foreach(q => Measure.drain(q(spark, sfDir)))
     catch { case _: Throwable => () }

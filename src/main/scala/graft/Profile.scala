@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -53,16 +52,7 @@ object Profile {
     val suffix = args.lift(1).getOrElse("before")
     val outDir = args.lift(2).getOrElse("plans/r17")
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     try SparkEntry.queries.get("q01_pricing_summary")
       .foreach(q => Measure.drain(q(spark, sfDir)))

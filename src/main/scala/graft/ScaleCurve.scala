@@ -149,14 +149,8 @@ object ScaleCurve {
 
   private def drain(df: DataFrame): Unit = Measure.drain(df)
 
-  private def session(shufflePartitions: Int = 32): SparkSession = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    .config("spark.sql.shuffle.partitions", shufflePartitions)
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def session(shufflePartitions: Int = 32): SparkSession =
+    GraftSession(shufflePartitions = Some(shufflePartitions))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -176,7 +170,6 @@ object ScaleCurve {
     val work = java.nio.file.Files.createTempDirectory("graft_scale").toString
     val baseRows = {
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val base = graft.sources.Tables.load(spark, sfDir, "documents")
       val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
       scales.foreach { m =>
@@ -350,7 +343,6 @@ object ScaleCurve {
       // fresh context per measurement: no cross-measurement plan-cache
       // hits, no accumulated session state (see Scaladoc)
       val spark = session(if (scaledParts) 32 * m else 32)
-      spark.sparkContext.setLogLevel("WARN")
       val cpu = new CpuMeter
       spark.sparkContext.addSparkListener(cpu)
       val docs = spark.read.parquet(s"$work/${tbl}_x$m")

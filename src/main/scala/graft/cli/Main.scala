@@ -33,13 +33,7 @@ object Main {
     sys.exit(run(args, newSession(), prompt = ask))
   }
 
-  def newSession(): SparkSession = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  def newSession(): SparkSession = graft.GraftSession()
 
   /** Parse `--key value` pairs (bare `--flag` becomes "true"). */
   private[cli] def parseOpts(rest: Seq[String]): Map[String, String] = {

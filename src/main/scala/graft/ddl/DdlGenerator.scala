@@ -16,9 +16,6 @@ object DdlGenerator {
   def createSchema(schema: String): String =
     s"CREATE SCHEMA IF NOT EXISTS ${q(schema)}"
 
-  def dropSchema(schema: String): String =
-    s"DROP SCHEMA IF EXISTS ${q(schema)} CASCADE"
-
   def createTable(t: TableMeta): String = {
     val cols = t.columns.sortBy(_.ordinal).map { c =>
       val base = s"  ${q(c.name)} ${TypeMapper.toPostgres(c.dataType)}"

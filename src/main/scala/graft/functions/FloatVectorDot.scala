@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression: dot product of two `array<float>` columns in
   * double precision, with whole-stage codegen (`doGenCode`) — the hot-loop
@@ -195,18 +194,12 @@ case class FloatVectorScaledDot(left: Expression, right: Expression, shift: Int)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-extension + runtime registration for graft's native functions.
-  * Install at build time via `spark.sql.extensions=graft.functions.GraftExtensions`
-  * or on a live session with [[GraftFunctions.register]] (idempotent). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.descriptors.foreach(ext.injectFunction)
-}
-
+/** Graft's native SQL functions. A session gets them at build time through
+  * [[graft.plans.GraftExtensions]], or live with [[register]]
+  * (idempotent). */
 object GraftFunctions {
 
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.expr
   import org.apache.spark.sql.catalyst.expressions.Literal
 
   private[graft] val descriptors
@@ -369,13 +362,4 @@ object GraftFunctions {
   /** The `nProbe` nearest centroid indices — the IVF probe set. */
   def ivfProbes(vec: Column, centroids: Array[Array[Float]], nProbe: Int, shift: Int): Column =
     ColumnBridge.column(FvecTopProbes(ColumnBridge.expression(vec), centroids, nProbe, shift))
-
-  /** Column builders (register on the column's session before collecting;
-    * the SQL-string form keeps us on the public Column API). */
-  def simhash64(spark: SparkSession, tokensSql: String): Column = {
-    register(spark); expr(s"simhash64($tokensSql)")
-  }
-  def minhashSignature(spark: SparkSession, tokensSql: String, numHashes: Int = 32): Column = {
-    register(spark); expr(s"minhash_signature($tokensSql, $numHashes)")
-  }
 }

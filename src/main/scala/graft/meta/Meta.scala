@@ -36,12 +36,7 @@ final case class TableMeta(
     uniqueConstraints: Seq[ConstraintMeta] = Nil,
     checkConstraints: Seq[ConstraintMeta] = Nil,
     comment: Option[String] = None,
-    rowCount: Option[Long] = None) {
-
-  def structType: StructType =
-    StructType(columns.sortBy(_.ordinal).map(c =>
-      StructField(c.name, c.dataType, c.nullable)))
-}
+    rowCount: Option[Long] = None)
 
 /** Mirrors `Schema` (discovery.py:88-97). */
 final case class SchemaMeta(

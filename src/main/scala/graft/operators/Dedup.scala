@@ -263,11 +263,7 @@ object Dedup {
     val spark = edges.sparkSession
     val loopWidth = math.max(1,
       math.max(edges.rdd.getNumPartitions, labels.rdd.getNumPartitions))
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-    try {
+    graft.GraftSession.withLoopConf(spark, loopWidth) {
     var iter = 0
     var converged = false
     // convergence probe: labels only ever DECREASE, so the label sum is
@@ -305,9 +301,6 @@ object Dedup {
     // aggregate, so the caller's downstream action reads checkpointed
     // blocks — never a plan that depends on the restored conf
     (labels, iter)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 

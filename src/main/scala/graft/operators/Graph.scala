@@ -70,11 +70,7 @@ object Graph {
     // q113 loss mode
     val loopWidth = math.max(1,
       math.max(outdeg.rdd.getNumPartitions, base.rdd.getNumPartitions))
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-    try {
+    graft.GraftSession.withLoopConf(spark, loopWidth) {
       var ranks = base.select(col("id"), col("n_total"),
         (lit(1.0) / col("n_total")).as("pr"))
       var i = 0
@@ -98,9 +94,6 @@ object Graph {
         .join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left_outer")
         .select(col("id"), col("pr").as("pagerank"),
           coalesce(col("outdeg"), lit(0L)).as("n_out"))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 
@@ -141,11 +134,7 @@ object Graph {
     val nn = scope.checkpointed(nodes.select(col("id")))
     val loopWidth = math.max(1,
       math.max(und.rdd.getNumPartitions, nn.rdd.getNumPartitions))
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-    try {
+    graft.GraftSession.withLoopConf(spark, loopWidth) {
       var labels = nn.select(col("id"), col("id").as("label"))
       var i = 0
       while (i < iters) {
@@ -163,9 +152,6 @@ object Graph {
         i += 1
       }
       scope.checkpointed(labels)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 

@@ -91,15 +91,6 @@ object Similarity {
 
   def normExact(a: String): Column = sqrt(dotExact(a, a))
 
-  def normExactSql(a: String): String = s"sqrt(${dotExactSql(a, a)})"
-
-  /** Fast double-precision dot product for throughput paths; accumulation
-    * order-dependent, so not oracle-comparable (see `fvec_dot` for the
-    * codegen'd variant). */
-  def dotFast(a: String, b: String): Column =
-    expr(s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-      "CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-
   /** Brute-force cosine top-k: broadcast the (small) query set against the
     * corpus, rank per query. Scaled-exact cosine for oracle comparability. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
@@ -215,28 +206,7 @@ object Similarity {
     * deterministic and the graph replays bit-for-bit in the differential
     * oracle (the same mix expression runs in DuckDB BIGINTs). */
   def knnGraph(corpus: DataFrame, k: Int, bands: Int = 3, bandBits: Int = 8,
-               cap: Int = 200): DataFrame =
-    knnGraphImpl(corpus, k, bands, bandBits, cap, dedupEarly = false)
-
-  /** A/B seam for the two candidate-dedup formulations, kept so the
-    * choice stays re-measurable: `dedupEarly` collapses band
-    * co-occurrences on the id pair BEFORE the dot (one dot per unique
-    * pair — but the dedup exchange then carries BOTH embedding vectors
-    * per row); the default computes the cheap codegen'd dot per
-    * occurrence and distincts the NARROW (ids, cosine) stream after.
-    *
-    * Measured (round 15, interleaved in one session at sf0.1, min-of-4
-    * each): narrow-late wall 0.73-0.98 s / CPU 1.4-1.9 s vs wide-early
-    * wall 0.93-1.01 s / CPU 2.3-3.0 s. The ≤`bands`× redundant dots are
-    * 64 fused multiply-adds in whole-stage codegen — nearly free — while
-    * the early dedup ships ~20× more exchange bytes (two vectors + norms
-    * vs two ids + a double per row); at production 768-dim embeddings
-    * (~3 KB/pair-row vs ~24 B) the gap only widens. Both formulations
-    * are bit-identical in output (spec-pinned), so the choice is purely
-    * a plan-shape trade. */
-  def knnGraphImpl(corpus: DataFrame, k: Int, bands: Int,
-                                  bandBits: Int, cap: Int,
-                                  dedupEarly: Boolean): DataFrame = {
+               cap: Int = 200): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(corpus.sparkSession)
     val mask = (1L << bandBits) - 1
@@ -260,41 +230,31 @@ object Similarity {
       col("embedding").as("a_vec"), col("nrm").as("a_nrm"))
     val b = capped.select(col("band"), col("bucket"), col("vec_id").as("b_id"),
       col("embedding").as("b_vec"), col("nrm").as("b_nrm"))
-    // both dedup placements are exact (the dot is deterministic per pair,
-    // and the carried vec/norm copies are functions of the ids, so any
-    // dropDuplicates survivor is THE value); the default keeps the dedup
-    // exchange NARROW — see the knnGraphImpl scaladoc for the measured
-    // trade (round-15 interleaved A/B)
-    val joined = a.join(b, Seq("band", "bucket"))
+    // the dot runs per band co-occurrence and the NARROW (ids, cosine)
+    // stream is deduplicated after. Deduplicating the id pairs first would
+    // run one dot per pair but ship both vectors through the exchange:
+    // measured (round 15, interleaved, sf0.1, min-of-4) 0.93-1.01 s wall /
+    // 2.3-3.0 s CPU against 0.73-0.98 s / 1.4-1.9 s for this form, whose
+    // ≤`bands`× redundant dots are nearly free in whole-stage codegen
+    val pairs = a.join(b, Seq("band", "bucket"))
       .filter(col("a_id") =!= col("b_id"))
-    val pairs =
-      if (dedupEarly)
-        joined
-          .select(col("a_id"), col("b_id"), col("a_vec"), col("b_vec"),
-            col("a_nrm"), col("b_nrm"))
-          .dropDuplicates("a_id", "b_id")
-          .withColumn("cosine",
-            scaledDot("a_vec", "b_vec").cast("double") / (col("a_nrm") * col("b_nrm")))
-          .select(col("a_id"), col("b_id"), col("cosine"))
-      else
-        joined
-          .withColumn("cosine",
-            scaledDot("a_vec", "b_vec").cast("double") / (col("a_nrm") * col("b_nrm")))
-          .select(col("a_id"), col("b_id"), col("cosine"))
-          // ONE anchor-keyed exchange serves both downstream operators:
-          // HashPartitioning(a_id) satisfies the distinct's (a_id, b_id,
-          // cosine) clustering AND the rank window's a_id clustering, so
-          // neither inserts its own exchange; without it AQE coalesces
-          // the byte-small distinct exchange to one partition and the
-          // dedup + window + downstream loop-input checkpoints all run
-          // serially. Round-18 A/B (BenchOne, adjacent windows): removing
-          // this exchange cost q113 2.01→2.95 s and q178 2.23→3.12 s
-          // (their loop inputs checkpoint this stream) with q95/q135 flat
-          // (1.00→1.10 / 0.95→0.99) — kept. Per-key fanout is cap-bounded
-          // (≤ bands·cap rows per anchor), so a_id cannot hot-spot.
-          .repartition(corpus.sparkSession.sparkContext.defaultParallelism,
-            col("a_id"))
-          .distinct()
+      .withColumn("cosine",
+        scaledDot("a_vec", "b_vec").cast("double") / (col("a_nrm") * col("b_nrm")))
+      .select(col("a_id"), col("b_id"), col("cosine"))
+      // ONE anchor-keyed exchange serves both downstream operators:
+      // HashPartitioning(a_id) satisfies the distinct's (a_id, b_id,
+      // cosine) clustering AND the rank window's a_id clustering, so
+      // neither inserts its own exchange; without it AQE coalesces the
+      // byte-small distinct exchange to one partition and the dedup +
+      // window + downstream loop-input checkpoints all run serially.
+      // Round-18 A/B (BenchOne, adjacent windows): removing this exchange
+      // cost q113 2.01→2.95 s and q178 2.23→3.12 s (their loop inputs
+      // checkpoint this stream) with q95/q135 flat (1.00→1.10 /
+      // 0.95→0.99) — kept. Per-key fanout is cap-bounded (≤ bands·cap
+      // rows per anchor), so a_id cannot hot-spot.
+      .repartition(corpus.sparkSession.sparkContext.defaultParallelism,
+        col("a_id"))
+      .distinct()
     val w = Window.partitionBy(col("a_id")).orderBy(col("cosine").desc, col("b_id"))
     pairs.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -347,14 +307,14 @@ object Similarity {
     // codegen'd dot per band co-occurrence and distinct the NARROW
     // (ids, labels, cosine) stream — the round-15 interleaved A/B showed
     // the early wide dedup ships ~20× more exchange bytes than the ≤3×
-    // redundant dots cost (see knnGraphImpl)
+    // redundant dots cost (see knnGraph)
     val pairs = a.join(b, Seq("band", "bucket"))
       .filter(col("a_label") =!= col("neg_label"))
       .withColumn("cosine",
         scaledDot("a_vec", "b_vec").cast("double") / (col("a_nrm") * col("b_nrm")))
       .select(col("a_id"), col("a_label"), col("neg_id"), col("neg_label"), col("cosine"))
       // one anchor-keyed exchange for both the distinct and the rank
-      // window — see the knnGraphImpl note (round-18 A/B kept it)
+      // window — see the knnGraph note (round-18 A/B kept it)
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism,
         col("a_id"))
       .distinct()

@@ -820,11 +820,7 @@ object TextAnalysis {
       .select(col("word"), col("cnt"), col("pos").cast("long").as("pos"), col("tok"))
       .localCheckpoint(true)
     val loopWidth = math.max(1, seg.rdd.getNumPartitions)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-    try {
+    graft.GraftSession.withLoopConf(spark, loopWidth) {
       val byPos = Window.partitionBy(col("word")).orderBy(col("pos"))
       val merges = (0 until nMerges).flatMap { rank =>
         val withNext = seg.withColumn("nxt", lead(col("tok"), 1).over(byPos))
@@ -857,9 +853,6 @@ object TextAnalysis {
       }
       merges.toDF("merge_rank", "pair", "new_token", "pair_count")
         .orderBy(col("merge_rank"))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 

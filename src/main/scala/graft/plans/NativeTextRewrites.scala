@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -31,11 +30,9 @@ import graft.functions.{SigAgreement, WordNgrams}
   *     `word_ngrams(t, k)` — the canonical k-gram enumeration including
   *     its truncated-window edge case.
   *
-  * Registered through [[GraftExtensions]]
-  * (`SparkSession.builder.withExtensions` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`), which also
-  * injects the graft function registry so the rewritten plans resolve in
-  * sessions that never touched the Scala API.
+  * Installed with the rest of [[GraftExtensions.rules]], together with
+  * the graft function registry, so the rewritten plans resolve in sessions
+  * that never touched the Scala API.
   */
 object NativeTextRewrites extends Rule[LogicalPlan] {
 
@@ -93,24 +90,5 @@ object NativeTextRewrites extends Rule[LogicalPlan] {
           i1.exprId == i2.exprId && s1.semanticEquals(s2) &&
           isSpaceSplit(s1).isDefined =>
       WordNgrams(isSpaceSplit(s1).get, k)
-  }
-}
-
-/** Session extension entry point: inject the optimizer rule and the graft
-  * native-function registry. Usable from config
-  * (`--conf spark.sql.extensions=graft.plans.GraftExtensions`) — no Scala
-  * API required. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => NativeTextRewrites)
-    // manifest-backed file skipping for SQL users (sources.ManifestSql):
-    // the JOIN rule first — it folds fact-side Filter bounds into its own
-    // zone predicate, so the inferred isnotnull Filter under every inner
-    // join can't let the literal rule consume the markers early
-    ext.injectOptimizerRule(session => graft.sources.ManifestJoinPruneRule(session))
-    ext.injectOptimizerRule(session => graft.sources.ManifestPruneRule(session))
-    graft.functions.GraftFunctions.descriptors.foreach { case (ident, info, builder) =>
-      ext.injectFunction((ident, info, builder))
-    }
   }
 }

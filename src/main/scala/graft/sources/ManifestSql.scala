@@ -61,7 +61,7 @@ object ManifestSql {
     * zone maps then skip files within them. */
   def readTable(spark: SparkSession, dataDir: String, table: String,
                 manifestPath: String): DataFrame = {
-    enable(spark)
+    graft.plans.GraftExtensions.install(spark)
     spark.read
       .option(PathOption, manifestPath)
       .option(TableOption, table)
@@ -74,25 +74,6 @@ object ManifestSql {
                manifestPath: String, viewName: String): Unit =
     readTable(spark, dataDir, table, manifestPath)
       .createOrReplaceTempView(viewName)
-
-  /** Idempotently add [[ManifestAggRule]] + [[ManifestJoinPruneRule]] +
-    * [[ManifestPruneRule]] to an already-built session (new sessions get
-    * them through [[graft.plans.GraftExtensions]]). Order matters twice
-    * over: the AGG rule runs first because a metadata-answerable aggregate
-    * must see the relation's marker options before either prune rule
-    * substitutes the file index (and drops the markers); the JOIN rule
-    * runs before the literal rule and folds any fact-side Filter conjuncts
-    * into its own zone predicate — inner equi-joins always carry an
-    * inferred `isnotnull(key)` Filter over the fact relation, and letting
-    * the literal rule consume the markers on that null-bound alone would
-    * lock the far more selective join prune out of every star query. */
-  def enable(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[ManifestPruneRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          ManifestAggRule(spark) :+ ManifestTopKRule(spark) :+
-          ManifestJoinPruneRule(spark) :+ ManifestPruneRule(spark)
-  }
 
   private[sources] final case class PrunedFiles(paths: Seq[String],
                                                 totalBytes: Option[Long])
@@ -584,7 +565,7 @@ case class ManifestPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
   *    guard), so recursive dim plans cost at most one extra level.
   *
   * Composition with [[ManifestPruneRule]]: this rule runs FIRST (see
-  * [[ManifestSql.enable]]) and folds the conjuncts of every fact-side
+  * [[graft.plans.GraftExtensions.rules]]) and folds the conjuncts of every fact-side
   * Filter it walks through into the same zone predicate (via the shared
   * [[ManifestPruneRule.conjunctBound]]), so a star query with BOTH a
   * literal fact bound and a selective dim prunes on their intersection —
@@ -908,7 +889,7 @@ object ManifestJoinPruneRule {
   * output attributes, so downstream operators and exprIds are untouched
   * and the answer costs zero Spark jobs (LocalTableScan collects
   * driver-side). `graft.manifest.metadataAgg=false` turns the rewrite
-  * off. Runs BEFORE the prune rules (see [[ManifestSql.enable]]) — they
+  * off. Runs BEFORE the prune rules (see [[graft.plans.GraftExtensions.rules]]) — they
   * drop the marker options this rule matches on. */
 /** One cataloged file's stats for [[ManifestAggRule]]/[[ManifestTopKRule]],
   * struct columns exploded to name→value maps (values stay

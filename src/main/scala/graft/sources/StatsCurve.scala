@@ -46,13 +46,7 @@ import graft.Measure
   */
 object StatsCurve {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    .config("spark.sql.shuffle.partitions", 32)
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def session(): SparkSession = graft.GraftSession()
 
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption
@@ -179,7 +173,6 @@ object StatsCurve {
       sh <- shapes
     } yield {
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val mp = s"$work/m_$n"
       if (!new java.io.File(mp).exists()) synthManifest(spark, n, mp)
       // the snapshot cap must be BELOW the smallest manifest so every

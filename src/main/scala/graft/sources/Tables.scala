@@ -71,7 +71,7 @@ object Tables {
     scala.util.Try(spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
     val reader = manifest match {
       case Some(mp) =>
-        ManifestSql.enable(spark)
+        graft.plans.GraftExtensions.install(spark)
         spark.read
           .option(ManifestSql.PathOption, mp)
           .option(ManifestSql.TableOption, name)

@@ -1,9 +1,11 @@
 package graft.transfer
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import graft.Json
 
 /** Thread-safe JSON checkpoint for resumable schema transfer — the same
   * format and atomic tmp-rename discipline as the reference
@@ -13,9 +15,6 @@ import scala.collection.mutable
   * {"schema": "...", "target": "...",
   *  "completed": ["t1", ...], "in_progress": {"t2": 12345}}
   * }}}
-  *
-  * JSON is read/written with a minimal hand parser (values are only strings,
-  * string arrays, and a string→long map — no dependency needed).
   */
 final class CheckpointManager(path: String, schema: String, target: String) {
 
@@ -26,7 +25,6 @@ final class CheckpointManager(path: String, schema: String, target: String) {
   load()
 
   def isCompleted(table: String): Boolean = synchronized(completed.contains(table))
-  def completedTables: Seq[String] = synchronized(completed.toSeq)
   def resumeOffset(table: String): Long = synchronized(inProgress.getOrElse(table, 0L))
 
   def markCompleted(table: String): Unit = synchronized {
@@ -51,108 +49,23 @@ final class CheckpointManager(path: String, schema: String, target: String) {
 
   private def load(): Unit =
     if (Files.exists(file)) {
-      val text = new String(Files.readAllBytes(file), StandardCharsets.UTF_8)
-      MiniJson.parseObject(text).foreach {
-        case ("completed", MiniJson.JArr(items)) => completed ++= items
-        case ("in_progress", MiniJson.JMap(m))   => inProgress ++= m
-        case _ => ()
-      }
+      val root = Json.mapper.readTree(file.toFile)
+      completed ++= root.path("completed").asScala.map(_.asText)
+      inProgress ++= root.path("in_progress").properties().asScala
+        .map(e => e.getKey -> e.getValue.asLong)
     }
 
   /** Atomic write: tmp file + rename (checkpoint.py:41-54). */
   private def save(): Unit = {
-    val completedJson = completed.map(MiniJson.quote).mkString("[", ", ", "]")
-    val progressJson = inProgress
-      .map { case (k, v) => s"${MiniJson.quote(k)}: $v" }.mkString("{", ", ", "}")
-    val json =
-      s"""{"schema": ${MiniJson.quote(schema)}, "target": ${MiniJson.quote(target)}, """ +
-        s""""completed": $completedJson, "in_progress": $progressJson}"""
+    val root = Json.mapper.createObjectNode().put("schema", schema).put("target", target)
+    val done = root.putArray("completed")
+    completed.foreach(t => done.add(t))
+    val progress = root.putObject("in_progress")
+    inProgress.foreach { case (k, v) => progress.put(k, v) }
     val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")
     if (file.getParent != null) Files.createDirectories(file.getParent)
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, Json.mapper.writeValueAsBytes(root))
     Files.move(tmp, file, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
-  }
-}
-
-/** Tiny JSON reader for the checkpoint's fixed shape. */
-private[transfer] object MiniJson {
-  sealed trait JValue
-  final case class JArr(items: Seq[String]) extends JValue
-  final case class JMap(entries: Seq[(String, Long)]) extends JValue
-  final case class JStr(s: String) extends JValue
-
-  def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Parse one flat object of the checkpoint shape. */
-  def parseObject(text: String): Seq[(String, JValue)] = {
-    val out = Seq.newBuilder[(String, JValue)]
-    var i = text.indexOf('{') + 1
-    def skipWs(): Unit = while (i < text.length && text.charAt(i).isWhitespace) i += 1
-    def parseString(): String = {
-      val sb = new StringBuilder
-      require(text.charAt(i) == '"'); i += 1
-      while (text.charAt(i) != '"') {
-        if (text.charAt(i) == '\\') {
-          i += 1
-          text.charAt(i) match {
-            case 'u' => sb.append(Integer.parseInt(text.substring(i + 1, i + 5), 16).toChar); i += 4
-            case 'n' => sb.append('\n'); case 't' => sb.append('\t'); case 'r' => sb.append('\r')
-            case c => sb.append(c)
-          }
-        } else sb.append(text.charAt(i))
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    def parseLong(): Long = {
-      val start = i
-      while (i < text.length && (text.charAt(i).isDigit || text.charAt(i) == '-')) i += 1
-      text.substring(start, i).toLong
-    }
-    while (i < text.length && i >= 0) {
-      skipWs()
-      if (i >= text.length || text.charAt(i) == '}') return out.result()
-      val key = parseString()
-      skipWs(); require(text.charAt(i) == ':'); i += 1; skipWs()
-      text.charAt(i) match {
-        case '"' => out += key -> JStr(parseString())
-        case '[' =>
-          i += 1
-          val items = Seq.newBuilder[String]
-          skipWs()
-          while (text.charAt(i) != ']') {
-            items += parseString(); skipWs()
-            if (text.charAt(i) == ',') { i += 1; skipWs() }
-          }
-          i += 1
-          out += key -> JArr(items.result())
-        case '{' =>
-          i += 1
-          val entries = Seq.newBuilder[(String, Long)]
-          skipWs()
-          while (text.charAt(i) != '}') {
-            val k = parseString()
-            skipWs(); require(text.charAt(i) == ':'); i += 1; skipWs()
-            entries += k -> parseLong()
-            skipWs()
-            if (text.charAt(i) == ',') { i += 1; skipWs() }
-          }
-          i += 1
-          out += key -> JMap(entries.result())
-        case _ => // number or literal — skip to next comma/brace
-          while (i < text.length && text.charAt(i) != ',' && text.charAt(i) != '}') i += 1
-      }
-      skipWs()
-      if (i < text.length && text.charAt(i) == ',') i += 1
-    }
-    out.result()
   }
 }

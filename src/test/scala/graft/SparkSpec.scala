@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,15 +12,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // keep the shared session alive
+
+  /** The rows of the composed half of a composed-vs-native differential.
+    * The session carries [[graft.plans.NativeTextRewrites]] (installed
+    * here, as any manifest read installs it), which would turn the
+    * composed form into the native one it is compared with; so the half is
+    * planned with the rule excluded, and its optimized plan must still
+    * hold neither native form. */
+  def composedRows(df: => DataFrame): Array[Row] = {
+    graft.plans.GraftExtensions.install(spark)
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, graft.plans.NativeTextRewrites.ruleName)
+    try {
+      val d = df
+      val plan = d.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("sig_agree") && !plan.contains("word_ngrams"), plan)
+      d.collect()
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Four cores and four shuffle partitions whatever the host: plan pins
+    * depend on both. */
+  lazy val session: SparkSession = GraftSession(cores = 4)
 }

@@ -20,7 +20,7 @@ class ScaledDotSpec extends SparkSpec {
   test("the full native-function surface resolves in SQL on a fresh session") {
     // a new child session starts with a clean function registry; register()
     // installs the same descriptor list GraftExtensions injects at build
-    // time (spark.sql.extensions=graft.functions.GraftExtensions)
+    // time (spark.sql.extensions=graft.plans.GraftExtensions)
     val s2 = spark.newSession()
     GraftFunctions.register(s2)
     val r = s2.sql(
@@ -62,17 +62,20 @@ class ScaledDotSpec extends SparkSpec {
     // minhash_text_signature / simhash_text hash shingles/tokens as byte
     // ranges; the array-based originals materialize them as strings —
     // results must be identical on real documents
-    val docs = graft.sources.Tables.load(spark, sfDir, "documents").limit(200)
-    val both = docs.selectExpr(
+    val docs = graft.sources.Tables.load(spark, sfDir, "documents").orderBy("doc_id").limit(200)
+    val fast = docs.selectExpr("doc_id",
       "minhash_text_signature(text, 3, 32) AS fast",
+      "simhash_text(text) AS sh_fast")
+      .collect().map(r => r.get(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
+    val composed = composedRows(docs.selectExpr("doc_id",
       "minhash_signature(array_distinct(transform(sequence(0, greatest(size(split(text, ' ')) - 3, 0)), " +
         "i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))), 32) AS composed",
-      "simhash_text(text) AS sh_fast",
-      "simhash64(array_distinct(split(text, ' '))) AS sh_composed")
-      .collect()
-    both.foreach { r =>
-      assert(r.getSeq[Long](0) == r.getSeq[Long](1), "minhash mismatch")
-      assert(r.getLong(2) == r.getLong(3), "simhash mismatch")
+      "simhash64(array_distinct(split(text, ' '))) AS sh_composed"))
+      .map(r => r.get(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
+    assert(fast.nonEmpty && fast.keySet == composed.keySet)
+    fast.foreach { case (id, (mh, sh)) =>
+      assert(mh == composed(id)._1, s"minhash mismatch at $id")
+      assert(sh == composed(id)._2, s"simhash mismatch at $id")
     }
   }
 

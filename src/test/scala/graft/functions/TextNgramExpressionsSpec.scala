@@ -33,7 +33,7 @@ class TextNgramExpressionsSpec extends SparkSpec {
     for (k <- Seq(2, 3, 8)) {
       val df = cases.toDF("text")
       val got = df.select(expr(s"word_ngrams(text, $k)")).collect().map(_.getSeq[String](0))
-      val want = df.select(hofNgrams("text", k)).collect().map(_.getSeq[String](0))
+      val want = composedRows(df.select(hofNgrams("text", k))).map(_.getSeq[String](0))
       got.zip(want).zip(cases).foreach { case ((g, w), c) =>
         assert(g === w, s"k=$k text=${c.inspect}")
       }
@@ -148,12 +148,11 @@ class TextNgramExpressionsSpec extends SparkSpec {
       (Seq.empty[Long], Seq(1L)),
       (Seq(5L), Seq(5L)),
       (Seq(1L, 2L), Seq(1L, 2L))).toDF("a", "b")
-    val rows = pairs.select(
-      expr("sig_agree(a, b)").as("native"),
-      expr("size(filter(zip_with(a, b, (x, y) -> x = y), v -> v))").as("hof"))
-      .collect()
-    rows.foreach(r => assert(r.getInt(0) === r.getInt(1)))
-    assert(rows.map(_.getInt(0)).toSeq === Seq(2, 0, 1, 2))
+    val native = pairs.select(expr("sig_agree(a, b)")).collect().map(_.getInt(0)).toSeq
+    val hof = composedRows(pairs.select(
+      expr("size(filter(zip_with(a, b, (x, y) -> x = y), v -> v))"))).map(_.getInt(0)).toSeq
+    assert(native === hof)
+    assert(native === Seq(2, 0, 1, 2))
   }
 
   test("word_ngrams stays inside whole-stage codegen") {

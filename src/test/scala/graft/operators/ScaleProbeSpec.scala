@@ -83,60 +83,24 @@ class ScaleProbeSpec extends SparkSpec {
       f"knn graph took $secs%.1f s vs calib $calib%.2f s — candidate generation regressed")
   }
 
-  test("knnGraph's dedup placements are equivalent; the default keeps the exchange narrow") {
-    // round-15 adjudication of the round-14 review item: the interleaved
-    // one-session A/B (min-of-4 each, sf0.1) read narrow-late at
-    // 0.73-0.98 s wall / 1.4-1.9 s CPU vs wide-early at 0.93-1.01 s /
-    // 2.3-3.0 s — the ≤bands× redundant codegen'd dots are nearly free
-    // while the early dedup ships both embedding vectors per exchange
-    // row. Pin three things: the two formulations are bit-identical, the
-    // early seam really does evaluate the pair dot post-dedup (so the
-    // trade stays re-measurable), and the DEFAULT's dedup exchange
-    // carries no vector payloads.
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+  test("knnGraph's dedup exchange carries no vector payloads") {
+    // the dot runs per band co-occurrence and only the narrow (ids,
+    // cosine) stream is deduplicated (round-15 interleaved A/B, see
+    // Similarity.knnGraph)
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import org.apache.spark.sql.types.ArrayType
     val vecs = spark.range(200L).select(
       col("id").as("vec_id"),
       expr("transform(sequence(0, 63), i -> " +
         "CAST((pmod(hash(id * 64 + i), 1000) - 500) / 500.0 AS FLOAT))").as("embedding"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getDouble(2), r.getInt(3))).sortBy(t => (t._1, t._4))
-    val late = Similarity.knnGraphImpl(vecs, 2, 3, 8, 200, dedupEarly = false)
-    val early = Similarity.knnGraphImpl(vecs, 2, 3, 8, 200, dedupEarly = true)
-    assert(rows(late).nonEmpty)
-    assert(rows(late) === rows(early), "the two dedup placements must be bit-identical")
-    def exprPairDot(e: Expression): Boolean = e.exists {
-      case d: graft.functions.FloatVectorScaledDot => !d.left.semanticEquals(d.right)
-      case _ => false
-    }
-    def hasPairDot(p: LogicalPlan): Boolean =
-      p.expressions.exists(exprPairDot) || p.children.exists(hasPairDot)
-    def dedups(df: org.apache.spark.sql.DataFrame): Seq[Aggregate] =
-      df.queryExecution.optimizedPlan.collect {
-        case a: Aggregate if a.groupingExpressions.nonEmpty => a }
-    // early seam: no pair dot below the dedup Aggregate or feeding an
-    // aggregate function per-row (CollapseProject may fold the cosine
-    // into the RESULT expressions — once per group, which is post-dedup)
-    val earlyDedups = dedups(early)
-    assert(earlyDedups.nonEmpty)
-    earlyDedups.foreach { a =>
-      assert(!hasPairDot(a.child),
-        "early seam: no cross-vector dot below the pair-dedup Aggregate")
-      assert(!a.aggregateExpressions.flatMap(_.collect {
-        case ae: AggregateExpression => ae.aggregateFunction
-      }).exists(f => f.children.exists(exprPairDot)),
-        "early seam: no cross-vector dot feeding an aggregate per-row")
-    }
-    // default: the dedup (distinct) exchange is NARROW — no array-typed
-    // column rides its grouping or output
-    val lateDedups = dedups(late)
-    assert(lateDedups.nonEmpty)
-    lateDedups.foreach { a =>
+    val graph = Similarity.knnGraph(vecs, 2)
+    assert(graph.count() > 0)
+    val dedups = graph.queryExecution.optimizedPlan.collect {
+      case a: Aggregate if a.groupingExpressions.nonEmpty => a }
+    assert(dedups.nonEmpty)
+    dedups.foreach { a =>
       assert(!a.output.exists(_.dataType.isInstanceOf[ArrayType]),
-        "default: no vector payload may ride the dedup exchange")
+        "no vector payload may ride the dedup exchange")
     }
   }
 

@@ -26,7 +26,7 @@ class NativeTextRewritesSpec extends SparkSpec {
     val plan = rewritten(sql)
     assert(plan.toString.contains("sig_agree"), plan.toString)
     assert(PlanBridge.ofRows(spark, plan).collect().map(_.getInt(0)).toSeq ===
-      spark.sql(sql).collect().map(_.getInt(0)).toSeq)
+      composedRows(spark.sql(sql)).map(_.getInt(0)).toSeq)
   }
 
   test("word_ngrams rewrite fires on the canonical k-gram enumeration") {
@@ -38,7 +38,7 @@ class NativeTextRewritesSpec extends SparkSpec {
     val plan = rewritten(sql)
     assert(plan.toString.contains("word_ngrams"), plan.toString)
     assert(PlanBridge.ofRows(spark, plan).collect().map(_.getSeq[String](0)).toSeq ===
-      spark.sql(sql).collect().map(_.getSeq[String](0)).toSeq)
+      composedRows(spark.sql(sql)).map(_.getSeq[String](0)).toSeq)
   }
 
   test("rewrites do NOT fire on non-matching shapes") {

@@ -41,6 +41,41 @@ class CheckpointSpec extends AnyFunSuite {
     val re = new CheckpointManager(s"$dir/c.json", "s", "t")
     assert(re.isCompleted("weird \"table\"\nname"))
   }
+
+  test("quote, backslash, tab and non-ASCII names round-trip, done and in progress") {
+    val dir = Files.createTempDirectory("ckpt4").toString
+    val names = Seq("a\"b", "c\\d", "e\tf", "café")
+    val cp = new CheckpointManager(s"$dir/c.json", "sch\"ema", "tar\\get")
+    names.zipWithIndex.foreach { case (n, i) => cp.updateProgress(n, i + 1L) }
+    cp.markCompleted("café")
+    val re = new CheckpointManager(s"$dir/c.json", "sch\"ema", "tar\\get")
+    assert(re.isCompleted("café"))
+    names.take(3).zipWithIndex.foreach { case (n, i) =>
+      assert(!re.isCompleted(n), n)
+      assert(re.resumeOffset(n) === i + 1L, n)
+    }
+  }
+
+  test("a pretty-printed checkpoint file loads") {
+    val dir = Files.createTempDirectory("ckpt5").toString
+    val path = s"$dir/c.json"
+    Files.writeString(java.nio.file.Paths.get(path),
+      """{
+        |  "schema": "s",
+        |  "target": "t",
+        |  "completed": [
+        |    "region",
+        |    "nation"
+        |  ],
+        |  "in_progress": {
+        |    "orders": 4
+        |  }
+        |}
+        |""".stripMargin)
+    val cp = new CheckpointManager(path, "s", "t")
+    assert(cp.isCompleted("region") && cp.isCompleted("nation"))
+    assert(cp.resumeOffset("orders") === 4L)
+  }
 }
 
 class TransferSpec extends SparkSpec {
