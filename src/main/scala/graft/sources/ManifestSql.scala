@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.functions.{col, date_trunc, lit, trunc, year}
 import org.apache.spark.sql.types._
 
+import scala.reflect.ClassTag
+
 /** SQL-surface manifest pruning (round-11 verdict item 7): [[Manifest]]'s
   * file skipping was helper-API-only — a `spark.sql` user, or a
   * dialect-translated view, scanned every file no matter how selective the
@@ -75,18 +77,17 @@ object ManifestSql {
     readTable(spark, dataDir, table, manifestPath)
       .createOrReplaceTempView(viewName)
 
-  private[sources] final case class PrunedFiles(paths: Seq[String],
-                                                totalBytes: Option[Long])
-
   /** Shared prune driver for both optimizer rules: resolve the manifest
     * (driver snapshot when small, distributed scan beyond the bound), hand
     * the caller the key-field map to build a zone predicate, and return
-    * the surviving files — or None when nothing prunes or the catalog
-    * does not know the table (callers then keep the original plan).
-    * Retries across a concurrent `Manifest.update` rewrite window. */
+    * the surviving files as (path, recorded bytes) — or None when nothing
+    * prunes or the catalog does not know the table (callers then keep the
+    * original plan). Retries across a concurrent `Manifest.update`
+    * rewrite window. */
   private[sources] def pruneWith(spark: SparkSession, manifestPath: String,
                                  table: String)(
-      build: (Map[String, String], Boolean) => Option[Column]): Option[PrunedFiles] = {
+      build: (Map[String, String], Boolean) => Option[Column])
+      : Option[Seq[(String, Option[Long])]] = {
     // fast-fail a manifest that never materialized (common mis-config)
     // WITHOUT burning the retry backoff on it; a path that vanishes right
     // after this probe is the genuine rewrite window, which the retry
@@ -111,27 +112,45 @@ object ManifestSql {
           .filter(col("table") === table && zonePred)
           .select(col("path"), col("bytes"))
           .collect()
-        val paths = survivors.map(_.getString(0)).distinct.toIndexedSeq
-        // survivors' total bytes → pruned sizeInBytes, enabling a
-        // broadcast of a well-pruned scan; unknown (NULL) bytes — the
-        // data-scan build path records none — fall back conservatively
-        val totalBytes =
-          if (survivors.nonEmpty && survivors.forall(!_.isNullAt(1)))
-            Some(survivors.map(_.getLong(1)).sum)
-          else None
+          .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+          .distinctBy(_._1).toIndexedSeq
         // zero survivors is only a real answer if the catalog KNOWS this
         // table: a manifest holding no rows for it (cleared by a
         // transfer-in-progress, or registered against the wrong path)
         // must degrade to the unpruned scan — an empty table's unpruned
         // scan is empty anyway, so degrading is lossless in both cases
         val tableKnown =
-          if (paths.nonEmpty) true
+          if (survivors.nonEmpty) true
           else if (local.isDefined)
             ManifestSnapshot.knownTables(spark, manifestPath)
               .exists(_.contains(table))
           else !manifest.filter(col("table") === table).isEmpty
-        if (tableKnown) Some(PrunedFiles(paths, totalBytes)) else None
+        if (tableKnown) Some(survivors) else None
       }
+    }
+  }
+
+  /** `plan` with `rel`'s file index narrowed to `files` — (path, recorded
+    * bytes) pairs — the one way every manifest rule swaps in a pruned
+    * index. The survivors' total bytes become the pruned `sizeInBytes`
+    * (enabling a broadcast of a well-pruned scan) when every file's bytes
+    * are known; the data-scan build path records none, which falls back
+    * conservatively. The substituted relation drops the marker options, so
+    * no manifest rule matches it again. */
+  private[sources] def pruneRelation(spark: SparkSession, plan: LogicalPlan,
+                                     rel: LogicalRelation,
+                                     files: Seq[(String, Option[Long])]): LogicalPlan = {
+    val h = rel.relation.asInstanceOf[HadoopFsRelation]
+    val bytes =
+      if (files.nonEmpty && files.forall(_._2.isDefined))
+        Some(files.iterator.flatMap(_._2).sum)
+      else None
+    val newRel = h.copy(
+      location = new ManifestPrunedFileIndex(h.location,
+        files.iterator.map(f => normPath(f._1)).toSet, bytes),
+      options = h.options - PathOption - TableOption)(spark)
+    plan.transformDown {
+      case l: LogicalRelation if l.eq(rel) => l.copy(relation = newRel)
     }
   }
 
@@ -307,14 +326,8 @@ case class ManifestPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
             // manifest's path list could silently drop files it hasn't
             // cataloged yet, and with zero skipping there is nothing to buy
             case scala.util.Success(None) => f
-            case scala.util.Success(Some(pruned)) =>
-              val keep = pruned.paths.map(ManifestSql.normPath).toSet
-              val newIndex = new ManifestPrunedFileIndex(
-                h.location, keep, pruned.totalBytes)
-              val newRel = h.copy(
-                location = newIndex,
-                options = h.options - ManifestSql.PathOption - ManifestSql.TableOption)(spark)
-              Filter(cond, l.copy(relation = newRel))
+            case scala.util.Success(Some(files)) =>
+              ManifestSql.pruneRelation(spark, f, l, files)
           }
       }
   }
@@ -326,7 +339,7 @@ case class ManifestPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
     * distributed manifest scan beyond the snapshot bound ([[ManifestSql
     * .pruneWith]] owns that machinery). */
   private def prune(manifestPath: String, table: String,
-                    cond: Expression): Option[ManifestSql.PrunedFiles] =
+                    cond: Expression): Option[Seq[(String, Option[Long])]] =
     ManifestSql.pruneWith(spark, manifestPath, table) { (keyFields, hasNulls) =>
       splitConjunctivePredicates(cond)
         .flatMap(conjunctBound(_, keyFields, hasNulls))
@@ -653,15 +666,8 @@ case class ManifestJoinPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
             case scala.util.Failure(e) =>
               logWarning(s"manifest join pruning skipped for $tbl ($mp): $e")
               None
-            case scala.util.Success(opt) => opt.map { pruned =>
-              val keep = pruned.paths.map(ManifestSql.normPath).toSet
-              val newRel = h.copy(
-                location = new ManifestPrunedFileIndex(h.location, keep, pruned.totalBytes),
-                options = h.options - ManifestSql.PathOption - ManifestSql.TableOption)(spark)
-              factSide.transformDown {
-                case l: LogicalRelation if l.eq(rel) => l.copy(relation = newRel)
-              }
-            }
+            case scala.util.Success(opt) =>
+              opt.map(ManifestSql.pruneRelation(spark, factSide, rel, _))
           }
         }
       }
@@ -722,7 +728,7 @@ case class ManifestJoinPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
   private def pruneByDimKeys(manifestPath: String, table: String,
                              pairs: Seq[(Attribute, Attribute)],
                              dimSide: LogicalPlan,
-                             factConjuncts: Seq[Expression]): Option[ManifestSql.PrunedFiles] = {
+                             factConjuncts: Seq[Expression]): Option[Seq[(String, Option[Long])]] = {
     val maxKeys = spark.conf.get(MaxKeysConf, MaxKeysDefault.toString).toInt
     val literalRule = ManifestPruneRule(spark)
     // memo component: the manifest's file-set signature, so `manifest
@@ -918,20 +924,24 @@ private[sources] object ManifestCover {
   }
 }
 
-/** Shared stats access for the stats-answering rules.
+/** The one stats core the stats-answering rules ([[ManifestAggRule]],
+  * [[ManifestTopKRule]]) are written against: a rule opens a
+  * [[StatsSource]] for its table once per call and states its algorithm
+  * ONCE as folds over [[FStat]]s; the source picks the executor.
   *
-  * SMALL catalogs ([[ManifestSnapshot]] available) serve one table's rows
-  * as driver-side [[FStat]]s — jobless. PAST the snapshot cap the rules
-  * must NOT materialize per-file stats on the driver (round-15 verdict
-  * item 1: the old fallback collected one FStat per data file at PLANNING
-  * time, unbounded — GBs of driver heap at a 10M-file table): instead the
-  * classification and stat folding run as DISTRIBUTED planning-time jobs
-  * over the manifest, the driver receives ONE folded summary plus a
-  * CAPPED partial-path list, and results are MEMOIZED per (manifest
-  * file-set signature, table, canonicalized predicate, query shape) —
-  * the dim-key memo's discipline — so a dashboard re-issuing the same
-  * metadata query pays the jobs once and `manifest --update` invalidates
-  * by landing new part names. */
+  * SMALL catalogs ([[ManifestSnapshot]] available) fold the table's rows
+  * as driver-side [[FStat]]s in catalog order — jobless, unmemoized,
+  * lists unbounded. PAST the snapshot cap the rules must NOT materialize
+  * per-file stats on the driver (round-15 verdict item 1: the old
+  * fallback collected one FStat per data file at PLANNING time,
+  * unbounded — GBs of driver heap at a 10M-file table): the same folds
+  * run as DISTRIBUTED planning-time jobs over the manifest, the driver
+  * receives ONE folded summary plus lists CAPPED at
+  * [[MaxDriverPathsConf]], and results are MEMOIZED per (manifest
+  * file-set signature, table, the caller's key) — the dim-key memo's
+  * discipline — so a dashboard re-issuing the same metadata query pays
+  * the jobs once and `manifest --update` invalidates by landing new part
+  * names. */
 private[sources] object ManifestStats {
 
   /** Session conf: largest driver-side list (partial-file paths, top-k
@@ -940,6 +950,21 @@ private[sources] object ManifestStats {
     * scan — cost, never rows. */
   val MaxDriverPathsConf = "graft.manifest.statsMaxDriverPaths"
   val MaxDriverPathsDefault = 100000
+
+  /** Open `table`'s stats for one rule call and run `use` over them:
+    * None when the manifest is missing (fast, without burning the retry
+    * backoff); otherwise `use` runs inside [[Manifest.withReadRetry]]
+    * over the snapshot executor when the catalog is small, the
+    * distributed one past the cap. */
+  def open[T](spark: SparkSession, manifestPath: String, table: String)(
+      use: StatsSource => Option[T]): Option[T] = {
+    val p = new HPath(manifestPath)
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+    else Manifest.withReadRetry() {
+      use(localStats(spark, manifestPath, table)
+        .getOrElse(distributed(spark, manifestPath, table)))
+    }
+  }
 
   /** Distributed-answer memo — access-ordered LRU, keys carry the
     * manifest signature so maintenance invalidates by construction.
@@ -959,8 +984,7 @@ private[sources] object ManifestStats {
   private[sources] def memoWeightOf(v: Any): Long = v match {
     case s: StatsSummary => 1L + s.partialFiles.size
     case g: GroupedSummary => 1L + g.scanFiles.size + g.groups.size
-    case Some(x) => memoWeightOf(x)
-    case (paths: Seq[_], _) => 1L + paths.size
+    case top: Vector[_] => 1L + top.size
     case _ => 1L
   }
 
@@ -1045,18 +1069,17 @@ private[sources] object ManifestStats {
       if (hasSums) structMap(if (hasNulls) 6 else 5) else Map.empty)
   }
 
-  /** One table's stats as driver [[FStat]]s, ONLY when the snapshot is
-    * available (jobless). None past the cap — callers must then use the
-    * distributed primitives instead of collecting. */
-  def localStats(spark: SparkSession, manifestPath: String, table: String)
-      : Option[(Map[String, String], Boolean, IndexedSeq[FStat])] =
+  /** The snapshot executor over one table's driver [[FStat]]s, ONLY when
+    * the snapshot is available (jobless). None past the cap. */
+  private def localStats(spark: SparkSession, manifestPath: String,
+                         table: String): Option[StatsSource] =
     ManifestSnapshot.localManifest(spark, manifestPath).map { manifest =>
       val (keyFields, hasNulls, hasSums, projected) = schemaBits(manifest.schema)
       val stats = manifest.filter(col("table") === table)
         .select(projected: _*).collect()
         .map(toFStat(_, hasNulls, hasSums))
         .toIndexedSeq
-      (keyFields, hasNulls, stats)
+      new SnapshotStats(keyFields, stats)
     }
 
   /** The manifest's schema, memoized per file-set signature — parquet
@@ -1069,18 +1092,22 @@ private[sources] object ManifestStats {
     }
   }
 
-  /** Lazy distributed [[FStat]] scan for one table — building it runs no
-    * job (the schema comes memoized, skipping inference); each action over
-    * the returned RDD is a planning-time job whose RESULT the caller
-    * memoizes. */
-  def fstats(spark: SparkSession, manifestPath: String, table: String)
-      : (Map[String, String], Boolean, org.apache.spark.rdd.RDD[FStat]) = {
+  /** The distributed executor over one table's stats. The signature is
+    * read FIRST, before any manifest reader pins a file listing: the
+    * sandwich (sig → jobs → sig unchanged) is what makes its memo safe
+    * against a maintenance commit racing the planning jobs. Building it
+    * runs no job (the schema comes memoized, skipping inference). */
+  def distributed(spark: SparkSession, manifestPath: String,
+                  table: String): StatsSource = {
+    val (sigKey, sig, _) = ManifestSnapshot.signature(spark, manifestPath)
     val schema = manifestSchema(spark, manifestPath)
-    val df = spark.read.schema(schema).parquet(manifestPath)
-      .filter(col("table") === table)
     val (keyFields, hasNulls, hasSums, projected) = schemaBits(schema)
-    val rdd = df.select(projected: _*).rdd.map(toFStat(_, hasNulls, hasSums))
-    (keyFields, hasNulls, rdd)
+    val rdd = spark.read.schema(schema).parquet(manifestPath)
+      .filter(col("table") === table)
+      .select(projected: _*).rdd.map(toFStat(_, hasNulls, hasSums))
+    val cap = spark.conf.get(MaxDriverPathsConf, MaxDriverPathsDefault.toString).toInt
+    new DistributedStats(spark, manifestPath, table, (sigKey, sig), keyFields,
+      rdd, cap)
   }
 
   /** Order-independent fingerprint of the relation's file listing, for
@@ -1124,9 +1151,76 @@ private[sources] object ManifestStats {
   }
 }
 
-/** Per-column stat fold over COVERED files — the distributed twin of the
-  * driver path's per-call [[ManifestAggRule]] aggValue semantics, kept
-  * value-identical by AggStatsFoldSpec's small/large differential. */
+/** One table's per-file stats for one rule call (see [[ManifestStats]]).
+  * Every operation answers None only when a maintenance commit raced a
+  * distributed job — the caller then declines, and the scan reads
+  * whatever state actually holds. Closures handed to [[fold]] and
+  * [[top]] ship to executors on the distributed path, so they must
+  * capture only serializable values (never the rule or the source). */
+private[sources] sealed trait StatsSource {
+  /** Lower-cased key name → the manifest's own key field name. */
+  def keyFields: Map[String, String]
+  /** Longest list a fold may hold on the driver. */
+  def cap: Int
+  /** The manifest catalogs EXACTLY the relation's current files — stale
+    * in either direction declines, so a rule never answers from vanished
+    * files or misses out-of-band arrivals. */
+  def complete(relFiles: Array[String]): Boolean
+  /** `add` every file into `zero`; `merge` combines partial folds.
+    * `memoKey` names the fold's query shape for the distributed memo. */
+  def fold[A: ClassTag](memoKey: Any)(zero: A)(add: (A, FStat) => A,
+                                               merge: (A, A) => A): Option[A]
+  /** The `n` largest of `f`'s values by `ord`, largest first. */
+  def top[T: ClassTag](memoKey: Any, n: Int)(f: FStat => Option[T])(
+      ord: Ordering[T]): Option[Vector[T]]
+
+  def keyOf(name: String): Option[String] =
+    keyFields.get(name.toLowerCase(java.util.Locale.ROOT))
+}
+
+/** Snapshot executor: folds the driver-resident stats left to right in
+  * catalog order (so double sums add in one fixed order), no memo, no
+  * Spark job, lists unbounded. */
+private[sources] final class SnapshotStats(val keyFields: Map[String, String],
+                                           stats: IndexedSeq[FStat]) extends StatsSource {
+  val cap: Int = Int.MaxValue
+  def complete(relFiles: Array[String]): Boolean =
+    relFiles.iterator.map(ManifestSql.normPath).toSet ==
+      stats.iterator.map(s => ManifestSql.normPath(s.path)).toSet
+  def fold[A: ClassTag](memoKey: Any)(zero: A)(add: (A, FStat) => A,
+                                               merge: (A, A) => A): Option[A] =
+    Some(stats.foldLeft(zero)(add))
+  def top[T: ClassTag](memoKey: Any, n: Int)(f: FStat => Option[T])(
+      ord: Ordering[T]): Option[Vector[T]] =
+    Some(stats.flatMap(f).sorted(ord.reverse).take(n).toVector)
+}
+
+/** Distributed executor: each operation is one planning-time job over the
+  * manifest (`rdd.aggregate`, per-partition `rdd.top`, the except-probe),
+  * signature-sandwiched in [[ManifestStats.memoizedStable]]. */
+private[sources] final class DistributedStats(
+    spark: SparkSession, manifestPath: String, table: String, sig: (String, Any),
+    val keyFields: Map[String, String], rdd: org.apache.spark.rdd.RDD[FStat],
+    val cap: Int) extends StatsSource {
+  private def stable[T](memoKey: Any)(compute: => T): Option[T] =
+    ManifestStats.memoizedStable(spark, manifestPath, sig._2,
+      (memoKey, sig, table, cap))(compute)
+  def complete(relFiles: Array[String]): Boolean =
+    ManifestStats.complete(spark, manifestPath, table, relFiles)
+  def fold[A: ClassTag](memoKey: Any)(zero: A)(add: (A, FStat) => A,
+                                               merge: (A, A) => A): Option[A] =
+    stable(memoKey)(rdd.aggregate(zero)(add, merge))
+  def top[T: ClassTag](memoKey: Any, n: Int)(f: FStat => Option[T])(
+      ord: Ordering[T]): Option[Vector[T]] =
+    stable((memoKey, n))(rdd.flatMap(f).top(n)(ord).toVector)
+}
+
+/** Per-column stat fold over COVERED files — the one definition of
+  * COUNT/MIN/MAX/SUM-from-stats, run by both [[StatsSource]] executors;
+  * `ManifestSqlSpec`'s small/large differential cases pin the two
+  * value-identical. A file holding real rows with no stat for `k` makes
+  * that call unknowable (it declines); an all-null or empty file
+  * contributes nothing. */
 private[sources] final case class ColFold(
     cntKnown: Boolean = true, cnt: Long = 0L,
     mnUnknowable: Boolean = false, mn: Option[Any] = None,
@@ -1205,9 +1299,9 @@ private[sources] object ColFold {
     Some(cur.fold(v)(c => addExactVals(c, v)))
 }
 
-/** Single-valued group-key proof shared by the driver and distributed
-  * GROUP-BY paths: a file whose min = max with zero nulls names its one
-  * group value; an all-null file names the NULL group. Doubles normalize
+/** Single-valued group-key proof for the GROUP-BY fold: a file whose
+  * min = max with zero nulls names its one group value; an all-null file
+  * names the NULL group. Doubles normalize
   * -0.0 to 0.0 like Spark's own grouping, or a file pair single-valued on
   * (-0.0, 0.0) would split one group into two. */
 private[sources] object GroupKey {
@@ -1233,7 +1327,7 @@ private[sources] object GroupKey {
   }
 }
 
-/** Per-group fold for the distributed GROUP-BY path. */
+/** Per-group fold for the GROUP-BY path. */
 private[sources] final case class GroupFold(rows: Long = 0L,
     cols: Map[String, ColFold] = Map.empty) {
   def add(st: FStat, needCols: Seq[String]): GroupFold =
@@ -1251,11 +1345,11 @@ private[sources] final case class GroupFold(rows: Long = 0L,
       }.toMap)
 }
 
-/** Folded distributed GROUP-BY classification: per-group stat folds for
+/** Folded GROUP-BY classification: per-group stat folds for
   * single-valued covered files, a capped scan list for everything else
   * that survives the filter. */
 private[sources] final case class GroupedSummary(
-    total: Long = 0L, noneCount: Long = 0L,
+    total: Long = 0L,
     scanFiles: Vector[(String, Option[Long])] = Vector.empty,
     scanOverflow: Boolean = false,
     groups: Map[Vector[Any], GroupFold] = Map.empty,
@@ -1264,7 +1358,7 @@ private[sources] final case class GroupedSummary(
   def add(st: FStat, cover: Cover, gKeys: Seq[String],
           needCols: Seq[String], cap: Int): GroupedSummary =
     cover match {
-      case CoverNone => copy(total = total + 1, noneCount = noneCount + 1)
+      case CoverNone => copy(total = total + 1)
       case CoverAll if st.rows == 0L => copy(total = total + 1)
       case CoverAll =>
         GroupKey.valueOf(st, gKeys) match {
@@ -1291,7 +1385,7 @@ private[sources] final case class GroupedSummary(
     val mergedGroups = o.groups.foldLeft(groups) { case (acc, (g, f)) =>
       acc.updated(g, acc.getOrElse(g, GroupFold()).merge(f))
     }
-    GroupedSummary(total + o.total, noneCount + o.noneCount,
+    GroupedSummary(total + o.total,
       mergedScan.take(cap),
       scanOverflow || o.scanOverflow || mergedScan.size > cap,
       if (mergedGroups.size > cap) mergedGroups.take(cap) else mergedGroups,
@@ -1299,9 +1393,11 @@ private[sources] final case class GroupedSummary(
   }
 }
 
-/** Folded distributed classification: one row back to the driver. */
+/** Folded classification: covered rows and per-column folds, plus the
+  * capped list of files that must still be scanned. One row back to the
+  * driver on the distributed path. */
 private[sources] final case class StatsSummary(
-    total: Long = 0L, coveredRows: Long = 0L, noneCount: Long = 0L,
+    total: Long = 0L, coveredRows: Long = 0L,
     partialCount: Long = 0L,
     partialFiles: Vector[(String, Option[Long])] = Vector.empty,
     partialOverflow: Boolean = false,
@@ -1309,7 +1405,7 @@ private[sources] final case class StatsSummary(
 
   def add(st: FStat, cover: Cover, needCols: Seq[String], cap: Int): StatsSummary =
     cover match {
-      case CoverNone => copy(total = total + 1, noneCount = noneCount + 1)
+      case CoverNone => copy(total = total + 1)
       case CoverPartial =>
         val over = partialOverflow || partialFiles.size >= cap
         copy(total = total + 1, partialCount = partialCount + 1,
@@ -1326,7 +1422,7 @@ private[sources] final case class StatsSummary(
   def merge(o: StatsSummary, cap: Int): StatsSummary = {
     val mergedPartial = partialFiles ++ o.partialFiles
     StatsSummary(total + o.total, coveredRows + o.coveredRows,
-      noneCount + o.noneCount, partialCount + o.partialCount,
+      partialCount + o.partialCount,
       mergedPartial.take(cap),
       partialOverflow || o.partialOverflow || mergedPartial.size > cap,
       (cols.keySet ++ o.cols.keySet).iterator.map { k =>
@@ -1508,7 +1604,7 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
     * function must be one the per-file stats can answer, over either a
     * literal or the RELATION's own attribute (exprId membership — whether
     * that attribute is a manifest KEY is only knowable after the manifest
-    * schema loads, checked in [[aggValue]]). */
+    * schema loads, checked in [[answer]]). */
   private def shapeSupported(ae: AggregateExpression, rel: LogicalRelation): Boolean =
     !ae.isDistinct && ae.filter.isEmpty && (ae.aggregateFunction match {
       // a NULL literal counts ZERO rows, not the table: `count(NULL)` — or
@@ -1574,159 +1670,82 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
     case _ => None
   }
 
+  /** The metadata answer for `agg` over `rel`, or None when any gate
+    * declines. One body for both [[StatsSource]] executors: the cheap
+    * shape gates run first, then completeness, then ONE classify+fold
+    * ([[StatsSummary]], or [[GroupedSummary]] under GROUP BY) whose values
+    * assemble the pure, hybrid or grouped plan. */
   private def answer(manifestPath: String, table: String, h: HadoopFsRelation,
                      rel: LogicalRelation, conjuncts: Seq[Expression],
                      agg: Aggregate,
-                     groupAttrs: Seq[AttributeReference]): Option[LogicalPlan] = {
-    // fast-fail a missing manifest without burning the retry backoff
-    val p = new HPath(manifestPath)
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) return None
-    Manifest.withReadRetry() {
-      ManifestStats.localStats(spark, manifestPath, table) match {
-        case Some((keyFields, _, stats)) =>
-          // completeness: the manifest must catalog EXACTLY the relation's
-          // current files — stale in either direction declines, so the
-          // rewrite never answers from vanished files or misses out-of-band
-          // arrivals. Both sides are driver-resident listings (no job).
-          val relFiles = h.location.inputFiles.iterator.map(ManifestSql.normPath).toSet
-          val manFiles = stats.iterator.map(s => ManifestSql.normPath(s.path)).toSet
-          if (relFiles != manFiles) None
-          else {
-            val compiled = conjuncts.map(compileConjunct(_, rel.outputSet, keyFields))
-            if (compiled.exists(_.isEmpty)) None
-            else {
-              val fns = compiled.map(_.get)
-              val classified = stats.map(st => (st, ManifestCover.of(fns)(st)))
-              if (groupAttrs.nonEmpty)
-                answerGrouped(agg, rel, h, groupAttrs, classified, keyFields)
-              else answerGlobal(agg, rel, h, classified, keyFields)
-            }
-          }
-        case None =>
-          // past the snapshot cap: classify and fold DISTRIBUTED, never
-          // one FStat per file on the driver (round-15 verdict item 1);
-          // GROUP BY folds per-group with the group map capped at
-          // statsMaxDriverPaths (a group needs at least one file, so the
-          // map is file-bounded; past the cap it declines — cost, never
-          // rows)
-          answerDistributed(manifestPath, table, h, rel, conjuncts, agg,
-            groupAttrs)
-      }
-    }
-  }
-
-  /** Distributed twin of the small-catalog path: one classify+fold job
-    * returns a [[StatsSummary]] (memoized per signature × predicate ×
-    * needed columns), a distributed except-probe checks completeness,
-    * and the same pure/hybrid plans assemble from the folded values. */
-  private def answerDistributed(manifestPath: String, table: String,
-                                h: HadoopFsRelation, rel: LogicalRelation,
-                                conjuncts: Seq[Expression], agg: Aggregate,
-                                groupAttrs: Seq[AttributeReference])
-      : Option[LogicalPlan] = {
-    // signature FIRST, before any manifest reader pins a file listing: the
-    // sandwich (sig → jobs → sig unchanged) is what makes the memo safe
-    // against a maintenance commit racing the planning jobs
-    val (sigKey, sig, _) = ManifestSnapshot.signature(spark, manifestPath)
-    val (keyFields, _, rdd) = ManifestStats.fstats(spark, manifestPath, table)
-    val compiled = conjuncts.map(compileConjunct(_, rel.outputSet, keyFields))
-    if (compiled.exists(_.isEmpty)) return None
-    val fns = compiled.map(_.get)
-    val calls = agg.aggregateExpressions.flatMap(_.collect {
-      case ae: AggregateExpression => ae }).distinct
-    // every referenced column must be a manifest key, or the fold cannot
-    // answer its call later — decline before paying any job
-    val needCols = calls.flatMap(_.aggregateFunction.collect {
-      case ar: AttributeReference => ar }).flatMap(ar =>
-      keyFields.get(ar.name.toLowerCase(java.util.Locale.ROOT)))
-    val refCount = calls.map(_.aggregateFunction.collect {
-      case ar: AttributeReference => ar }.size).sum
-    if (needCols.size != refCount) return None
-    val gKeysOpt = groupAttrs.map(a =>
-      keyFields.get(a.name.toLowerCase(java.util.Locale.ROOT)))
-    if (gKeysOpt.exists(_.isEmpty)) return None
-    val gKeys = gKeysOpt.map(_.get)
-    if (!ManifestStats.complete(spark, manifestPath, table,
-        h.location.inputFiles)) return None
-    val cap = spark.conf.get(ManifestStats.MaxDriverPathsConf,
-      ManifestStats.MaxDriverPathsDefault.toString).toInt
-    val needKey = needCols.distinct.sorted
-    val coverOf = ManifestCover.of(fns) _
-    if (groupAttrs.isEmpty) {
-      val summaryOpt = ManifestStats.memoizedStable(spark, manifestPath, sig,
-        ("aggsum", sigKey, sig, table, conjuncts.map(_.canonicalized), needKey, cap)) {
-        rdd.aggregate(StatsSummary())(
-          (s, st) => s.add(st, coverOf(st), needKey, cap),
-          (a, b) => a.merge(b, cap))
-      }
-      if (summaryOpt.isEmpty) return None // commit raced planning: decline
-      val summary = summaryOpt.get
-      val statsVals = calls.map(ae => valueFromFold(ae, summary, keyFields))
-      if (statsVals.exists(_.isEmpty)) None
-      else if (summary.partialCount == 0L) {
-        val byCall = calls.zip(statsVals.map(_.get)).toMap
-        val replaced = agg.aggregateExpressions.map { ne =>
-          ne.transformUp {
-            case ae: AggregateExpression => byCall.getOrElse(ae, ae)
-          }.asInstanceOf[NamedExpression]
-        }
-        val row = InternalRow.fromSeq(replaced.map { ne =>
-          val e = ne match { case Alias(c, _) => c; case o => o }
-          e.eval(InternalRow.empty)
-        })
-        Some(LocalRelation(agg.output, Seq(row)))
-      } else if (summary.partialOverflow || summary.partialCount == summary.total) None
-      else hybridFromParts(agg, rel, h, calls, statsVals.map(_.get),
-        summary.partialFiles)
-    } else {
-      // GROUP BY: per-group folds, group map capped (one group needs at
-      // least one single-valued file, so it is file-bounded; overflow of
-      // either cap declines whole)
-      val summaryOpt = ManifestStats.memoizedStable(spark, manifestPath, sig,
-        ("aggsumg", sigKey, sig, table, conjuncts.map(_.canonicalized),
-          gKeys, needKey, cap)) {
-        rdd.aggregate(GroupedSummary())(
-          (s, st) => s.add(st, coverOf(st), gKeys, needKey, cap),
-          (a, b) => a.merge(b, cap))
-      }
-      if (summaryOpt.isEmpty) return None // commit raced planning: decline
-      val summary = summaryOpt.get
-      if (summary.groupOverflow || summary.scanOverflow) None
+                     groupAttrs: Seq[AttributeReference]): Option[LogicalPlan] =
+    ManifestStats.open(spark, manifestPath, table) { src =>
+      val compiled = conjuncts.map(compileConjunct(_, rel.outputSet, src.keyFields))
+      val calls = agg.aggregateExpressions.flatMap(_.collect {
+        case ae: AggregateExpression => ae }).distinct
+      // every referenced column must be a manifest key, or the fold cannot
+      // answer its call later — decline before paying any job
+      val refs = calls.flatMap(_.aggregateFunction.collect {
+        case ar: AttributeReference => ar })
+      val needCols = refs.flatMap(ar => src.keyOf(ar.name))
+      val gKeys = groupAttrs.flatMap(a => src.keyOf(a.name))
+      if (compiled.exists(_.isEmpty) || needCols.size != refs.size ||
+          gKeys.size != groupAttrs.size ||
+          !src.complete(h.location.inputFiles)) None
       else {
-        val groupValsOpt = summary.groups.map { case (g, gf) =>
-          g -> calls.map(ae =>
-            valueFromColFolds(ae, gf.rows, gf.cols, keyFields))
-        }
-        if (groupValsOpt.valuesIterator.exists(_.exists(_.isEmpty))) None
-        else {
-          val groupVals = groupValsOpt.view.mapValues(_.map(_.get)).toMap
-          if (summary.scanFiles.isEmpty)
-            Some(groupedPure(agg, groupAttrs, calls, groupVals))
-          else if (summary.scanFiles.size.toLong == summary.total) None
-          else hybridGrouped(agg, rel, h, groupAttrs, calls, groupVals,
-            summary.scanFiles)
+        val coverOf = ManifestCover.of(compiled.map(_.get)) _
+        val needKey = needCols.distinct.sorted
+        val cap = src.cap
+        val shape = (conjuncts.map(_.canonicalized), needKey)
+        def valuesOf(rows: Long, cols: Map[String, ColFold]) =
+          calls.map(valueFromColFolds(_, rows, cols, src.keyFields))
+        // (per-group call values, files still to scan, files cataloged); a
+        // global aggregate is the zero-key case — one group, `Vector()`
+        val folded =
+          if (groupAttrs.isEmpty)
+            src.fold(("aggsum", shape))(StatsSummary())(
+              (s, st) => s.add(st, coverOf(st), needKey, cap), _.merge(_, cap))
+              .filterNot(_.partialOverflow)
+              .map(s => (Map(Vector.empty[Any] -> valuesOf(s.coveredRows, s.cols)),
+                s.partialFiles, s.total))
+          else
+            // per-group folds, group map capped (one group needs at least
+            // one single-valued file, so it is file-bounded; overflow of
+            // either list declines whole)
+            src.fold(("aggsumg", shape, gKeys))(GroupedSummary())(
+              (s, st) => s.add(st, coverOf(st), gKeys, needKey, cap), _.merge(_, cap))
+              .filterNot(s => s.groupOverflow || s.scanOverflow)
+              .map(s => (s.groups.map { case (g, gf) => g -> valuesOf(gf.rows, gf.cols) },
+                s.scanFiles, s.total))
+        folded.flatMap { case (valsOpt, scanFiles, total) =>
+          if (valsOpt.valuesIterator.exists(_.exists(_.isEmpty))) None
+          else {
+            val groupVals = valsOpt.view.mapValues(_.map(_.get)).toMap
+            if (scanFiles.isEmpty)
+              Some(groupedPure(agg, groupAttrs, calls, groupVals))
+            else if (scanFiles.size.toLong == total) None // nothing saved
+            else Some(hybridGrouped(agg, rel, groupAttrs, calls, groupVals,
+              scanFiles))
+          }
         }
       }
     }
-  }
 
-  /** One aggregate call's exact value over the covered files, from the
-    * distributed fold — the driver aggValue's semantics re-expressed over
-    * [[StatsSummary]]; the small/large differential spec pins the two
-    * value-identical. */
-  private def valueFromFold(ae: AggregateExpression, summary: StatsSummary,
-                            keyFields: Map[String, String]): Option[Literal] =
-    valueFromColFolds(ae, summary.coveredRows, summary.cols, keyFields)
-
+  /** One aggregate call's exact value from the folded stats of the files
+    * it covers, or None when the stats cannot prove it (unknown null
+    * counts under COUNT(k), missing min/max/sum stats on a file holding
+    * real rows, a SUM past its result type). A column with no covered
+    * file folds as empty: COUNT 0, MIN/MAX/SUM NULL. */
   private def valueFromColFolds(ae: AggregateExpression, coveredRows: Long,
                                 colFolds: Map[String, ColFold],
                                 keyFields: Map[String, String]): Option[Literal] = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate._
-    def keyOf(ar: AttributeReference): Option[String] =
-      keyFields.get(ar.name.toLowerCase(java.util.Locale.ROOT))
     def fold(ar: AttributeReference): Option[ColFold] =
-      keyOf(ar).flatMap(colFolds.get)
+      keyFields.get(ar.name.toLowerCase(java.util.Locale.ROOT))
+        .map(colFolds.getOrElse(_, ColFold()))
     ae.aggregateFunction match {
+      // non-null literal only — count(NULL) is 0, never the row count
+      // (round-15 advice; shapeSupported already declines, kept here so
+      // the two gates can never drift apart)
       case Count(Seq(Literal(v, _))) if v != null =>
         Some(Literal(coveredRows))
       case Count(Seq(e)) =>
@@ -1790,40 +1809,6 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
       }
   }
 
-  private def answerGlobal(agg: Aggregate, rel: LogicalRelation,
-                           h: HadoopFsRelation,
-                           classified: Seq[(FStat, Cover)],
-                           keyFields: Map[String, String]): Option[LogicalPlan] = {
-    val stats = classified.map(_._1)
-    val covered = classified.collect { case (st, CoverAll) => st }
-    val partialFiles = classified.collect { case (st, CoverPartial) => st }
-          if (partialFiles.isEmpty) {
-            var unanswerable = false
-            val replaced = agg.aggregateExpressions.map { ne =>
-              ne.transformUp {
-                case ae: AggregateExpression =>
-                  aggValue(ae, covered, keyFields) match {
-                    case Some(l) => l
-                    case None => unanswerable = true; ae
-                  }
-              }.asInstanceOf[NamedExpression]
-            }
-            if (unanswerable) None
-            else {
-              // aggregate calls are now literals and everything around
-              // them is deterministic and input-free — evaluate the one
-              // output row driver-side and emit a LocalRelation, whose
-              // collect is jobless
-              val row = InternalRow.fromSeq(replaced.map { ne =>
-                val e = ne match { case Alias(c, _) => c; case o => o }
-                e.eval(InternalRow.empty)
-              })
-              Some(LocalRelation(agg.output, Seq(row)))
-            }
-          } else if (partialFiles.size == stats.size) None
-          else hybrid(agg, rel, h, covered, partialFiles, keyFields)
-  }
-
   /** GROUP BY metadata aggregates (round-15 verdict item 4): per-group
     * COUNT/SUM/MIN/MAX answered from stats whenever every contributing
     * file is SINGLE-VALUED on all group keys — min = max with zero nulls
@@ -1835,44 +1820,15 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
     * excludes are never touched; fully-aligned layouts answer with ZERO
     * data I/O. Group discovery is bounded by the cataloged file count
     * (one group needs at least one file), so the driver-side group map
-    * inherits the snapshot cap's envelope. */
-  private def answerGrouped(agg: Aggregate, rel: LogicalRelation,
-                            h: HadoopFsRelation,
-                            groupAttrs: Seq[AttributeReference],
-                            classified: Seq[(FStat, Cover)],
-                            keyFields: Map[String, String]): Option[LogicalPlan] = {
-    val gKeys = groupAttrs.map(a =>
-      keyFields.get(a.name.toLowerCase(java.util.Locale.ROOT)))
-    if (gKeys.exists(_.isEmpty)) return None
-    val keys = gKeys.map(_.get)
-    val nonExcluded = classified.filter(_._2 != CoverNone)
-    val (statsFiles, scanFiles) = nonExcluded.partition { case (st, c) =>
-      c == CoverAll && (st.rows == 0L || GroupKey.valueOf(st, keys).isDefined) }
-    val calls = agg.aggregateExpressions.flatMap(_.collect {
-      case ae: AggregateExpression => ae }).distinct
-    val statsGroups: Map[Vector[Any], Seq[FStat]] = statsFiles
-      .collect { case (st, _) if st.rows > 0L =>
-        (GroupKey.valueOf(st, keys).get, st) }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val groupValsOpt: Map[Vector[Any], Seq[Option[Literal]]] =
-      statsGroups.map { case (g, fs) =>
-        g -> calls.map(ae => aggValue(ae, fs, keyFields)) }
-    if (groupValsOpt.valuesIterator.exists(_.exists(_.isEmpty))) None
-    else {
-      val groupVals = groupValsOpt.view.mapValues(_.map(_.get)).toMap
-      if (scanFiles.isEmpty)
-        Some(groupedPure(agg, groupAttrs, calls, groupVals))
-      else if (scanFiles.size == classified.size) None // nothing saved
-      else hybridGrouped(agg, rel, h, groupAttrs, calls, groupVals,
-        scanFiles.map { case (st, _) => (st.path, st.bytes) })
-    }
-  }
-
-  /** Pure per-group stats answer: one LocalRelation row per group, output
-    * exprIds kept. Agg calls replace TOP-DOWN (so the call is still the
-    * original instance `calls` indexes), then remaining group-attr
-    * references — bare outputs or wrappers like CAST(g) — substitute
-    * bottom-up. */
+    * inherits the snapshot cap's envelope.
+    *
+    * The pure per-group stats answer: one LocalRelation row per group,
+    * output exprIds kept — the aggregate calls become literals and
+    * everything around them is deterministic and input-free, so each row
+    * evaluates driver-side and the LocalRelation's collect is jobless. Agg
+    * calls replace TOP-DOWN (so the call is still the original instance
+    * `calls` indexes), then remaining group-attr references — bare outputs
+    * or wrappers like CAST(g) — substitute bottom-up. */
   private def groupedPure(agg: Aggregate, groupAttrs: Seq[AttributeReference],
                           calls: Seq[AggregateExpression],
                           groupVals: Map[Vector[Any], Seq[Literal]]): LogicalPlan = {
@@ -1892,29 +1848,31 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
     LocalRelation(agg.output, rows)
   }
 
-  /** Grouped hybrid: stats-answerable groups ride a LocalRelation leg,
-    * straddling/multi-valued files aggregate in a pruned scan leg, and a
-    * final Aggregate over the union re-combines per group. The union's
-    * output reuses the scan leg's attribute ids, so the original
-    * grouping attributes and output exprIds survive untouched. */
+  /** PARTIAL-coverage metadata aggregates (round 15): real predicates
+    * rarely align with file boundaries, so the all-or-nothing rewrite
+    * left the common case — a date range whose endpoints land inside two
+    * boundary files — scanning everything the prune rule kept. The
+    * hybrid answers the covered files from stats and scans ONLY the
+    * partial (and, under GROUP BY, multi-valued) files: the plan becomes
+    *
+    *   Aggregate(combine, Union(Aggregate(calls, Filter(partial-only scan)),
+    *                            LocalRelation(stats rows)))
+    *
+    * where `combine` re-aggregates per group (COUNT → SUM, MIN → MIN,
+    * MAX → MAX, SUM → SUM — all commutative-mergeable, which is WHY the
+    * supported set is what it is). Excluded files are never touched;
+    * covered files cost zero I/O; at 100 TB a month-range COUNT over a
+    * date-laid-out fact scans two boundary files instead of the month.
+    * The union's output reuses the scan leg's attribute ids, so the
+    * original grouping attributes and output exprIds survive untouched. */
   private def hybridGrouped(agg: Aggregate, rel: LogicalRelation,
-                            h: HadoopFsRelation,
                             groupAttrs: Seq[AttributeReference],
                             calls: Seq[AggregateExpression],
                             groupVals: Map[Vector[Any], Seq[Literal]],
-                            scanFiles: Seq[(String, Option[Long])]): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min, Sum}
-    val keepSet = scanFiles.map(p => ManifestSql.normPath(p._1)).toSet
-    val bytes =
-      if (scanFiles.nonEmpty && scanFiles.forall(_._2.isDefined))
-        Some(scanFiles.iterator.flatMap(_._2).sum)
-      else None
-    val newRel = h.copy(
-      location = new ManifestPrunedFileIndex(h.location, keepSet, bytes),
-      options = h.options - ManifestSql.PathOption - ManifestSql.TableOption)(spark)
-    val prunedChild = agg.child.transformDown {
-      case l: LogicalRelation if l.eq(rel) => l.copy(relation = newRel)
-    }
+                            scanFiles: Seq[(String, Option[Long])]): LogicalPlan = {
+    // the original child (row-level Filter + Projects) is preserved over
+    // the partial-only scan, so the predicate still re-applies per row
+    val prunedChild = ManifestSql.pruneRelation(spark, agg.child, rel, scanFiles)
     val legAliases = calls.zipWithIndex.map { case (ae, i) =>
       Alias(ae, s"__leg$i")() }
     val scanLeg = Aggregate(groupAttrs,
@@ -1937,95 +1895,8 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
     val combineOf: Map[AggregateExpression, Expression] =
       calls.zip(legOut).map { case (ae, leg) =>
         val comb: Expression = ae.aggregateFunction match {
-          case Count(_) =>
-            Coalesce(Seq(Sum(leg).toAggregateExpression(), Literal(0L)))
-          case _: Min => Min(leg).toAggregateExpression()
-          case _: Max => Max(leg).toAggregateExpression()
-          case _: Sum =>
-            val s = Sum(leg).toAggregateExpression()
-            if (s.dataType == ae.dataType) s else Cast(s, ae.dataType)
-          case _ => ae // unreachable behind shapeSupported
-        }
-        ae -> comb
-      }.toMap
-    // transformUp, like the global hybrid: bottom-up replaces the ORIGINAL
-    // call (top-down would recurse into the combiner's own new Sum call
-    // and miss the map)
-    val combined = agg.aggregateExpressions.map { ne =>
-      ne.transformUp {
-        case ae: AggregateExpression => combineOf.getOrElse(ae, ae)
-      }.asInstanceOf[NamedExpression]
-    }
-    Some(Aggregate(unionOut.take(groupAttrs.size), combined, union))
-  }
-
-  /** PARTIAL-coverage metadata aggregates (round 15): real predicates
-    * rarely align with file boundaries, so the all-or-nothing rewrite
-    * left the common case — a date range whose endpoints land inside two
-    * boundary files — scanning everything the prune rule kept. The
-    * hybrid answers the covered files from stats and scans ONLY the
-    * partial files: the plan becomes
-    *
-    *   Aggregate(combine, Union(Aggregate(calls, Filter(partial-only scan)),
-    *                            LocalRelation(stats row)))
-    *
-    * where `combine` re-aggregates the two partial rows (COUNT → SUM,
-    * MIN → MIN, MAX → MAX — all three are commutative-mergeable, which
-    * is WHY the supported set is what it is). Excluded files are never
-    * touched; covered files cost zero I/O; at 100 TB a month-range
-    * COUNT over a date-laid-out fact scans two boundary files instead
-    * of the month. Declines when every file is partial (nothing to
-    * save) or the stats leg is unanswerable. */
-  private def hybrid(agg: Aggregate, rel: LogicalRelation, h: HadoopFsRelation,
-                     covered: Seq[FStat], partialFiles: Seq[FStat],
-                     keyFields: Map[String, String]): Option[LogicalPlan] = {
-    val calls = agg.aggregateExpressions.flatMap(_.collect {
-      case ae: AggregateExpression => ae }).distinct
-    val statsVals = calls.map(ae => aggValue(ae, covered, keyFields))
-    if (statsVals.exists(_.isEmpty)) None
-    else hybridFromParts(agg, rel, h, calls, statsVals.map(_.get),
-      partialFiles.map(st => (st.path, st.bytes)))
-  }
-
-  /** Plan assembly shared by the driver and distributed hybrids: the
-    * stats leg carries the pre-folded values, the scan leg reads only the
-    * partial files. */
-  private def hybridFromParts(agg: Aggregate, rel: LogicalRelation,
-                              h: HadoopFsRelation,
-                              calls: Seq[AggregateExpression],
-                              statsVals: Seq[Literal],
-                              partialFiles: Seq[(String, Option[Long])])
-      : Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min, Sum}
-    val keepSet = partialFiles.map(p => ManifestSql.normPath(p._1)).toSet
-    val bytes =
-      if (partialFiles.nonEmpty && partialFiles.forall(_._2.isDefined))
-        Some(partialFiles.iterator.flatMap(_._2).sum)
-      else None
-    val newRel = h.copy(
-      location = new ManifestPrunedFileIndex(h.location, keepSet, bytes),
-      options = h.options - ManifestSql.PathOption - ManifestSql.TableOption)(spark)
-    // the original child (row-level Filter + Projects) is preserved over
-    // the partial-only scan, so the predicate still re-applies per row
-    val prunedChild = agg.child.transformDown {
-      case l: LogicalRelation if l.eq(rel) => l.copy(relation = newRel)
-    }
-    val legAliases = calls.zipWithIndex.map { case (ae, i) =>
-      Alias(ae, s"__leg$i")() }
-    val scanLeg = Aggregate(Nil, legAliases, prunedChild)
-    val statsAttrs = calls.zipWithIndex.map { case (ae, i) =>
-      AttributeReference(s"__leg$i", ae.dataType, nullable = true)() }
-    val statsLeg = LocalRelation(statsAttrs,
-      Seq(InternalRow.fromSeq(statsVals.map(_.value))))
-    val union = Union(Seq(scanLeg, statsLeg))
-    val unionOut = union.output
-    val combineOf: Map[AggregateExpression, Expression] =
-      calls.zipWithIndex.map { case (ae, i) =>
-        val leg = unionOut(i)
-        val comb: Expression = ae.aggregateFunction match {
-          // both legs always emit a row; counts are never null, but SUM
-          // is declared nullable — coalesce keeps the original COUNT
-          // contract of a non-null zero
+          // counts are never null, but SUM is declared nullable — coalesce
+          // keeps the original COUNT contract of a non-null zero
           case Count(_) =>
             Coalesce(Seq(Sum(leg).toAggregateExpression(), Literal(0L)))
           case _: Min => Min(leg).toAggregateExpression()
@@ -2040,12 +1911,14 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
         }
         ae -> comb
       }.toMap
+    // transformUp: bottom-up replaces the ORIGINAL call (top-down would
+    // recurse into the combiner's own new Sum call and miss the map)
     val combined = agg.aggregateExpressions.map { ne =>
       ne.transformUp {
-        case ae: AggregateExpression => combineOf(ae)
+        case ae: AggregateExpression => combineOf.getOrElse(ae, ae)
       }.asInstanceOf[NamedExpression]
     }
-    Some(Aggregate(Nil, combined, union))
+    Aggregate(unionOut.take(groupAttrs.size), combined, union)
   }
 
   /** One filter conjunct → a per-file coverage classifier, or None for
@@ -2134,87 +2007,6 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan]
       }
       case _ => None
     }
-  }
-
-  /** One aggregate call's exact value over the covered files, or None
-    * when the stats cannot prove it (unknown null counts under COUNT(k),
-    * missing min/max stats on a file holding real rows). */
-  private def aggValue(ae: AggregateExpression, covered: Seq[FStat],
-                       keyFields: Map[String, String]): Option[Literal] = {
-    def keyOf(ar: AttributeReference): Option[String] =
-      keyFields.get(ar.name.toLowerCase(java.util.Locale.ROOT))
-    def nullsOf(st: FStat, k: String): Option[Long] = st.nullCount(k)
-    def extremum(ar: AttributeReference, side: FStat => Map[String, Any],
-                 takeMin: Boolean): Option[Literal] =
-      keyOf(ar).flatMap { k =>
-        var unknowable = false
-        val contribs = covered.flatMap { st =>
-          val v = side(st).getOrElse(k, null)
-          if (v != null) Some(v)
-          else if (st.rows == 0L) None
-          else nullsOf(st, k) match {
-            // an all-null file contributes nothing to MIN/MAX (both
-            // ignore NULLs); missing stats over real rows are unknowable
-            case Some(n) if n == st.rows => None
-            case _ => unknowable = true; None
-          }
-        }
-        if (unknowable) None
-        else Some(Literal.create(
-          contribs.reduceOption((x, y) =>
-            if (takeMin == (Manifest.ordCompare(x, y) <= 0)) x else y).orNull,
-          ar.dataType))
-      }
-    ae.aggregateFunction match {
-      // non-null literal only — count(NULL) is 0, never the row count
-      // (round-15 advice; shapeSupported already declines, kept here so
-      // the two gates can never drift apart)
-      case Count(Seq(Literal(v, _))) if v != null =>
-        Some(Literal(covered.iterator.map(_.rows).sum))
-      case Count(Seq(e)) =>
-        // lossless casts are null-preserving: count(cast(k)) = count(k)
-        additiveTarget(e).flatMap { case (ar, _) =>
-          keyOf(ar).flatMap { k =>
-            val parts = covered.map { st =>
-              if (st.rows == 0L) Some(0L) else nullsOf(st, k).map(st.rows - _)
-            }
-            if (parts.exists(_.isEmpty)) None
-            else Some(Literal(parts.iterator.flatten.sum))
-          }
-        }
-      case Min(ar: AttributeReference) => extremum(ar, _.mins, takeMin = true)
-      case Max(ar: AttributeReference) => extremum(ar, _.maxs, takeMin = false)
-      case s: Sum =>
-        additiveTarget(s.child).flatMap { case (ar, castTo) =>
-          keyOf(ar).flatMap(k =>
-            exactSum(covered, k).flatMap(sm => sumResultLiteral(sm, ae, castTo)))
-        }
-      case _ => None
-    }
-  }
-
-  /** The EXACT sum of `k`'s per-file sums over the covered files, in
-    * [[ColFold]]'s exact accumulator space (BigInt / BigDecimal / Double):
-    * outer None = unknowable (a NULL sum over real rows — the file
-    * predates the sums column, or a per-file overflow); Some(None) = no
-    * non-null value existed (an all-null column's NULL sum is GENUINE —
-    * SUM ignores NULLs). The distributed twin is ColFold's sm fold, kept
-    * value-identical by AggStatsFoldSpec's differential. */
-  private def exactSum(covered: Seq[FStat], k: String): Option[Option[Any]] = {
-    var unknowable = false
-    val contribs = covered.flatMap { st =>
-      val v = st.sums.getOrElse(k, null)
-      if (v != null) Some(v)
-      else if (st.rows == 0L) None
-      else st.nullCount(k) match {
-        case Some(n) if n == st.rows => None
-        case _ => unknowable = true; None
-      }
-    }
-    if (unknowable) None
-    else if (contribs.isEmpty) Some(None)
-    else Some(Some(
-      contribs.iterator.map(ColFold.toExact).reduce(ColFold.addExactVals)))
   }
 }
 
@@ -2320,16 +2112,7 @@ case class ManifestTopKRule(spark: SparkSession) extends Rule[LogicalPlan]
           None
         case scala.util.Success(v) => v
       }
-    } yield {
-      val (paths, bytes) = keep
-      val keepSet = paths.map(ManifestSql.normPath).toSet
-      val newRel = h.copy(
-        location = new ManifestPrunedFileIndex(h.location, keepSet, bytes),
-        options = h.options - ManifestSql.PathOption - ManifestSql.TableOption)(spark)
-      child.transformDown {
-        case l: LogicalRelation if l.eq(rel) => l.copy(relation = newRel)
-      }
-    }
+    } yield ManifestSql.pruneRelation(spark, child, rel, keep)
 
   /** The marked relation under deterministic Projects and Filters, plus
     * every Filter conjunct crossed. A Project is 1:1 row-local, so
@@ -2351,222 +2134,121 @@ case class ManifestTopKRule(spark: SparkSession) extends Rule[LogicalPlan]
     case _ => None
   }
 
-  /** Surviving (paths, bytes) for the top-n by `attr`, or None when the
-    * guarantees never reach n, nothing would be skipped, or the manifest
-    * does not catalog EXACTLY the relation's current files (round-15
-    * advice: without the completeness gate, a data file that landed after
-    * the last `Manifest.update` was silently dropped from
-    * `ORDER BY … LIMIT` results — the one rule in the family that could
-    * lose rows to a stale catalog; the agg rule always had this guard). */
+  /** Surviving (path, bytes) files for the top-n by `attr`, or None when
+    * the guarantees never reach n, nothing would be skipped, n exceeds the
+    * source's driver-list cap, or the manifest does not catalog EXACTLY
+    * the relation's current files (round-15 advice: without the
+    * completeness gate, a data file that landed after the last
+    * `Manifest.update` was silently dropped from `ORDER BY … LIMIT`
+    * results — the one rule in the family that could lose rows to a
+    * stale catalog; the agg rule always had this guard). */
   private def survivors(manifestPath: String, table: String,
                         h: HadoopFsRelation, rel: LogicalRelation,
                         conjuncts: Seq[Expression],
                         attr: AttributeReference, desc: Boolean,
                         nullsFirst: Boolean,
-                        n: Int): Option[(Seq[String], Option[Long])] = {
-    // fast-fail a missing manifest without burning the retry backoff
-    val p = new HPath(manifestPath)
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) return None
-    Manifest.withReadRetry() {
-      ManifestStats.localStats(spark, manifestPath, table) match {
-        case Some((keyFields, _, stats)) =>
-          survivorsLocal(manifestPath, table, h, rel, conjuncts, attr, desc,
-            nullsFirst, n, keyFields, stats)
-        case None =>
-          survivorsDistributed(manifestPath, table, h, rel, conjuncts,
-            attr, desc, nullsFirst, n)
-      }
-    }
-  }
-
-  private def survivorsLocal(manifestPath: String, table: String,
-                             h: HadoopFsRelation, rel: LogicalRelation,
-                             conjuncts: Seq[Expression],
-                             attr: AttributeReference, desc: Boolean,
-                             nullsFirst: Boolean, n: Int,
-                             keyFields: Map[String, String],
-                             stats: IndexedSeq[FStat])
-      : Option[(Seq[String], Option[Long])] = {
-    {
+                        n: Int): Option[Seq[(String, Option[Long])]] =
+    ManifestStats.open(spark, manifestPath, table) { src =>
       // every Filter conjunct must classify, or a partial file could hide
       // inside a "guaranteed" count (shared compiler with the agg rule)
-      val fns = conjuncts.map(
-        ManifestAggRule(spark).compileConjunct(_, rel.outputSet, keyFields))
-      val relFiles = h.location.inputFiles.iterator.map(ManifestSql.normPath).toSet
-      val manFiles = stats.iterator.map(s => ManifestSql.normPath(s.path)).toSet
-      val complete = relFiles == manFiles
-      keyFields.get(attr.name.toLowerCase(java.util.Locale.ROOT))
-        .filter(_ => complete && !fns.exists(_.isEmpty)).flatMap { k =>
-        val classified =
-          stats.map(st => (st, ManifestCover.of(fns.map(_.get))(st)))
-        // excluded files drop outright; guarantees come ONLY from
-        // fully-covered files (their every row passes the filter);
-        // partial files stay candidates but guarantee nothing
-        val alive = classified.collect { case (st, c) if c != CoverNone => st }
-        val full = classified.collect { case (st, CoverAll) => st }
-        def mn(st: FStat): Any = st.mins.getOrElse(k, null)
-        def mx(st: FStat): Any = st.maxs.getOrElse(k, null)
-        def nulls(st: FStat): Option[Long] = st.nullCount(k)
-        def allNull(st: FStat): Boolean = st.rows > 0 && nulls(st).contains(st.rows)
-        // a file's guaranteed contribution to the top region, paired
-        // with the bound those rows certainly clear
-        def guarantee(st: FStat): Option[(Any, Long)] = {
-          val bound = if (desc) mn(st) else mx(st)
-          for (nl <- nulls(st); if bound != null; cnt = st.rows - nl; if cnt > 0)
-            yield (bound, cnt)
-        }
-        // a file's values provably all sort PAST the threshold: for DESC
-        // the whole range sits below T, for ASC above it
-        def valuesPast(st: FStat, t: Any): Boolean = {
-          val bound = if (desc) mx(st) else mn(st)
-          bound != null &&
-            (if (desc) Manifest.ordCompare(bound, t) < 0
-             else Manifest.ordCompare(bound, t) > 0)
-        }
-        if (nullsFirst) {
-          // NULLS FIRST (either direction): every known NULL key in a
-          // covered file sorts before all values AND passes the filter
-          val nullRegion = full.iterator.flatMap(nulls).sum
-          if (nullRegion >= n) {
-            // the top-n is null-keyed: only candidates that may HOLD a
-            // null survive (unknown null counts keep the file)
-            val keep = alive.filter(st => !nulls(st).contains(0L) || st.rows == 0L)
-            keepResult(stats, keep)
-          } else {
-            threshold(full.flatMap(guarantee), n - nullRegion, descending = desc)
-              .flatMap { t =>
-                // unknown stats keep; a range past T with provably no
-                // nulls cannot reach the top
-                val keep = alive.filter(st =>
-                  !(valuesPast(st, t) && nulls(st).contains(0L)))
-                keepResult(stats, keep)
-              }
-          }
-        } else {
-          // NULLS LAST (either direction): nulls sort after everything —
-          // an all-null file is skippable once n rows are guaranteed
-          // inside T
-          threshold(full.flatMap(guarantee), n, descending = desc).flatMap { t =>
-            val keep = alive.filter(st => !(valuesPast(st, t) || allNull(st)))
-            keepResult(stats, keep)
-          }
-        }
+      val compiled = conjuncts.map(
+        ManifestAggRule(spark).compileConjunct(_, rel.outputSet, src.keyFields))
+      src.keyOf(attr.name)
+        .filter(_ => n <= src.cap && !compiled.exists(_.isEmpty) &&
+          src.complete(h.location.inputFiles))
+        .flatMap(k => TopKSweep(k, desc, nullsFirst).survivors(src,
+          ManifestCover.of(compiled.map(_.get)) _, n, conjuncts.map(_.canonicalized)))
+    }
+}
+
+/** The top-k guarantee sweep over one sort key `k` (see
+  * [[ManifestTopKRule]]), stated once and run by either [[StatsSource]]
+  * executor. A serializable value: its per-file predicates ship inside
+  * the distributed folds. */
+private[sources] final case class TopKSweep(k: String, desc: Boolean,
+                                            nullsFirst: Boolean) {
+
+  private def nulls(st: FStat): Option[Long] = st.nullCount(k)
+
+  /** A file's guaranteed contribution to the top region, paired with the
+    * bound those rows certainly clear. */
+  private def guarantee(st: FStat): Option[(Any, Long)] = {
+    val bound = if (desc) st.mins.getOrElse(k, null) else st.maxs.getOrElse(k, null)
+    for (nl <- nulls(st); if bound != null; cnt = st.rows - nl; if cnt > 0)
+      yield (bound, cnt)
+  }
+
+  /** A file's values provably all sort PAST the threshold: for DESC the
+    * whole range sits below T, for ASC above it. */
+  private def valuesPast(st: FStat, t: Any): Boolean = {
+    val bound = if (desc) st.maxs.getOrElse(k, null) else st.mins.getOrElse(k, null)
+    bound != null &&
+      (if (desc) Manifest.ordCompare(bound, t) < 0
+       else Manifest.ordCompare(bound, t) > 0)
+  }
+
+  /** Whether a non-excluded file may hold a top-n row: `t` None is the
+    * null-region mode (the top-n is null-keyed), Some the value threshold. */
+  private def mayHold(t: Option[Any], st: FStat): Boolean = t match {
+    // only candidates that may HOLD a null survive (unknown null counts
+    // keep the file)
+    case None => !nulls(st).contains(0L) || st.rows == 0L
+    // unknown stats keep; a range past T with provably no nulls cannot
+    // reach the top
+    case Some(tv) if nullsFirst => !(valuesPast(st, tv) && nulls(st).contains(0L))
+    // NULLS LAST: nulls sort after everything — an all-null file is
+    // skippable once n rows are guaranteed inside T
+    case Some(tv) =>
+      !(valuesPast(st, tv) || (st.rows > 0 && nulls(st).contains(st.rows)))
+  }
+
+  /** The files that may hold a top-n row, or None when the sweep
+    * declines. Excluded files drop outright; guarantees come ONLY from
+    * fully-covered files (their every row passes the filter); partial
+    * files stay candidates but guarantee nothing. Three folds at most:
+    * the covered null region (NULLS FIRST only), the top-n guarantees
+    * (the driver never holds more than n), and the capped keep list. */
+  def survivors(src: StatsSource, coverOf: FStat => Cover, n: Int,
+                memoKey: Any): Option[Seq[(String, Option[Long])]] = {
+    val key = (memoKey, this, n)
+    val cap = src.cap
+    // NULLS FIRST (either direction): every known NULL key in a covered
+    // file sorts before all values AND passes the filter
+    val region =
+      if (!nullsFirst) Some(0L)
+      else src.fold(("topk-nulls", key))(0L)(
+        (acc, st) => if (coverOf(st) == CoverAll) acc + nulls(st).getOrElse(0L) else acc,
+        _ + _)
+    val threshold: Option[Option[Any]] = region.flatMap { r =>
+      if (nullsFirst && r >= n) Some(None) // null-region mode, no threshold
+      else {
+        val best = Ordering.fromLessThan[(Any, Long)]((a, b) =>
+          Manifest.ordCompare(a._1, b._1) < 0)
+        src.top(("topk-top", key), n)(st =>
+          if (coverOf(st) == CoverAll) guarantee(st) else None)(
+          if (desc) best else best.reverse)
+          .flatMap(gs => TopKSweep.threshold(gs, n - r, desc)).map(Some(_))
       }
     }
+    // the keep list is the agg fold's scan list: kept files "must scan",
+    // the rest are excluded; nothing skipped (or an overflowing list)
+    // declines, keeping the relation's own index
+    threshold.flatMap { t =>
+      src.fold(("topk-keep", key))(StatsSummary())(
+        (s, st) => s.add(st,
+          if (coverOf(st) != CoverNone && mayHold(t, st)) CoverPartial else CoverNone,
+          Nil, cap),
+        _.merge(_, cap))
+    }.filterNot(s => s.partialOverflow || s.partialCount == s.total)
+      .map(_.partialFiles)
   }
+}
 
-  /** Distributed twin past the snapshot cap (round-15 verdict item 1):
-    * guarantees fold as a per-partition top-n (`rdd.top`, no shuffle) plus
-    * a covered-null-region aggregate; the keep set folds as ONE capped
-    * aggregate. The driver never holds more than n guarantee rows and the
-    * capped keep list; results memoize per (signature, predicate, sort,
-    * n). Declines when n exceeds the driver cap or the keep list would. */
-  private def survivorsDistributed(manifestPath: String, table: String,
-                                   h: HadoopFsRelation, rel: LogicalRelation,
-                                   conjuncts: Seq[Expression],
-                                   attr: AttributeReference, desc: Boolean,
-                                   nullsFirst: Boolean,
-                                   n: Int): Option[(Seq[String], Option[Long])] = {
-    val cap = spark.conf.get(ManifestStats.MaxDriverPathsConf,
-      ManifestStats.MaxDriverPathsDefault.toString).toInt
-    if (n > cap) return None
-    // signature FIRST, before any manifest reader pins a listing (the
-    // memo's commit-race sandwich — see answerDistributed)
-    val (sigKey, sig, _) = ManifestSnapshot.signature(spark, manifestPath)
-    val (keyFields, _, rdd) = ManifestStats.fstats(spark, manifestPath, table)
-    val compiled = conjuncts.map(
-      ManifestAggRule(spark).compileConjunct(_, rel.outputSet, keyFields))
-    if (compiled.exists(_.isEmpty)) return None
-    val fns = compiled.map(_.get)
-    val kOpt = keyFields.get(attr.name.toLowerCase(java.util.Locale.ROOT))
-    if (kOpt.isEmpty) return None
-    val k = kOpt.get
-    if (!ManifestStats.complete(spark, manifestPath, table,
-        h.location.inputFiles)) return None
-    ManifestStats.memoizedStable(spark, manifestPath, sig, ("topk", sigKey,
-      sig, table, conjuncts.map(_.canonicalized), k, desc, nullsFirst, n, cap)) {
-      val coverOf = ManifestCover.of(fns) _
-      def nullsOf(st: FStat): Option[Long] = st.nullCount(k)
-      def guarantee(st: FStat): Option[(Any, Long)] = {
-        val bound = if (desc) st.mins.getOrElse(k, null)
-                    else st.maxs.getOrElse(k, null)
-        for (nl <- nullsOf(st); if bound != null;
-             cnt = st.rows - nl; if cnt > 0) yield (bound, cnt)
-      }
-      // a file's values provably all sort PAST the threshold (the local
-      // sweep's valuesPast, serializable for the fold closure)
-      def valuesPast(st: FStat, t: Any): Boolean = {
-        val bound = if (desc) st.maxs.getOrElse(k, null)
-                    else st.mins.getOrElse(k, null)
-        bound != null &&
-          (if (desc) Manifest.ordCompare(bound, t) < 0
-           else Manifest.ordCompare(bound, t) > 0)
-      }
-      val boundOrd = new Ordering[(Any, Long)] with Serializable {
-        def compare(a: (Any, Long), b: (Any, Long)): Int =
-          Manifest.ordCompare(a._1, b._1)
-      }
-      // job 1: covered files' guarantees (top-n by bound — per-partition
-      // heaps, driver merge of ≤ n rows) + the covered null region
-      val full = rdd.filter(st => coverOf(st) == CoverAll)
-      val nullRegion =
-        if (!nullsFirst) 0L
-        else full.map(st => nullsOf(st).getOrElse(0L))
-          .fold(0L)(_ + _)
-      val gs = full.flatMap(st => guarantee(st))
-      val topG =
-        if (desc) gs.top(n)(boundOrd)
-        else gs.top(n)(boundOrd.reverse)
-      // driver sweep over ≤ n guarantees
-      val tOpt =
-        if (nullsFirst && nullRegion >= n) None // null-region mode, no threshold
-        else threshold(topG.toIndexedSeq,
-          if (nullsFirst) n - nullRegion else n, descending = desc)
-      val keepPredOpt: Option[FStat => Boolean] =
-        if (nullsFirst && nullRegion >= n)
-          Some(st => coverOf(st) != CoverNone &&
-            (!nullsOf(st).contains(0L) || st.rows == 0L))
-        else tOpt.map { t =>
-          if (nullsFirst) { st: FStat =>
-            coverOf(st) != CoverNone &&
-              !(valuesPast(st, t) && nullsOf(st).contains(0L))
-          } else { st: FStat =>
-            coverOf(st) != CoverNone && {
-              val allNull = st.rows > 0 && nullsOf(st).contains(st.rows)
-              !(valuesPast(st, t) || allNull)
-            }
-          }
-        }
-      keepPredOpt.flatMap { keepPred =>
-        // job 2: total count + capped keep list in one fold
-        val (total, keepCount, keepList, overflow) = rdd.aggregate(
-          (0L, 0L, Vector.empty[(String, Option[Long])], false))(
-          { case ((tot, kc, lst, ovf), st) =>
-            if (!keepPred(st)) (tot + 1, kc, lst, ovf)
-            else if (lst.size >= cap) (tot + 1, kc + 1, lst, true)
-            else (tot + 1, kc + 1, lst :+ (st.path, st.bytes), ovf)
-          },
-          { case ((t1, k1, l1, o1), (t2, k2, l2, o2)) =>
-            val merged = l1 ++ l2
-            (t1 + t2, k1 + k2, merged.take(cap),
-              o1 || o2 || merged.size > cap)
-          })
-        if (overflow || keepCount >= total) None
-        else Some((keepList.map(_._1): Seq[String],
-          if (keepList.nonEmpty && keepList.forall(_._2.isDefined))
-            Some(keepList.iterator.flatMap(_._2).sum)
-          else None))
-      }
-    // memoizedStable None = a commit raced planning: decline this query;
-    // the inner Option is the sweep's own answer
-    }.flatten
-  }
-
+private[sources] object TopKSweep {
   /** The tightest bound at which cumulative guarantees reach n, sweeping
-    * best-first (largest bounds for DESC, smallest for ASC). */
-  private def threshold(gs: Seq[(Any, Long)], n: Long,
-                        descending: Boolean): Option[Any] = {
-    if (n <= 0) return gs.headOption.map(_._1) // null region already covers
+    * best-first (largest bounds for DESC, smallest for ASC). Only the n
+    * best guarantees can matter — each counts at least one row. */
+  def threshold(gs: Seq[(Any, Long)], n: Long, descending: Boolean): Option[Any] = {
     val sorted = gs.sortWith((a, b) =>
       if (descending) Manifest.ordCompare(a._1, b._1) > 0
       else Manifest.ordCompare(a._1, b._1) < 0)
@@ -2577,14 +2259,4 @@ case class ManifestTopKRule(spark: SparkSession) extends Rule[LogicalPlan]
     }
     None
   }
-
-  /** None when nothing is skipped (keep the relation's own index —
-    * pruning buys nothing and the stale-catalog contract stays moot). */
-  private def keepResult(all: Seq[FStat],
-                         keep: Seq[FStat]): Option[(Seq[String], Option[Long])] =
-    if (keep.size >= all.size) None
-    else Some((keep.map(_.path),
-      if (keep.nonEmpty && keep.forall(_.bytes.isDefined))
-        Some(keep.iterator.flatMap(_.bytes).sum)
-      else None))
 }

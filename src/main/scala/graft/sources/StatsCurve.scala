@@ -20,9 +20,10 @@ import graft.Measure
   * The four measured shapes are the roster's metadata-rule families, and
   * the classification/fold code is the PRODUCTION code, not a model:
   * conjuncts compile through [[ManifestAggRule.compileConjunct]], files
-  * classify through [[ManifestCover.of]], and the folds are the same
-  * `rdd.aggregate(StatsSummary/GroupedSummary)` / `rdd.top` calls
-  * `answerDistributed`/`survivorsDistributed` issue at planning time:
+  * classify through [[ManifestCover.of]], and the folds run through the
+  * stats core's distributed executor ([[ManifestStats.distributed]]) —
+  * the agg rule's `StatsSummary`/`GroupedSummary` folds and the top-k
+  * rule's [[TopKSweep]], as they run at planning time:
   *  - q198 shape: unfiltered global fold (every file covered);
   *  - q201 shape: a range straddling two file boundaries (hybrid —
   *    covered fold + a 2-entry partial list);
@@ -85,79 +86,51 @@ object StatsCurve {
       conjuncts.map(ManifestAggRule(spark).compileConjunct(_, relOut, keyFields)
         .getOrElse(sys.error("conjunct must compile")))
 
-    val cap = ManifestStats.MaxDriverPathsDefault
+    def folded[A](o: Option[A]): A =
+      o.getOrElse(sys.error("the catalog moved during a measured fold"))
     val shapes = Seq(
       // q198: unfiltered global COUNT/MIN/MAX/SUM fold
       Shape("q198_global_fold", { (spark, mp, _) =>
-        val (_, _, rdd) = ManifestStats.fstats(spark, mp, "t")
-        val summary = rdd.aggregate(StatsSummary())(
-          (s, st) => s.add(st, CoverAll, Seq("k"), cap), (a, b) => a.merge(b, cap))
-        summary.partialFiles.size.toLong
+        val src = ManifestStats.distributed(spark, mp, "t")
+        val cap = src.cap
+        folded(src.fold("q198")(StatsSummary())(
+          (s, st) => s.add(st, CoverAll, Seq("k"), cap), _.merge(_, cap)))
+          .partialFiles.size.toLong
       }),
       // q201: a range straddling two file boundaries — classify + fold
       Shape("q201_hybrid_fold", { (spark, mp, n) =>
-        val (keyFields, _, rdd) = ManifestStats.fstats(spark, mp, "t")
+        val src = ManifestStats.distributed(spark, mp, "t")
+        val cap = src.cap
         val lo = n.toLong / 4 * 100 + 50
         val hi = n.toLong * 3 / 4 * 100 + 50
-        val fns = classifiers(spark, keyFields, Seq(
+        val fns = classifiers(spark, src.keyFields, Seq(
           GreaterThanOrEqual(kAttr, Literal(lo)), LessThanOrEqual(kAttr, Literal(hi))))
         val coverOf = ManifestCover.of(fns) _
-        val summary = rdd.aggregate(StatsSummary())(
-          (s, st) => s.add(st, coverOf(st), Seq("k"), cap), (a, b) => a.merge(b, cap))
-        summary.partialFiles.size.toLong
+        folded(src.fold("q201")(StatsSummary())(
+          (s, st) => s.add(st, coverOf(st), Seq("k"), cap), _.merge(_, cap)))
+          .partialFiles.size.toLong
       }),
       // q202: GROUP BY the single-valued g key — per-group fold
       Shape("q202_grouped_fold", { (spark, mp, _) =>
-        val (_, _, rdd) = ManifestStats.fstats(spark, mp, "t")
-        val summary = rdd.aggregate(GroupedSummary())(
-          (s, st) => s.add(st, CoverAll, Seq("g"), Seq("k"), cap),
-          (a, b) => a.merge(b, cap))
+        val src = ManifestStats.distributed(spark, mp, "t")
+        val cap = src.cap
+        val summary = folded(src.fold("q202")(GroupedSummary())(
+          (s, st) => s.add(st, CoverAll, Seq("g"), Seq("k"), cap), _.merge(_, cap)))
         (summary.groups.size + summary.scanFiles.size).toLong
       }),
-      // q203: filtered top-k — guarantee top-n (per-partition heaps) plus
-      // the capped keep fold, the two jobs survivorsDistributed runs
+      // q203: filtered top-k — the top-k rule's own sweep: guarantee top-n
+      // (per-partition heaps, driver merge of ≤ n) plus the capped keep fold
       Shape("q203_topk_sweep", { (spark, mp, n) =>
-        val (keyFields, _, rdd) = ManifestStats.fstats(spark, mp, "t")
+        val src = ManifestStats.distributed(spark, mp, "t")
         val lo = n.toLong / 2 * 100 + 50
-        val fns = classifiers(spark, keyFields,
+        val fns = classifiers(spark, src.keyFields,
           Seq(GreaterThanOrEqual(kAttr, Literal(lo))))
-        val coverOf = ManifestCover.of(fns) _
         val topN = 100
-        val boundOrd = new Ordering[(Any, Long)] with Serializable {
-          def compare(a: (Any, Long), b: (Any, Long)): Int =
-            Manifest.ordCompare(a._1, b._1)
-        }
-        val full = rdd.filter(st => coverOf(st) == CoverAll)
-        val topG = full.flatMap { st =>
-          st.nullCount("k").flatMap { nl =>
-            val bound = st.mins.getOrElse("k", null)
-            if (bound != null && st.rows - nl > 0) Some((bound, st.rows - nl))
-            else None
-          }
-        }.top(topN)(boundOrd)
-        // the local threshold sweep over ≤ topN guarantees (desc)
-        val sorted = topG.sortWith((a, b) => Manifest.ordCompare(a._1, b._1) > 0)
-        var cum = 0L
-        var t: Any = null
-        for (g <- sorted if t == null) {
-          cum += g._2
-          if (cum >= topN) t = g._1
-        }
-        // guarantees short of n = the rule's own decline: nothing to sweep
-        // (only reachable under tiny override scales)
-        if (t == null) topG.length.toLong
-        else {
-          val tf = t
-          val (keep, _) = rdd.aggregate((0L, 0L))(
-            { case ((kc, tot), st) =>
-              val hi = st.maxs.getOrElse("k", null)
-              val drop = coverOf(st) == CoverNone ||
-                (hi != null && Manifest.ordCompare(hi, tf) < 0)
-              (if (drop) kc else kc + 1, tot + 1)
-            },
-            { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) })
-          topG.length.toLong + keep
-        }
+        // a declined sweep (guarantees short of n — only reachable under
+        // tiny override scales) holds just the guarantees
+        topN + TopKSweep("k", desc = true, nullsFirst = false)
+          .survivors(src, ManifestCover.of(fns) _, topN, "q203")
+          .fold(0L)(_.size.toLong)
       }),
       // the completeness except-probe over the relation's own listing
       Shape("completeness_probe", { (spark, mp, n) =>

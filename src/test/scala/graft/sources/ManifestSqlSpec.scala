@@ -1430,6 +1430,21 @@ class ManifestSqlSpec extends SparkSpec {
     } finally spark.conf.unset(ManifestSnapshot.MaxBytesConf)
   }
 
+  test("the driver-list cap binds only past the snapshot: snapshot answers ignore it") {
+    // statsMaxDriverPaths bounds the lists the DISTRIBUTED executor may
+    // bring back; a snapshot-sized catalog already lives on the driver,
+    // so a cap of 0 must not make the hybrid or top-k rewrites decline
+    spark.conf.set(ManifestStats.MaxDriverPathsConf, "0")
+    try {
+      val qPart = spark.sql("SELECT count(*) AS n FROM mt WHERE id >= 150")
+      assert(scannedFiles(qPart).length === 1, "hybrid scans only the boundary file")
+      assert(qPart.head.getLong(0) === 350L)
+      val qTop = spark.sql("SELECT id FROM mt ORDER BY id DESC LIMIT 10")
+      assert(scannedFiles(qTop).length === 1, "top-k keeps only the one holder")
+      assert(qTop.collect().map(_.getLong(0)).toSeq === (490L to 499L).reverse)
+    } finally spark.conf.unset(ManifestStats.MaxDriverPathsConf)
+  }
+
   test("distributed fold matches the driver path on null-rich and stats-less files") {
     import spark.implicits._
     // the fold's unknowable semantics must be value-identical to the
