@@ -670,7 +670,9 @@ object Main {
                 val thr = opts.getOrElse("threshold", "0.5").toDouble
                 val pairs = graft.operators.Dedup.minhashNearDups(
                   df, idCol, textCol, thr, scope = scope)
-                val drop = graft.operators.Dedup.components(pairs)
+                val cc = graft.operators.Dedup.componentsRun(pairs)
+                out(s"$table: ${cc.describe}")
+                val drop = cc.labels
                   .filter(col("node") =!= col("label")) // keep each cluster's min id
                   .select(col("node").as(idCol))
                 df.join(drop, Seq(idCol), "left_anti")

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection for large corpora (extension surface, SURVEY §7
@@ -213,39 +215,157 @@ object Dedup {
 
   /** Connected components over near-dup pairs — the cluster-formation step
     * that turns pairwise candidates into dedup groups (keep one
-    * representative per group). Iterative min-label propagation: every node
-    * starts labeled with itself; each round takes the min of its own and
-    * its neighbors' labels; at fixpoint the label is the component's
-    * minimum id — a deterministic canonical representative.
+    * representative per group). One row per node: `node` and `label`, the
+    * minimum id in its component — a deterministic canonical
+    * representative. A null endpoint contributes no edge: it is one
+    * `(null, null)` row, and the other endpoint stays a node.
     *
-    * Scale notes: each round is a neighbor-min step (hash-partitioned join
-    * + partial-min aggregate on narrow (long, long) rows) followed by a
-    * pointer-jumping shortcut (label := label of label), so flood distance
-    * doubles per round — O(log diameter) rounds even on chain-shaped
-    * graphs, verified by the 64-node-chain scale probe. The driver loop
-    * only reads a one-row label-sum aggregate per round (labels decrease
-    * monotonically, so an unchanged sum is a fixpoint); `maxIter` bounds
-    * the worst case (2^20-diameter graphs at the default).
+    * Two jobs when the graph is small enough for the driver: the input
+    * pairs are checkpointed (the caller's pipeline runs once, under the
+    * session conf), then one `collect` job runs a union-find inside each
+    * partition and returns its star rows — every node with the minimum id
+    * of its component within the partition (the local-contraction step of
+    * Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014). The driver unions the stars and hands the labels back as
+    * an RDD-backed frame, so the caller's plan starts at `Scan
+    * ExistingRDD` and runs no further job here.
+    *
+    * The driver's budget is Spark's own broadcast budget,
+    * `spark.sql.autoBroadcastJoinThreshold`: each partition may send its
+    * share of it (16 bytes per star row), and a partition past its share
+    * stops reading and reports overflow. On any overflow, or with the
+    * threshold ≤ 0, the labels come from the distributed pointer-jumping
+    * loop instead: each round is a neighbor-min step (join + partial-min
+    * aggregate on narrow (long, long) rows) followed by a pointer-jumping
+    * shortcut (label := label of label), so flood distance doubles per
+    * round — O(log diameter) rounds even on chain-shaped graphs, verified
+    * by the 64-node-chain scale probe. `maxIter` bounds the loop's worst
+    * case (2^20-diameter graphs at the default).
     */
   def components(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
                  maxIter: Int = 20): DataFrame =
     componentsWithRounds(pairs, aCol, bCol, maxIter)._1
 
-  /** [[components]] plus the number of propagation rounds it ran — the
-    * O(log diameter) claim as a measurable quantity. The scale probe asserts
-    * on the round count (work-proportional, throttle-immune) instead of
-    * wall-clock, which on this host can inflate 40-70x under intermittent
-    * CPU throttling. */
+  /** [[components]] plus the number of pointer-jumping rounds it ran: 0
+    * when the driver finished the components, else the loop's rounds — the
+    * O(log diameter) claim as a measurable quantity. The scale probe
+    * asserts on the round count (work-proportional, throttle-immune)
+    * instead of wall-clock, which on this host can inflate 40-70x under
+    * intermittent CPU throttling. */
   def componentsWithRounds(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
                            maxIter: Int = 20): (DataFrame, Int) = {
+    val run = componentsRun(pairs, aCol, bCol, maxIter)
+    (run.labels, run.rounds)
+  }
+
+  /** How [[componentsWithRounds]] found its labels: `collectedBytes` is
+    * the star rows' size when the driver finished them, `None` when the
+    * loop ran; `budgetBytes` is the threshold the stars were held to. */
+  private[graft] final case class ComponentsRun(labels: DataFrame, rounds: Int,
+                                                collectedBytes: Option[Long],
+                                                budgetBytes: Long) {
+    def describe: String = collectedBytes match {
+      case Some(b) =>
+        s"components: driver finish, $b bytes of star rows collected (budget $budgetBytes)"
+      case None if budgetBytes <= 0 =>
+        s"components: pointer-jumping loop, $rounds rounds (driver finish off: " +
+          s"autoBroadcastJoinThreshold $budgetBytes)"
+      case None =>
+        s"components: pointer-jumping loop, $rounds rounds " +
+          s"(star rows exceeded the $budgetBytes-byte budget)"
+    }
+  }
+
+  /** [[componentsWithRounds]], reporting which path found the labels. */
+  private[graft] def componentsRun(pairs: DataFrame, aCol: String = "a_id",
+                                   bCol: String = "b_id",
+                                   maxIter: Int = 20): ComponentsRun = {
+    // The input pairs are checkpointed FIRST, under the session conf: the
+    // star collect, the loop after an overflow and the loop's symmetrize
+    // union all read them, and a pairs argument that is itself an
+    // expensive pipeline (MinHash-LSH candidate generation) would
+    // otherwise run end-to-end once per read.
+    val p = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .localCheckpoint(true)
+    val budget = p.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rows = p.queryExecution.toRdd
+    val slices = math.max(1, rows.getNumPartitions)
+    (if (budget > 0) localStars(rows, budget / slices) else None) match {
+      case Some(stars) =>
+        val bytes = stars.map(_.nodes.length.toLong * StarRowBytes).sum
+        ComponentsRun(finishOnDriver(p, stars, slices), 0, Some(bytes), budget)
+      case None =>
+        val (labels, rounds) = pointerJumping(p, maxIter)
+        ComponentsRun(labels, rounds, None, budget)
+    }
+  }
+
+  /** One (node, local root) pair of longs. */
+  private val StarRowBytes = 16L
+
+  /** One partition's contraction: each node it saw and the minimum id of
+    * its component within the partition. */
+  private final case class Star(nodes: Array[Long], roots: Array[Long], sawNull: Boolean)
+
+  /** One job: a union-find per partition of the checkpointed pairs. A
+    * partition whose star rows pass `share` bytes stops reading, and the
+    * result is `None`. */
+  private def localStars(rows: RDD[InternalRow], share: Long): Option[Array[Star]] = {
+    val parts = rows.mapPartitions { it =>
+      val uf = new LongUnionFind(64)
+      var sawNull = false
+      var overflow = false
+      while (!overflow && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0) || r.isNullAt(1)) {
+          sawNull = true
+          if (!r.isNullAt(0)) uf.index(r.getLong(0))
+          if (!r.isNullAt(1)) uf.index(r.getLong(1))
+        } else uf.union(r.getLong(0), r.getLong(1))
+        overflow = uf.size * StarRowBytes > share
+      }
+      Iterator.single(
+        if (overflow) None
+        else Some(Star(java.util.Arrays.copyOf(uf.ids, uf.size),
+          Array.tabulate(uf.size)(uf.root), sawNull)))
+    }.collect()
+    if (parts.forall(_.isDefined)) Some(parts.flatten) else None
+  }
+
+  /** Unions the partitions' stars on the driver and returns the labels as
+    * an RDD-backed frame over `slices` partitions. */
+  private def finishOnDriver(p: DataFrame, stars: Array[Star], slices: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val uf = new LongUnionFind(math.max(64, stars.map(_.nodes.length).sum))
+    stars.foreach { s =>
+      var i = 0
+      while (i < s.nodes.length) { uf.union(s.nodes(i), s.roots(i)); i += 1 }
+    }
+    val n = uf.size
+    val nodes = java.util.Arrays.copyOf(uf.ids, n)
+    val labels = Array.tabulate(n)(uf.root)
+    val step = math.max(1, (n + slices - 1) / slices)
+    val chunks = (0 until n by step).map(lo =>
+      (nodes.slice(lo, lo + step), labels.slice(lo, lo + step), false)) ++
+      (if (stars.exists(_.sawNull)) Seq((Array.emptyLongArray, Array.emptyLongArray, true))
+       else Nil)
+    val rows = p.sparkSession.sparkContext
+      .parallelize(chunks, math.max(1, chunks.size))
+      .flatMap { case (ns, ls, nullRow) =>
+        if (nullRow) Iterator.single(Row(null, null))
+        else ns.indices.iterator.map(i => Row(ns(i), ls(i)))
+      }
+    p.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("node", LongType), StructField("label", LongType))))
+  }
+
+  /** The distributed fallback: iterative min-label propagation with
+    * pointer jumping over the checkpointed pairs `p` (`src`, `dst`). */
+  private def pointerJumping(p: DataFrame, maxIter: Int): (DataFrame, Int) = {
     // localCheckpoint (not cache): truncates the logical plan each round —
     // the iterated self-join otherwise deepens the plan tree and Catalyst
     // re-analysis time grows super-linearly with iteration count.
-    // The input pairs are checkpointed FIRST: the symmetrize union reads
-    // them twice, and a pairs argument that is itself an expensive pipeline
-    // (MinHash-LSH candidate generation) would run end-to-end twice.
-    val p = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .localCheckpoint(true)
     val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(true)
@@ -302,6 +422,75 @@ object Dedup {
     // blocks — never a plan that depends on the restored conf
     (labels, iter)
     }
+  }
+
+  /** Union-find over long ids in primitive arrays: an open-addressing
+    * table maps each id to a dense index, `parent` links the indices, and
+    * a union hangs the larger id's root under the smaller id's, so every
+    * root is its component's minimum id. */
+  private final class LongUnionFind(capacity: Int) {
+    private var slots = Array.fill(Integer.highestOneBit(capacity) * 4)(-1)
+    var ids = new Array[Long](capacity)
+    private var parent = new Array[Int](capacity)
+    var size = 0
+
+    private def home(id: Long, mask: Int): Int = {
+      val h = id * 0x9E3779B97F4A7C15L
+      (h ^ (h >>> 32)).toInt & mask
+    }
+
+    /** The dense index of `id`, added as its own root when new. */
+    def index(id: Long): Int = {
+      val mask = slots.length - 1
+      var s = home(id, mask)
+      while (slots(s) >= 0) {
+        if (ids(slots(s)) == id) return slots(s)
+        s = (s + 1) & mask
+      }
+      if (size == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, size * 2)
+        parent = java.util.Arrays.copyOf(parent, size * 2)
+      }
+      ids(size) = id
+      parent(size) = size
+      slots(s) = size
+      size += 1
+      if (size * 2 > slots.length) grow()
+      size - 1
+    }
+
+    private def grow(): Unit = {
+      val next = Array.fill(slots.length * 2)(-1)
+      val mask = next.length - 1
+      var i = 0
+      while (i < size) {
+        var s = home(ids(i), mask)
+        while (next(s) >= 0) s = (s + 1) & mask
+        next(s) = i
+        i += 1
+      }
+      slots = next
+    }
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) {
+        parent(i) = parent(parent(i)) // path halving
+        i = parent(i)
+      }
+      i
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(index(a))
+      val rb = find(index(b))
+      if (ra != rb) {
+        if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+
+    /** The minimum id in the component of dense index `i`. */
+    def root(i: Int): Long = ids(find(i))
   }
 
   /** 64-bit SimHash of a space-tokenized text column, computed per-row by

@@ -30,7 +30,8 @@ object Graph {
     * aggregate — identical to the pointer-jumping loop's cost model. The
     * iteration count is a constant (default 3), so plan depth is bounded;
     * for tens of iterations on a 100 TB graph, `localCheckpoint` each
-    * round the way [[Dedup.clusters]] does.
+    * round the way [[Dedup.componentsWithRounds]]' pointer-jumping loop
+    * does.
     *
     * @param nodes one column `id` (every vertex, edge-less ones included)
     * @param edges columns `src`, `dst` (directed)

@@ -195,7 +195,7 @@ object Similarity {
     * probability than on the full signature). Candidates share a (band,
     * bucket); each candidate pair is scored with the exact scaled-long
     * cosine; every node keeps its top `k`. The per-bucket `cap` bounds a
-    * viral bucket the same way [[Dedup.minhashLsh]] caps LSH bands, so no
+    * viral bucket the same way [[Dedup.lshCandidatePairs]] caps LSH bands, so no
     * reducer ever sees a quadratic bucket at corpus scale. Cap retention
     * is ID-INDEPENDENT (round-10 advice): the window orders by a
     * deterministic modular mix of (vec_id, band, bucket), not by raw id —

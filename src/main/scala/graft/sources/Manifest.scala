@@ -1435,16 +1435,19 @@ object Manifest {
     * failure whose message merely mentioned a missing path — e.g. an
     * analysis error quoting one). `FileNotFoundException` covers the
     * execution-time race (a listed part file deleted before its read);
-    * the `SparkThrowable` conditions cover the planning-time shape
-    * (PATH_NOT_FOUND) and Spark 4's wrapped read failure
-    * (FAILED_READ_FILE.FILE_NOT_EXIST, whose cause chain may keep the
-    * FNFE only on the executor side). */
+    * the `SparkThrowable` conditions cover the planning-time shapes
+    * (PATH_NOT_FOUND; UNABLE_TO_INFER_SCHEMA, raised when the path passed
+    * the existence check but was renamed away before its listing, which
+    * Spark reads as an empty root directory) and Spark 4's wrapped read
+    * failure (FAILED_READ_FILE.FILE_NOT_EXIST, whose cause chain may keep
+    * the FNFE only on the executor side). */
   private def isVanishedFile(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8).exists { t =>
       t.isInstanceOf[java.io.FileNotFoundException] || (t match {
         case st: org.apache.spark.SparkThrowable =>
           val c = Option(st.getCondition).getOrElse("")
-          c == "PATH_NOT_FOUND" || c.startsWith("FAILED_READ_FILE")
+          c == "PATH_NOT_FOUND" || c == "UNABLE_TO_INFER_SCHEMA" ||
+            c.startsWith("FAILED_READ_FILE")
         case _ => false
       })
     }

@@ -21,15 +21,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * hold neither native form. */
   def composedRows(df: => DataFrame): Array[Row] = {
     graft.plans.GraftExtensions.install(spark)
-    val key = "spark.sql.optimizer.excludedRules"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, graft.plans.NativeTextRewrites.ruleName)
-    try {
+    withConf("spark.sql.optimizer.excludedRules",
+        graft.plans.NativeTextRewrites.ruleName) {
       val d = df
       val plan = d.queryExecution.optimizedPlan.toString
       assert(!plan.contains("sig_agree") && !plan.contains("word_ngrams"), plan)
       d.collect()
-    } finally prev match {
+    }
+  }
+
+  /** Runs `body` with the session conf `key` at `value`, then restores
+    * the value set before (or unsets it). */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }

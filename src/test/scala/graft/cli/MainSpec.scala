@@ -611,6 +611,9 @@ class MainSpec extends SparkSpec {
     val kept = spark.read.parquet(s"$dst/documents.parquet").count()
     assert(kept < total, s"no duplicates removed ($kept of $total)") // fixture plants near-dups
     assert(out.exists(_.contains("duplicates removed")))
+    assert(out.exists(_.matches(
+      "documents: components: driver finish, \\d+ bytes of star rows collected .*")),
+      out.mkString("\n"))
 
     // exact mode on a table with no exact dups keeps everything
     val dst2 = Files.createTempDirectory("clidedup2").toString

@@ -105,6 +105,9 @@ class ScaleProbeSpec extends SparkSpec {
   }
 
   test("connected components converge on 100k clustered pairs in few rounds") {
+    // on the pointer-jumping loop: at the default budget the driver
+    // finish takes this graph (see the next case)
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
     // 100k edges over 150k nodes in 50k 3-node clusters (the realistic
     // dedup shape: many small cliquish groups), plus one 64-node chain —
     // the diameter worst case. Label propagation must flood both without
@@ -132,5 +135,24 @@ class ScaleProbeSpec extends SparkSpec {
     assert(rounds <= 10,
       s"components took $rounds rounds for diameter 63 — pointer jumping regressed")
     labels.unpersist()
+    }
+  }
+
+  test("the driver finish labels the 100k clustered pairs as the loop does") {
+    val clusters = spark.range(50000L).selectExpr(
+      "stack(2, id * 3, id * 3 + 1, id * 3, id * 3 + 2) AS (a_id, b_id)")
+    val chainBase = 1000000L
+    val chain = spark.range(63L).selectExpr(
+      s"id + $chainBase AS a_id", s"id + ${chainBase + 1} AS b_id")
+    val pairs = clusters.union(chain)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val (driver, rounds) = Dedup.componentsWithRounds(pairs)
+    assert(rounds === 0, "150k nodes fit the default budget")
+    val (loop, _) = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(
+      Dedup.componentsWithRounds(pairs))
+    val got = sorted(driver)
+    assert(got.size === 150064)
+    assert(got === sorted(loop))
   }
 }

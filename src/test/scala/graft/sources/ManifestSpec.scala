@@ -349,6 +349,32 @@ class ManifestSpec extends SparkSpec {
     finally writer.join()
   }
 
+  test("a manifest listed inside the swap window is retried, not failed") {
+    import spark.implicits._
+    // the reader's existence checks pass, then its listing finds the
+    // directory renamed away by a rewrite: Spark reads a vanished ROOT path
+    // as an empty directory, so the read fails with UNABLE_TO_INFER_SCHEMA
+    // rather than a FileNotFoundException
+    val dir = s"$base/swapwindow"
+    (0L until 40L).toDF("id").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val mp = s"$base/swapwindow_manifest"
+    Manifest.update(spark, dir, "t", Seq("id"), mp)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val key = "fs.swapfs.impl"
+    val prev = Option(hconf.get(key))
+    hconf.set(key, classOf[SwapWindowFileSystem].getName)
+    SwapWindowFileSystem.vanished.set(0)
+    SwapWindowFileSystem.armed.set(mp)
+    try {
+      assert(Manifest.rowCount(spark, s"swapfs:$mp", col("table") === "t") === 40L)
+      assert(SwapWindowFileSystem.vanished.get() === 1, "the listing never hit the window")
+    } finally {
+      SwapWindowFileSystem.armed.set(null)
+      prev.fold(hconf.unset(key))(hconf.set(key, _))
+    }
+  }
+
   test("Scala-helper predicates skip the same files the SQL rule does (round-12 item 8)") {
     import spark.implicits._
     // numeric fixture: 5 files with disjoint id ranges [f*100, f*100+99]
@@ -849,6 +875,7 @@ class ManifestSpec extends SparkSpec {
     // lock's content — a content write updates mtime on every store —
     // pinned against a RawLocalFileSystem whose setTimes is a silent no-op.
     val hconf = spark.sparkContext.hadoopConfiguration
+    val prevImpl = Option(hconf.get("fs.stubfs.impl"))
     hconf.set("fs.stubfs.impl", classOf[NoSetTimesFileSystem].getName)
     val mp = s"stubfs:$base/hb_objstore/m"
     val lock = new org.apache.hadoop.fs.Path(mp + "__commitlock")
@@ -896,6 +923,7 @@ class ManifestSpec extends SparkSpec {
     } finally {
       Manifest.ringProbe = None
       spark.conf.unset(Manifest.CommitLockTimeoutConf)
+      prevImpl.fold(hconf.unset("fs.stubfs.impl"))(hconf.set("fs.stubfs.impl", _))
     }
   }
 
@@ -1199,4 +1227,27 @@ class NoSetTimesFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("stubfs:///")
   override def setTimes(p: org.apache.hadoop.fs.Path,
                         mtime: Long, atime: Long): Unit = ()
+}
+
+/** The local filesystem under the `swapfs` scheme, whose listing of the
+  * armed directory fails once as vanished: a reader that saw the path,
+  * then listed it while a manifest rewrite had it renamed away. */
+class SwapWindowFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getScheme: String = "swapfs"
+  override def getUri: java.net.URI = java.net.URI.create("swapfs:///")
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val armed = SwapWindowFileSystem.armed.get()
+    if (armed != null && armed == Path.getPathWithoutSchemeAndAuthority(p).toString &&
+        SwapWindowFileSystem.armed.compareAndSet(armed, null)) {
+      SwapWindowFileSystem.vanished.incrementAndGet()
+      throw new java.io.FileNotFoundException(s"$p renamed away mid-listing")
+    }
+    super.listStatus(p)
+  }
+}
+
+object SwapWindowFileSystem {
+  val armed = new java.util.concurrent.atomic.AtomicReference[String]()
+  val vanished = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -14,6 +14,13 @@ class ValidatorSpec extends SparkSpec {
 
   private lazy val orders: DataFrame = Tables.load(spark, sfDir, "orders").cache()
 
+  // the session outlives this spec: a cached fixture left behind would
+  // serve later specs' reads of orders (input_file_name() then reads "")
+  override def afterAll(): Unit = {
+    orders.unpersist()
+    super.afterAll()
+  }
+
   test("all layers pass on an exact copy") {
     val r = new Validator(orders, orders).validateTable("orders", pkCols = Seq("o_orderkey"),
       rowSample = true)
