@@ -208,9 +208,9 @@ object Dedup {
         count(lit(1)).as("n_matches"))
       .select(col("v_id").as(idCol), col("mk.p_id").as("killed_by"),
         col("mk.est_jaccard").as("est_jaccard"), col("n_matches"))
-    // no terminal sort: the common consumers (anti-join in the CLI verb and
-    // IngestStream, per-lang aggregate in analyze) immediately destroy row
-    // order — the oracle query adds its own ORDER BY
+    // no terminal sort: the common consumers (anti-join in the CLI verb,
+    // per-lang aggregate in analyze) immediately destroy row order — the
+    // oracle query adds its own ORDER BY
   }
 
   /** Connected components over near-dup pairs — the cluster-formation step

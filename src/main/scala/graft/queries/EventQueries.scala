@@ -9,8 +9,7 @@ import Q._
   * sessionization, tumbling-window rollups, and semi-structured (JSON)
   * extraction. The reference has no window/streaming operators (SURVEY
   * §2.5/§2.10) — these are the extension surface for event analytics, built
-  * batch-first so the DuckDB oracle can check them; the streaming variants
-  * live in [[graft.streaming]].
+  * batch so the DuckDB oracle can check them.
   *
   * Timestamp discipline: `ts` has arrived as parquet TIMESTAMP(NANOS),
   * TIMESTAMP(MICROS) and TIMESTAMP_NTZ across driver fixture regenerations;

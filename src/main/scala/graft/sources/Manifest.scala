@@ -19,6 +19,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -56,9 +57,8 @@ import org.apache.spark.storage.StorageLevel
   * manifest by path, footer-scans only the novel files, appends their rows,
   * and drops rows whose files vanished (an Overwrite rewrite). The full
   * [[build]] data scan remains only as the bootstrap for corpora that
-  * predate their manifest. `ParquetSink(manifest = …)` and the streaming
-  * ingest path call [[update]] at write time, so a growing corpus never
-  * pays a rescan.
+  * predate their manifest. `ParquetSink(manifest = …)` calls [[update]]
+  * at write time, so a growing corpus never pays a rescan.
   *
   * Reference scope note: the reference reads INFORMATION_SCHEMA for its
   * catalog (`discovery.py:200-248`) — a database does this bookkeeping for
@@ -243,9 +243,15 @@ object Manifest {
       // declines) instead of wrapping or throwing — maintenance never
       // fails on pathological data, in any session eval mode
       sumCols.map { case (k, st) => try_sum(col(k)).cast(st).as(s"__sum_$k") }
-    val base = df.withColumn("path", input_file_name())
+    // `_metadata.file_path`, not input_file_name(): the metadata column
+    // widens the relation's output, so a cached copy of the table can never
+    // serve this scan (a cached read has no input file, and every row would
+    // key to ""). Rendered like the update listing's paths, so a later
+    // `update` diffs against the same strings.
+    val base = df.withColumn("path", col("_metadata.file_path"))
       .groupBy(col("path"))
       .agg(aggs.head, aggs.tail: _*)
+      .withColumn("path", udf((p: String) => ManifestSql.normPath(p)).apply(col("path")))
       .withColumn("table", lit(table))
       .withColumn("bytes", lit(null).cast("long"))
       .withColumn("mins", struct(keyCols.map(k => col(s"__min_$k").as(k)): _*))
@@ -498,10 +504,11 @@ object Manifest {
     * a path array on the driver nor a status array anywhere. Hidden
     * entries ([[visible]]) are skipped, matching what Spark's own file
     * index exposes; path strings render via `Path.toUri` — byte-identical
-    * to `input_file_name()`/`DataFrame.inputFiles`, which is what keyed
-    * the manifest's existing rows. Returns the file paths (read off
-    * per-level caches) and those caches: the caller materializes what it
-    * derives from the paths, then unpersists the levels. */
+    * to `input_file_name()`/`DataFrame.inputFiles` and to [[build]]'s
+    * paths, which is what keyed the manifest's existing rows. Returns the
+    * file paths (read off per-level caches) and those caches: the caller
+    * materializes what it derives from the paths, then unpersists the
+    * levels. */
   private def listFiles(spark: SparkSession,
                         dir: String): (RDD[String], Seq[RDD[(Boolean, String)]]) = {
     val hconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
@@ -530,9 +537,9 @@ object Manifest {
     var frontier = Seq(rootUri)
     val levels = scala.collection.mutable.ListBuffer.empty[RDD[(Boolean, String)]]
     // a walk that dies partway (directory deleted between levels, terminal
-    // task failure) must not leak its per-level caches — the streaming
-    // ingest path lists every micro-batch, and leaked blocks would
-    // accumulate across transient failures (round-13 review)
+    // task failure) must not leak its per-level caches — a writer lists
+    // on every update, and leaked blocks would accumulate across transient
+    // failures (round-13 review)
     try {
       while (frontier.nonEmpty) {
         // each level is listed ONCE (persisted): the directory side drives
@@ -587,17 +594,24 @@ object Manifest {
     else Long.box(perBlock.map(_.asInstanceOf[Long]).sum)
   }
 
-  /** Order used everywhere manifest code compares stat VALUES on the
-    * driver (round-12 advice): strings compare as UTF-8 bytes — the order
-    * Spark's UTF8String and parquet's binary stats use — because Java's
-    * `String.compareTo` is UTF-16 code-unit order, which sorts
+  /** Order used everywhere manifest code compares stat VALUES (round-12
+    * advice), matching Spark's SQL order: strings compare as UTF-8 bytes —
+    * the order Spark's UTF8String and parquet's binary stats use — because
+    * Java's `String.compareTo` is UTF-16 code-unit order, which sorts
     * supplementary (non-BMP) characters BELOW U+E000..U+FFFF and would
-    * make a folded min/max or an IN-list envelope non-extremal. */
+    * make a folded min/max or an IN-list envelope non-extremal; doubles
+    * and floats compare as SQL does (-0.0 = 0.0, NaN = NaN and above every
+    * number), where `java.lang.Double.compareTo` puts -0.0 below 0.0 and
+    * would exclude a `-0.0` file from `x = 0.0`. */
   private[sources] def ordCompare(a: Any, b: Any): Int = (a, b) match {
     case (x: String, y: String) =>
       java.util.Arrays.compareUnsigned(
         x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    case (x: java.lang.Double, y: java.lang.Double) =>
+      SQLOrderingUtil.compareDoubles(x.doubleValue(), y.doubleValue())
+    case (x: java.lang.Float, y: java.lang.Float) =>
+      SQLOrderingUtil.compareFloats(x.floatValue(), y.floatValue())
     case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 
@@ -646,9 +660,9 @@ object Manifest {
              keyCols: Seq[String], manifestPath: String): (Long, Long) =
     updateDir(spark, s"$dataDir/$table.parquet", table, keyCols, manifestPath)
 
-  /** [[update]] against a table directory named directly (the streaming
-    * ingest path owns its corpus dir without the `dir/table.parquet`
-    * layout convention). Runs [[commitDir]]: four Spark jobs on an
+  /** [[update]] against a table directory named directly (for a corpus
+    * dir without the `dir/table.parquet` layout convention). Runs
+    * [[commitDir]]: four Spark jobs on an
     * uncontended flat directory, whatever its file count, and a commit
     * claim that reuses the pre-pass diff while the catalog's existence and
     * `__version` are unchanged. */
@@ -694,7 +708,7 @@ object Manifest {
     *    the rare case, bounded by actual contention.
     *
     * Path strings render via `Path.toUri`, byte-identical to what
-    * [[build]]'s `input_file_name()` recorded — Hadoop's
+    * [[build]] records — Hadoop's
     * `FileStatus.getPath.toString` renders `file:/` where Spark renders
     * `file:///`, and a mismatched diff would re-add every file forever
     * ([[listFilesDF]] pins parity in ManifestSpec).
@@ -810,8 +824,7 @@ object Manifest {
             append(spark, e.df, manifestPath)
             appliedUnstamped = true
           }
-          // batch-path auto-compaction (round-13 verdict item 5): streaming
-          // ingest compacts every N micro-batches, but repeated CLI updates
+          // auto-compaction (round-13 verdict item 5): repeated CLI updates
           // appended one small parquet file per run FOREVER unless the user
           // hand-ran `manifest --compact` — so the manifest's own scans
           // slowly degraded on exactly the tables maintained most. The
@@ -1500,7 +1513,7 @@ object Manifest {
 
   /** Compact a fragmented manifest back into the canonical range-
     * partitioned, (table, mins)-sorted layout. Incremental [[append]]s —
-    * one tiny parquet file per streaming micro-batch or CLI update — are
+    * one tiny parquet file per sink write or CLI update — are
     * the right WRITE trade (zero rewrite cost per batch) but degrade the
     * READ side twice over: the manifest scan pays per-file open overhead,
     * and appended rows land outside the range layout, so the manifest's
@@ -1691,33 +1704,20 @@ object Manifest {
     * mins/maxs structs. NULL stats mean "range unknown" and must KEEP the
     * file — missing footer stats may only cost performance, never rows. */
   def overlaps(keyCol: String, lo: Any, hi: Any): Column =
-    atLeast(keyCol, lo, identity) && atMost(keyCol, hi, identity)
+    atLeast(keyCol, lo) && atMost(keyCol, hi)
 
-  // ---- shared zone-bound builders (round-12 verdict item 8) ----
-  // [[ManifestPruneRule]] and the Scala-API helpers below build their file
-  // conditions from the same four primitives, so a `WHERE k IN (…)` in SQL
-  // and `Manifest.inList` on the DataFrame path skip the SAME files.
-  // `xf` lets the SQL rule compare in a wrapped conjunct's domain — the
-  // same MONOTONE NON-DECREASING transform the query applies to the key
-  // attribute (a Cast, `YEAR(…)`, `DATE_TRUNC(…)`, or a composition) is
-  // applied to the file's native min/max, sound because a monotone f keeps
-  // `f(min) ≤ f(r) ≤ f(max)` for every row r (see ManifestPruneRule's
-  // monotone-wrapper pruning, round-14). The Scala helpers pass identity.
-
-  private[sources] def minCol(k: String, xf: Column => Column): Column =
-    xf(col(s"mins.`$k`"))
-  private[sources] def maxCol(k: String, xf: Column => Column): Column =
-    xf(col(s"maxs.`$k`"))
+  // ---- zone-bound Column builders for the Scala helper API ----
+  // The SQL rules classify files through `Coverage.compile`; these builders
+  // state the same bounds as manifest-DataFrame predicates for
+  // `select`/`rowCount`/`read`, and ManifestSpec's helper/SQL parity case
+  // pins the two to the same file sets.
 
   /** File's range reaches up to `v` (or is unknown). */
-  private[sources] def atLeast(k: String, v: Any, xf: Column => Column): Column =
-    maxCol(k, xf) >= lit(v) || maxCol(k, xf).isNull
+  private def atLeast(k: String, v: Any): Column =
+    col(s"maxs.`$k`") >= lit(v) || col(s"maxs.`$k`").isNull
   /** File's range reaches down to `v` (or is unknown). */
-  private[sources] def atMost(k: String, v: Any, xf: Column => Column): Column =
-    minCol(k, xf) <= lit(v) || minCol(k, xf).isNull
-
-  private[sources] def pointOverlap(k: String, v: Any, xf: Column => Column): Column =
-    atLeast(k, v, xf) && atMost(k, v, xf)
+  private def atMost(k: String, v: Any): Column =
+    col(s"mins.`$k`") <= lit(v) || col(s"mins.`$k`").isNull
 
   /** IN-list zone predicate: each member a point lookup, OR'd — a sparse
     * list skips the files between its members. Past 64 members the OR
@@ -1725,38 +1725,27 @@ object Manifest {
     * falls back to the members' [min,max] envelope (UTF-8 order for
     * strings, matching parquet stats). NULL members match no row under IN
     * and drop out; a list with no non-null member matches nothing. */
-  def inList(keyCol: String, values: Seq[Any]): Column =
-    inListBound(keyCol, values, identity)
-
-  private[sources] def inListBound(k: String, values: Seq[Any],
-                                   xf: Column => Column): Column = {
+  def inList(keyCol: String, values: Seq[Any]): Column = {
     val vs = values.filter(_ != null)
     if (vs.isEmpty) lit(false)
-    else if (vs.sizeIs <= 64) vs.map(pointOverlap(k, _, xf)).reduce(_ || _)
-    else {
-      val lo = vs.reduce((x, y) => if (ordCompare(x, y) <= 0) x else y)
-      val hi = vs.reduce((x, y) => if (ordCompare(x, y) >= 0) x else y)
-      atLeast(k, lo, xf) && atMost(k, hi, xf)
-    }
+    else if (vs.sizeIs <= 64) vs.map(v => overlaps(keyCol, v, v)).reduce(_ || _)
+    else overlaps(keyCol, vs.reduce((x, y) => if (ordCompare(x, y) <= 0) x else y),
+      vs.reduce((x, y) => if (ordCompare(x, y) >= 0) x else y))
   }
 
   /** Zone predicate for `keyCol LIKE 'prefix%'`: every match sorts in
     * `[prefix, prefixUpper(prefix))`, so files whose range misses that
     * window are skipped. A prefix with no finite upper bound (all
     * U+10FFFF) keeps the lower bound only. */
-  def likePrefix(keyCol: String, prefix: String): Column =
-    likePrefixBound(keyCol, prefix, identity)
-
-  private[sources] def likePrefixBound(k: String, prefix: String,
-                                       xf: Column => Column): Column = {
+  def likePrefix(keyCol: String, prefix: String): Column = {
     require(prefix.nonEmpty, "likePrefix needs a non-empty prefix")
-    val lower = atLeast(k, prefix, xf)
-    prefixUpper(prefix).fold(lower)(hi => lower && atMost(k, hi, xf))
+    val lower = atLeast(keyCol, prefix)
+    prefixUpper(prefix).fold(lower)(hi => lower && atMost(keyCol, hi))
   }
 
   /** Files that may hold a NULL in `keyCol`: null count positive, or
     * unknown (legacy manifests without the `nulls` struct must pass a
-    * literal-true instead — the SQL rule gates on the column's presence). */
+    * literal-true instead). */
   def keyIsNull(keyCol: String): Column =
     col(s"nulls.`$keyCol`") > 0L || col(s"nulls.`$keyCol`").isNull
 

@@ -19,8 +19,9 @@ import graft.Measure
   *
   * The four measured shapes are the roster's metadata-rule families, and
   * the classification/fold code is the PRODUCTION code, not a model:
-  * conjuncts compile through [[ManifestAggRule.compileConjunct]], files
-  * classify through [[ManifestCover.of]], and the folds run through the
+  * conjuncts compile through [[Coverage.compile]] (the classifier every
+  * manifest rule shares), files classify through [[Coverage.and]], and
+  * the folds run through the
   * stats core's distributed executor ([[ManifestStats.distributed]]) —
   * the agg rule's `StatsSummary`/`GroupedSummary` folds and the top-k
   * rule's [[TopKSweep]], as they run at planning time:
@@ -80,11 +81,11 @@ object StatsCurve {
 
     val kAttr = AttributeReference("k", LongType)()
     val relOut = AttributeSet(Seq(kAttr))
-    def classifiers(spark: SparkSession, keyFields: Map[String, String],
+    def classifiers(keyFields: Map[String, String],
                     conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        : Seq[FStat => Cover] =
-      conjuncts.map(ManifestAggRule(spark).compileConjunct(_, relOut, keyFields)
-        .getOrElse(sys.error("conjunct must compile")))
+        : FStat => Cover =
+      Coverage.and(conjuncts.map(Coverage.compile(_, relOut, keyFields).filter(_.provesAll)
+        .getOrElse(sys.error("conjunct must compile")).cover))
 
     def folded[A](o: Option[A]): A =
       o.getOrElse(sys.error("the catalog moved during a measured fold"))
@@ -103,9 +104,8 @@ object StatsCurve {
         val cap = src.cap
         val lo = n.toLong / 4 * 100 + 50
         val hi = n.toLong * 3 / 4 * 100 + 50
-        val fns = classifiers(spark, src.keyFields, Seq(
+        val coverOf = classifiers(src.keyFields, Seq(
           GreaterThanOrEqual(kAttr, Literal(lo)), LessThanOrEqual(kAttr, Literal(hi))))
-        val coverOf = ManifestCover.of(fns) _
         folded(src.fold("q201")(StatsSummary())(
           (s, st) => s.add(st, coverOf(st), Seq("k"), cap), _.merge(_, cap)))
           .partialFiles.size.toLong
@@ -123,13 +123,13 @@ object StatsCurve {
       Shape("q203_topk_sweep", { (spark, mp, n) =>
         val src = ManifestStats.distributed(spark, mp, "t")
         val lo = n.toLong / 2 * 100 + 50
-        val fns = classifiers(spark, src.keyFields,
+        val coverOf = classifiers(src.keyFields,
           Seq(GreaterThanOrEqual(kAttr, Literal(lo))))
         val topN = 100
         // a declined sweep (guarantees short of n — only reachable under
         // tiny override scales) holds just the guarantees
         topN + TopKSweep("k", desc = true, nullsFirst = false)
-          .survivors(src, ManifestCover.of(fns) _, topN, "q203")
+          .survivors(src, coverOf, topN, "q203")
           .fold(0L)(_.size.toLong)
       }),
       // the completeness except-probe over the relation's own listing

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -423,6 +424,83 @@ class ManifestSpec extends SparkSpec {
     Manifest.update(spark, ndir, "t", Seq("id"), nmp)
     assert(Manifest.select(spark, nmp, t && Manifest.keyIsNull("id")).count() === 2)
     assert(Manifest.select(spark, nmp, t && Manifest.keyIsNotNull("id")).count() === 2)
+
+    // each helper keeps exactly the files the rules' compiler keeps for the
+    // matching SQL conjunct — the conjuncts as Spark's optimizer hands them
+    // over (its inferred isnotnull included), classified over the same
+    // catalog. The fixtures hold no all-null file: the compiler also reads
+    // null counts there, which the range builders do not
+    def helperFiles(m: String, pred: Column): Set[String] =
+      Manifest.select(spark, m, t && pred).select("path").as[String].collect().toSet
+    def split(e: org.apache.spark.sql.catalyst.expressions.Expression)
+        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+      case org.apache.spark.sql.catalyst.expressions.And(l, r) => split(l) ++ split(r)
+      case o => Seq(o)
+    }
+    def ruleFiles(d: String, m: String, where: String): Set[String] = {
+      val plan = spark.read.parquet(s"$d/t.parquet").filter(where).queryExecution.optimizedPlan
+      val (cond, rel) = plan.collectFirst {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(c,
+            r: org.apache.spark.sql.execution.datasources.LogicalRelation) => (c, r)
+      }.get
+      ManifestStats.open(spark, m, "t") { src =>
+        val cover = Coverage.and(split(cond)
+          .flatMap(Coverage.compile(_, rel.outputSet, src.keyFields)).map(_.cover))
+        src.fold(("parity", m, where))(Set.empty[String])(
+          (acc, st) => if (cover(st) == CoverNone) acc else acc + st.path, _ ++ _)
+      }.get
+    }
+    Seq(
+      Manifest.inList("id", Seq(50L, 51L, 450L)) -> "id IN (50, 51, 450)",
+      Manifest.inList("id", (0L to 70L)) -> s"id IN (${(0 to 70).mkString(", ")})",
+      Manifest.inList("id", (95L to 105L) :+ 450L) ->
+        s"id IN (${((95 to 105) :+ 450).mkString(", ")})",
+      Manifest.overlaps("id", 150L, 340L) -> "id BETWEEN 150 AND 340",
+      Manifest.overlaps("id", 250L, 250L) -> "id = 250",
+      Manifest.overlaps("id", 99L, 100L) -> "id >= 99 AND id <= 100",
+      Manifest.overlaps("id", 600L, 700L) -> "id BETWEEN 600 AND 700"
+    ).foreach { case (pred, where) =>
+      assert(helperFiles(mp, pred) === ruleFiles(dir, mp, where), where)
+    }
+    Seq(
+      Manifest.likePrefix("s", "b") -> "s LIKE 'b%'",
+      Manifest.likePrefix("s", "a") -> "s LIKE 'a%'",
+      Manifest.likePrefix("s", "c") -> "s LIKE 'c%'",
+      Manifest.inList("s", Seq("ant", "berry")) -> "s IN ('ant', 'berry')",
+      Manifest.overlaps("s", "alpha", "az") -> "s BETWEEN 'alpha' AND 'az'"
+    ).foreach { case (pred, where) =>
+      assert(helperFiles(smp, pred) === ruleFiles(sdir, smp, where), where)
+    }
+    Seq(Manifest.keyIsNull("id") -> "id IS NULL",
+      Manifest.keyIsNotNull("id") -> "id IS NOT NULL").foreach { case (pred, where) =>
+      assert(helperFiles(nmp, pred) === ruleFiles(ndir, nmp, where), where)
+    }
+  }
+
+  test("build() over a cached table keys files by path, as update() does") {
+    import spark.implicits._
+    // a cached read has no input file: keyed by input_file_name(), the
+    // build once cataloged ONE row with path "" holding all 30 rows, and
+    // every pruned query over the view then kept zero files
+    val dir = s"$base/cachedbuild"
+    (0 until 3).foreach { f =>
+      (f * 10L until f * 10L + 10L).toDF("id").coalesce(1)
+        .write.mode("append").parquet(s"$dir/t.parquet")
+    }
+    val ump = s"$base/cachedbuild_update"
+    Manifest.update(spark, dir, "t", Seq("id"), ump)
+    val bmp = s"$base/cachedbuild_build"
+    val cached = Tables.load(spark, dir, "t").cache()
+    try {
+      assert(cached.count() === 30L)
+      Manifest.write(Manifest.build(spark, dir, "t", Seq("id")), bmp)
+    } finally cached.unpersist(blocking = true)
+    def entries(m: String) = spark.read.parquet(m).select("path", "rows")
+      .as[(String, Long)].collect().toSet
+    assert(entries(bmp) === entries(ump))
+    ManifestSql.register(spark, dir, "t", bmp, "cached_build_t")
+    assert(spark.sql("SELECT count(*) FROM cached_build_t WHERE id >= 5")
+      .head.getLong(0) === 25L)
   }
 
   test("rewrite reclaims only its own __rw/__old leftovers, never a prefix-sharing sibling") {

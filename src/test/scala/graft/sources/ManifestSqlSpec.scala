@@ -613,9 +613,9 @@ class ManifestSqlSpec extends SparkSpec {
         l.relation.asInstanceOf[
           org.apache.spark.sql.execution.datasources.HadoopFsRelation].location
     }
-    // TWO pruned indexes exist: the dim side prunes on its inferred
-    // isnotnull (all files kept), the fact side on the empty key set —
-    // the zero-file index is the rule's empty-keys path under test
+    // the dim side's inferred isnotnull skips no file, so only the fact
+    // side carries a pruned index — the zero-file index is the rule's
+    // empty-keys path under test
     assert(prunedIndexes.exists(_.inputFiles.isEmpty),
       s"the fact side must be pruned to zero files: " +
         s"${prunedIndexes.map(_.inputFiles.length)}")
@@ -721,11 +721,11 @@ class ManifestSqlSpec extends SparkSpec {
   }
 
   test("a filter on an alias SHADOWING a key name never folds into the join prune") {
-    // round-14 advice: conjunctBound resolves attributes by NAME, so a
-    // Filter above a Project whose alias shadows the manifest key could
-    // fold as a bound on the NATIVE column and unsoundly prune. The fold
-    // set is now exprId-guarded: only conjuncts referencing the
-    // relation's own attributes fold.
+    // round-14 advice: a compiler resolving attributes by NAME lets a
+    // Filter above a Project whose alias shadows the manifest key fold as
+    // a bound on the NATIVE column and unsoundly prune. The fold set is
+    // exprId-guarded: only conjuncts referencing the relation's own
+    // attributes fold.
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.plans.Inner
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, Join, JoinHint, Project}
@@ -878,9 +878,7 @@ class ManifestSqlSpec extends SparkSpec {
 
   test("the snapshot cache evicts exactly one LRU entry at capacity (round-14 item 6)") {
     ManifestSnapshot.cache.clear()
-    def snap(i: Int) = ManifestSnapshot.Snap(Vector((s"f$i", 1L, 1L)),
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      new org.apache.spark.sql.types.StructType(), Set.empty)
+    def snap(i: Int) = ManifestSnapshot.Snap(Vector((s"f$i", 1L, 1L)), Map.empty, Map.empty)
     (0 until ManifestSnapshot.MaxEntries).foreach(i =>
       ManifestSnapshot.cache.put(s"m$i", snap(i)))
     ManifestSnapshot.cache.get("m0") // most-recently-used now
@@ -1568,6 +1566,28 @@ class ManifestSqlSpec extends SparkSpec {
         assert(large(n).nonEmpty)
       }
     } finally spark.conf.unset(ManifestSnapshot.MaxBytesConf)
+  }
+
+  test("doubles compare in SQL order: a -0.0 file answers x = 0.0, NaN sorts last") {
+    // parquet pushdown OFF: with it on, parquet's dictionary filter drops the
+    // -0.0 row group under `x = 0.0`, so the plain scan itself reads 0 rows
+    // where Spark's SQL order (-0.0 = 0.0) says 2
+    import spark.implicits._
+    val dir = s"$base/negzero"
+    Seq(Seq(-0.0, -0.0), Seq(1.0, 2.0), Seq(Double.NaN)).foreach(vs =>
+      vs.toDF("x").coalesce(1).write.mode("append").parquet(s"$dir/t.parquet"))
+    val zmp = s"$base/negzero_manifest"
+    Manifest.write(Manifest.build(spark, dir, "t", Seq("x")), zmp)
+    ManifestSql.register(spark, dir, "t", zmp, "negz")
+    withConf("spark.sql.parquet.filterPushdown", "false") {
+      Seq("x = 0.0" -> 2L, "x >= 0.0" -> 5L, "x <= 0.0" -> 2L, "x > 2.0" -> 1L,
+        "x = double('NaN')" -> 1L).foreach { case (p, n) =>
+        val sql = s"SELECT count(*) AS n FROM negz WHERE $p"
+        val scan = withConf("graft.manifest.metadataAgg", "false")(spark.sql(sql).head.getLong(0))
+        assert(scan === n, s"the scan itself: $p")
+        assert(spark.sql(sql).head.getLong(0) === scan, s"the metadata answer: $p")
+      }
+    }
   }
 
   test("a vanished manifest degrades to the unpruned scan, never an error") {
