@@ -24,13 +24,39 @@ object ColumnBridge {
 /** LogicalPlan → DataFrame bridge (same `private[sql]` rationale as
   * [[ColumnBridge]]): lets specs execute a plan after applying an
   * optimizer rule by hand, independent of which extensions the shared
-  * test session was built with. */
+  * test session was built with, and lets the transfer engine hand a sink
+  * its staged chunks as frames. */
 object PlanBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** An `InternalRow` RDD as a DataFrame (`Scan ExistingRDD`) that reports
+    * `sizeInBytes` to the optimizer instead of Spark's unknown-size
+    * default. The rows must match `schema`. */
+  def ofRdd(spark: org.apache.spark.sql.SparkSession,
+            rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+            schema: org.apache.spark.sql.types.StructType,
+            sizeInBytes: BigInt): org.apache.spark.sql.DataFrame = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    ofRows(s, org.apache.spark.sql.execution.LogicalRDD(attrs, rdd)(s,
+      Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes))))
+  }
+
+  /** Remove the map output of every shuffle in `rdd`'s lineage now,
+    * rather than whenever the driver's garbage collector lets Spark's
+    * context cleaner find it. Later jobs over `rdd` would fail. */
+  def releaseShuffles(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Seq[Int] = r.dependencies.flatMap {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] => Seq(d.shuffleId)
+      case d => shuffles(d.rdd)
+    }
+    val cleaner = rdd.sparkContext.cleaner
+    shuffles(rdd).distinct.foreach(id => cleaner.foreach(_.doCleanupShuffle(id, blocking = false)))
+  }
 
   /** The optimizer rules an extensions set would inject — `private[sql]`
     * on SparkSessionExtensions, surfaced for extension specs. */

@@ -94,20 +94,26 @@ final class PgCopySessionFactory(
 final class CsvLinesReader(lines: Iterator[String]) extends java.io.Reader {
   private var cur: String = ""
   private var pos = 0
+  private var newlineOwed = false // `cur` is copied out; its '\n' is not yet
 
   override def read(cbuf: Array[Char], off: Int, len: Int): Int = {
     if (len == 0) return 0
     var written = 0
     while (written < len) {
-      if (pos >= cur.length) {
-        if (!lines.hasNext) return if (written == 0) -1 else written
-        cur = lines.next() + "\n"
+      if (pos < cur.length) {
+        val n = math.min(len - written, cur.length - pos)
+        cur.getChars(pos, pos + n, cbuf, off + written)
+        pos += n
+        written += n
+      } else if (newlineOwed) {
+        cbuf(off + written) = '\n'
+        written += 1
+        newlineOwed = false
+      } else if (lines.hasNext) {
+        cur = lines.next()
         pos = 0
-      }
-      val n = math.min(len - written, cur.length - pos)
-      cur.getChars(pos, pos + n, cbuf, off + written)
-      pos += n
-      written += n
+        newlineOwed = true
+      } else return if (written == 0) -1 else written
     }
     written
   }

@@ -2,8 +2,9 @@ package graft.transfer
 
 import java.io.IOException
 import java.net.{InetSocketAddress, StandardProtocolFamily, UnixDomainSocketAddress}
-import java.nio.ByteBuffer
+import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.channels.SocketChannel
+import java.nio.charset.CodingErrorAction
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** A PostgreSQL backend error surfaced to the caller — severity + message +
@@ -145,14 +146,14 @@ object PgWireCopySessionFactory {
   * stream, or TLS stream — picked by [[PgWireSession]] after the
   * SSLRequest preamble. */
 private[transfer] trait PgWire {
-  def write(bytes: Array[Byte]): Unit
+  def write(bytes: Array[Byte], off: Int, len: Int): Unit
   def readFully(n: Int): ByteBuffer
   def close(): Unit
 }
 
 private[transfer] final class ChannelWire(ch: SocketChannel) extends PgWire {
-  def write(bytes: Array[Byte]): Unit = {
-    val buf = ByteBuffer.wrap(bytes)
+  def write(bytes: Array[Byte], off: Int, len: Int): Unit = {
+    val buf = ByteBuffer.wrap(bytes, off, len)
     while (buf.hasRemaining) ch.write(buf)
   }
   def readFully(n: Int): ByteBuffer = {
@@ -168,7 +169,7 @@ private[transfer] final class ChannelWire(ch: SocketChannel) extends PgWire {
 private[transfer] final class StreamWire(sock: java.net.Socket) extends PgWire {
   private val in = new java.io.BufferedInputStream(sock.getInputStream, 64 * 1024)
   private val out = new java.io.BufferedOutputStream(sock.getOutputStream, 64 * 1024)
-  def write(bytes: Array[Byte]): Unit = { out.write(bytes); out.flush() }
+  def write(bytes: Array[Byte], off: Int, len: Int): Unit = { out.write(bytes, off, len); out.flush() }
   def readFully(n: Int): ByteBuffer = {
     val a = in.readNBytes(n)
     if (a.length < n) throw new IOException("connection closed by server mid-message")
@@ -425,11 +426,9 @@ private[transfer] final class PgWireSession(
 
   // ---- low-level framing -------------------------------------------------
 
-  private def writeFully(buf: ByteBuffer): Unit = {
-    val a = new Array[Byte](buf.remaining())
-    buf.get(a)
-    wire.write(a)
-  }
+  /** Write a heap buffer's filled bytes `[0, position)` straight from its
+    * backing array. */
+  private def writeFully(buf: ByteBuffer): Unit = wire.write(buf.array(), 0, buf.position())
 
   private def readFully(n: Int): ByteBuffer = wire.readFully(n)
 
@@ -468,9 +467,8 @@ private[transfer] final class PgWireSession(
 
   /** Frontend message with a 1-byte type tag. */
   private def send(tpe: Char, payload: Array[Byte]): Unit = {
-    val buf = ByteBuffer.allocate(5 + payload.length)
-    buf.put(tpe.toByte).putInt(4 + payload.length).put(payload).flip()
-    writeFully(buf)
+    writeFully(ByteBuffer.allocate(5 + payload.length)
+      .put(tpe.toByte).putInt(4 + payload.length).put(payload))
   }
 
   // ---- startup handshake -------------------------------------------------
@@ -499,7 +497,7 @@ private[transfer] final class PgWireSession(
       k.getBytes(UTF_8) ++ Array[Byte](0) ++ v.getBytes(UTF_8) ++ Array[Byte](0)
     }.toArray ++ Array[Byte](0)
     val buf = ByteBuffer.allocate(8 + body.length)
-    buf.putInt(8 + body.length).putInt(196608).put(body).flip() // protocol 3.0
+    buf.putInt(8 + body.length).putInt(196608).put(body) // protocol 3.0
     writeFully(buf)
     def requirePassword(): String = password.getOrElse(throw new IOException(
       s"server requires a password for $user and none was provided"))
@@ -661,6 +659,22 @@ private[transfer] final class PgWireSession(
     // silently (round-10 advice). If the last char read is a high
     // surrogate, hold it back and prepend it to the next read.
     val chars = new Array[Char](64 * 1024)
+    // One CopyData frame, reused: each chunk's chars encode straight into
+    // the bytes after its 5-byte header, which is then written in place.
+    // UTF-8 needs at most 3 bytes per char (a surrogate pair is 4 bytes for
+    // 2 chars), and an unpaired surrogate becomes '?' as String.getBytes
+    // makes it.
+    val frame = ByteBuffer.allocate(5 + 3 * chars.length)
+    val utf8 = UTF_8.newEncoder()
+      .onMalformedInput(CodingErrorAction.REPLACE)
+      .onUnmappableCharacter(CodingErrorAction.REPLACE)
+    def sendData(n: Int): Unit = {
+      frame.clear().position(5)
+      utf8.reset().encode(CharBuffer.wrap(chars, 0, n), frame, true)
+      utf8.flush(frame)
+      frame.put(0, 'd'.toByte).putInt(1, frame.position() - 1)
+      writeFully(frame)
+    }
     try {
       var held = 0 // 0 or 1 high-surrogate chars carried at chars(0)
       var n = from.read(chars, held, chars.length - held)
@@ -671,13 +685,13 @@ private[transfer] final class PgWireSession(
           avail -= 1
           held = 1
         }
-        if (avail > 0) send('d', new String(chars, 0, avail).getBytes(UTF_8))
+        if (avail > 0) sendData(avail)
         if (held == 1) chars(0) = chars(avail)
         n = from.read(chars, held, chars.length - held)
       }
       // EOF with a lone trailing high surrogate: malformed input — encode it
       // anyway ('?') rather than silently dropping a char the reader produced
-      if (held == 1) send('d', new String(chars, 0, 1).getBytes(UTF_8))
+      if (held == 1) sendData(1)
     } catch {
       case e: Throwable => // local failure: tell the server, restore protocol state
         // best-effort — if the connection itself died, the ORIGINAL cause

@@ -6,8 +6,12 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
 
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.StructType
 
 /** Per-table transfer statistics (`data_transfer.py:60-69`). */
 final case class TransferStats(
@@ -270,12 +274,25 @@ final class JdbcSink(
   * checkpoints a *row offset* into an unordered result set (and concedes
   * the instability), the chunk key ranges are value-stable: the checkpoint
   * stores the number of committed chunks, so a rerun after a mid-table
-  * crash re-reads only the un-committed key ranges. The chunk column must be
+  * crash stages only the un-committed key ranges. The chunk column must be
   * non-null integral (a PK/partition key, same contract as the JDBC
   * partitionColumn) — enforced up front, since a null or fractional key
-  * would silently fall outside every chunk's range predicate. A crash between a chunk's commit and its checkpoint
-  * write re-appends that one chunk (at-least-once, same window as the
-  * reference's commit-then-callback ordering).
+  * would silently fall outside every chunk's range. A crash between a
+  * chunk's commit and its checkpoint write re-appends that one chunk
+  * (at-least-once, same window as the reference's commit-then-callback
+  * ordering); so does a chunk that failed after some of its partitions
+  * committed.
+  *
+  * The source of a chunked table is read once per run, not once per chunk:
+  * [[StagedChunks]] scans the pending key range and shuffles it by chunk,
+  * and each chunk the sink gets is a frame over that chunk's own shuffle
+  * partitions. A per-chunk range filter over the source would decode the
+  * whole source for every chunk whenever its row groups are too few to
+  * skip (a one-file table holds one), and would leave each chunk's rows on
+  * the one task that read them. The cost is one shuffle of the pending
+  * range, held on executor local disk until the last chunk lands: a wide
+  * source already clustered by the chunk key, whose row groups each chunk
+  * filter could have skipped, now pays that shuffle too.
   */
 final class TransferEngine(
     source: TableSource,
@@ -317,13 +334,18 @@ final class TransferEngine(
     * key span so they are identical across runs. The checkpoint stores the
     * COUNT of committed chunks (1-based), not a key bound — a key watermark
     * would collide with the checkpoint's "0 = never started" convention
-    * for tables whose chunk keys are negative or cross zero. */
+    * for tables whose chunk keys are negative or cross zero.
+    *
+    * One scan finds the bounds (the key column only); one more reads the
+    * pending chunks' rows into a [[StagedChunks]] shuffle. The sink then
+    * gets one `writeChunk` per chunk, in key order, each followed by its
+    * checkpoint commit. */
   private def transferChunked(spark: SparkSession, df: DataFrame,
                               table: String, keyCol: String): Long = {
     import org.apache.spark.sql.functions.{col, count, max, min, when}
     import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
     val cp = checkpoint.get
-    // the chunk predicates filter on the RAW key, so the key type must be
+    // chunks are ranges of the RAW key, so the key type must be
     // integral (a fractional key above the truncated max would fall outside
     // the last chunk) and null keys must be rejected (they match no chunk's
     // range) — either would otherwise drop rows with success=true.
@@ -360,9 +382,8 @@ final class TransferEngine(
       s"chunk column $keyCol of $table spans [$loD, $hiD], outside Long range — " +
         "chunk boundaries cannot be computed")
     val (lo, hi) = (loD.longValueExact(), hiD.longValueExact())
-    // chunk-index arithmetic in BigInt: a key span near the Long extremes
-    // (hi - lo + 1, lo + k*width, cur + width) would otherwise wrap and
-    // either loop forever or compute wrong ranges
+    // chunk arithmetic in BigInt: a key span near the Long extremes
+    // (hi - lo + 1, lo + k*width) would otherwise wrap
     val span = BigInt(hi) - BigInt(lo) + 1
     val width = (span + chunkCount - 1) / chunkCount max BigInt(1)
     val totalChunks = ((span + width - 1) / width).toLong
@@ -371,17 +392,15 @@ final class TransferEngine(
     // skipping past the data
     val recorded = math.max(0L, cp.resumeOffset(table))
     val doneChunks = if (recorded > totalChunks) 0L else recorded
-    var chunkNo = doneChunks
-    while (chunkNo < totalChunks) {
-      val lower = (BigInt(lo) + BigInt(chunkNo) * width).toLong
-      val isLast = chunkNo == totalChunks - 1
-      val chunk =
-        if (isLast) df.filter(col(keyCol) >= lower && col(keyCol) <= hi)
-        else df.filter(col(keyCol) >= lower &&
-          col(keyCol) < (BigInt(lower) + width).toLong)
-      sink.writeChunk(chunk, table, firstChunk = chunkNo == 0)
-      chunkNo += 1
-      cp.updateProgress(table, chunkNo) // commit progress AFTER the chunk lands
+    val pending = (totalChunks - doneChunks).toInt
+    if (pending > 0) {
+      val staged = StagedChunks(df, keyCol,
+        (BigInt(lo) + BigInt(doneChunks) * width).toLong, hi, width, pending)
+      try (0 until pending).foreach { i =>
+        val chunkNo = doneChunks + i
+        sink.writeChunk(staged.chunk(i), table, firstChunk = chunkNo == 0)
+        cp.updateProgress(table, chunkNo + 1) // commit progress AFTER the chunk lands
+      } finally staged.release()
     }
     sink.finish(spark, table)
     sink.countRows(spark, table).getOrElse(df.count())
@@ -406,5 +425,75 @@ final class TransferEngine(
     // results re-ordered to input order like the reference (data_transfer.py:664-670)
     val byName = (skipped ++ results).map(s => s.tableName -> s).toMap
     tables.flatMap(byName.get)
+  }
+}
+
+/** The pending key range `[base, hi]` of a chunked transfer, read from the
+  * source once and staged by chunk in one shuffle. Pending chunk `i` holds
+  * the keys in `[base + i·width, base + (i+1)·width)` (the last one runs
+  * through `hi`) and owns shuffle partitions `[i·p, (i+1)·p)`, where `p` is
+  * the number of partitions Spark plans for the source scan (at least 1).
+  * Inside its chunk a row's partition is its key's hash mod `p`, so rows
+  * sharing a key stay together.
+  *
+  * The chunk index is integral arithmetic on the raw key: `(key - base)
+  * div width` in longs while the span fits, in `decimal(38,0)` past that.
+  * A decimal `/` would round the quotient to scale 6 and could move a key
+  * just below a chunk's upper edge into the next chunk, past a checkpoint
+  * that a resume trusts.
+  *
+  * Building the staged plan's RDD runs the shuffle's map stage (Spark's
+  * adaptive execution materializes it there); every [[chunk]] job after it
+  * reads that map output, so the source is read once per run whatever its
+  * row-group layout. The staged copy occupies executor local disk until
+  * [[release]]. */
+private[transfer] final class StagedChunks private (
+    spark: SparkSession,
+    rows: RDD[InternalRow],
+    schema: StructType,
+    p: Int,
+    chunkBytes: BigInt) {
+
+  /** Pending chunk `i` as a frame over its own `p` staged partitions. Its
+    * size estimate is the source's, split evenly over the pending chunks,
+    * so a size-gated sink (`CsvBulkSink`'s fan-out) sees a chunk, not
+    * Spark's unknown-size default. */
+  def chunk(i: Int): DataFrame = {
+    val q = p // a local, so the partition filter never closes over this staging
+    PlanBridge.ofRdd(spark, PartitionPruningRDD.create(rows, _ / q == i), schema, chunkBytes)
+  }
+
+  /** Drop the staged shuffle output once the chunks have landed (or failed). */
+  def release(): Unit = PlanBridge.releaseShuffles(rows)
+}
+
+private[transfer] object StagedChunks {
+  private val ChunkPartition = "__graft_chunk_partition"
+
+  def apply(df: DataFrame, keyCol: String, base: Long, hi: Long, width: BigInt,
+            pending: Int): StagedChunks = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
+    val key = col(keyCol)
+    val src = df.filter(key >= base && key <= hi)
+    val p = math.max(1, src.queryExecution.toRdd.getNumPartitions)
+    require(pending.toLong * p <= Int.MaxValue,
+      s"$pending chunks x $p partitions exceed the shuffle's partition range")
+    val (offset, w) =
+      if ((BigInt(hi) - base).isValidLong && width.isValidLong)
+        (key.cast(LongType) - base, lit(width.toLong))
+      else (key.cast(DecimalType(38, 0)) - lit(new java.math.BigDecimal(base)),
+        lit(new java.math.BigDecimal(width.bigInteger)))
+    val index = ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+      ColumnBridge.expression(offset), ColumnBridge.expression(w)))
+    val partition = (index * p + pmod(hash(key), lit(p))).cast(IntegerType)
+    val staged = src.withColumn(ChunkPartition, partition)
+      .repartitionById(pending * p, col(ChunkPartition)).drop(ChunkPartition)
+    val rows = staged.queryExecution.toRdd
+    require(rows.getNumPartitions == pending * p,
+      s"staged ${rows.getNumPartitions} partitions, expected ${pending * p}")
+    val bytes = src.queryExecution.optimizedPlan.stats.sizeInBytes / pending
+    new StagedChunks(df.sparkSession, rows, staged.schema, p, bytes max 1)
   }
 }

@@ -2,7 +2,13 @@ package graft.transfer
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Test.{check, Parameters}
 
 import graft.SparkSpec
 
@@ -26,6 +32,203 @@ class ChunkedResumeSpec extends SparkSpec {
     }
     override def countRows(spark: SparkSession, table: String): Option[Long] =
       inner.countRows(spark, table)
+  }
+
+  /** Keeps each chunk frame's keys, read as the chunk lands (the staged
+    * data is released once the last chunk has landed). Like a real sink it
+    * reads every column. */
+  private class RecordingSink(keyCol: String) extends TableSink {
+    var chunks = Vector.empty[Seq[BigInt]]
+    def write(df: DataFrame, table: String): Unit = ()
+    override def writeChunk(df: DataFrame, table: String, firstChunk: Boolean): Unit = {
+      val k = df.schema.fieldIndex(keyCol)
+      chunks :+= df.collect().toSeq.map(r => BigInt(r.get(k).toString))
+    }
+    override def countRows(spark: SparkSession, table: String): Option[Long] =
+      Some(chunks.map(_.size.toLong).sum)
+  }
+
+  /** A parquet source whose frame counts the rows it emits with all their
+    * columns: a non-deterministic probe column, which no filter can be
+    * pushed below (a chunk filter over it reads the whole file) and which a
+    * key-only scan, like the engine's bounds pass, prunes away. */
+  private class CountingSource(dir: String) extends TableSource {
+    val emitted = spark.sparkContext.longAccumulator("source_rows")
+    def read(spark: SparkSession, table: String): DataFrame = {
+      val acc = emitted
+      val probe = udf(() => { acc.add(1); 1 }).asNondeterministic()
+      spark.read.parquet(s"$dir/$table.parquet").withColumn("probe", probe())
+    }
+  }
+
+  /** The most shuffle records any one stage of `body` wrote. A marker job
+    * run after `body` flushes the listener bus: its start event is
+    * delivered after every task-end event of the jobs before it. */
+  private def largestShuffleWrite(body: => Unit): Long = {
+    val marker = "chunked-resume-spec-marker"
+    val perStage = mutable.Map.empty[Int, Long]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskMetrics != null)
+        perStage.synchronized {
+          perStage(e.stageId) = perStage.getOrElse(e.stageId, 0L) +
+            e.taskMetrics.shuffleWriteMetrics.recordsWritten
+        }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    perStage.synchronized(perStage.values.maxOption.getOrElse(0L))
+  }
+
+  /** Transfers `keys` (one column `k` of `keyType`, plus a payload) from
+    * `files` parquet files in `chunkCount` chunks and checks that each
+    * chunk frame holds exactly the keys of `[lo + i·width, lo + (i+1)·width)`,
+    * the last one running through `hi`. */
+  private def chunkRangesHold(keys: Seq[BigInt], keyType: String, files: Int,
+                              chunkCount: Int): Boolean = {
+    import spark.implicits._
+    val src = Files.createTempDirectory("ranges_src").toString
+    keys.map(_.toString).toDF("s")
+      .selectExpr(s"CAST(CAST(s AS DECIMAL(38,0)) AS $keyType) AS k", "length(s) AS v")
+      .repartition(files).write.parquet(s"$src/ranges.parquet")
+    val out = Files.createTempDirectory("ranges_out").toString
+    val sink = new RecordingSink("k")
+    val s = new TransferEngine(new ParquetSource(src), sink,
+      Some(new CheckpointManager(s"$out/ckpt.json", "sf", "pq")),
+      chunkColumns = Map("ranges" -> "k"), chunkCount = chunkCount).transferTable(spark, "ranges")
+    assert(s.success, s.errorMessage)
+    val (lo, hi) = (keys.min, keys.max)
+    val span = hi - lo + 1
+    val width = (span + chunkCount - 1) / chunkCount
+    val total = ((span + width - 1) / width).toInt
+    val want = keys.groupBy(k => ((k - lo) / width).toInt)
+    val ok = sink.chunks.size == total && sink.chunks.indices.forall(i =>
+      sink.chunks(i).sorted == want.getOrElse(i, Nil).sorted)
+    if (!ok) info(s"$keyType files=$files chunks=$chunkCount lo=$lo hi=$hi width=$width: " +
+      sink.chunks.zipWithIndex.map { case (c, i) =>
+        s"#$i got ${c.sorted.take(4)} want ${want.getOrElse(i, Nil).sorted.take(4)}" }.mkString("; "))
+    ok
+  }
+
+  test("property: each chunk frame holds exactly the keys of its range") {
+    val minL = BigInt(Long.MinValue)
+    val maxL = BigInt(Long.MaxValue)
+    // (lo, hi) families: small zero-crossing, wide (width over 10^6), and
+    // spans that touch or cover the Long extremes
+    val bounds: Gen[(BigInt, BigInt)] = Gen.oneOf(
+      for (lo <- Gen.choose(-1000L, 0L); n <- Gen.choose(0L, 2000L)) yield (BigInt(lo), BigInt(lo + n)),
+      for (lo <- Gen.choose(-(1L << 40), 1L << 40); n <- Gen.choose(8L << 20, 1L << 44))
+        yield (BigInt(lo), BigInt(lo) + n),
+      Gen.oneOf((minL, minL + 12345), (maxL - 999999999, maxL), (minL, maxL), (minL, BigInt(0))))
+    val setup = for {
+      (lo, hi) <- bounds
+      chunkCount <- Gen.choose(1, 8)
+      files <- Gen.oneOf(1, 3)
+      keyType <- Gen.oneOf("BIGINT", "DECIMAL(38,0)")
+      inner <- Gen.listOfN(12, Gen.choose(0L, Long.MaxValue).map(r => lo + BigInt(r) % (hi - lo + 1)))
+    } yield {
+      // every chunk edge, the key just below it and the key just above it
+      val span = hi - lo + 1
+      val width = (span + chunkCount - 1) / chunkCount
+      val edges = (0 until chunkCount).flatMap(i => Seq(-1, 0, 1).map(d => lo + width * i + d))
+      ((lo +: hi +: (edges ++ inner)).filter(k => k >= lo && k <= hi), keyType, files, chunkCount)
+    }
+    val prop = Prop.forAllNoShrink(setup) { case (keys, keyType, files, chunkCount) =>
+      chunkRangesHold(keys, keyType, files, chunkCount)
+    }
+    val res = check(Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("chunk ranges stay exact where a rounded decimal quotient would not") {
+    // width 1,000,000,007: (1,000,000,006 - 0) / width is 0.999999999…,
+    // which a decimal division rounded to scale 6 reads as 1.000000
+    val trap = Seq(0L, 1000000006L, 1000000007L, 2000000013L).map(BigInt(_))
+    for (keyType <- Seq("BIGINT", "INT", "DECIMAL(38,0)"); files <- Seq(1, 3))
+      assert(chunkRangesHold(trap, keyType, files, 2),
+        s"$keyType over $files files")
+    assert(chunkRangesHold(Seq(-1000000007L, -1L, 0L, 1000000006L).map(BigInt(_)), "BIGINT", 1, 2))
+    // a span wider than Long: chunk edges near ±2^63
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue - 1, Long.MaxValue)
+    for (keyType <- Seq("BIGINT", "DECIMAL(38,0)"))
+      assert(chunkRangesHold(extremes.map(BigInt(_)), keyType, 1, 2), keyType)
+  }
+
+  test("the source is read once per chunked transfer, and a resume stages only the pending chunks") {
+    val total = spark.read.parquet(s"$sfDir/orders.parquet").count()
+    // one source file, one row group: a per-chunk range filter reads it
+    // all, chunkCount times
+    val once = new CountingSource(sfDir)
+    val sink = new RecordingSink("o_orderkey")
+    val s = new TransferEngine(once, sink, Some(new CheckpointManager(
+      s"${Files.createTempDirectory("readonce")}/ckpt.json", "sf", "pq")),
+      chunkColumns = Map("orders" -> "o_orderkey"), chunkCount = 8).transferTable(spark, "orders")
+    assert(s.success, s.errorMessage)
+    assert(sink.chunks.size == 8 && sink.chunks.map(_.size.toLong).sum == total)
+    assert(once.emitted.value == total, s"the source emitted ${once.emitted.value} rows for $total")
+
+    // crash while chunk 3 of 5 is written; the rerun stages chunks 3–5 only
+    val out = Files.createTempDirectory("readresume").toString
+    def engine(src: TableSource, sink: TableSink) = new TransferEngine(src, sink,
+      Some(new CheckpointManager(s"$out/ckpt.json", "sf", "pq")),
+      chunkColumns = Map("orders" -> "o_orderkey"), chunkCount = 5)
+    val crashed = engine(new CountingSource(sfDir),
+      new FlakySink(new RecordingSink("o_orderkey"), failOnChunk = 2)).transferTable(spark, "orders")
+    assert(!crashed.success)
+    val rerunSource = new CountingSource(sfDir)
+    val rerunSink = new RecordingSink("o_orderkey")
+    val staged = largestShuffleWrite {
+      assert(engine(rerunSource, rerunSink).transferTable(spark, "orders").success)
+    }
+    val keys = spark.read.parquet(s"$sfDir/orders.parquet")
+      .select("o_orderkey").collect().map(r => BigInt(r.getLong(0)))
+    val (lo, hi) = (keys.min, keys.max)
+    val width = (hi - lo + 1 + 4) / 5
+    val pending = keys.count(_ >= lo + 2 * width).toLong
+    assert(rerunSink.chunks.size == 3 && rerunSink.chunks.map(_.size.toLong).sum == pending)
+    assert(staged == pending, s"the rerun staged $staged rows; chunks 3–5 hold $pending")
+    assert(rerunSource.emitted.value == total, "the rerun read the source more than once")
+  }
+
+  test("a crash after a chunk lands and before its checkpoint duplicates exactly that chunk") {
+    val out = Files.createTempDirectory("landed").toString
+    val parquet = new ParquetSink(out)
+    /** Lands chunk 3 of 5, then dies before the engine records it. */
+    class DiesAfterLanding extends TableSink {
+      var chunks = 0
+      def write(df: DataFrame, table: String): Unit = parquet.write(df, table)
+      override def writeChunk(df: DataFrame, table: String, firstChunk: Boolean): Unit = {
+        parquet.writeChunk(df, table, firstChunk)
+        chunks += 1
+        if (chunks == 3) throw new RuntimeException("simulated crash before the checkpoint")
+      }
+    }
+    def engine(sink: TableSink) = new TransferEngine(new ParquetSource(sfDir), sink,
+      Some(new CheckpointManager(s"$out/ckpt.json", "sf", "pq")),
+      chunkColumns = Map("orders" -> "o_orderkey"), chunkCount = 5)
+    assert(!engine(new DiesAfterLanding).transferTable(spark, "orders").success)
+    assert(new CheckpointManager(s"$out/ckpt.json", "sf", "pq").resumeOffset("orders") == 2)
+    assert(engine(parquet).transferTable(spark, "orders").success)
+
+    val source = spark.read.parquet(s"$sfDir/orders.parquet")
+    val keys = source.select("o_orderkey").collect().map(_.getLong(0))
+    val (lo, hi) = (keys.min, keys.max)
+    val width = (hi - lo + 1 + 4) / 5
+    val chunk3 = keys.filter(k => k >= lo + 2 * width && k < lo + 3 * width).toSet
+    val landed = spark.read.parquet(s"$out/orders.parquet")
+    assert(landed.count() == keys.length + chunk3.size)
+    val twice = landed.groupBy("o_orderkey").count().filter(col("count") > 1)
+      .select("o_orderkey").collect().map(_.getLong(0)).toSet
+    assert(twice == chunk3, "the rerun must duplicate chunk 3's rows and no others")
   }
 
   test("crash mid-table, rerun transfers only the remaining chunks") {

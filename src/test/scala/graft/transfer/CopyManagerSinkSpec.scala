@@ -124,4 +124,19 @@ class CopyManagerSinkSpec extends SparkSpec {
     val expectedSql = """COPY "region" ("r_regionkey", "r_name") FROM STDIN WITH CSV NULL '\N'"""
     assert(RecordingCopy.calls.asScala.forall(_.sql === expectedSql))
   }
+
+  test("CsvLinesReader yields each line plus its newline at any read size") {
+    val lines = Seq("", "a", "bc,\"d\"", "", "héllo ✓", "x" * 40)
+    val want = lines.map(_ + "\n").mkString
+    for (size <- Seq(1, 2, 3, 7, 64)) {
+      val r = new CsvLinesReader(lines.iterator)
+      val sb = new StringBuilder
+      val buf = new Array[Char](size)
+      var n = r.read(buf, 0, size)
+      while (n >= 0) { assert(n > 0); sb.appendAll(buf, 0, n); n = r.read(buf, 0, size) }
+      assert(sb.toString === want, s"read size $size")
+      assert(r.read(buf, 0, size) === -1)
+    }
+    assert(new CsvLinesReader(Iterator.empty).read(new Array[Char](4), 0, 4) === -1)
+  }
 }

@@ -99,11 +99,20 @@ class CsvBulkSpec extends SparkSpec {
     val cp = new CheckpointManager(s"$dir/ckpt.json", "sf", "csv")
     val engine = new TransferEngine(new ParquetSource(sfDir), new CsvBulkSink(dir),
       Some(cp), chunkColumns = Map("orders" -> "o_orderkey"), chunkCount = 4)
-    val stats = engine.transferTable(spark, "orders")
+    val group = "csv-chunked-jobs"
+    spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
+    val stats = try engine.transferTable(spark, "orders") finally spark.sparkContext.clearJobGroup()
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     assert(stats.success)
     val total = spark.read.parquet(s"$sfDir/orders.parquet").count()
     assert(stats.rowsTransferred === total, "chunked CSV lost rows (overwrite per chunk?)")
     assert(spark.read.text(s"$dir/orders.csv").count() === total)
+    // the staged chunks reach the formatter as they are: one job reads the
+    // source's schema, two find the key bounds, one stages the chunks and
+    // each chunk is one write. A chunk frame reporting Spark's unknown-size
+    // default would clear the sink's size gate and send every chunk
+    // through a second exchange, one more job each.
+    assert(jobs === 1 + 2 + 1 + 4, s"$jobs jobs")
   }
 
   test("CsvBulkSink writes COPY-ready shards through the transfer engine") {

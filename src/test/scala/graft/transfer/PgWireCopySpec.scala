@@ -345,6 +345,18 @@ class PgWireCopySpec extends AnyFunSuite {
     }
   }
 
+  test("unpaired surrogates reach the server as '?', the bytes String.getBytes makes") {
+    withBackend("trust") { (be, factory) =>
+      // a lone low surrogate mid-stream, a reversed pair, and a lone high
+      // surrogate as the very last char (held back, then sent at EOF)
+      val payload = "a\uDC00b,\uDE00\uD83D\n" + ("x" * (64 * 1024)) + "\uD83D"
+      val s = factory.open()
+      try s.copyIn("COPY t FROM STDIN WITH CSV NULL '\\N'", new java.io.StringReader(payload))
+      finally s.close()
+      assert(be.copyBytes.toSeq === payload.getBytes(UTF_8).toSeq)
+    }
+  }
+
   test("server error on the COPY statement surfaces severity+sqlstate and leaves the session usable") {
     withBackend("trust") { (be, factory) =>
       val s = factory.open()
