@@ -13,23 +13,35 @@ import graft.Json
   *
   * {{{
   * {"schema": "...", "target": "...",
-  *  "completed": ["t1", ...], "in_progress": {"t2": 12345}}
+  *  "completed": ["t1", ...], "in_progress": {"t2": 12345},
+  *  "partial": {"t2": {"partitions": 3, "committed": [0, 2]}}}
   * }}}
+  *
+  * `partial` is this engine's addition: the partitions of a chunked
+  * table's next chunk that committed before the chunk as a whole failed
+  * (see [[PartialWrite]]).
   */
 final class CheckpointManager(path: String, schema: String, target: String) {
 
   private val file: Path = Paths.get(path)
   private val completed = mutable.LinkedHashSet[String]()
   private val inProgress = mutable.LinkedHashMap[String, Long]()
+  private val partial = mutable.LinkedHashMap[String, (Int, Set[Int])]()
 
   load()
 
   def isCompleted(table: String): Boolean = synchronized(completed.contains(table))
   def resumeOffset(table: String): Long = synchronized(inProgress.getOrElse(table, 0L))
 
+  /** The partitions of `table`'s next pending chunk that already committed,
+    * with the number of partitions that chunk was staged over. */
+  def committedPartitions(table: String): Option[(Int, Set[Int])] =
+    synchronized(partial.get(table))
+
   def markCompleted(table: String): Unit = synchronized {
     completed += table
     inProgress.remove(table)
+    partial.remove(table)
     save()
   }
 
@@ -39,11 +51,20 @@ final class CheckpointManager(path: String, schema: String, target: String) {
     * (see TransferEngine.transferChunked). */
   def updateProgress(table: String, progress: Long): Unit = synchronized {
     inProgress(table) = progress
+    partial.remove(table)
+    save()
+  }
+
+  /** Record the partitions of `table`'s next chunk that committed, out of
+    * the `partitions` it is staged over; cleared by the chunk's own
+    * [[updateProgress]]. */
+  def updatePartitions(table: String, partitions: Int, committed: Set[Int]): Unit = synchronized {
+    partial(table) = (partitions, committed)
     save()
   }
 
   def reset(): Unit = synchronized {
-    completed.clear(); inProgress.clear()
+    completed.clear(); inProgress.clear(); partial.clear()
     Files.deleteIfExists(file)
   }
 
@@ -53,6 +74,10 @@ final class CheckpointManager(path: String, schema: String, target: String) {
       completed ++= root.path("completed").asScala.map(_.asText)
       inProgress ++= root.path("in_progress").properties().asScala
         .map(e => e.getKey -> e.getValue.asLong)
+      partial ++= root.path("partial").properties().asScala.map { e =>
+        e.getKey -> (e.getValue.path("partitions").asInt,
+          e.getValue.path("committed").asScala.map(_.asInt).toSet)
+      }
     }
 
   /** Atomic write: tmp file + rename (checkpoint.py:41-54). */
@@ -62,6 +87,13 @@ final class CheckpointManager(path: String, schema: String, target: String) {
     completed.foreach(t => done.add(t))
     val progress = root.putObject("in_progress")
     inProgress.foreach { case (k, v) => progress.put(k, v) }
+    if (partial.nonEmpty) {
+      val parts = root.putObject("partial")
+      partial.foreach { case (k, (n, done)) =>
+        val ids = parts.putObject(k).put("partitions", n).putArray("committed")
+        done.toSeq.sorted.foreach(i => ids.add(i))
+      }
+    }
     val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")
     if (file.getParent != null) Files.createDirectories(file.getParent)
     Files.write(tmp, Json.mapper.writeValueAsBytes(root))

@@ -1,6 +1,10 @@
 package graft.transfer
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskKilledException
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** One COPY stream for one executor partition — the exact call shape of
   * pgjdbc's `org.postgresql.copy.CopyManager.copyIn(String, java.io.Reader)`
@@ -130,10 +134,16 @@ final class CsvLinesReader(lines: Iterator[String]) extends java.io.Reader {
   * Field formatting is the same codegen'd [[CsvBulk.csvLine]] the CSV file
   * sink uses, so the `\N`/quoting discipline is proven once and shared.
   *
-  * Row accounting sums `copyIn`'s per-partition return through an
-  * accumulator — the count the DATABASE acknowledged, not the count Spark
-  * sent (at-least-once on task retry, same window as the reference's
-  * commit-then-checkpoint ordering).
+  * Row accounting sums `copyIn`'s per-partition return — the count the
+  * DATABASE acknowledged, not the count Spark sent.
+  *
+  * Each partition's COPY is its own transaction, so a frame can land in
+  * part. A failed COPY is reported as that partition's result rather than
+  * failing its task: a failed job would cancel the sibling streams, and
+  * the driver could not tell which of them had committed. After the job,
+  * any failure surfaces as a [[PartialWrite]] naming the partitions that
+  * committed, which a chunked transfer records so its rerun sends only the
+  * rest. Spark does not retry a failed COPY; the checkpointed rerun does.
   */
 final class CopyManagerSink(factory: CopySessionFactory) extends TableSink {
 
@@ -162,15 +172,24 @@ final class CopyManagerSink(factory: CopySessionFactory) extends TableSink {
     CsvBulk.requireCopyCompatible(df, table, "CopyManagerSink")
     val sql = copySql(table, df.columns.toSeq)
     val f = factory // local vals only in the closure — the sink itself never ships
-    val acc = df.sparkSession.sparkContext.longAccumulator(s"copy_rows_$table")
-    df.select(CsvBulk.csvLine(df)).foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) { // empty partitions never open a connection
+    val lines = df.select(CsvBulk.csvLine(df)).queryExecution.toRdd
+    val results = df.sparkSession.sparkContext.runJob(lines, (it: Iterator[InternalRow]) =>
+      if (!it.hasNext) Right(0L) // empty partitions never open a connection
+      else try {
         val session = f.open()
-        try acc.add(session.copyIn(sql, new CsvLinesReader(it.map(_.getString(0)))))
-        finally session.close()
-      }
-    }
-    acc.value
+        // the rows are committed once copyIn returns; a failing close cannot undo that
+        val rows = try session.copyIn(sql, new CsvLinesReader(it.map(_.getUTF8String(0).toString)))
+          finally scala.util.Try(session.close())
+        Right(rows)
+      } catch {
+        case e: TaskKilledException => throw e
+        case NonFatal(e) => Left(e.toString)
+      })
+    val failed = results.indices.filter(results(_).isLeft)
+    if (failed.nonEmpty) throw new PartialWrite(results.indices.filterNot(failed.contains).toSet,
+      new java.io.IOException(s"COPY into $table failed in partition(s) " +
+        s"${failed.mkString(", ")}: ${results(failed.head).swap.getOrElse("")}"))
+    results.map(_.getOrElse(0L)).sum
   }
 
   override def countRows(spark: SparkSession, table: String): Option[Long] =

@@ -34,7 +34,9 @@ trait TableSink {
   /** Append one committed chunk of a chunked transfer (`firstChunk` marks a
     * fresh start — overwrite-capable sinks clear leftovers from a dead
     * uncheckpointed run there). Default: plain write (append-mode sinks
-    * like JDBC need no distinction). */
+    * like JDBC need no distinction). A sink that commits each partition of
+    * `df` on its own throws [[PartialWrite]] when only some of them
+    * landed. */
   def writeChunk(df: DataFrame, table: String, firstChunk: Boolean): Unit =
     write(df, table)
 
@@ -52,6 +54,14 @@ trait TableSink {
     * footer metadata; a JDBC count is one aggregate query). */
   def countRows(spark: SparkSession, table: String): Option[Long] = None
 }
+
+/** A write that failed after some partitions of its frame committed, each
+  * in its own transaction. The `committed` partitions have landed and stay;
+  * every other partition left nothing behind. The indexes are into the
+  * partitions of the frame the caller passed in, so a sink that
+  * repartitions before writing may not pass an inner sink's indexes on. */
+final class PartialWrite(val committed: Set[Int], cause: Throwable)
+  extends RuntimeException(cause.getMessage, cause)
 
 final class ParquetSource(dir: String) extends TableSource {
   def read(spark: SparkSession, table: String): DataFrame =
@@ -280,8 +290,13 @@ final class JdbcSink(
   * would silently fall outside every chunk's range. A crash between a
   * chunk's commit and its checkpoint write re-appends that one chunk
   * (at-least-once, same window as the reference's commit-then-callback
-  * ordering); so does a chunk that failed after some of its partitions
-  * committed.
+  * ordering). A sink that commits each partition of a chunk on its own
+  * ([[CopyManagerSink]]: one COPY transaction per partition) reports the
+  * partitions that landed when the chunk fails part-way ([[PartialWrite]]);
+  * the checkpoint records them with the chunk's partition count, and the
+  * rerun stages over that count and sends only the other partitions.
+  * [[JdbcSink]] also commits per partition but cannot say which landed, so
+  * a chunk it fails part-way re-appends the partitions that had committed.
   *
   * The source of a chunked table is read once per run, not once per chunk:
   * [[StagedChunks]] scans the pending key range and shuffles it by chunk,
@@ -393,12 +408,23 @@ final class TransferEngine(
     val recorded = math.max(0L, cp.resumeOffset(table))
     val doneChunks = if (recorded > totalChunks) 0L else recorded
     val pending = (totalChunks - doneChunks).toInt
+    // partitions of the first pending chunk that landed before it failed;
+    // the rerun stages over the same partition count and skips them
+    val landed = cp.committedPartitions(table).filter(_ => doneChunks == recorded)
     if (pending > 0) {
       val staged = StagedChunks(df, keyCol,
-        (BigInt(lo) + BigInt(doneChunks) * width).toLong, hi, width, pending)
+        (BigInt(lo) + BigInt(doneChunks) * width).toLong, hi, width, pending, landed.map(_._1))
       try (0 until pending).foreach { i =>
         val chunkNo = doneChunks + i
-        sink.writeChunk(staged.chunk(i), table, firstChunk = chunkNo == 0)
+        val skip = landed.filter(_ => i == 0).fold(Set.empty[Int])(_._2)
+        val parts = (0 until staged.partitions).filterNot(skip)
+        try sink.writeChunk(staged.chunk(i, parts), table, firstChunk = chunkNo == 0 && skip.isEmpty)
+        catch {
+          case e: PartialWrite =>
+            if (e.committed.nonEmpty)
+              cp.updatePartitions(table, staged.partitions, skip ++ e.committed.map(parts))
+            throw e
+        }
         cp.updateProgress(table, chunkNo + 1) // commit progress AFTER the chunk lands
       } finally staged.release()
     }
@@ -431,16 +457,17 @@ final class TransferEngine(
 /** The pending key range `[base, hi]` of a chunked transfer, read from the
   * source once and staged by chunk in one shuffle. Pending chunk `i` holds
   * the keys in `[base + i·width, base + (i+1)·width)` (the last one runs
-  * through `hi`) and owns shuffle partitions `[i·p, (i+1)·p)`, where `p` is
-  * the number of partitions Spark plans for the source scan (at least 1).
+  * through `hi`) and owns shuffle partitions `[i·p, (i+1)·p)`, where `p`
+  * ([[partitions]]) is the number of partitions Spark plans for the source
+  * scan (at least 1), or the count a partly landed chunk was staged over.
   * Inside its chunk a row's partition is its key's hash mod `p`, so rows
-  * sharing a key stay together.
+  * sharing a key stay together and a rerun over the same `p` puts every
+  * row back in the same partition.
   *
-  * The chunk index is integral arithmetic on the raw key: `(key - base)
-  * div width` in longs while the span fits, in `decimal(38,0)` past that.
-  * A decimal `/` would round the quotient to scale 6 and could move a key
-  * just below a chunk's upper edge into the next chunk, past a checkpoint
-  * that a resume trusts.
+  * A row's chunk is found by comparing its raw key with the pending
+  * chunks' lower edges, computed exactly on the driver: no division, so
+  * no rounding can move a key just below an edge into the next chunk,
+  * past a checkpoint that a resume trusts.
   *
   * Building the staged plan's RDD runs the shuffle's map stage (Spark's
   * adaptive execution materializes it there); every [[chunk]] job after it
@@ -451,16 +478,18 @@ private[transfer] final class StagedChunks private (
     spark: SparkSession,
     rows: RDD[InternalRow],
     schema: StructType,
-    p: Int,
+    val partitions: Int,
     chunkBytes: BigInt) {
 
-  /** Pending chunk `i` as a frame over its own `p` staged partitions. Its
-    * size estimate is the source's, split evenly over the pending chunks,
-    * so a size-gated sink (`CsvBulkSink`'s fan-out) sees a chunk, not
-    * Spark's unknown-size default. */
-  def chunk(i: Int): DataFrame = {
-    val q = p // a local, so the partition filter never closes over this staging
-    PlanBridge.ofRdd(spark, PartitionPruningRDD.create(rows, _ / q == i), schema, chunkBytes)
+  /** Pending chunk `i` as a frame over the staged partitions `parts` of
+    * that chunk (each in `[0, partitions)`, ascending). Its size estimate is
+    * the source's, split evenly over the pending chunks, so a size-gated
+    * sink (`CsvBulkSink`'s fan-out) sees a chunk, not Spark's unknown-size
+    * default. */
+  def chunk(i: Int, parts: Seq[Int]): DataFrame = {
+    val (q, keep) = (partitions, parts.toSet) // locals, so the filter never closes over this staging
+    PlanBridge.ofRdd(spark,
+      PartitionPruningRDD.create(rows, s => s / q == i && keep(s % q)), schema, chunkBytes)
   }
 
   /** Drop the staged shuffle output once the chunks have landed (or failed). */
@@ -471,24 +500,20 @@ private[transfer] object StagedChunks {
   private val ChunkPartition = "__graft_chunk_partition"
 
   def apply(df: DataFrame, keyCol: String, base: Long, hi: Long, width: BigInt,
-            pending: Int): StagedChunks = {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
+            pending: Int, partitions: Option[Int]): StagedChunks = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod, when}
     val key = col(keyCol)
     val src = df.filter(key >= base && key <= hi)
-    val p = math.max(1, src.queryExecution.toRdd.getNumPartitions)
+    val p = partitions.getOrElse(math.max(1, src.queryExecution.toRdd.getNumPartitions))
     require(pending.toLong * p <= Int.MaxValue,
       s"$pending chunks x $p partitions exceed the shuffle's partition range")
-    val (offset, w) =
-      if ((BigInt(hi) - base).isValidLong && width.isValidLong)
-        (key.cast(LongType) - base, lit(width.toLong))
-      else (key.cast(DecimalType(38, 0)) - lit(new java.math.BigDecimal(base)),
-        lit(new java.math.BigDecimal(width.bigInteger)))
-    val index = ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-      ColumnBridge.expression(offset), ColumnBridge.expression(w)))
-    val partition = (index * p + pmod(hash(key), lit(p))).cast(IntegerType)
-    val staged = src.withColumn(ChunkPartition, partition)
+    // pending chunk i's lower edge; each lies in [base, hi], so in Long range
+    def edge(i: Int) = (BigInt(base) + width * i).toLong
+    val index =
+      if (pending == 1) lit(0)
+      else (2 until pending).foldLeft(when(key < edge(1), 0))((c, i) => c.when(key < edge(i), i - 1))
+        .otherwise(pending - 1)
+    val staged = src.withColumn(ChunkPartition, index * p + pmod(hash(key), lit(p)))
       .repartitionById(pending * p, col(ChunkPartition)).drop(ChunkPartition)
     val rows = staged.queryExecution.toRdd
     require(rows.getNumPartitions == pending * p,

@@ -12,6 +12,30 @@ import org.scalacheck.Test.{check, Parameters}
 
 import graft.SparkSpec
 
+/** COPY sessions whose committed lines land in one shared queue, the
+  * stand-in for a target table (local mode: executors share the test JVM).
+  * A session in the frame's partition `failPartition` reads some of its
+  * stream and then fails, committing nothing. */
+object LandedCopy {
+  val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  final class Factory(failPartition: Int = -1) extends CopySessionFactory {
+    def open(): CopySession = new CopySession {
+      def copyIn(sql: String, from: java.io.Reader): Long = {
+        val text = new java.io.BufferedReader(from)
+        if (org.apache.spark.TaskContext.getPartitionId() == failPartition) {
+          text.readLine()
+          throw new java.io.IOException("connection reset mid-COPY")
+        }
+        val got = Iterator.continually(text.readLine()).takeWhile(_ != null).toVector
+        got.foreach(l => lines.add(l))
+        got.size.toLong
+      }
+      def close(): Unit = ()
+    }
+  }
+}
+
 /** Mid-table resume (checkpoint.py:60-74 + data_transfer.py:300-323): a
   * transfer killed mid-table must restart from its last committed chunk,
   * not from zero — exercising the `in_progress` half of the checkpoint
@@ -229,6 +253,47 @@ class ChunkedResumeSpec extends SparkSpec {
     val twice = landed.groupBy("o_orderkey").count().filter(col("count") > 1)
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
     assert(twice == chunk3, "the rerun must duplicate chunk 3's rows and no others")
+  }
+
+  test("a chunk that lands in part resends only the partitions that did not commit") {
+    // three files, so each chunk is staged over three partitions, each its
+    // own COPY transaction
+    val src = Files.createTempDirectory("partcopy_src").toString
+    spark.range(0, 3000).selectExpr("id AS k", "id % 7 AS v").repartition(3)
+      .write.parquet(s"$src/partcopy.parquet")
+    val p = spark.read.parquet(s"$src/partcopy.parquet").queryExecution.toRdd.getNumPartitions
+    assert(p > 1, s"the source plans $p partitions")
+    val ckpt = s"${Files.createTempDirectory("partcopy")}/ckpt.json"
+    def engine(sink: TableSink) = new TransferEngine(new ParquetSource(src), sink,
+      Some(new CheckpointManager(ckpt, "sf", "pg")),
+      chunkColumns = Map("partcopy" -> "k"), chunkCount = 5)
+    LandedCopy.lines.clear()
+    // chunk 3 of 5 fails in its first partition
+    val failing = new TableSink {
+      private var chunks = 0
+      private val ok = new CopyManagerSink(new LandedCopy.Factory)
+      private val lost = new CopyManagerSink(new LandedCopy.Factory(failPartition = 0))
+      def write(df: DataFrame, table: String): Unit = ok.write(df, table)
+      override def writeChunk(df: DataFrame, table: String, firstChunk: Boolean): Unit = {
+        chunks += 1
+        (if (chunks == 3) lost else ok).writeChunk(df, table, firstChunk)
+      }
+    }
+    val s1 = engine(failing).transferTable(spark, "partcopy")
+    assert(!s1.success && s1.errorMessage.exists(_.contains("connection reset")), s1.errorMessage)
+    val cp = new CheckpointManager(ckpt, "sf", "pg")
+    assert(cp.resumeOffset("partcopy") == 2)
+    assert(cp.committedPartitions("partcopy") == Some((p, (1 until p).toSet)))
+    def keys = LandedCopy.lines.toArray(Array.empty[String]).map(_.takeWhile(_ != ',').toLong)
+    val chunk3 = keys.count(k => k >= 1200 && k < 1800) // width 600
+    assert(keys.count(_ < 1200) == 1200 && chunk3 > 0 && chunk3 < 600, s"$chunk3 rows of chunk 3")
+
+    val s2 = engine(new CopyManagerSink(new LandedCopy.Factory)).transferTable(spark, "partcopy")
+    assert(s2.success, s2.errorMessage)
+    val all = keys
+    assert(all.length == 3000 && all.toSet == (0L until 3000L).toSet,
+      s"every row must land exactly once: ${all.length} rows, ${all.distinct.length} keys")
+    assert(new CheckpointManager(ckpt, "sf", "pg").committedPartitions("partcopy").isEmpty)
   }
 
   test("crash mid-table, rerun transfers only the remaining chunks") {

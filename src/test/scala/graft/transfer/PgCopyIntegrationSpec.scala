@@ -8,13 +8,17 @@ import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
 
-/** A COPY session whose connection drops after `lines` CSV lines. The
-  * session reads at most 64 chars at a time, so CopyData frames reach the
-  * server before the drop. Serializable: it ships to the executors. */
-final class DroppingCopyFactory(inner: CopySessionFactory, lines: Int) extends CopySessionFactory {
+/** A COPY session whose connection drops after `lines` CSV lines, in the
+  * frame's partition `partition` only; the other partitions' sessions are
+  * `inner`'s own. The session reads at most 64 chars at a time, so
+  * CopyData frames reach the server before the drop. Serializable: it
+  * ships to the executors. */
+final class DroppingCopyFactory(inner: CopySessionFactory, lines: Int, partition: Int)
+  extends CopySessionFactory {
   def open(): CopySession = {
     val session = inner.open()
-    new CopySession {
+    if (org.apache.spark.TaskContext.getPartitionId() != partition) session
+    else new CopySession {
       def copyIn(sql: String, from: java.io.Reader): Long = session.copyIn(sql, new java.io.Reader {
         private var seen = 0
         def read(cbuf: Array[Char], off: Int, len: Int): Int = {
@@ -238,20 +242,24 @@ class PgCopyIntegrationSpec extends SparkSpec {
     assume(pgAvailable, "PostgreSQL server binaries not present")
     psql("DROP TABLE IF EXISTS faultcopy"); psql("CREATE TABLE faultcopy (k bigint, v text)")
     val src = Files.createTempDirectory("graft_pg_fault").toString
-    // one file, so each chunk is one COPY stream
-    spark.range(0, 1000).selectExpr("id AS k", "concat('v', id) AS v").coalesce(1)
+    // three files, so each chunk is staged over three partitions: three
+    // COPY transactions, of which the dropped one alone rolls back
+    spark.range(0, 3000).selectExpr("id AS k", "concat('v', id) AS v").repartition(3)
       .write.parquet(s"$src/faultcopy.parquet")
+    val p = spark.read.parquet(s"$src/faultcopy.parquet").queryExecution.toRdd.getNumPartitions
+    assert(p > 1, s"the source plans $p partitions")
     val wire = new PgWireCopySessionFactory(sockDir.getAbsolutePath, pgPort, "postgres", "postgres")
     val ckpt = s"$src/ckpt.json"
     def engine(sink: TableSink) = new TransferEngine(new ParquetSource(src), sink,
       Some(new CheckpointManager(ckpt, "sf", "pg")),
       chunkColumns = Map("faultcopy" -> "k"), chunkCount = 5)
 
-    /** Chunk 3 of 5 goes through a connection that drops after 50 lines. */
+    /** Chunk 3 of 5 goes through a connection that drops after 50 lines
+      * in the chunk's first partition. */
     val dropping = new TableSink {
       private var chunks = 0
       private val ok = new CopyManagerSink(wire)
-      private val lost = new CopyManagerSink(new DroppingCopyFactory(wire, lines = 50))
+      private val lost = new CopyManagerSink(new DroppingCopyFactory(wire, lines = 50, partition = 0))
       def write(df: DataFrame, table: String): Unit = ok.write(df, table)
       override def writeChunk(df: DataFrame, table: String, firstChunk: Boolean): Unit = {
         chunks += 1
@@ -259,13 +267,18 @@ class PgCopyIntegrationSpec extends SparkSpec {
       }
     }
     assert(!engine(dropping).transferTable(spark, "faultcopy").success)
-    assert(new CheckpointManager(ckpt, "sf", "pg").resumeOffset("faultcopy") === 2)
-    // chunks 1-2 (keys 0-399, width 200) are in; the dropped COPY rolled back
-    assert(psql("SELECT count(*), max(k) FROM faultcopy").trim === "400|399")
+    val cp = new CheckpointManager(ckpt, "sf", "pg")
+    assert(cp.resumeOffset("faultcopy") === 2)
+    assert(cp.committedPartitions("faultcopy") === Some((p, (1 until p).toSet)))
+    // chunks 1-2 (keys 0-1199, width 600) are in, and so are chunk 3's
+    // other partitions; the dropped COPY rolled back
+    val Array(landed, below) = psql(
+      "SELECT count(*), count(*) FILTER (WHERE k < 1200) FROM faultcopy").trim.split('|').map(_.toInt)
+    assert(below === 1200 && landed > 1200 && landed < 1800, s"$landed rows landed")
 
     val rerun = engine(new CopyManagerSink(wire)).transferTable(spark, "faultcopy")
     assert(rerun.success, rerun.errorMessage)
-    assert(psql("SELECT count(*), count(DISTINCT k) FROM faultcopy").trim === "1000|1000")
+    assert(psql("SELECT count(*), count(DISTINCT k) FROM faultcopy").trim === "3000|3000")
     org.apache.commons.io.FileUtils.deleteQuietly(new File(src))
   }
 
