@@ -598,18 +598,13 @@ object Main {
               spark.read.parquet(manifestPath).schema("mins").dataType
                 .asInstanceOf[org.apache.spark.sql.types.StructType]
                 .fields.head.name)
-            val pred =
-              Seq(Some(col("table") === table),
-                  // string CLI bounds coerce to the zone map's native type
-                  opts.get("min-key").map(v => // file range OVERLAPS [lo, hi]
-                    col(s"maxs.`$k`") >= v || col(s"maxs.`$k`").isNull),
-                  opts.get("max-key").map(v =>
-                    col(s"mins.`$k`") <= v || col(s"mins.`$k`").isNull))
-                .flatten.reduce(_ && _)
-            // one retried pass for BOTH counts: a rewrite landing between
-            // two separate reads could fail the second (round-13 review)
-            val (rows, files) =
-              graft.sources.Manifest.sliceStats(spark, manifestPath, pred)
+            // the bounds are a row predicate on the key (string CLI values
+            // coerce to its native type), classified as the SQL rules do
+            val pred = Seq(opts.get("min-key").map(col(s"`$k`") >= _),
+                opts.get("max-key").map(col(s"`$k`") <= _)).flatten
+              .reduceOption(_ && _).getOrElse(org.apache.spark.sql.functions.lit(true))
+            val graft.sources.Manifest.Slice(rows, files) =
+              graft.sources.Manifest.slice(spark, manifestPath, table, pred)
             out(s"$table: $rows rows across $files files (from stats, no data files opened)")
           }
           0
@@ -1060,7 +1055,8 @@ object Main {
       |               and any unfillable files)
       |              or stats mode: [--min-key V] [--max-key V]  (row/file
       |               counts for a key range answered from the manifest
-      |               alone — no data files opened)
+      |               alone — no data files opened; the bounds classify
+      |               files as the SQL manifest rules do)
       |              (update/compact serialize on a fenced __commitlock
       |               claim — UUID tokens, a content-rewrite heartbeat that
       |               refreshes the lock on every store incl. S3A-class

@@ -822,11 +822,12 @@ object CoreQueries {
           max(col("maxs.o_orderdate")).cast("string").as("last_date"))
     },
 
-    // Manifest-pruned READ (round-11): write the manifest, prune it by a
-    // key range, open only the surviving files, re-apply the row-level
-    // predicate (file zone maps are coarser than rows), aggregate. The
-    // oracle recomputes from the raw table, so both the pruning and the
-    // re-filter must be exactly lossless to hash-match.
+    // Manifest-pruned READ (round-11): a manifest-backed read filtered by a
+    // key range — ManifestPruneRule opens only the files whose zone maps
+    // overlap it, and the Filter re-applies at row level (file zone maps
+    // are coarser than rows). The oracle recomputes from the raw table, so
+    // both the pruning and the re-filter must be exactly lossless to
+    // hash-match.
     "q191_manifest_pruned_read" -> { (s, dir) =>
       // per-process + per-fixture path: two concurrent harness sessions on
       // one host must not race overwrite-vs-read on a shared constant
@@ -838,11 +839,8 @@ object CoreQueries {
         graft.sources.Manifest.write(
           graft.sources.Manifest.build(s, dir, "orders", "o_orderdate"), mp)
       }
-      val pred = col("table") === "orders" &&
-        graft.sources.Manifest.overlaps("o_orderdate", "1995-01-01", "1995-12-31")
-      graft.sources.Manifest.read(s, mp, pred,
-          keyFilter = Some(col("o_orderdate")
-            .between("1995-01-01", "1995-12-31")))
+      graft.sources.ManifestSql.readTable(s, dir, "orders", mp)
+        .filter(col("o_orderdate").between("1995-01-01", "1995-12-31"))
         .agg(
           count(lit(1)).as("n_rows"),
           sum(col("o_totalprice")).cast("decimal(18,2)").cast("string")
@@ -866,13 +864,9 @@ object CoreQueries {
           graft.sources.Manifest.build(s, dir, "orders",
             Seq("o_orderdate", "o_custkey")), mp)
       }
-      val pred = col("table") === "orders" &&
-        graft.sources.Manifest.overlaps("o_orderdate", "1995-01-01", "1996-12-31") &&
-        graft.sources.Manifest.overlaps("o_custkey", 10L, 500L)
-      graft.sources.Manifest.read(s, mp, pred,
-          keyFilter = Some(
-            col("o_orderdate").between("1995-01-01", "1996-12-31") &&
-              col("o_custkey").between(10L, 500L)))
+      graft.sources.ManifestSql.readTable(s, dir, "orders", mp)
+        .filter(col("o_orderdate").between("1995-01-01", "1996-12-31") &&
+          col("o_custkey").between(10L, 500L))
         .agg(
           count(lit(1)).as("n_rows"),
           sum(col("o_totalprice")).cast("decimal(18,2)").cast("string")
@@ -880,8 +874,8 @@ object CoreQueries {
     },
 
     // SQL-surface manifest pruning (round-12, sources.ManifestSql): the
-    // same pruned read as q192, but driven ENTIRELY through spark.sql over
-    // a registered manifest-backed view — the optimizer rule extracts the
+    // same pruned read as q192, but driven through spark.sql over a
+    // registered manifest-backed view — the optimizer rule extracts the
     // WHERE bounds, consults the manifest, and swaps in the surviving file
     // set (ManifestSqlSpec pins the file count; this oracle pins that the
     // rewrite is lossless cross-engine).

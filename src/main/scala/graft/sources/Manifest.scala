@@ -19,6 +19,8 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, LikeSimplification, ReplaceExpressions, RewriteWithExpression}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
@@ -64,8 +66,9 @@ import org.apache.spark.storage.StorageLevel
   * catalog (`discovery.py:200-248`) — a database does this bookkeeping for
   * it, kept current by every write. On a data lake the manifest IS that
   * catalog, [[update]]-on-write is the analog of the database keeping it
-  * current, and [[rowCount]] is the row-count scan: answered from stats,
-  * zero data files touched.
+  * current, and [[slice]] is the row-count scan: answered from stats,
+  * zero data files touched, through the same [[Coverage.compile]]
+  * classifier the SQL rules prune with.
   */
 object Manifest {
 
@@ -278,8 +281,8 @@ object Manifest {
     *
     * A key column whose statistics any row group lacks (written by an
     * engine that drops long binary stats, or an unsupported physical type)
-    * gets NULL mins/maxs for that file — [[overlaps]] treats NULL as
-    * "unknown, keep", so pruning stays conservative instead of wrong. */
+    * gets NULL mins/maxs for that file — [[Coverage.compile]] treats NULL
+    * as "unknown, keep", so pruning stays conservative instead of wrong. */
   def fromFooters(spark: SparkSession, paths: Seq[String], table: String,
                   keyCols: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "fromFooters needs at least one path")
@@ -1423,9 +1426,9 @@ object Manifest {
     * `spark.read.parquet` re-lists, so the second attempt sees the renamed
     * directory. Anything that isn't a vanished-file shape rethrows
     * immediately. Writers stay single-writer by design (like compaction);
-    * this makes READERS race-free against that one writer — the property
-    * `ManifestPruneRule` already had by degrading, now matched by the
-    * Scala helpers without giving up their loud non-race failures. */
+    * this makes READERS race-free against that one writer: the rules and
+    * [[slice]] both read through it ([[ManifestStats.read]]), the rules
+    * degrading on other failures, [[slice]] keeping them loud. */
   private[sources] def withReadRetry[T](attempts: Int = 5,
                                         delayMs: Long = 100)(f: => T): T = {
     var last: Throwable = null
@@ -1700,60 +1703,6 @@ object Manifest {
       }
     }
 
-  /** Zone-map overlap predicate for `keyCol ∈ [lo, hi]` against the typed
-    * mins/maxs structs. NULL stats mean "range unknown" and must KEEP the
-    * file — missing footer stats may only cost performance, never rows. */
-  def overlaps(keyCol: String, lo: Any, hi: Any): Column =
-    atLeast(keyCol, lo) && atMost(keyCol, hi)
-
-  // ---- zone-bound Column builders for the Scala helper API ----
-  // The SQL rules classify files through `Coverage.compile`; these builders
-  // state the same bounds as manifest-DataFrame predicates for
-  // `select`/`rowCount`/`read`, and ManifestSpec's helper/SQL parity case
-  // pins the two to the same file sets.
-
-  /** File's range reaches up to `v` (or is unknown). */
-  private def atLeast(k: String, v: Any): Column =
-    col(s"maxs.`$k`") >= lit(v) || col(s"maxs.`$k`").isNull
-  /** File's range reaches down to `v` (or is unknown). */
-  private def atMost(k: String, v: Any): Column =
-    col(s"mins.`$k`") <= lit(v) || col(s"mins.`$k`").isNull
-
-  /** IN-list zone predicate: each member a point lookup, OR'd — a sparse
-    * list skips the files between its members. Past 64 members the OR
-    * tree's planning cost outgrows its skipping precision, so the bound
-    * falls back to the members' [min,max] envelope (UTF-8 order for
-    * strings, matching parquet stats). NULL members match no row under IN
-    * and drop out; a list with no non-null member matches nothing. */
-  def inList(keyCol: String, values: Seq[Any]): Column = {
-    val vs = values.filter(_ != null)
-    if (vs.isEmpty) lit(false)
-    else if (vs.sizeIs <= 64) vs.map(v => overlaps(keyCol, v, v)).reduce(_ || _)
-    else overlaps(keyCol, vs.reduce((x, y) => if (ordCompare(x, y) <= 0) x else y),
-      vs.reduce((x, y) => if (ordCompare(x, y) >= 0) x else y))
-  }
-
-  /** Zone predicate for `keyCol LIKE 'prefix%'`: every match sorts in
-    * `[prefix, prefixUpper(prefix))`, so files whose range misses that
-    * window are skipped. A prefix with no finite upper bound (all
-    * U+10FFFF) keeps the lower bound only. */
-  def likePrefix(keyCol: String, prefix: String): Column = {
-    require(prefix.nonEmpty, "likePrefix needs a non-empty prefix")
-    val lower = atLeast(keyCol, prefix)
-    prefixUpper(prefix).fold(lower)(hi => lower && atMost(keyCol, hi))
-  }
-
-  /** Files that may hold a NULL in `keyCol`: null count positive, or
-    * unknown (legacy manifests without the `nulls` struct must pass a
-    * literal-true instead). */
-  def keyIsNull(keyCol: String): Column =
-    col(s"nulls.`$keyCol`") > 0L || col(s"nulls.`$keyCol`").isNull
-
-  /** Files that may hold a non-NULL in `keyCol` — skips all-null files,
-    * the `IS NOT NULL` Spark inserts under every comparison. */
-  def keyIsNotNull(keyCol: String): Column =
-    col(s"nulls.`$keyCol`") < col("rows") || col(s"nulls.`$keyCol`").isNull
-
   /** Smallest string strictly above every `s`-prefixed string in UTF-8
     * (code point) order, when one exists: increment the last code point
     * that can be incremented, drop the rest. Works in CODE POINT space
@@ -1777,72 +1726,41 @@ object Manifest {
     }
   }
 
-  /** The pruned manifest slice for a predicate over (table, mins, maxs) —
-    * a DISTRIBUTED filter with parquet pushdown, the step that replaces
-    * driver-side listing. Returned as a DataFrame so callers can aggregate
-    * stats without touching data. */
-  def select(spark: SparkSession, manifestPath: String, pred: Column): DataFrame =
-    spark.read.parquet(manifestPath).filter(pred)
+  /** Row and file counts of one catalog slice. */
+  final case class Slice(rows: Long, files: Long)
 
-  /** Fast-fail probe so a manifest that never materialized surfaces
-    * immediately instead of burning [[withReadRetry]]'s ~1 s backoff
-    * re-planning a dead path (round-13 review). A path that vanishes
-    * right AFTER this probe is the genuine rewrite window, which the
-    * retry rides out. */
-  private def requireExists(spark: SparkSession, manifestPath: String): Unit = {
-    val p = new Path(manifestPath)
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      throw new java.io.FileNotFoundException(s"no manifest at $manifestPath")
-  }
-
-  /** Stats-only row count for a slice: answered entirely from the
-    * manifest (the INFORMATION_SCHEMA analog — zero data files opened).
-    * A slice no file overlaps is 0 rows, not an error (sum over zero
-    * rows is SQL NULL — coalesced here). Retries across a concurrent
-    * rewrite's delete→rename window. */
-  def rowCount(spark: SparkSession, manifestPath: String, pred: Column): Long = {
-    requireExists(spark, manifestPath)
-    withReadRetry() {
-      select(spark, manifestPath, pred)
-        .agg(coalesce(sum(col("rows")), lit(0L))).head.getLong(0)
+  /** The rows and files of `table` that an ordinary row predicate over
+    * its key columns may select — `col("k").between(lo, hi)`,
+    * `col("s").startsWith("ab")`, `col("k").isin(…)`, `col("k").isNull` —
+    * answered from the catalog alone, zero data files opened (the
+    * INFORMATION_SCHEMA analog). The predicate resolves against the
+    * catalog's key schema, constant-folds and splits into conjuncts; each
+    * conjunct compiles through [[Coverage.compile]], so a file counts
+    * exactly when [[ManifestPruneRule]] would keep it for the same WHERE.
+    * A conjunct the compiler cannot speak to keeps every file. Runs on the
+    * rules' stats executors, failing loudly where they decline: a missing
+    * manifest throws `FileNotFoundException`, a rewrite's swap window is
+    * retried ([[withReadRetry]]), and a maintenance commit landing during
+    * a distributed fold throws `ConcurrentModificationException`. Data
+    * reads go through [[ManifestSql.readTable]], where the same rule
+    * prunes them. */
+  def slice(spark: SparkSession, manifestPath: String, table: String,
+            pred: Column = lit(true)): Slice =
+    ManifestStats.read(spark, manifestPath, table) { src =>
+      val keys = catalogSchema(spark, manifestPath).getOrElse(
+        throw new java.io.FileNotFoundException(s"no manifest at $manifestPath"))("mins")
+        .dataType.asInstanceOf[StructType]
+      val Filter(cond, rel) = Seq(ReplaceExpressions, RewriteWithExpression,
+          ConstantFolding, LikeSimplification).foldLeft(
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), keys)
+          .filter(pred).queryExecution.analyzed)((p, rule) => rule(p))
+      val cover = Coverage.and(Coverage.conjuncts(cond, rel.outputSet, src.keyFields))
+      src.fold(("slice", cond.sql))(Slice(0L, 0L))(
+        (s, st) => if (cover(st) == CoverNone) s else Slice(s.rows + st.rows, s.files + 1),
+        (a, b) => Slice(a.rows + b.rows, a.files + b.files))
+        .getOrElse(throw new java.util.ConcurrentModificationException(
+          s"manifest at $manifestPath changed during the read"))
     }
-  }
-
-  /** Row AND file counts for a slice in one retried pass — the stats
-    * surface the CLI prints. Splitting this into rowCount + a separate
-    * `select().count()` left the second half exposed to the rewrite
-    * window the first half had just been hardened against (round-13
-    * review). */
-  def sliceStats(spark: SparkSession, manifestPath: String,
-                 pred: Column): (Long, Long) = {
-    requireExists(spark, manifestPath)
-    withReadRetry() {
-      val r = select(spark, manifestPath, pred)
-        .agg(coalesce(sum(col("rows")), lit(0L)), count(lit(1))).head
-      (r.getLong(0), r.getLong(1))
-    }
-  }
-
-  /** Read the data files surviving `pred`. Only the pruned path set is
-    * collected to the driver; the data read itself is an ordinary
-    * multi-path parquet scan. A key-range filter (`keyFilter`) should be
-    * re-applied on the data because file-level min/max pruning is
-    * necessarily coarser than row-level predicates. The MANIFEST side
-    * retries across a concurrent rewrite window; the data read does not
-    * need to (data directories are append/overwrite through Spark's
-    * committer, never delete+rename). */
-  def read(spark: SparkSession, manifestPath: String, pred: Column,
-           keyFilter: Option[Column] = None): DataFrame = {
-    requireExists(spark, manifestPath)
-    val paths = withReadRetry() {
-      select(spark, manifestPath, pred)
-        .select(col("path")).distinct()
-        .collect().map(_.getString(0))
-    }
-    require(paths.nonEmpty, "manifest pruning selected zero files")
-    val df = spark.read.parquet(paths.toIndexedSeq: _*)
-    keyFilter.fold(df)(df.filter)
-  }
 }
 
 /** Minimal serializable Hadoop-conf carrier for footer tasks — the stock

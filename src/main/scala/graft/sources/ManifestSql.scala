@@ -42,7 +42,8 @@ import scala.reflect.ClassTag
   * (round-12 advice): the manifest's path list would silently drop any
   * data file a stale manifest doesn't know about. A predicate no file
   * overlaps yields an empty-but-valid scan — correct relational
-  * semantics, unlike the Scala helper's loud zero-file error.
+  * semantics. Scala data reads are [[readTable]] plus `filter`, so this
+  * rule prunes them too.
   *
   * Reference scope: this is the SQL face of the data-lake catalog that
   * replaces the reference's always-current INFORMATION_SCHEMA
@@ -268,8 +269,7 @@ case class ManifestPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
   private def prune(manifestPath: String, table: String, cond: Expression,
                     rel: LogicalRelation): Option[Seq[(String, Option[Long])]] =
     ManifestStats.open(spark, manifestPath, table, "pruning") { src =>
-      val covers = splitConjunctivePredicates(cond)
-        .flatMap(Coverage.compile(_, rel.outputSet, src.keyFields)).map(_.cover)
+      val covers = Coverage.conjuncts(cond, rel.outputSet, src.keyFields)
       if (covers.isEmpty) None
       else src.survivors(cond.canonicalized)(Coverage.and(covers))
     }
@@ -589,9 +589,10 @@ private[sources] final case class KeyView(k: String, wrapper: Option[Expression]
 }
 
 /** THE zone-map coverage compiler: every manifest rule — prune, join
-  * prune, metadata aggregate and top-k — classifies files through
-  * [[compile]], on either [[StatsSource]] executor, so no two rules can
-  * disagree on what a conjunct means for a file. Values compare by
+  * prune, metadata aggregate and top-k — the Scala stats helper
+  * [[Manifest.slice]] and the CLI `manifest` stats mode classify files
+  * through [[compile]], on either [[StatsSource]] executor, so no two
+  * entry points can disagree on what a conjunct means for a file. Values compare by
   * [[Manifest.ordCompare]] (Spark's SQL order; UTF-8 for strings). NULL
   * stats are unknown and never exclude a file; a file whose key is all
   * NULL fails every comparison. */
@@ -612,6 +613,12 @@ private[sources] object Coverage extends PredicateHelper {
         (l, splitConjunctivePredicates(c) ++ fs) }
     case _ => None
   }
+
+  /** Classifiers of `cond`'s conjuncts that compile; a conjunct that
+    * does not compile drops out, keeping every file. */
+  def conjuncts(cond: Expression, relOut: AttributeSet,
+                keyFields: Map[String, String]): Seq[FStat => Cover] =
+    splitConjunctivePredicates(cond).flatMap(compile(_, relOut, keyFields)).map(_.cover)
 
   /** One file's coverage under the AND of `fns`. */
   def and(fns: Seq[FStat => Cover]): FStat => Cover = st => {
@@ -657,7 +664,7 @@ private[sources] object Coverage extends PredicateHelper {
 
   /** IN-list: each member a point lookup, OR'd — a sparse list skips the
     * files between its members. Past 64 members the bound falls back to
-    * the members' [min,max] envelope, as [[Manifest.inList]] does. NULL
+    * the members' [min,max] envelope. NULL
     * members match nothing; a list without a non-null member excludes
     * every file. */
   def inList(kv: KeyView, values: Seq[Any]): FStat => Cover = {
@@ -752,7 +759,7 @@ private[sources] object Coverage extends PredicateHelper {
       case IsNotNull(a) => nullTest(a, isNull = false)
       // k LIKE 'abc%': every match sorts in ['abc', prefixUpper('abc')) in
       // UTF-8 order, with the round-12 surrogate fencepost fix; the upper
-      // side stays inclusive like Manifest.likePrefix
+      // side stays inclusive
       case StartsWith(a, l: Literal) =>
         for (kv <- key(a); v <- ext(l); p = v.toString; if p.nonEmpty) yield
           Conjunct(and(bound(kv, lower = true, strict = false, p, provesAll = false) +:
@@ -867,25 +874,32 @@ private[sources] object ManifestStats extends org.apache.spark.internal.Logging 
   val MaxDriverPathsConf = "graft.manifest.statsMaxDriverPaths"
   val MaxDriverPathsDefault = 100000
 
-  /** Open `table`'s stats for one `rule` call and run `use` over them:
-    * None when the manifest is missing (fast, without burning the retry
-    * backoff); otherwise `use` runs inside [[Manifest.withReadRetry]]
-    * over the snapshot executor when the catalog is small, the
-    * distributed one past the cap. A catalog that cannot be read, or a
-    * rule that fails over it, is None too: the rule keeps the original
-    * plan — stale catalog state may only cost performance, never turn a
-    * valid query into a planning error. */
+  /** Run `use` over `table`'s stats: inside [[Manifest.withReadRetry]],
+    * on the snapshot executor when the catalog is small and the
+    * distributed one past the cap. A missing manifest throws
+    * `FileNotFoundException` at once, without burning the retry backoff;
+    * every other failure propagates. [[Manifest.slice]] calls this core
+    * directly; the rules go through [[open]]. */
+  def read[T](spark: SparkSession, manifestPath: String, table: String)(
+      use: StatsSource => T): T = {
+    val p = new HPath(manifestPath)
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+      throw new java.io.FileNotFoundException(s"no manifest at $manifestPath")
+    Manifest.withReadRetry() {
+      use(ManifestSnapshot.stats(spark, manifestPath)
+        .map(snap => new SnapshotStats(snap.keyFields, snap.tables.getOrElse(table, Vector.empty)))
+        .getOrElse(distributed(spark, manifestPath, table)))
+    }
+  }
+
+  /** [[read]] for one `rule` call: a missing or unreadable catalog, or a
+    * rule that fails over it, logs why and answers None — the rule keeps
+    * the original plan, so stale catalog state may only cost
+    * performance, never turn a valid query into a planning error. */
   def open[T](spark: SparkSession, manifestPath: String, table: String,
               rule: String = "rewrite")(use: StatsSource => Option[T]): Option[T] =
-    try {
-      val p = new HPath(manifestPath)
-      if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
-      else Manifest.withReadRetry() {
-        use(ManifestSnapshot.stats(spark, manifestPath)
-          .map(snap => new SnapshotStats(snap.keyFields, snap.tables.getOrElse(table, Vector.empty)))
-          .getOrElse(distributed(spark, manifestPath, table)))
-      }
-    } catch {
+    try read(spark, manifestPath, table)(use)
+    catch {
       case scala.util.control.NonFatal(e) =>
         logWarning(s"manifest $rule skipped for $table ($manifestPath): $e")
         None
@@ -1378,7 +1392,7 @@ private[sources] case object UnscaledDoubleSum extends SumShape
   * manifest-backed relation is answered entirely from the catalog's
   * per-file stats — zero data files opened — whenever that answer is
   * PROVABLY exact. This surfaces the Scala helpers' stats-only speed
-  * ([[Manifest.rowCount]]/[[Manifest.sliceStats]]) to `spark.sql`, the
+  * ([[Manifest.slice]]) to `spark.sql`, the
   * Iceberg-style metadata-aggregate rewrite, and mirrors the reference's
   * catalog-speed row counts (`discovery.py:348-357` answers them from
   * INFORMATION_SCHEMA, never by scanning the table).

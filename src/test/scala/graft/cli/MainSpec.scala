@@ -52,6 +52,37 @@ class MainSpec extends SparkSpec {
     assert(s2out.exists(_.contains(s"orders: $expected rows")), s2out.mkString("\n"))
   }
 
+  test("manifest stats mode counts exactly the files the SQL prune rule keeps") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import graft.sources.{Manifest, ManifestSql}
+    // one file each: below the bound, inside it, all-NULL key, and one
+    // whose catalog stats are unknown (NULL min/max/null count)
+    val dir = Files.createTempDirectory("graft_cli_rule_parity").toString
+    Seq(Seq[java.lang.Long](1L, 2L, 3L), Seq[java.lang.Long](100L, 101L),
+        Seq[java.lang.Long](null, null, null, null), Seq[java.lang.Long](1000L, 1001L))
+      .foreach(_.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/t.parquet"))
+    val mp = s"$dir/_manifest/t"
+    Manifest.write(Manifest.fromFooters(spark,
+        spark.read.parquet(s"$dir/t.parquet").inputFiles.toSeq, "t", Seq("id"))
+      .withColumn("unknown", col("maxs.id") === 1001L)
+      .withColumn("mins", when(col("unknown"), lit(null)).otherwise(col("mins")))
+      .withColumn("maxs", when(col("unknown"), lit(null)).otherwise(col("maxs")))
+      .withColumn("nulls", when(col("unknown"), lit(null)).otherwise(col("nulls"))), mp)
+    ManifestSql.register(spark, dir, "t", mp, "cli_rule_parity_t")
+    val kept = spark.sql("SELECT * FROM cli_rule_parity_t WHERE id >= 50 AND id <= 200")
+      .inputFiles
+    val rows = spark.read.parquet(kept.toIndexedSeq: _*).count()
+    // the rule keeps the in-range and the unknown-stats file only
+    assert(kept.length === 2 && rows === 4L, kept.mkString(", "))
+    val (code, out) = runCli("manifest", "--source", dir, "--table", "t",
+      "--manifest", mp, "--min-key", "50", "--max-key", "200")
+    assert(code === 0, out.mkString("\n"))
+    assert(out.contains(
+      s"t: $rows rows across ${kept.length} files (from stats, no data files opened)"),
+      out.mkString("\n"))
+  }
+
   test("manifest --backfill-sums-all pages to completion and logs per-pass fills") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_cli_bfall").toString
@@ -194,15 +225,13 @@ class MainSpec extends SparkSpec {
   }
 
   test("transfer --manifest-keys maintains the file catalog at write time") {
-    import org.apache.spark.sql.functions.col
     val dst = Files.createTempDirectory("climanifest").toString
     val (code, out) = runCli("transfer", "--source", sfDir, "--target", dst,
       "--table", "orders", "--manifest-keys", "o_orderkey,o_orderdate")
     assert(code === 0, out)
     val mp = s"$dst/_manifest/orders"
     val total = spark.read.parquet(s"$dst/orders.parquet").count()
-    assert(graft.sources.Manifest.rowCount(spark, mp,
-      col("table") === "orders") === total)
+    assert(graft.sources.Manifest.slice(spark, mp, "orders").rows === total)
     // typed two-column zone maps came along
     assert(spark.read.parquet(mp).schema("mins").dataType.simpleString
       .contains("o_orderkey:bigint"))
@@ -228,8 +257,7 @@ class MainSpec extends SparkSpec {
     assert(c1 === 0, out1)
     val dataFiles = spark.read.parquet(s"$dst/orders.parquet").inputFiles.length
     assert(dataFiles >= 4, s"chunked rewrite should leave >=4 files, got $dataFiles")
-    assert(graft.sources.Manifest.rowCount(spark, s"$dst/_manifest/orders",
-      col("table") === "orders") ===
+    assert(graft.sources.Manifest.slice(spark, s"$dst/_manifest/orders", "orders").rows ===
       spark.read.parquet(s"$dst/orders.parquet").count(),
       "the single end-of-transfer manifest update must cover every chunk")
 

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,10 +9,10 @@ import graft.SparkSpec
 /** Manifest-backed catalog for corpora beyond driver-listing scale
   * (round-10 directive; round-12: typed multi-column zone maps + footer
   * incremental maintenance). 10^4 manifest entries flow through the
-  * DISTRIBUTED pruning path — a parquet scan with pushed filters, pinned
-  * here — and only the surviving handful of real files is ever opened.
-  * The synthetic 9,990 entries point at paths that DO NOT EXIST, so any
-  * listing/read outside the pruned set fails the suite by construction. */
+  * DISTRIBUTED stats executor — a fold over the manifest scan — and only
+  * the surviving handful of real files is ever opened. The synthetic
+  * 9,990 entries point at paths that DO NOT EXIST and must all be
+  * classified out. */
 class ManifestSpec extends SparkSpec {
 
   private val base = Files.createTempDirectory("graft_manifest").toString
@@ -29,12 +28,12 @@ class ManifestSpec extends SparkSpec {
     (0 until 10).foreach { d =>
       (0 until 50).map(i => (d * 100 + i * 2, s"v${d}_$i"))
         .toDF("k", "v")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dataDir/shard$d")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dataDir/docs.parquet/shard=$d")
     }
     // real entries come from FOOTERS — stats read without opening a data
     // page, and typed: k is an INT zone map, not a string
     val realEntries = Manifest.fromFooters(spark,
-      (0 until 10).flatMap(d => parquetFiles(s"$dataDir/shard$d")),
+      (0 until 10).flatMap(d => parquetFiles(s"$dataDir/docs.parquet/shard=$d")),
       "docs", Seq("k"))
     assert(realEntries.schema("mins").dataType.simpleString === "struct<k:int>")
     // 9,990 SYNTHETIC entries: nonexistent paths, key ranges disjoint from
@@ -52,42 +51,29 @@ class ManifestSpec extends SparkSpec {
     Manifest.write(
       realEntries.unionByName(synthetic).repartition(8), manifestPath)
 
-    // predicate: table + key-range overlap for keys [200, 399]
-    // (shards 2 and 3) — file-level zone-map semantics, NUMERIC comparison
-    val pred = col("table") === "docs" && Manifest.overlaps("k", 200, 399)
+    // keys [200, 399] (shards 2 and 3) — file-level zone-map semantics,
+    // NUMERIC comparison; the snapshot bound at 0 sends every read through
+    // the DISTRIBUTED executor, a fold over the manifest scan
+    val pred = col("k").between(200, 399)
+    spark.conf.set(ManifestSnapshot.MaxBytesConf, "0")
+    try {
+      // stats-only count: answered from the manifest, zero data files opened
+      assert(Manifest.slice(spark, manifestPath, "docs", pred) === Manifest.Slice(100L, 2L))
 
-    // pruning is a DISTRIBUTED parquet scan with the predicate pushed —
-    // the pin that says "this is a scan plan, not a driver loop"
-    val pruned = Manifest.select(spark, manifestPath, pred)
-    val plan = pruned.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(plan.contains("PushedFilters"), plan.take(800))
-    assert(plan.matches("(?s).*PushedFilters: \\[.*mins.*\\].*") ||
-      plan.matches("(?s).*PushedFilters: \\[.*maxs.*\\].*"),
-      "nested zone-map predicate did not reach the manifest scan:\n" +
-        plan.take(1200))
+      // the data read opens ONLY the pruned files and re-applies the
+      // row-level key filter
+      val got = ManifestSql.readTable(spark, dataDir, "docs", manifestPath).filter(pred)
+      assert(got.inputFiles.length === 2)
+      assert(got.inputFiles.forall(p => p.contains("shard=2") || p.contains("shard=3")))
+      assert(got.count() === 100L)
+      assert(got.agg(min("k"), max("k")).head.toSeq === Seq(200, 398))
 
-    val survivors = pruned.select("path").as[String].collect()
-    assert(survivors.length === 2)
-    assert(survivors.forall(p => p.contains("shard2") || p.contains("shard3")))
-
-    // stats-only count: answered from the manifest, zero data files opened
-    assert(Manifest.rowCount(spark, manifestPath, pred) === 100L)
-
-    // the data read opens ONLY the pruned files (nonexistent synthetic
-    // paths would throw) and re-applies the row-level key filter
-    val got = Manifest.read(spark, manifestPath, pred,
-      keyFilter = Some(col("k").between(200, 399)))
-    assert(got.count() === 100L)
-    assert(got.agg(min("k"), max("k")).head.toSeq === Seq(200, 398))
-
-    // zero-survivor predicates: stats answer 0, data read fails loudly
-    // instead of listing a corpus
-    val none = col("table") === "docs" && col("mins.k") >= 999999990
-    assert(Manifest.rowCount(spark, manifestPath, none) === 0L)
-    val e = intercept[IllegalArgumentException](
-      Manifest.read(spark, manifestPath, none))
-    assert(e.getMessage.contains("zero files"))
+      // zero-survivor predicates: stats answer 0, the data read is empty
+      val none = col("k") >= 999999990
+      assert(Manifest.slice(spark, manifestPath, "docs", none) === Manifest.Slice(0L, 0L))
+      assert(ManifestSql.readTable(spark, dataDir, "docs", manifestPath)
+        .filter(none).count() === 0L)
+    } finally spark.conf.unset(ManifestSnapshot.MaxBytesConf)
   }
 
   test("numeric keys prune numerically, not lexicographically (round-11 advice)") {
@@ -104,12 +90,9 @@ class ManifestSpec extends SparkSpec {
     Manifest.write(Manifest.fromFooters(spark,
       parquetFiles(s"$dir/lo") ++ parquetFiles(s"$dir/hi"),
       "t", Seq("id")), mp)
-    val pred = col("table") === "t" && Manifest.overlaps("id", 90L, 10000000L)
-    val survivors = Manifest.select(spark, mp, pred)
-      .select("path").as[String].collect()
-    assert(survivors.length === 1 && survivors.head.contains("/hi/"),
-      s"numeric zone map must keep the [100..200] file: ${survivors.mkString(",")}")
-    assert(Manifest.rowCount(spark, mp, pred) === 101L)
+    // the one survivor holds 101 rows: the [100..200] file
+    assert(Manifest.slice(spark, mp, "t", col("id").between(90L, 10000000L)) ===
+      Manifest.Slice(101L, 1L), "numeric zone map must keep the [100..200] file")
   }
 
   test("multi-column zone maps: the second column prunes files the first cannot") {
@@ -119,23 +102,19 @@ class ManifestSpec extends SparkSpec {
     val dir = s"$base/multikey"
     (0 until 4).foreach { f =>
       (0 until 50).map(i => (i.toLong, f * 100 + i * 2)).toDF("d", "c")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/f$f")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet/f=$f")
     }
     val mp = s"$base/multikey_manifest"
     Manifest.write(Manifest.fromFooters(spark,
-      (0 until 4).flatMap(f => parquetFiles(s"$dir/f$f")),
+      (0 until 4).flatMap(f => parquetFiles(s"$dir/t.parquet/f=$f")),
       "t", Seq("d", "c")), mp)
     // first column alone: every file overlaps [0, 49]
-    assert(Manifest.select(spark, mp,
-      col("table") === "t" && Manifest.overlaps("d", 0L, 49L)).count() === 4)
+    assert(Manifest.slice(spark, mp, "t", col("d").between(0L, 49L)).files === 4)
     // conjunction: c ∈ [150, 160] lives only in file f1
-    val pred = col("table") === "t" &&
-      Manifest.overlaps("d", 0L, 49L) && Manifest.overlaps("c", 150, 160)
-    val survivors = Manifest.select(spark, mp, pred)
-      .select("path").as[String].collect()
-    assert(survivors.length === 1 && survivors.head.contains("/f1/"))
-    val got = Manifest.read(spark, mp, pred,
-      keyFilter = Some(col("c").between(150, 160)))
+    val pred = col("d").between(0L, 49L) && col("c").between(150, 160)
+    assert(Manifest.slice(spark, mp, "t", pred) === Manifest.Slice(50L, 1L))
+    val got = ManifestSql.readTable(spark, dir, "t", mp).filter(pred)
+    assert(got.inputFiles.length === 1 && got.inputFiles.head.contains("/f=1/"))
     assert(got.count() === 6) // 150,152,...,160
   }
 
@@ -166,7 +145,7 @@ class ManifestSpec extends SparkSpec {
     // round-trip: written manifest answers the full-table count from stats
     val mp = s"$base/orders_manifest"
     Manifest.write(entries, mp)
-    assert(Manifest.rowCount(spark, mp, col("table") === "orders") === total)
+    assert(Manifest.slice(spark, mp, "orders").rows === total)
   }
 
   test("update() appends novel files and drops stale rows without a data rescan") {
@@ -178,13 +157,13 @@ class ManifestSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dataDir/t.parquet")
     val (a1, r1) = Manifest.update(spark, dataDir, "t", Seq("id"), mp)
     assert(a1 === 2 && r1 === 0)
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 100L)
+    assert(Manifest.slice(spark, mp, "t").rows === 100L)
     // batch 2: append lands new part files; ONLY those are footer-scanned
     (100L until 150L).toDF("id").coalesce(1)
       .write.mode("append").parquet(s"$dataDir/t.parquet")
     val (a2, r2) = Manifest.update(spark, dataDir, "t", Seq("id"), mp)
     assert(a2 === 1 && r2 === 0)
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 150L)
+    assert(Manifest.slice(spark, mp, "t").rows === 150L)
     // idempotent: nothing new, nothing touched
     assert(Manifest.update(spark, dataDir, "t", Seq("id"), mp) === ((0L, 0L)))
     // overwrite rewrites the dir under fresh part names: stale rows drop
@@ -192,10 +171,10 @@ class ManifestSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dataDir/t.parquet")
     val (a3, r3) = Manifest.update(spark, dataDir, "t", Seq("id"), mp)
     assert(a3 === 1 && r3 === 3)
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 30L)
+    assert(Manifest.slice(spark, mp, "t").rows === 30L)
     // the zone maps stayed typed through every maintenance path
-    assert(Manifest.rowCount(spark, mp,
-      col("table") === "t" && Manifest.overlaps("id", 90L, 999L)) === 0L)
+    assert(Manifest.slice(spark, mp, "t",
+      col("id").between(90L, 999L)).rows === 0L)
     // a divergent key set must fail loudly, not corrupt the manifest
     val bad = Manifest.fromFooters(spark,
       parquetFiles(s"$dataDir/t.parquet"), "t2", Seq.empty[String])
@@ -236,7 +215,7 @@ class ManifestSpec extends SparkSpec {
       // (keys must be DATA columns; `part` lives in directory names)
       val (a1, r1) = Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id"), mp)
       assert(a1 === listing.count() && r1 === 0L)
-      assert(Manifest.rowCount(spark, mp, col("table") === "t") === 100L)
+      assert(Manifest.slice(spark, mp, "t").rows === 100L)
       assert(Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id"), mp)
         === ((0L, 0L)))
     } finally listing.unpersist()
@@ -261,8 +240,8 @@ class ManifestSpec extends SparkSpec {
     assert(rows === 10L && b0 === filesBefore.toLong && b1 < b0)
     // entry-for-entry identical catalog, and stats still answer
     assert(spark.read.parquet(mp).orderBy("path").collect().toSeq === before.toSeq)
-    assert(Manifest.rowCount(spark, mp,
-      col("table") === "t" && Manifest.overlaps("id", 250L, 260L)) === 100L)
+    assert(Manifest.slice(spark, mp, "t",
+      col("id").between(250L, 260L)).rows === 100L)
   }
 
   test("repeated CLI-path updates auto-compact past the file threshold (round-13 item 5)") {
@@ -287,8 +266,8 @@ class ManifestSpec extends SparkSpec {
         assert(files <= threshold,
           s"update $b left $files manifest files (> $threshold)")
         // readers stay green across every maintenance step
-        assert(Manifest.rowCount(spark, mp,
-          col("table") === "t" && Manifest.overlaps("id", 0L, b * 100L + 99L))
+        assert(Manifest.slice(spark, mp, "t",
+      col("id").between(0L, b * 100L + 99L)).rows
           === (b + 1) * 100L)
       }
       assert(compacted, "ten updates over threshold 4 must have compacted")
@@ -305,16 +284,16 @@ class ManifestSpec extends SparkSpec {
 
     // the hazard is real: a frame PLANNED against the pre-rewrite file
     // set scans vanished part files once update() swaps the directory …
-    val preplanned = Manifest.select(spark, mp, col("table") === "t")
+    val preplanned = spark.read.parquet(mp).filter(col("table") === "t")
     assert(preplanned.count() === 2L)
     (0L until 30L).toDF("id").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
     Manifest.update(spark, dir, "t", Seq("id"), mp) // stale rows → rewrite
     intercept[Exception](preplanned.count())
 
-    // … while the helper calls re-plan per attempt: fresh listing, right
+    // … while the stats helper re-plans per attempt: fresh listing, right
     // answer, loud-failure behavior preserved for everything non-racy
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 30L)
+    assert(Manifest.slice(spark, mp, "t").rows === 30L)
 
     // deterministic retry mechanics: vanished-file failures retry with a
     // fresh plan; everything else surfaces immediately; exhaustion rethrows
@@ -346,7 +325,7 @@ class ManifestSpec extends SparkSpec {
     writer.start()
     try
       while (writer.isAlive)
-        assert(Manifest.rowCount(spark, mp, col("table") === "t") >= 20L)
+        assert(Manifest.slice(spark, mp, "t").rows >= 20L)
     finally writer.join()
   }
 
@@ -368,7 +347,7 @@ class ManifestSpec extends SparkSpec {
     SwapWindowFileSystem.vanished.set(0)
     SwapWindowFileSystem.armed.set(mp)
     try {
-      assert(Manifest.rowCount(spark, s"swapfs:$mp", col("table") === "t") === 40L)
+      assert(Manifest.slice(spark, s"swapfs:$mp", "t").rows === 40L)
       assert(SwapWindowFileSystem.vanished.get() === 1, "the listing never hit the window")
     } finally {
       SwapWindowFileSystem.armed.set(null)
@@ -386,22 +365,8 @@ class ManifestSpec extends SparkSpec {
     }
     val mp = s"$base/paritymanifest"
     Manifest.update(spark, dir, "t", Seq("id"), mp)
-    val t = col("table") === "t"
-    // IN-list: sparse members skip the files between them (= the SQL
-    // rule's `id IN (50, 51, 450)` case)
-    assert(Manifest.select(spark, mp,
-      t && Manifest.inList("id", Seq(50L, 51L, 450L))).count() === 2)
-    // dense >64-member list falls back to the [min,max] envelope
-    assert(Manifest.select(spark, mp,
-      t && Manifest.inList("id", (0L to 70L))).count() === 1)
-    // all-null / empty list matches nothing
-    assert(Manifest.select(spark, mp,
-      t && Manifest.inList("id", Seq(null))).count() === 0)
-    // stats-only row counts compose with the builders
-    assert(Manifest.rowCount(spark, mp,
-      t && Manifest.inList("id", Seq(50L, 51L, 450L))) === 200L)
 
-    // string fixture for LIKE-prefix parity
+    // string fixture for LIKE-prefix cases
     val sdir = s"$base/parity_str"
     Seq("alpha", "ant").toDF("s").coalesce(1)
       .write.mode("append").parquet(s"$sdir/t.parquet")
@@ -409,10 +374,8 @@ class ManifestSpec extends SparkSpec {
       .write.mode("append").parquet(s"$sdir/t.parquet")
     val smp = s"$base/parity_str_manifest"
     Manifest.update(spark, sdir, "t", Seq("s"), smp)
-    assert(Manifest.select(spark, smp,
-      t && Manifest.likePrefix("s", "b")).count() === 1)
 
-    // null-count fixture for IS [NOT] NULL parity
+    // null-count fixture for IS [NOT] NULL: one all-NULL file
     val ndir = s"$base/parity_null"
     Seq[(java.lang.Long, String)]((1L, "a")).toDF("id", "v").coalesce(1)
       .write.mode("append").parquet(s"$ndir/t.parquet")
@@ -422,21 +385,10 @@ class ManifestSpec extends SparkSpec {
       .write.mode("append").parquet(s"$ndir/t.parquet")
     val nmp = s"$base/parity_null_manifest"
     Manifest.update(spark, ndir, "t", Seq("id"), nmp)
-    assert(Manifest.select(spark, nmp, t && Manifest.keyIsNull("id")).count() === 2)
-    assert(Manifest.select(spark, nmp, t && Manifest.keyIsNotNull("id")).count() === 2)
 
-    // each helper keeps exactly the files the rules' compiler keeps for the
-    // matching SQL conjunct — the conjuncts as Spark's optimizer hands them
-    // over (its inferred isnotnull included), classified over the same
-    // catalog. The fixtures hold no all-null file: the compiler also reads
-    // null counts there, which the range builders do not
-    def helperFiles(m: String, pred: Column): Set[String] =
-      Manifest.select(spark, m, t && pred).select("path").as[String].collect().toSet
-    def split(e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) => split(l) ++ split(r)
-      case o => Seq(o)
-    }
+    // the files the rules' compiler keeps for a SQL WHERE — the conjuncts
+    // as Spark's optimizer hands them over (its inferred isnotnull
+    // included), classified over the same catalog
     def ruleFiles(d: String, m: String, where: String): Set[String] = {
       val plan = spark.read.parquet(s"$d/t.parquet").filter(where).queryExecution.optimizedPlan
       val (cond, rel) = plan.collectFirst {
@@ -444,37 +396,41 @@ class ManifestSpec extends SparkSpec {
             r: org.apache.spark.sql.execution.datasources.LogicalRelation) => (c, r)
       }.get
       ManifestStats.open(spark, m, "t") { src =>
-        val cover = Coverage.and(split(cond)
-          .flatMap(Coverage.compile(_, rel.outputSet, src.keyFields)).map(_.cover))
+        val cover = Coverage.and(Coverage.conjuncts(cond, rel.outputSet, src.keyFields))
         src.fold(("parity", m, where))(Set.empty[String])(
           (acc, st) => if (cover(st) == CoverNone) acc else acc + st.path, _ ++ _)
       }.get
     }
+    // (catalog, data dir, helper predicate, matching SQL WHERE, files kept)
     Seq(
-      Manifest.inList("id", Seq(50L, 51L, 450L)) -> "id IN (50, 51, 450)",
-      Manifest.inList("id", (0L to 70L)) -> s"id IN (${(0 to 70).mkString(", ")})",
-      Manifest.inList("id", (95L to 105L) :+ 450L) ->
-        s"id IN (${((95 to 105) :+ 450).mkString(", ")})",
-      Manifest.overlaps("id", 150L, 340L) -> "id BETWEEN 150 AND 340",
-      Manifest.overlaps("id", 250L, 250L) -> "id = 250",
-      Manifest.overlaps("id", 99L, 100L) -> "id >= 99 AND id <= 100",
-      Manifest.overlaps("id", 600L, 700L) -> "id BETWEEN 600 AND 700"
-    ).foreach { case (pred, where) =>
-      assert(helperFiles(mp, pred) === ruleFiles(dir, mp, where), where)
+      // IN-list: sparse members skip the files between them
+      (mp, dir, col("id").isin(50L, 51L, 450L), Some("id IN (50, 51, 450)"), 2),
+      // dense >64-member list falls back to the [min,max] envelope
+      (mp, dir, col("id").isin(0L to 70L: _*), Some(s"id IN (${(0 to 70).mkString(", ")})"), 1),
+      (mp, dir, col("id").isin(((95L to 105L) :+ 450L): _*),
+        Some(s"id IN (${((95 to 105) :+ 450).mkString(", ")})"), 3),
+      // a list with no non-null member matches nothing
+      (mp, dir, col("id").isin(Seq(null): _*), None, 0),
+      // a SQL-text predicate folds like the optimizer's own input
+      (mp, dir, expr("id BETWEEN 150 AND 340"), Some("id BETWEEN 150 AND 340"), 3),
+      (mp, dir, col("id") === 250L, Some("id = 250"), 1),
+      (mp, dir, col("id") >= 99L && col("id") <= 100L, Some("id >= 99 AND id <= 100"), 2),
+      (mp, dir, col("id").between(600L, 700L), Some("id BETWEEN 600 AND 700"), 0),
+      (smp, sdir, col("s").like("b%"), Some("s LIKE 'b%'"), 1),
+      (smp, sdir, col("s").startsWith("a"), Some("s LIKE 'a%'"), 1),
+      (smp, sdir, col("s").like("c%"), Some("s LIKE 'c%'"), 0),
+      (smp, sdir, col("s").isin("ant", "berry"), Some("s IN ('ant', 'berry')"), 2),
+      (smp, sdir, col("s").between("alpha", "az"), Some("s BETWEEN 'alpha' AND 'az'"), 1),
+      (nmp, ndir, col("id").isNull, Some("id IS NULL"), 2),
+      (nmp, ndir, col("id").isNotNull, Some("id IS NOT NULL"), 2),
+      // a comparison skips the all-NULL file too
+      (nmp, ndir, col("id") >= 0L, Some("id >= 0"), 2)
+    ).foreach { case (m, d, pred, where, files) =>
+      assert(Manifest.slice(spark, m, "t", pred).files === files, pred.toString)
+      where.foreach(w => assert(ruleFiles(d, m, w).size === files, w))
     }
-    Seq(
-      Manifest.likePrefix("s", "b") -> "s LIKE 'b%'",
-      Manifest.likePrefix("s", "a") -> "s LIKE 'a%'",
-      Manifest.likePrefix("s", "c") -> "s LIKE 'c%'",
-      Manifest.inList("s", Seq("ant", "berry")) -> "s IN ('ant', 'berry')",
-      Manifest.overlaps("s", "alpha", "az") -> "s BETWEEN 'alpha' AND 'az'"
-    ).foreach { case (pred, where) =>
-      assert(helperFiles(smp, pred) === ruleFiles(sdir, smp, where), where)
-    }
-    Seq(Manifest.keyIsNull("id") -> "id IS NULL",
-      Manifest.keyIsNotNull("id") -> "id IS NOT NULL").foreach { case (pred, where) =>
-      assert(helperFiles(nmp, pred) === ruleFiles(ndir, nmp, where), where)
-    }
+    // stats-only row counts come from the same classification
+    assert(Manifest.slice(spark, mp, "t", col("id").isin(50L, 51L, 450L)).rows === 200L)
   }
 
   test("build() over a cached table keys files by path, as update() does") {
@@ -530,9 +486,9 @@ class ManifestSpec extends SparkSpec {
       "dead rewrite tmp must be reclaimed")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(mp + "__old424242")),
       "dead rewrite trash must be reclaimed")
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 5L)
+    assert(Manifest.slice(spark, mp, "t").rows === 5L)
     // the prefix-sharing sibling manifest survived, contents intact
-    assert(Manifest.rowCount(spark, sibling, col("table") === "u") === 10L)
+    assert(Manifest.slice(spark, sibling, "u").rows === 10L)
   }
 
   test("update's schema probe merges footers across divergent novel files (round-13 advice)") {
@@ -553,11 +509,10 @@ class ManifestSpec extends SparkSpec {
       === "struct<id:bigint>")
     // selective range: the keyed file matches, the keyless file is kept
     // conservatively (NULL zone map), nothing errors
-    assert(Manifest.rowCount(spark, mp, col("table") === "t" &&
-      Manifest.overlaps("id", 0L, 100L)) === 3L)
+    assert(Manifest.slice(spark, mp, "t",
+      col("id").between(0L, 100L)).rows === 3L)
     // disjoint range: only the unknown-range file survives
-    assert(Manifest.select(spark, mp, col("table") === "t" &&
-      Manifest.overlaps("id", 1000L, 2000L)).count() === 1L)
+    assert(Manifest.slice(spark, mp, "t", col("id").between(1000L, 2000L)).files === 1L)
   }
 
   test("two writers racing disjoint tables into one manifest both commit (round-14 item 10)") {
@@ -678,7 +633,7 @@ class ManifestSpec extends SparkSpec {
     val (a, r) = Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id"), mp)
     assert(a === 1L && r === 0L)
     assert(!spark.read.parquet(mp).columns.contains("sums"))
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 20L)
+    assert(Manifest.slice(spark, mp, "t").rows === 20L)
     // an overwrite forces the rewrite path: the catalog upgrades to the
     // sums-bearing schema, legacy semantics intact
     (0L until 5L).toDF("id").coalesce(1)
@@ -772,7 +727,7 @@ class ManifestSpec extends SparkSpec {
       assert(inClaim <= 1,
         s"claim window ran $inClaim jobs (of $total) — expensive work leaked inside")
       assert(total > inClaim, "the pre-pass work must run outside the claim")
-      assert(Manifest.rowCount(spark, mp, col("table") === "t") === 40L)
+      assert(Manifest.slice(spark, mp, "t").rows === 40L)
     } finally {
       Manifest.ringProbe = None
       spark.sparkContext.removeSparkListener(listener)
@@ -821,8 +776,8 @@ class ManifestSpec extends SparkSpec {
       assert(seq.contains("fence-lost"),
         s"A must fence out instead of committing blind: $seq")
       // both writers' rows landed; nothing was clobbered
-      assert(Manifest.rowCount(spark, mp, col("table") === "ta") === 30L)
-      assert(Manifest.rowCount(spark, mp, col("table") === "tb") === 20L)
+      assert(Manifest.slice(spark, mp, "ta").rows === 30L)
+      assert(Manifest.slice(spark, mp, "tb").rows === 20L)
       assert(Manifest.version(spark, mp) === 2L)
       val lock = new org.apache.hadoop.fs.Path(mp + "__commitlock")
       assert(!lock.getFileSystem(spark.sessionState.newHadoopConf()).exists(lock))
@@ -873,7 +828,7 @@ class ManifestSpec extends SparkSpec {
       assert(m.count() === 3L, "no duplicate rows from the losing writer")
       assert(m.select("path").distinct().count() === 3L)
       assert(Manifest.version(spark, mp) === 1L, "only B's commit mutated")
-      assert(Manifest.rowCount(spark, mp, col("table") === "t") === 60L)
+      assert(Manifest.slice(spark, mp, "t").rows === 60L)
     } finally Manifest.ringProbe = None
   }
 
@@ -908,8 +863,8 @@ class ManifestSpec extends SparkSpec {
       // of the rename race waits for the winner's fresh claim instead of
       // deleting it (the round-15 delete-then-create double holder)
       assert(seq.count(_ == "reclaim") === 1, seq)
-      assert(Manifest.rowCount(spark, mp, col("table") === "ta") === 10L)
-      assert(Manifest.rowCount(spark, mp, col("table") === "tb") === 15L)
+      assert(Manifest.slice(spark, mp, "ta").rows === 10L)
+      assert(Manifest.slice(spark, mp, "tb").rows === 15L)
       assert(Manifest.version(spark, mp) === 2L)
       assert(!fs.exists(lock))
     } finally {
@@ -1183,7 +1138,7 @@ class ManifestSpec extends SparkSpec {
         Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id", "v"), mp))
       assert(r === ((0L, 0L)))
       assert(again.size <= 8, s"$n-file no-op update ran ${again.size} jobs")
-      assert(Manifest.rowCount(spark, mp, col("table") === "t") === 20L * n)
+      assert(Manifest.slice(spark, mp, "t").rows === 20L * n)
     }
   }
 

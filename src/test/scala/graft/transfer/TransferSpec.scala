@@ -174,7 +174,7 @@ class TransferSpec extends SparkSpec {
     assert(e1.transferTable(spark, "orders").success)
     val batch1 = spark.read.parquet(mp).collect().toSet
     assert(batch1.nonEmpty)
-    assert(Manifest.rowCount(spark, mp, col("table") === "orders") === 500L)
+    assert(Manifest.slice(spark, mp, "orders").rows === 500L)
 
     // batch 2 appends MORE files: the manifest gains exactly those rows —
     // every batch-1 row survives byte-identical, so nothing was rescanned
@@ -185,12 +185,11 @@ class TransferSpec extends SparkSpec {
     assert(batch1.subsetOf(batch2), "batch-1 manifest rows must be untouched")
     val allFiles = spark.read.parquet(s"$out/orders.parquet").inputFiles.toSet
     assert(batch2.map(_.getAs[String]("path")) === allFiles)
-    assert(Manifest.rowCount(spark, mp, col("table") === "orders") === 800L)
+    assert(Manifest.slice(spark, mp, "orders").rows === 800L)
 
     // a pruned read sees the new batch through its typed zone maps
-    val got = Manifest.read(spark, mp,
-      col("table") === "orders" && Manifest.overlaps("o_orderkey", 500L, 799L),
-      keyFilter = Some(col("o_orderkey").between(500L, 799L)))
+    val got = graft.sources.ManifestSql.readTable(spark, out, "orders", mp)
+      .filter(col("o_orderkey").between(500L, 799L))
     assert(got.count() === 300L)
   }
 
@@ -208,7 +207,7 @@ class TransferSpec extends SparkSpec {
     val mp = s"$out/_manifest/t"
     val sink = new ParquetSink(out, manifestKeys = Some(Seq("id")))
     sink.write((0L until 100L).toDF("id"), "t")
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 100L)
+    assert(Manifest.slice(spark, mp, "t").rows === 100L)
 
     // the overwrite's first chunk: catalog gone, not stale
     sink.writeChunk((0L until 40L).toDF("id").coalesce(1), "t", firstChunk = true)
@@ -220,7 +219,7 @@ class TransferSpec extends SparkSpec {
     // remaining chunks + finish: catalog rebuilt over exactly the new files
     sink.writeChunk((40L until 70L).toDF("id").coalesce(1), "t", firstChunk = false)
     sink.finish(spark, "t")
-    assert(Manifest.rowCount(spark, mp, col("table") === "t") === 70L)
+    assert(Manifest.slice(spark, mp, "t").rows === 70L)
     assert(spark.read.parquet(mp).select("path").as[String].collect().toSet ===
       spark.read.parquet(s"$out/t.parquet").inputFiles.toSet)
   }
