@@ -71,10 +71,10 @@ object Bench {
   def cleanReps(samples: Seq[Double]): Seq[Double] =
     if (samples.isEmpty) samples else samples.filter(_ <= 3.0 * samples.min)
 
-  // shared with ScaleCurve (Measure): SCALE.md compares the two tools'
-  // JSONs against the same 3x-median throttle threshold (round-5 official
-  // bench: q53/q92/q93/q94 inflated 40-83x while the suite median
-  // inflation was 1.23x)
+  // shared with StatsCurve (Measure): both tools' JSONs are read against
+  // the same 3x-median throttle threshold (round-5 official bench:
+  // q53/q92/q93/q94 inflated 40-83x while the suite median inflation was
+  // 1.23x)
   private def calibSecs(): Double = Measure.calibSecs()
   private def fmt(v: Double): String = Measure.fmt(v)
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Sums executor CPU nanos across task ends — the throttle-immune
-  * complement to wall-clock timing used by [[Bench]] and [[ScaleCurve]].
+  * complement to wall-clock timing used by [[Bench]].
   *
   * The shared host intermittently CPU-throttles 40-70x for minutes at a
   * time, and a short pre-run calibration probe cannot see a throttle that

@@ -16,12 +16,12 @@ object GraftSession {
   /** A `local[cores]` session (or the running one) with the confs every
     * graft entry point shares: UTC session time, TIMESTAMP(NANOS) parquet
     * surfaced as a long (see [[graft.sources.Tables.load]]) and no UI.
-    * Shuffle partitions default to `cores`. */
-  def apply(cores: Int = cpus, shufflePartitions: Option[Int] = None): SparkSession =
+    * Shuffle partitions equal `cores`. */
+  def apply(cores: Int = cpus): SparkSession =
     SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cores).toLong)
+      .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared measurement primitives for [[Bench]] and [[ScaleCurve]] — one
-  * definition because their outputs are compared ACROSS tools (SCALE.md
-  * reads both JSONs against the same 3×-median throttle threshold): a
-  * calibration-loop tweak in one copy would silently break comparability.
+/** Shared measurement primitives for [[Bench]], [[BenchOne]] and
+  * [[graft.sources.StatsCurve]] — one definition because their outputs are
+  * compared ACROSS tools (both JSONs are read against the same 3×-median
+  * throttle threshold): a calibration-loop tweak in one copy would
+  * silently break comparability.
   */
 object Measure {
 

@@ -1071,13 +1071,13 @@ object Main {
       |               S3A-class stores (copy+delete rename) two reclaimers
       |               can both proceed — the fences keep answers correct,
       |               at the cost of a spurious section retry. update also
-      |               records per-file SUMs of numeric keys
-      |               (graft.manifest.recordSums).
+      |               records per-file SUMs of numeric keys, for batches of
+      |               up to graft.manifest.sumScanMaxFiles files.
       |               registered views also answer COUNT/MIN/MAX/SUM and
       |               single-valued-key GROUP BY from stats and prune
-      |               [WHERE ...] ORDER BY key LIMIT n — session confs
-      |               graft.manifest.metadataAgg / topkPrune / joinPrune,
-      |               all default true)
+      |               [WHERE ...] ORDER BY key LIMIT n; Spark's
+      |               spark.sql.optimizer.excludedRules switches a rule off,
+      |               e.g. graft.sources.ManifestAggRule)
       |  dedup       --source DIR --target DIR [--table T]
       |              [--method exact|minhash|lines|substring|incremental|
       |               containment|capped-containment|rare-containment]
@@ -1088,11 +1088,8 @@ object Main {
       |              [--existing DIR]  (incremental: drop incoming docs
       |               near-duplicating the standing corpus at DIR or an
       |               earlier doc of their own batch)
-      |              (containment modes read session conf
-      |               graft.containment.exchangeFactor, default 8 — pair-
-      |               aggregate reducer widening for cluster sizing; the
-      |               default stands on the SCALE.md x100 A/B. capped/
-      |               rare-containment are the production-scale modes)
+      |              (capped/rare-containment are the production-scale
+      |               modes)
       |              [--sample R]  (sampled-audit mode: run the same
       |               operators on a deterministic content-hash sample at
       |               rate R in (0,1] — the production story for exact-

@@ -614,25 +614,16 @@ object Dedup {
     * past [[ContainmentExchangeThresholdBytes]] (plan-stats bytes of the
     * doc corpus — a driver-side lookup, zero extra jobs). Below the thrash
     * regime map-side combine wins; above it the never-collapsing pair
-    * groups spill-thrash unless exchanged first at widened parallelism.
-    * `graft.containment.exchangeFactor` (default 8) sets the widening as
-    * a multiple of default parallelism — the session-conf knob a 100 TB
-    * run sizes so each reducer's aggregation map stays in memory
-    * (round-13 A/B at the x100 probe, interleaved in one JVM: factor 8
-    * spilled 7.8 GiB/2.3 GiB mem/disk per run; see SCALE.md). */
+    * groups spill-thrash unless exchanged first at 8x default
+    * parallelism (round-13 A/B at the x100 probe, interleaved in one JVM:
+    * factor 8 spilled 7.8 GiB/2.3 GiB mem/disk per run; see SCALE.md). */
   private def maybeExchangePairs(docs: DataFrame, pairs: DataFrame): DataFrame =
     if (docs.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        ContainmentExchangeThresholdBytes) {
-      val spark = docs.sparkSession
-      val factor = spark.conf.getOption("graft.containment.exchangeFactor")
-        .map(raw => raw.toIntOption.filter(_ > 0).getOrElse(throw
-          new IllegalArgumentException(
-            s"graft.containment.exchangeFactor must be a positive integer, got '$raw'")))
-        .getOrElse(8)
+        ContainmentExchangeThresholdBytes)
       pairs.repartition(
-        spark.sparkContext.defaultParallelism * factor,
+        docs.sparkSession.sparkContext.defaultParallelism * 8,
         col("a_id"), col("b_id"))
-    } else pairs
+    else pairs
 
   /** Asymmetric containment census (Broder 1997's second resemblance
     * measure): containment(A,B) = |sh(A) ∩ sh(B)| / min(|sh(A)|,|sh(B)|).

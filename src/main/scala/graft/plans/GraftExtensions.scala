@@ -42,7 +42,8 @@ object GraftExtensions {
     * equi-joins always carry an inferred `isnotnull(key)` Filter over the
     * fact relation, and letting the literal rule consume the markers on
     * that null-bound alone would lock the far more selective join prune
-    * out of every star query. */
+    * out of every star query. Spark's `spark.sql.optimizer.excludedRules`
+    * switches any of them off by class name (`graft.sources.ManifestAggRule`). */
   def rules(spark: SparkSession): Seq[Rule[LogicalPlan]] = Seq(
     NativeTextRewrites, ManifestAggRule(spark), ManifestTopKRule(spark),
     ManifestJoinPruneRule(spark), ManifestPruneRule(spark))

@@ -52,12 +52,12 @@ import org.apache.spark.storage.StorageLevel
   * InMemoryFileIndex listing applies; the manifest's job is making
   * selective reads independent of corpus file count.
   *
-  * Maintenance is INCREMENTAL (round-11 verdict item 2): [[fromFooters]]
-  * reads per-file row counts and column min/max straight out of parquet
-  * FOOTERS — zero data pages opened, the stats genuinely are free at the
-  * moment a file lands — and [[update]] diffs a table directory against the
-  * manifest by path, footer-scans only the novel files, appends their rows,
-  * and drops rows whose files vanished (an Overwrite rewrite). The full
+  * Maintenance is INCREMENTAL (round-11 verdict item 2): [[update]] diffs
+  * a table directory against the manifest by path, reads the novel files'
+  * per-file row counts and column min/max straight out of parquet FOOTERS
+  * — zero data pages opened, the stats genuinely are free at the moment a
+  * file lands — appends their rows, and drops rows whose files vanished
+  * (an Overwrite rewrite). The full
   * [[build]] data scan remains only as the bootstrap for corpora that
   * predate their manifest. `ParquetSink(manifest = …)` calls [[update]]
   * at write time, so a growing corpus never pays a rescan.
@@ -86,8 +86,8 @@ object Manifest {
     * carry sums, but the manifest writer sees the data at write time —
     * [[build]] folds them into its bootstrap scan for free, and [[update]]
     * folds them out of ONLY the novel files, in the same per-file pass that
-    * reads their footers (the `graft.manifest.recordSums` write-time
-    * trade) — so repeated
+    * reads their footers (a write-time trade bounded by
+    * [[SumScanMaxFilesConf]]) — so repeated
     * aggregate-fingerprint validations (`SUM(key)` — the reference's
     * validator layer 4) become catalog-speed metadata reads instead of
     * table scans. NULL sum + known null count < rows = unknown = the
@@ -96,17 +96,13 @@ object Manifest {
     * ([[append]] aligns both directions). */
   val SumsColumn = "sums"
 
-  /** Session conf: record per-file sums during [[update]] by reading the
-    * novel files' numeric key columns in the footer pass (default on — at
-    * write time those files are page-cache hot and only the key columns'
-    * chunks are fetched). `false` restores the strictly footer-only
-    * update. */
-  val RecordSumsConf = "graft.manifest.recordSums"
-
   /** Session conf: largest novel-file batch whose sums [[update]]
-    * records. Past the cap the batch's sums stay NULL — SUM answers
-    * decline, costing performance only; `--backfill-sums` pages them in
-    * later, bounded by the same cap per pass. */
+    * records by reading the novel files' numeric key columns in the
+    * footer pass (at write time those files are page-cache hot and only
+    * the key columns' chunks are fetched). Past the cap the batch's sums
+    * stay NULL — SUM answers decline, costing performance only;
+    * `--backfill-sums` pages them in later, bounded by the same cap per
+    * pass. `0` keeps [[update]] strictly footer-only. */
   val SumScanMaxFilesConf = "graft.manifest.sumScanMaxFiles"
   val SumScanMaxFilesDefault = 100000
 
@@ -230,8 +226,8 @@ object Manifest {
   /** Build manifest entries for one fixture table directory by scanning it
     * once — the bootstrap path for corpora that predate their manifest.
     * Universal over column types (it is a plain aggregate); steady-state
-    * maintenance should use [[update]]/[[fromFooters]] instead, which never
-    * touch data pages. */
+    * maintenance should use [[update]] instead, which never touches data
+    * pages. */
   def build(spark: SparkSession, dir: String, table: String,
             keyCols: Seq[String]): DataFrame = {
     val df = Tables.load(spark, dir, table)
@@ -272,34 +268,17 @@ object Manifest {
   def build(spark: SparkSession, dir: String, table: String, keyCol: String): DataFrame =
     build(spark, dir, table, Seq(keyCol))
 
-  /** Manifest entries for `paths` from parquet FOOTERS only: per-file row
-    * count (sum of row-group counts — exact), file length, and each key
-    * column's min/max folded across row-group statistics. No data page is
-    * read, so this is safe to run at every write. Executed DISTRIBUTED —
-    * one task per path chunk — because at ingest scale "the new files" can
-    * be thousands per batch.
+  /** Manifest entries for the parquet files `paths` from their FOOTERS:
+    * per-file row count (sum of row-group counts — exact), file length,
+    * and each key column's min/max folded across row-group statistics.
+    * No data page is read, so [[updateDir]] runs this at every write. The
+    * path set flows from the distributed listing⟗catalog diff straight
+    * into per-task footer reads — it never has to exist on the driver.
     *
     * A key column whose statistics any row group lacks (written by an
     * engine that drops long binary stats, or an unsupported physical type)
     * gets NULL mins/maxs for that file — [[Coverage.compile]] treats NULL
-    * as "unknown, keep", so pruning stays conservative instead of wrong. */
-  def fromFooters(spark: SparkSession, paths: Seq[String], table: String,
-                  keyCols: Seq[String]): DataFrame = {
-    require(paths.nonEmpty, "fromFooters needs at least one path")
-    // schema inference is itself footer-only; it pins the Spark-side type
-    // each parquet statistic must be converted into
-    val dataSchema = spark.read.parquet(paths: _*).schema
-    val slices = math.max(1, math.min(paths.size, 64))
-    val (rows, schema) = footerRows(spark,
-      spark.sparkContext.parallelize(paths, slices), table, keyCols, dataSchema,
-      sums = false)
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** Core of [[fromFooters]] and [[updateDir]]'s write-time pass, over an
-    * RDD of paths: the path set flows from wherever it was computed (a
-    * parallelized Seq, or the distributed listing⟗catalog diff) straight
-    * into per-task footer reads — it never has to exist on the driver.
+    * as "unknown, keep", so pruning stays conservative instead of wrong.
     * With `sums`, each task also folds the numeric key columns' per-file
     * sums from the file it already has open ([[fileSums]]), so footer
     * stats and sums cost ONE pass; without, [[SumsColumn]] is a struct of
@@ -698,8 +677,8 @@ object Manifest {
     *    paths, whose footers the driver reads for the key types (no
     *    inference job);
     *  - ONE footer pass over the novel files ([[footerRows]]) reads each
-    *    file's footer and, with [[RecordSumsConf]] on and the batch within
-    *    [[SumScanMaxFilesConf]], its key-column sums, from one open;
+    *    file's footer and, with the batch within [[SumScanMaxFilesConf]],
+    *    its key-column sums, from one open;
     *  - inside the commit claim the pre-pass diff is REUSED when the
     *    catalog's existence and `__version` are unchanged since the
     *    pre-pass read them — every catalog mutation ([[commitDir]],
@@ -746,8 +725,7 @@ object Manifest {
       val preEntries =
         if (s0.novel == 0) None
         else Some(scanFooters(spark, novelPaths(pre), s0.probes, table, keyCols,
-          sums = spark.conf.get(RecordSumsConf, "true").toBoolean &&
-            s0.novel <= spark.conf.get(SumScanMaxFilesConf,
+          sums = s0.novel <= spark.conf.get(SumScanMaxFilesConf,
               SumScanMaxFilesDefault.toString).toInt, keep))
       withCommitLock(spark, manifestPath) {
         val (s, d, entries) =
@@ -973,8 +951,8 @@ object Manifest {
     * rejects a divergent struct before it can corrupt the manifest.
     * Manifest-maintained tables must therefore be TYPE-stable on key
     * columns (round-13 advice). Sums are recorded only when `sums`: the
-    * caller turns them off under [[RecordSumsConf]], past
-    * [[SumScanMaxFilesConf]], and for in-claim residual scans. */
+    * caller turns them off past [[SumScanMaxFilesConf]] and for in-claim
+    * residual scans. */
   private def scanFooters(spark: SparkSession, paths: RDD[String], probes: Seq[String],
                           table: String, keyCols: Seq[String], sums: Boolean,
                           keep: RDD[Row] => RDD[Row]): Entries = {

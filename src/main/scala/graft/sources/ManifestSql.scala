@@ -311,9 +311,9 @@ case class ManifestPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
   *    manifest file-set signature, cap) — a dashboard re-issuing the
   *    same star query pays the planning-time dim job once, and
   *    `manifest --update` invalidates by landing new part names.
-  *  - `graft.manifest.joinPrune=false` turns the rule off; a nested
-  *    planning-time execution never re-enters the rule (re-entrancy
-  *    guard), so recursive dim plans cost at most one extra level.
+  *  - a nested planning-time execution never re-enters the rule
+  *    (re-entrancy guard), so recursive dim plans cost at most one extra
+  *    level.
   *
   * Composition with [[ManifestPruneRule]]: this rule runs FIRST (see
   * [[graft.plans.GraftExtensions.rules]]) and folds the conjuncts of every fact-side
@@ -329,13 +329,11 @@ case class ManifestJoinPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
   import org.apache.spark.sql.catalyst.plans._
   import org.apache.spark.sql.catalyst.plans.logical._
 
-  val EnabledConf = "graft.manifest.joinPrune"
   val MaxKeysConf = "graft.manifest.joinPruneMaxKeys"
   val MaxKeysDefault = 10000
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (ManifestJoinPruneRule.inPlanningExec.get() ||
-        !spark.conf.get(EnabledConf, "true").toBoolean) return plan
+    if (ManifestJoinPruneRule.inPlanningExec.get()) return plan
     plan.transformDown {
       case j @ Join(_, _, joinType, Some(cond), _)
           if !j.isStreaming =>
@@ -1423,22 +1421,17 @@ private[sources] case object UnscaledDoubleSum extends SumShape
   * The replacement is a one-row [[LocalRelation]] carrying the original
   * output attributes, so downstream operators and exprIds are untouched
   * and the answer costs zero Spark jobs (LocalTableScan collects
-  * driver-side). `graft.manifest.metadataAgg=false` turns the rewrite
-  * off. Runs BEFORE the prune rules (see [[graft.plans.GraftExtensions.rules]]) — they
+  * driver-side). Runs BEFORE the prune rules (see [[graft.plans.GraftExtensions.rules]]) — they
   * drop the marker options this rule matches on. */
 case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   import org.apache.spark.sql.catalyst.expressions.aggregate._
   import org.apache.spark.sql.catalyst.plans.logical._
 
-  val EnabledConf = "graft.manifest.metadataAgg"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.get(EnabledConf, "true").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case agg: Aggregate => rewrite(agg).getOrElse(agg)
     }
-  }
 
   private def rewrite(agg0: Aggregate): Option[LogicalPlan] = {
     // normalize FIRST: Spark's grouping-expression extraction rewrites
@@ -1925,8 +1918,7 @@ case class ManifestAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
   *    Projects and Filters whose every conjunct the coverage classifier
   *    understands (an unclassifiable conjunct could hide a partial file
   *    inside a "guaranteed" count, so it declines whole);
-  *  - the manifest catalogs EXACTLY the relation's current files;
-  *  - `graft.manifest.topkPrune=false` turns the rule off.
+  *  - the manifest catalogs EXACTLY the relation's current files.
   *
   * Same maintained-catalog contract as the prune rules: once skipping
   * engages, a file the manifest does not know is not scanned — `update`
@@ -1935,15 +1927,11 @@ case class ManifestTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   import org.apache.spark.sql.catalyst.plans.logical._
 
-  val EnabledConf = "graft.manifest.topkPrune"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.get(EnabledConf, "true").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case lim @ Limit(le @ IntegerLiteral(n), inner) if n > 0 =>
         rewriteUnder(n, inner).map(Limit(le, _)).getOrElse(lim)
     }
-  }
 
   /** The global Sort directly under the limit — possibly behind the
     * deterministic Projects the optimizer pushes between them when the

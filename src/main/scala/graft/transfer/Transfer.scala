@@ -351,13 +351,14 @@ final class TransferEngine(
     * would collide with the checkpoint's "0 = never started" convention
     * for tables whose chunk keys are negative or cross zero.
     *
-    * One scan finds the bounds (the key column only); one more reads the
-    * pending chunks' rows into a [[StagedChunks]] shuffle. The sink then
+    * One scan finds the bounds and counts the rows (the key column only);
+    * one more reads the pending chunks' rows into a [[StagedChunks]]
+    * shuffle. The sink then
     * gets one `writeChunk` per chunk, in key order, each followed by its
     * checkpoint commit. */
   private def transferChunked(spark: SparkSession, df: DataFrame,
                               table: String, keyCol: String): Long = {
-    import org.apache.spark.sql.functions.{col, count, max, min, when}
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
     import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
     val cp = checkpoint.get
     // chunks are ranges of the RAW key, so the key type must be
@@ -377,12 +378,12 @@ final class TransferEngine(
     require(integral,
       s"chunk column $keyCol of $table must be integral (or decimal scale 0), " +
         s"got ${keyType.simpleString}")
-    // null count rides the same scan as the bounds — no extra pass; bounds
-    // computed at decimal(38,0) so a wide-decimal key can't wrap through a
-    // long cast before the range check
+    // null and row counts ride the same scan as the bounds — no extra pass;
+    // bounds computed at decimal(38,0) so a wide-decimal key can't wrap
+    // through a long cast before the range check
     val bounds = df.agg(
       min(col(keyCol).cast(DecimalType(38, 0))), max(col(keyCol).cast(DecimalType(38, 0))),
-      count(when(col(keyCol).isNull, 1))).head()
+      count(when(col(keyCol).isNull, 1)), count(lit(1))).head()
     require(bounds.getLong(2) == 0L,
       s"chunk column $keyCol of $table has ${bounds.getLong(2)} NULL keys; " +
         "rows with NULL chunk keys would be silently skipped")
@@ -429,7 +430,9 @@ final class TransferEngine(
       } finally staged.release()
     }
     sink.finish(spark, table)
-    sink.countRows(spark, table).getOrElse(df.count())
+    // a sink that cannot count (a resume in a fresh engine) reports the
+    // source rows the bounds pass counted, not a second read of the source
+    sink.countRows(spark, table).getOrElse(bounds.getLong(3))
   }
 
   /** Transfer all tables, skipping checkpointed-complete ones; `workers`

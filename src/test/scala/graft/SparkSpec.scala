@@ -21,14 +21,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * hold neither native form. */
   def composedRows(df: => DataFrame): Array[Row] = {
     graft.plans.GraftExtensions.install(spark)
-    withConf("spark.sql.optimizer.excludedRules",
-        graft.plans.NativeTextRewrites.ruleName) {
+    withoutRules(graft.plans.NativeTextRewrites.ruleName) {
       val d = df
       val plan = d.queryExecution.optimizedPlan.toString
       assert(!plan.contains("sig_agree") && !plan.contains("word_ngrams"), plan)
       d.collect()
     }
   }
+
+  /** Runs `body` with the optimizer rules named `names` (their
+    * `ruleName`, e.g. `graft.sources.ManifestAggRule`) excluded through
+    * Spark's own `spark.sql.optimizer.excludedRules`. */
+  def withoutRules[T](names: String*)(body: => T): T =
+    withConf("spark.sql.optimizer.excludedRules", names.mkString(","))(body)
 
   /** Runs `body` with the session conf `key` at `value`, then restores
     * the value set before (or unsets it). */

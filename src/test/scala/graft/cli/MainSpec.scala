@@ -63,8 +63,7 @@ class MainSpec extends SparkSpec {
         Seq[java.lang.Long](null, null, null, null), Seq[java.lang.Long](1000L, 1001L))
       .foreach(_.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/t.parquet"))
     val mp = s"$dir/_manifest/t"
-    Manifest.write(Manifest.fromFooters(spark,
-        spark.read.parquet(s"$dir/t.parquet").inputFiles.toSeq, "t", Seq("id"))
+    Manifest.write(Manifest.build(spark, dir, "t", Seq("id"))
       .withColumn("unknown", col("maxs.id") === 1001L)
       .withColumn("mins", when(col("unknown"), lit(null)).otherwise(col("mins")))
       .withColumn("maxs", when(col("unknown"), lit(null)).otherwise(col("maxs")))
@@ -93,10 +92,8 @@ class MainSpec extends SparkSpec {
     Seq((2L, 20L)).toDF("id", "x").coalesce(1)
       .write.mode("append").parquet(s"$dir/t.parquet")
     val mp = s"$dir/_manifest/t"
-    spark.conf.set(graft.sources.Manifest.RecordSumsConf, "false")
-    try graft.sources.Manifest.updateDir(spark, s"$dir/t.parquet", "t",
-      Seq("id", "x"), mp)
-    finally spark.conf.unset(graft.sources.Manifest.RecordSumsConf)
+    withConf(graft.sources.Manifest.SumScanMaxFilesConf, "0")(
+      graft.sources.Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id", "x"), mp))
     spark.conf.set(graft.sources.Manifest.SumScanMaxFilesConf, "1")
     try {
       val (code, out) = runCli("manifest", "--source", dir, "--table", "t",

@@ -31,27 +31,20 @@ class ContainmentCappedSpec extends SparkSpec {
   test("exchangeFactor conf widens the pair exchange past the stats threshold (default 8)") {
     import spark.implicits._
     // corpus big enough (plan stats > the 2 MiB threshold) that the
-    // pre-aggregation exchange engages; the round-13 A/B fixed default 8,
-    // and the session conf is the cluster-sizing knob. LocalRelation stats
+    // pre-aggregation exchange engages at the factor the round-13 A/B
+    // fixed (8x default parallelism). LocalRelation stats
     // price strings at the default width regardless of content, so the
     // threshold is crossed by ROW COUNT — plan-only, nothing executes.
     val docs = (1L to 70000L).map(id => (id, s"doc$id")).toDF("doc_id", "text")
     assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes >=
       Dedup.ContainmentExchangeThresholdBytes, "fixture must cross the threshold")
-    def exchangeParts(): Option[Int] = {
-      val out = Dedup.containmentPairs(docs, "doc_id", "text",
-        k = 3, maxDf = 20, minContainment = 0.8)
-      out.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
-          r.optNumPartitions
-      }.flatten.headOption
-    }
-    val par = spark.sparkContext.defaultParallelism
-    try {
-      assert(exchangeParts() === Some(par * 8))
-      spark.conf.set("graft.containment.exchangeFactor", "16")
-      assert(exchangeParts() === Some(par * 16))
-    } finally spark.conf.unset("graft.containment.exchangeFactor")
+    val out = Dedup.containmentPairs(docs, "doc_id", "text",
+      k = 3, maxDf = 20, minContainment = 0.8)
+    val exchangeParts = out.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+        r.optNumPartitions
+    }.flatten.headOption
+    assert(exchangeParts === Some(spark.sparkContext.defaultParallelism * 8))
   }
 
   test("capped census truncates every inverted list to the cap") {

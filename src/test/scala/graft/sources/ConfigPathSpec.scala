@@ -80,6 +80,20 @@ class ConfigPathSpec extends SparkSpec {
     assert(filesRead(conf.sql(star)) === 2L)
   }
 
+  test("spark.sql.optimizer.excludedRules switches a manifest rule off on both paths alike") {
+    val agg = classOf[ManifestAggRule].getName
+    val key = "spark.sql.optimizer.excludedRules"
+    conf.conf.set(key, agg)
+    try withoutRules(agg) {
+      Seq(counted, summed, pruned).foreach { q =>
+        assert(filesRead(conf.sql(q)) === filesRead(spark.sql(q)), q)
+        assert(conf.sql(q).collect().toSeq === spark.sql(q).collect().toSeq, q)
+      }
+      // without the aggregate rule the counts scan; the prune rule still skips
+      assert(Seq(counted, summed, pruned).map(q => filesRead(conf.sql(q))) === Seq(5L, 5L, 2L))
+    } finally conf.conf.unset(key)
+  }
+
   test("a session carrying both the extension and install runs each manifest rule once") {
     conf.sql(counted).collect() // the optimizer (and the extension's hook) is built
     GraftExtensions.install(conf)

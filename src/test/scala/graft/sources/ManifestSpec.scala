@@ -17,9 +17,6 @@ class ManifestSpec extends SparkSpec {
 
   private val base = Files.createTempDirectory("graft_manifest").toString
 
-  private def parquetFiles(dir: String): Seq[String] =
-    spark.read.parquet(dir).inputFiles.toSeq
-
   test("10^4-entry manifest prunes distributively; only surviving files are read") {
     import spark.implicits._
 
@@ -32,10 +29,10 @@ class ManifestSpec extends SparkSpec {
     }
     // real entries come from FOOTERS — stats read without opening a data
     // page, and typed: k is an INT zone map, not a string
-    val realEntries = Manifest.fromFooters(spark,
-      (0 until 10).flatMap(d => parquetFiles(s"$dataDir/docs.parquet/shard=$d")),
-      "docs", Seq("k"))
-    assert(realEntries.schema("mins").dataType.simpleString === "struct<k:int>")
+    val manifestPath = s"$base/manifest"
+    Manifest.update(spark, dataDir, "docs", Seq("k"), manifestPath)
+    assert(spark.read.parquet(manifestPath).schema("mins").dataType.simpleString ===
+      "struct<k:int>")
     // 9,990 SYNTHETIC entries: nonexistent paths, key ranges disjoint from
     // every real shard (offset by 10^6) — pruning must drop all of them
     val synthetic = (0 until 9990).map { i =>
@@ -47,9 +44,7 @@ class ManifestSpec extends SparkSpec {
       .withColumn("nulls", struct(lit(null).cast("long").as("k")))
       .withColumn("sums", struct(lit(null).cast("long").as("k")))
       .select((Manifest.columns :+ Manifest.SumsColumn).map(col): _*)
-    val manifestPath = s"$base/manifest"
-    Manifest.write(
-      realEntries.unionByName(synthetic).repartition(8), manifestPath)
+    Manifest.append(spark, synthetic.repartition(8), manifestPath)
 
     // keys [200, 399] (shards 2 and 3) — file-level zone-map semantics,
     // NUMERIC comparison; the snapshot bound at 0 sends every read through
@@ -87,9 +82,7 @@ class ManifestSpec extends SparkSpec {
     (100L to 200L).toDF("id").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/hi")
     val mp = s"$base/numkeys_manifest"
-    Manifest.write(Manifest.fromFooters(spark,
-      parquetFiles(s"$dir/lo") ++ parquetFiles(s"$dir/hi"),
-      "t", Seq("id")), mp)
+    Manifest.updateDir(spark, dir, "t", Seq("id"), mp)
     // the one survivor holds 101 rows: the [100..200] file
     assert(Manifest.slice(spark, mp, "t", col("id").between(90L, 10000000L)) ===
       Manifest.Slice(101L, 1L), "numeric zone map must keep the [100..200] file")
@@ -105,9 +98,7 @@ class ManifestSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet/f=$f")
     }
     val mp = s"$base/multikey_manifest"
-    Manifest.write(Manifest.fromFooters(spark,
-      (0 until 4).flatMap(f => parquetFiles(s"$dir/t.parquet/f=$f")),
-      "t", Seq("d", "c")), mp)
+    Manifest.update(spark, dir, "t", Seq("d", "c"), mp)
     // first column alone: every file overlaps [0, 49]
     assert(Manifest.slice(spark, mp, "t", col("d").between(0L, 49L)).files === 4)
     // conjunction: c ∈ [150, 160] lives only in file f1
@@ -116,18 +107,6 @@ class ManifestSpec extends SparkSpec {
     val got = ManifestSql.readTable(spark, dir, "t", mp).filter(pred)
     assert(got.inputFiles.length === 1 && got.inputFiles.head.contains("/f=1/"))
     assert(got.count() === 6) // 150,152,...,160
-  }
-
-  test("fromFooters matches the full-scan build exactly (rows, typed min/max, nulls)") {
-    val scanned = Manifest.build(spark, sfDir, "orders", Seq("o_orderdate", "o_custkey"))
-      .select("path", "rows", "mins", "maxs", "nulls")
-    val footers = Manifest.fromFooters(spark,
-      spark.read.parquet(s"$sfDir/orders.parquet").inputFiles.toSeq,
-      "orders", Seq("o_orderdate", "o_custkey"))
-      .select("path", "rows", "mins", "maxs", "nulls")
-    assert(scanned.schema.simpleString === footers.schema.simpleString)
-    assert(scanned.exceptAll(footers).isEmpty && footers.exceptAll(scanned).isEmpty,
-      "footer stats must equal a full data scan's min/max/rows")
   }
 
   test("build() bootstraps a manifest from an existing fixture table") {
@@ -176,8 +155,7 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.slice(spark, mp, "t",
       col("id").between(90L, 999L)).rows === 0L)
     // a divergent key set must fail loudly, not corrupt the manifest
-    val bad = Manifest.fromFooters(spark,
-      parquetFiles(s"$dataDir/t.parquet"), "t2", Seq.empty[String])
+    val bad = Manifest.build(spark, dataDir, "t", Seq.empty[String])
     val e = intercept[IllegalArgumentException](
       Manifest.append(spark, bad, mp))
     assert(e.getMessage.contains("key columns"))
@@ -608,14 +586,13 @@ class ManifestSpec extends SparkSpec {
     val updated = got.select("path", "sums.id", "sums.x").collect()
       .map(r => r.getString(0) -> (r.get(1), r.get(2))).toMap
     assert(built === updated)
-    // recordSums=false restores the strictly footer-only update
+    // a sum-scan cap of 0 keeps the update strictly footer-only
     val mpOff = s"$base/sums_manifest_off"
-    spark.conf.set(Manifest.RecordSumsConf, "false")
-    try {
+    withConf(Manifest.SumScanMaxFilesConf, "0") {
       Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id"), mpOff)
       assert(spark.read.parquet(mpOff).select("sums.id").collect()
         .forall(_.isNullAt(0)))
-    } finally spark.conf.unset(Manifest.RecordSumsConf)
+    }
   }
 
   test("append aligns the optional sums column in both directions") {
@@ -651,11 +628,10 @@ class ManifestSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(s"$dir/t.parquet")
     Seq[(java.lang.Long, String)]((null, "c"), (null, "d")).toDF("id", "v")
       .coalesce(1).write.mode("append").parquet(s"$dir/t.parquet")
-    // case 1: sums RECORDED as NULL (recordSums off at update time)
+    // case 1: sums RECORDED as NULL (a sum-scan cap of 0 at update time)
     val mp1 = s"$base/backfill_m1"
-    spark.conf.set(Manifest.RecordSumsConf, "false")
-    try Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id"), mp1)
-    finally spark.conf.unset(Manifest.RecordSumsConf)
+    withConf(Manifest.SumScanMaxFilesConf, "0")(
+      Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id"), mp1))
     assert(spark.read.parquet(mp1).select("sums.id").collect().forall(_.isNullAt(0)))
     val v1 = Manifest.version(spark, mp1)
     // only the value-bearing file needs a scan; the all-null file's NULL
@@ -1022,9 +998,8 @@ class ManifestSpec extends SparkSpec {
     writeSingleFile(Seq((2L, 5L, "b")).toDF("id", "x", "v"),
       s"$dir/t.parquet", "b.parquet")
     val mp = s"$base/backfill_cursor_m"
-    spark.conf.set(Manifest.RecordSumsConf, "false")
-    try Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id", "x"), mp)
-    finally spark.conf.unset(Manifest.RecordSumsConf)
+    withConf(Manifest.SumScanMaxFilesConf, "0")(
+      Manifest.updateDir(spark, s"$dir/t.parquet", "t", Seq("id", "x"), mp))
     spark.conf.set(Manifest.SumScanMaxFilesConf, "1")
     try {
       // a single bounded pass takes only {a}: fills its id sum but can
@@ -1146,7 +1121,7 @@ class ManifestSpec extends SparkSpec {
     import spark.implicits._
     // every maintenance shape on one fixture: an int key (summed), a
     // string key and a date key (footer stats only), nulls, an empty
-    // file, a batch over the sums cap, a batch with recordSums off, and
+    // file, a batch over the sums cap, a batch under a cap of 0, and
     // an Overwrite whose stale entries force the rewrite path
     val dir = s"$base/parity"
     val tdir = s"$dir/t.parquet"
@@ -1173,9 +1148,9 @@ class ManifestSpec extends SparkSpec {
     val overCap = filesOf() -- summed
     assert(overCap.size === 2)
     val before2 = filesOf()
-    spark.conf.set(Manifest.RecordSumsConf, "false")
-    try { batch(90, 20, 1); Manifest.updateDir(spark, tdir, "t", keys, mp) }
-    finally spark.conf.unset(Manifest.RecordSumsConf)
+    withConf(Manifest.SumScanMaxFilesConf, "0") {
+      batch(90, 20, 1); Manifest.updateDir(spark, tdir, "t", keys, mp)
+    }
     val unsummed = overCap ++ (filesOf() -- before2)
 
     def check(recorded: Set[String]): Unit = {

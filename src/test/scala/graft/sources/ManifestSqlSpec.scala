@@ -18,6 +18,10 @@ class ManifestSqlSpec extends SparkSpec {
   private val base = Files.createTempDirectory("graft_manifest_sql").toString
   private val dataDir = s"$base/data"
   private val mp = s"$base/manifest"
+  // rule names for Spark's spark.sql.optimizer.excludedRules
+  private val AggRule = classOf[ManifestAggRule].getName
+  private val JoinRule = classOf[ManifestJoinPruneRule].getName
+  private val TopKRule = classOf[ManifestTopKRule].getName
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -68,12 +72,11 @@ class ManifestSqlSpec extends SparkSpec {
     // round-16 hybrid SUM answers the covered middle file from stats and
     // scans only the two straddled boundary files (pinned below)
     val sql = "SELECT count(*) AS n, sum(id) AS s FROM mt WHERE id >= 150 AND id <= 340"
-    spark.conf.set("graft.manifest.metadataAgg", "false")
     val q = spark.sql(sql)
-    try {
+    withoutRules(AggRule) {
       val files = scannedFiles(q)
       assert(files.length === 3, s"expected files f1,f2,f3 only: $files")
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
     // and the answer is exactly the raw recompute — pruning lost no rows
     val raw = spark.read.parquet(s"$dataDir/t.parquet")
       .filter(col("id").between(150L, 340L))
@@ -191,28 +194,26 @@ class ManifestSqlSpec extends SparkSpec {
 
     // the IS NOT NULL Spark inserts under a comparison skips the all-null
     // file even though its zone map is NULL (unknown range, kept by the
-    // range bound alone). metadataAgg off: the hybrid aggregate would
-    // scan only the mixed file (also correct, pinned in its own test) —
-    // this pins the PRUNE path
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    // range bound alone). The aggregate rule is excluded: the hybrid
+    // aggregate would scan only the mixed file (also correct, pinned in
+    // its own test) — this pins the PRUNE path
+    withoutRules(AggRule) {
       val qCmp = spark.sql("SELECT count(*) AS n FROM nt WHERE id >= 1")
       assert(scannedFiles(qCmp).length === 2, "all-null file must be skipped")
       assert(qCmp.head.getLong(0) === 3L)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
   }
 
   test("the DataFrame API prunes the same way — the rule sees plans, not SQL text") {
-    // metadataAgg off: the hybrid would scan only the two straddled
-    // boundary files — this pins the PRUNE path over the DataFrame API
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    // the aggregate rule excluded: the hybrid would scan only the two
+    // straddled boundary files — this pins the PRUNE path over the DataFrame API
+    withoutRules(AggRule) {
       val q = ManifestSql.readTable(spark, dataDir, "t", mp)
         .filter(col("id").between(150L, 340L))
         .agg(count(lit(1)).as("n"))
       assert(scannedFiles(q).length === 3)
       assert(q.head.getLong(0) === 191L)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
   }
 
   test("an OR of two prunable ranges scans the union of the branches' files") {
@@ -252,27 +253,25 @@ class ManifestSqlSpec extends SparkSpec {
     val dmp = s"$base/datemanifest"
     Manifest.update(spark, dir, "t", Seq("d"), dmp)
     ManifestSql.register(spark, dir, "t", dmp, "datet")
-    // metadataAgg off: the metadata-aggregate rule would answer this
-    // count with ZERO files (also correct, pinned elsewhere) — this test
-    // pins the cast-wrapped PRUNE path
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    // the aggregate rule excluded: it would answer this count with ZERO
+    // files (also correct, pinned elsewhere) — this test pins the
+    // cast-wrapped PRUNE path
+    withoutRules(AggRule) {
       val q = spark.sql(
         """SELECT count(*) AS n FROM datet
           |WHERE d >= TIMESTAMP '2020-02-01 00:00:00'
           |  AND d <= TIMESTAMP '2020-02-28 23:59:59'""".stripMargin)
       assert(scannedFiles(q).length === 1, "only the February file may be opened")
       assert(q.head.getLong(0) === 3L)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
   }
 
   test("a numeric cast-wrapped bound prunes: bigint key vs fractional literal") {
     // `id <= 250.5` coerces the BIGINT attribute into a decimal Cast —
     // the q194 oracle pins losslessness; this pins the file SKIPPING
-    // (metadataAgg off: the hybrid aggregate would scan boundary files
-    // only — also correct, pinned in its own test)
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    // (the aggregate rule excluded: the hybrid aggregate would scan
+    // boundary files only — also correct, pinned in its own test)
+    withoutRules(AggRule) {
       val q = spark.sql(
         "SELECT count(*) AS n FROM mt WHERE id <= 250.5")
       assert(scannedFiles(q).length === 3, "ids <= 250.5 live in f0..f2 only")
@@ -281,7 +280,7 @@ class ManifestSqlSpec extends SparkSpec {
       val q2 = spark.sql("SELECT count(*) AS n FROM mt WHERE id >= 449.5")
       assert(scannedFiles(q2).length === 1)
       assert(q2.head.getLong(0) === 50L)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
   }
 
   test("a stale manifest never loses rows when nothing prunes (round-12 advice)") {
@@ -426,17 +425,15 @@ class ManifestSqlSpec extends SparkSpec {
     assert(scannedFiles(q).length === 1, "only the February file may be opened")
     assert(q.head.getLong(0) === 2L)
     // TO_DATE(ts) optimizes to Cast(ts AS DATE) — prune through it
-    // (metadataAgg off through execution: the metadata-aggregate rule
-    // would answer this count with ZERO files once
-    // UnwrapCastInBinaryComparison bares the attribute — this assert
+    // (the aggregate rule excluded through execution: it would answer
+    // this count with ZERO files once UnwrapCastInBinaryComparison bares the attribute — this assert
     // pins the PRUNE path)
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    withoutRules(AggRule) {
       val q2 = spark.sql(
         "SELECT count(*) AS n FROM tst WHERE to_date(t) >= DATE '2020-03-01'")
       assert(scannedFiles(q2).length === 1)
       assert(q2.head.getLong(0) === 2L)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
     // a non-monotone wrapper (MONTH wraps around each year) must decline
     val q3 = spark.sql("SELECT count(*) AS n FROM tst WHERE MONTH(t) = 2")
     assert(scannedFiles(q3).length === 3, "MONTH is not monotone — keep all")
@@ -475,15 +472,14 @@ class ManifestSqlSpec extends SparkSpec {
       .write.mode("append").parquet(s"$sdir/t.parquet")
     Manifest.update(spark, sdir, "t", Seq("id"), smp)
     ManifestSql.register(spark, sdir, "t", smp, "snapt") // refresh the view's own index
-    // metadataAgg off: the fully-covered count would otherwise be
+    // the aggregate rule excluded: the fully-covered count would otherwise be
     // answered with ZERO files (also correct); this pins the SNAPSHOT
     // freshness of the prune path
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    withoutRules(AggRule) {
       val q = spark.sql("SELECT count(*) AS n FROM snapt WHERE id >= 9000")
       assert(scannedFiles(q).length === 1, "the post-update snapshot knows the new file")
       assert(q.head.getLong(0) === 100L)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
   }
 
   test("hive partition pruning and zone maps compose (round-13 verdict item 4)") {
@@ -710,14 +706,13 @@ class ManifestSqlSpec extends SparkSpec {
       assert(scannedFiles(qCap).length === 5)
       assert(qCap.head.getLong(0) === 2L)
     } finally spark.conf.unset("graft.manifest.joinPruneMaxKeys")
-    // and the kill switch turns the rule off outright
-    spark.conf.set("graft.manifest.joinPrune", "false")
-    try {
+    // and excluding the rule turns it off outright
+    withoutRules(JoinRule) {
       val qOff = spark.sql(
         "SELECT count(*) AS n FROM mt f JOIN jp_dim2 d ON f.id = d.k")
       assert(scannedFiles(qOff).length === 5)
       assert(qOff.head.getLong(0) === 2L)
-    } finally spark.conf.unset("graft.manifest.joinPrune")
+    }
   }
 
   test("a filter on an alias SHADOWING a key name never folds into the join prune") {
@@ -951,13 +946,12 @@ class ManifestSqlSpec extends SparkSpec {
     val qSumPart = spark.sql("SELECT sum(id) AS s FROM mt WHERE id >= 150")
     assert(scannedFiles(qSumPart).length === 1)
     assert(qSumPart.head.getLong(0) === (150L until 500L).sum)
-    // the kill switch declines
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    // excluding the rule declines
+    withoutRules(AggRule) {
       val qOff = spark.sql("SELECT count(*) AS n FROM mt")
       assert(scannedFiles(qOff).nonEmpty)
       assert(qOff.head.getLong(0) === 500L)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
   }
 
   test("metadata-aggregates handle NULL keys and decline on a stale catalog") {
@@ -1023,12 +1017,11 @@ class ManifestSqlSpec extends SparkSpec {
     val q7 = spark.sql("SELECT id FROM mt ORDER BY id DESC LIMIT 1000")
     assert(scannedFiles(q7).length === 5)
     assert(q7.count() === 500L)
-    // kill switch
-    spark.conf.set("graft.manifest.topkPrune", "false")
-    try {
+    // excluding the rule keeps every file
+    withoutRules(TopKRule) {
       val qOff = spark.sql("SELECT id FROM mt ORDER BY id DESC LIMIT 10")
       assert(scannedFiles(qOff).length === 5)
-    } finally spark.conf.unset("graft.manifest.topkPrune")
+    }
   }
 
   test("top-k pruning accounts NULL keys under the default null placements") {
@@ -1099,9 +1092,7 @@ class ManifestSqlSpec extends SparkSpec {
     Manifest.update(spark, dir, "t", Seq("d", "id"), amp)
     ManifestSql.register(spark, dir, "t", amp, "avt")
     def offOn(sql: String): (org.apache.spark.sql.Row, org.apache.spark.sql.Row, Int) = {
-      spark.conf.set("graft.manifest.metadataAgg", "false")
-      val off = try spark.sql(sql).head finally
-        spark.conf.unset("graft.manifest.metadataAgg")
+      val off = withoutRules(AggRule)(spark.sql(sql).head)
       val q = spark.sql(sql)
       val files = scannedFiles(q).length
       (off, q.head, files)
@@ -1184,12 +1175,11 @@ class ManifestSqlSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(s"$dir/t.parquet")
     Seq[(java.lang.Long, String)]((null, "c"), (null, "d")).toDF("id", "v")
       .coalesce(1).write.mode("append").parquet(s"$dir/t.parquet")
-    // sums-less catalog (recordSums off): SUM must decline to the scan,
-    // COUNT/MIN/MAX still answer joblessly
+    // sums-less catalog (a sum-scan cap of 0): SUM must decline to the
+    // scan, COUNT/MIN/MAX still answer joblessly
     val mpOff = s"$base/sumdecline_manifest"
-    spark.conf.set(Manifest.RecordSumsConf, "false")
-    try Manifest.update(spark, dir, "t", Seq("id"), mpOff)
-    finally spark.conf.unset(Manifest.RecordSumsConf)
+    withConf(Manifest.SumScanMaxFilesConf, "0")(
+      Manifest.update(spark, dir, "t", Seq("id"), mpOff))
     ManifestSql.register(spark, dir, "t", mpOff, "sdt")
     val qs = spark.sql("SELECT sum(id) AS s FROM sdt")
     assert(scannedFiles(qs).nonEmpty, "NULL sums over real rows must decline")
@@ -1261,13 +1251,12 @@ class ManifestSqlSpec extends SparkSpec {
     val qNonKey = spark.sql(
       "SELECT x, count(*) AS n FROM grp GROUP BY x HAVING x = 1 ORDER BY x")
     assert(qNonKey.collect().map(_.toSeq).toSeq === Seq(Seq(1L, 1L)))
-    // the kill switch declines the grouped rewrite too
-    spark.conf.set("graft.manifest.metadataAgg", "false")
-    try {
+    // excluding the rule declines the grouped rewrite too
+    withoutRules(AggRule) {
       val qOff = spark.sql(sql)
       assert(scannedFiles(qOff).length === 5)
       assert(qOff.collect().map(_.toSeq).toSeq === got.toSeq)
-    } finally spark.conf.unset("graft.manifest.metadataAgg")
+    }
     // past the snapshot cap the grouped path folds DISTRIBUTED with the
     // group map capped — same answers, still mixed-file-only scan
     spark.conf.set(ManifestSnapshot.MaxBytesConf, "1")
@@ -1583,7 +1572,7 @@ class ManifestSqlSpec extends SparkSpec {
       Seq("x = 0.0" -> 2L, "x >= 0.0" -> 5L, "x <= 0.0" -> 2L, "x > 2.0" -> 1L,
         "x = double('NaN')" -> 1L).foreach { case (p, n) =>
         val sql = s"SELECT count(*) AS n FROM negz WHERE $p"
-        val scan = withConf("graft.manifest.metadataAgg", "false")(spark.sql(sql).head.getLong(0))
+        val scan = withoutRules(AggRule)(spark.sql(sql).head.getLong(0))
         assert(scan === n, s"the scan itself: $p")
         assert(spark.sql(sql).head.getLong(0) === scan, s"the metadata answer: $p")
       }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
+import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
@@ -85,32 +86,42 @@ class ChunkedResumeSpec extends SparkSpec {
     }
   }
 
-  /** The most shuffle records any one stage of `body` wrote. A marker job
-    * run after `body` flushes the listener bus: its start event is
-    * delivered after every task-end event of the jobs before it. */
-  private def largestShuffleWrite(body: => Unit): Long = {
+  /** The most shuffle records any one stage of `body` wrote. */
+  private def largestShuffleWrite(body: => Unit): Long =
+    perStage(_.shuffleWriteMetrics.recordsWritten)(body)._2.values.maxOption.getOrElse(0L)
+
+  /** `body`'s result and the source records its stages read. */
+  private def recordsRead[T](body: => T): (T, Long) = {
+    val (out, read) = perStage(_.inputMetrics.recordsRead)(body)
+    (out, read.values.sum)
+  }
+
+  /** `metric` summed over each stage's tasks in `body`. A marker job run
+    * after `body` flushes the listener bus: its start event is delivered
+    * after every task-end event of the jobs before it. */
+  private def perStage[T](metric: TaskMetrics => Long)(body: => T): (T, Map[Int, Long]) = {
     val marker = "chunked-resume-spec-marker"
     val perStage = mutable.Map.empty[Int, Long]
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskMetrics != null)
         perStage.synchronized {
-          perStage(e.stageId) = perStage.getOrElse(e.stageId, 0L) +
-            e.taskMetrics.shuffleWriteMetrics.recordsWritten
+          perStage(e.stageId) = perStage.getOrElse(e.stageId, 0L) + metric(e.taskMetrics)
         }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           flushed.countDown()
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      body
+    val out = try {
+      val out = body
       spark.sparkContext.setJobDescription(marker)
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      out
     } finally spark.sparkContext.removeSparkListener(listener)
-    perStage.synchronized(perStage.values.maxOption.getOrElse(0L))
+    (out, perStage.synchronized(perStage.toMap))
   }
 
   /** Transfers `keys` (one column `k` of `keyType`, plus a payload) from
@@ -221,6 +232,30 @@ class ChunkedResumeSpec extends SparkSpec {
     assert(rerunSink.chunks.size == 3 && rerunSink.chunks.map(_.size.toLong).sum == pending)
     assert(staged == pending, s"the rerun staged $staged rows; chunks 3–5 hold $pending")
     assert(rerunSource.emitted.value == total, "the rerun read the source more than once")
+  }
+
+  test("a resumed transfer into a sink that cannot count reports its rows without re-reading the source") {
+    // five files, one per chunk's key range, so the rerun's pending-range
+    // read skips the landed chunks' row groups
+    val src = Files.createTempDirectory("resumecount_src").toString
+    (0 until 5).foreach(i => spark.range(i * 1000L, (i + 1) * 1000L)
+      .selectExpr("id AS k", "id % 7 AS v").coalesce(1)
+      .write.mode("append").parquet(s"$src/resumecount.parquet"))
+    val out = Files.createTempDirectory("resumecount").toString
+    def engine(sink: TableSink) = new TransferEngine(new ParquetSource(src), sink,
+      Some(new CheckpointManager(s"$out/ckpt.json", "sf", "csv")),
+      chunkColumns = Map("resumecount" -> "k"), chunkCount = 5)
+    // crash while chunk 3 of 5 is written
+    assert(!engine(new FlakySink(new CsvBulkSink(out), failOnChunk = 2))
+      .transferTable(spark, "resumecount").success)
+    // the rerun's sink is fresh, so it has no count for the table
+    val (stats, read) = recordsRead(engine(new CsvBulkSink(out)).transferTable(spark, "resumecount"))
+    assert(stats.success, stats.errorMessage)
+    assert(stats.rowsTransferred == 5000L)
+    assert(spark.read.text(s"$out/resumecount.csv").count() == 5000L)
+    // the key-only bounds pass reads every row, the staging read only
+    // chunks 3–5; no further read counts the source
+    assert(read == 5000L + 3000L, s"the rerun read $read source rows")
   }
 
   test("a crash after a chunk lands and before its checkpoint duplicates exactly that chunk") {
