@@ -1,11 +1,11 @@
 package graft
 
-import java.util.concurrent.locks.ReentrantLock
-
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
 
 /** The one place a graft tool builds its Spark session, and the one place
-  * an operator scopes a session-conf change. */
+  * an iterative operator gets a session of its own for its rounds: a clone
+  * whose conf changes never reach the caller's session. */
 object GraftSession {
 
   /** Local cores: `SPARK_GRAFT_CPUS` when set, else every processor the
@@ -27,28 +27,23 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 
-  private val loopLocks = new java.util.WeakHashMap[SparkSession, ReentrantLock]()
-
-  /** Run an iterative operator's rounds with AQE off at `width` shuffle
-    * partitions, restoring both confs after. Each round's exchanges would
-    * otherwise surface as their own AQE stage-jobs; the caller sizes
-    * `width` from its data-proportional checkpoints. One lock per session,
-    * re-entrant on the same thread: two loops on one session run one after
-    * the other instead of restoring each other's values. */
-  def withLoopConf[T](spark: SparkSession, width: Int)(body: => T): T = {
-    val lock = loopLocks.synchronized(
-      loopLocks.computeIfAbsent(spark, _ => new ReentrantLock()))
-    lock.lock()
-    try {
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-      try body
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-    } finally lock.unlock()
+  /** Run an iterative operator's rounds on a clone of `spark` with AQE off
+    * at `width` shuffle partitions (each round's exchanges would otherwise
+    * surface as their own AQE stage-jobs), and hand `body`'s result back
+    * bound to `spark`, whose confs never change. `body` gets the
+    * checkpoints `inputs` rebound into the clone, in order. The clone's
+    * graft rules are `spark`'s instances, bound to `spark`; loop bodies
+    * read only checkpoints, so the manifest rules never fire there. A body
+    * must not call [[graft.sources.Tables.loadCached]] or `registerAll`:
+    * those maps key on the session and would hold the clone for good. */
+  def withLoopSession(spark: SparkSession, width: Int, inputs: DataFrame*)(
+      body: Seq[DataFrame] => DataFrame): DataFrame = {
+    val loop = PlanBridge.cloneSession(spark)
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop.conf.set("spark.sql.shuffle.partitions", width.toLong)
+    rebind(spark, body(inputs.map(rebind(loop, _))))
   }
+
+  private def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    PlanBridge.ofRows(spark, df.queryExecution.logical)
 }

@@ -27,6 +27,11 @@ object ColumnBridge {
   * test session was built with, and lets the transfer engine hand a sink
   * its staged chunks as frames. */
 object PlanBridge {
+  /** A session sharing `spark`'s context and cache, with copies of its
+    * conf, functions, temp views and extra optimizations. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =

@@ -369,7 +369,7 @@ object Dedup {
     val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    var labels = edges.select(col("src").as("node")).distinct()
+    val start = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label")).localCheckpoint(true)
     // The loop's per-round state is one row per node/edge, materialized
     // above; from here every round is a fixed join+aggregate shape whose
@@ -377,51 +377,51 @@ object Dedup {
     // stages of pure job latency behind the two real minhash stages in the
     // q70/q114/q145 profiles. AQE has nothing left to adapt (the
     // checkpoints already carry its data-proportional width), so the
-    // rounds run with AQE off at exactly that width — scale-honest at any
-    // corpus size — and the session conf is restored after (the BPE-loop
-    // discipline).
-    val spark = edges.sparkSession
+    // rounds run on a loop session with AQE off at exactly that width —
+    // scale-honest at any corpus size (the BPE-loop discipline).
     val loopWidth = math.max(1,
-      math.max(edges.rdd.getNumPartitions, labels.rdd.getNumPartitions))
-    graft.GraftSession.withLoopConf(spark, loopWidth) {
+      math.max(edges.rdd.getNumPartitions, start.rdd.getNumPartitions))
     var iter = 0
-    var converged = false
-    // convergence probe: labels only ever DECREASE, so the label sum is
-    // strictly monotone while anything changes — an equal sum means a
-    // fixpoint. One aggregate job per round, vs the join+filter+count
-    // formulation's extra shuffle; decimal sum so 2^63-adjacent ids can't
-    // overflow (ANSI mode would throw mid-round)
-    var prevSum: java.math.BigDecimal = null
-    while (!converged && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy("src").agg(min("label").as("nbr"))
-        .withColumnRenamed("src", "node")
-      val prop = labels.join(nbrMin, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-      // pointer jumping: follow the label's own label (labels are node
-      // ids, so this is a self-join) — doubles flood distance per round.
-      // LAZY checkpoint: the convergence aggregate below materializes it,
-      // storing the blocks in the same job — eager ran a separate one
-      val next = prop
-        .join(prop.select(col("node").as("label"), col("label").as("parent")),
-          Seq("label"), "left_outer")
-        .select(col("node"),
-          least(col("label"), coalesce(col("parent"), col("label"))).as("label"))
-        .localCheckpoint(false)
-      val s = next.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-      labels = next
-      converged = (s == null && prevSum == null && iter > 0) ||
-        (s != null && prevSum != null && s.compareTo(prevSum) == 0)
-      prevSum = s
-      iter += 1
+    val labels = graft.GraftSession.withLoopSession(edges.sparkSession, loopWidth,
+      edges, start) { case Seq(edges, start) =>
+      var labels = start
+      var converged = false
+      // convergence probe: labels only ever DECREASE, so the label sum is
+      // strictly monotone while anything changes — an equal sum means a
+      // fixpoint. One aggregate job per round, vs the join+filter+count
+      // formulation's extra shuffle; decimal sum so 2^63-adjacent ids can't
+      // overflow (ANSI mode would throw mid-round)
+      var prevSum: java.math.BigDecimal = null
+      while (!converged && iter < maxIter) {
+        val nbrMin = edges
+          .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
+          .groupBy("src").agg(min("label").as("nbr"))
+          .withColumnRenamed("src", "node")
+        val prop = labels.join(nbrMin, Seq("node"), "left_outer")
+          .select(col("node"),
+            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
+        // pointer jumping: follow the label's own label (labels are node
+        // ids, so this is a self-join) — doubles flood distance per round.
+        // LAZY checkpoint: the convergence aggregate below materializes it,
+        // storing the blocks in the same job — eager ran a separate one
+        val next = prop
+          .join(prop.select(col("node").as("label"), col("label").as("parent")),
+            Seq("label"), "left_outer")
+          .select(col("node"),
+            least(col("label"), coalesce(col("parent"), col("label"))).as("label"))
+          .localCheckpoint(false)
+        val s = next.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
+        labels = next
+        converged = (s == null && prevSum == null && iter > 0) ||
+          (s != null && prevSum != null && s.compareTo(prevSum) == 0)
+        prevSum = s
+        iter += 1
+      }
+      // the last round's lazy checkpoint was materialized by its
+      // convergence aggregate: the caller reads checkpointed blocks
+      labels
     }
-    // the last round's lazy checkpoint was materialized by its convergence
-    // aggregate, so the caller's downstream action reads checkpointed
-    // blocks — never a plan that depends on the restored conf
     (labels, iter)
-    }
   }
 
   /** Union-find over long ids in primitive arrays: an open-addressing

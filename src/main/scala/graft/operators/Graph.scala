@@ -39,11 +39,10 @@ object Graph {
   def pageRank(nodes: DataFrame, edges: DataFrame,
                iters: Int = 3, damping: Double = 0.85,
                scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val spark = nodes.sparkSession
-    // Materialize the loop inputs under the SESSION conf (the candidate
+    // Materialize the loop inputs under the caller's conf (the candidate
     // pipeline behind `edges` is often an LSH/KNN pipeline — q113 — and
-    // wants AQE), then run the fixed iterations with AQE off at the
-    // materialized width and drain them INSIDE the conf scope — the
+    // wants AQE), then run the fixed iterations on a loop session with AQE
+    // off at the materialized width and drain them there — the
     // componentsWithRounds/BPE-loop discipline. Left lazy, the caller's
     // single drain plans every per-iteration exchange as its own AQE
     // stage-job (~4 sub-50 ms driver round-trips per iteration in the
@@ -55,8 +54,7 @@ object Graph {
     // child subtree RE-EXECUTES per round (measured: the first cut of this
     // loop cached the inputs and q178 DOUBLED). LogicalRDD inputs plan the
     // whole fixed-depth loop as one linear sort-merge chain, executed as
-    // ONE job; the final checkpoint hands the caller materialized rows —
-    // never a plan that depends on the restored conf.
+    // ONE job; the final checkpoint hands the caller materialized rows.
     val e = scope.checkpointed(edges.select(col("src"), col("dst")))
     val n1 = nodes.agg(count(lit(1)).as("n_total"))
     val outdeg = scope.checkpointed(
@@ -71,7 +69,8 @@ object Graph {
     // q113 loss mode
     val loopWidth = math.max(1,
       math.max(outdeg.rdd.getNumPartitions, base.rdd.getNumPartitions))
-    graft.GraftSession.withLoopConf(spark, loopWidth) {
+    graft.GraftSession.withLoopSession(nodes.sparkSession, loopWidth,
+      e, outdeg, base) { case Seq(e, outdeg, base) =>
       var ranks = base.select(col("id"), col("n_total"),
         (lit(1.0) / col("n_total")).as("pr"))
       var i = 0
@@ -120,13 +119,12 @@ object Graph {
                        iters: Int = 3,
                        scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = nodes.sparkSession
     // same loop discipline as [[pageRank]]: CHECKPOINT the loop inputs
-    // under the session conf (the edges frame is often an LSH/KNN
+    // under the caller's conf (the edges frame is often an LSH/KNN
     // pipeline — q178 — and wants AQE; LogicalRDD inputs keep the static
     // planner off per-round BroadcastExchanges, whose children re-execute
-    // per round), run the fixed rounds with AQE off at the materialized
-    // width, drain inside the conf scope (each round's three exchanges
+    // per round), run the fixed rounds on a loop session with AQE off at
+    // the materialized width, drain there (each round's three exchanges
     // otherwise surface as their own AQE stage-jobs at the caller's
     // drain), hand back checkpointed rows
     val und = scope.checkpointed(edges.select(col("src"), col("dst"))
@@ -135,7 +133,8 @@ object Graph {
     val nn = scope.checkpointed(nodes.select(col("id")))
     val loopWidth = math.max(1,
       math.max(und.rdd.getNumPartitions, nn.rdd.getNumPartitions))
-    graft.GraftSession.withLoopConf(spark, loopWidth) {
+    graft.GraftSession.withLoopSession(nodes.sparkSession, loopWidth,
+      und, nn) { case Seq(und, nn) =>
       var labels = nn.select(col("id"), col("id").as("label"))
       var i = 0
       while (i < iters) {

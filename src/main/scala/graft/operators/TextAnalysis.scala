@@ -802,7 +802,7 @@ object TextAnalysis {
     // table. For the loop itself AQE is a pure tax: every exchange
     // materializes as its OWN job, putting ~5 driver round-trips behind
     // each of the 8 merges (round-17 profile: 46 jobs, wall ≈ pure job
-    // latency at 0.3 CPU/wall). So the loop runs with AQE off and a fixed
+    // latency at 0.3 CPU/wall). So a loop session runs it with AQE off at a
     // shuffle width taken from what AQE itself chose for the materialized
     // segment table — data-proportional at any scale (1 at the fixture
     // sizes, wider when the vocabulary actually is wide). Checkpoints in
@@ -813,14 +813,15 @@ object TextAnalysis {
       .select(explode(split(col(textCol), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    var seg = wc
+    val segments = wc
       .select(col("word"), col("cnt"), posexplode(expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
         .as(Seq("pos", "tok")))
       .select(col("word"), col("cnt"), col("pos").cast("long").as("pos"), col("tok"))
       .localCheckpoint(true)
-    val loopWidth = math.max(1, seg.rdd.getNumPartitions)
-    graft.GraftSession.withLoopConf(spark, loopWidth) {
+    val loopWidth = math.max(1, segments.rdd.getNumPartitions)
+    graft.GraftSession.withLoopSession(spark, loopWidth, segments) { case Seq(segments) =>
+      var seg = segments
       val byPos = Window.partitionBy(col("word")).orderBy(col("pos"))
       val merges = (0 until nMerges).flatMap { rank =>
         val withNext = seg.withColumn("nxt", lead(col("tok"), 1).over(byPos))

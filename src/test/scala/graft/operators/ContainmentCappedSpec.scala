@@ -28,7 +28,7 @@ class ContainmentCappedSpec extends SparkSpec {
       "sub-cap corpora must be untouched by the capped mode")
   }
 
-  test("exchangeFactor conf widens the pair exchange past the stats threshold (default 8)") {
+  test("pair exchange is 8x default parallelism past the threshold") {
     import spark.implicits._
     // corpus big enough (plan stats > the 2 MiB threshold) that the
     // pre-aggregation exchange engages at the factor the round-13 A/B

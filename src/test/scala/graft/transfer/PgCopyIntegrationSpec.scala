@@ -93,14 +93,18 @@ class PgCopyIntegrationSpec extends SparkSpec {
     Process(Seq("su", "-s", "/bin/bash", "postgres", "-c", cmd),
       cwd = new File("/tmp")).!(ProcessLogger(_ => (), _ => ()))
 
+  /** stdout of `psql -c sql`; stderr goes only into the failure message.
+    * The two streams are read on their own threads, so each gets its own
+    * buffer. */
   private def psql(sql: String): String = {
-    val out = new StringBuilder
+    val out = new StringBuffer
+    val err = new StringBuffer
     val code = Process(Seq("psql", "-h", sockDir.getAbsolutePath, "-p", pgPort.toString,
       "-U", "postgres",
       "-d", "postgres", "-v", "ON_ERROR_STOP=1", "-A", "-t", "-c", sql),
       cwd = new File("/tmp"))
-      .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
-    assert(code == 0, s"psql failed ($code): $sql\n$out")
+      .!(ProcessLogger(l => out.append(l).append('\n'), l => err.append(l).append('\n')))
+    assert(code == 0, s"psql failed ($code): $sql\n$err")
     out.toString
   }
 
