@@ -16,7 +16,11 @@ object GraftSession {
   /** A `local[cores]` session (or the running one) with the confs every
     * graft entry point shares: UTC session time, TIMESTAMP(NANOS) parquet
     * surfaced as a long (see [[graft.sources.Tables.load]]) and no UI.
-    * Shuffle partitions equal `cores`. */
+    * Shuffle partitions equal `cores`. Artifact isolation is off: graft
+    * adds no session artifacts, and an isolated session runs its tasks
+    * under a class loader of its own, so every loop session (a new
+    * session per loop) would recompile each generated class of its rounds
+    * (Spark's codegen cache keys on the class loader). */
   def apply(cores: Int = cpus): SparkSession =
     SparkSession.builder()
       .master(s"local[$cores]")
@@ -25,6 +29,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
 
   /** Run an iterative operator's rounds on a clone of `spark` with AQE off
@@ -33,8 +38,10 @@ object GraftSession {
     * bound to `spark`, whose confs never change. `body` gets the
     * checkpoints `inputs` rebound into the clone, in order. The clone's
     * graft rules are `spark`'s instances, bound to `spark`; loop bodies
-    * read only checkpoints, so the manifest rules never fire there. A body
-    * must not call [[graft.sources.Tables.loadCached]] or `registerAll`:
+    * read only checkpoints, so the manifest rules never fire there. The
+    * clone's tasks share the caller's class loader, and so its compiled
+    * classes, only when `spark` has artifact isolation off, as [[apply]]
+    * builds it. A body must not call [[graft.sources.Tables.loadCached]] or `registerAll`:
     * those maps key on the session and would hold the clone for good. */
   def withLoopSession(spark: SparkSession, width: Int, inputs: DataFrame*)(
       body: Seq[DataFrame] => DataFrame): DataFrame = {

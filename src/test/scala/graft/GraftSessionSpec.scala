@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.operators.{CacheScope, Graph}
@@ -67,6 +67,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(spark.conf.get("spark.ui.enabled") === "false")
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
     assert(spark.conf.get(Parts) === "4")
     assert(spark.sparkContext.master === "local[4]")
     assert(GraftSession.cpus >= 1)
@@ -121,6 +122,21 @@ class GraftSessionSpec extends SparkSpec {
     val want = GraftExtensions.rules(spark).map(_.ruleName)
     assert(want.forall(rules.contains), s"rules in the loop session: $rules")
     assert(hashed > 0L)
+  }
+
+  test("a loop session's tasks run under the caller's class loader") {
+    // a loop session under a class loader of its own recompiles every
+    // generated class of its rounds; the caller's loader reuses them
+    val loader = udf(() => System.identityHashCode(Thread.currentThread.getContextClassLoader))
+    def loaders(df: DataFrame) = df.select(loader()).distinct().collect().map(_.getInt(0)).toSet
+    val outside = loaders(spark.range(8).toDF())
+    var inside = Set.empty[Int]
+    GraftSession.withLoopSession(spark, 2, checkpoint(10)) { case Seq(in) =>
+      inside = loaders(in)
+      in
+    }
+    assert(outside.size === 1)
+    assert(inside === outside)
   }
 
   test("CacheScope releases a checkpoint taken in a loop session") {
