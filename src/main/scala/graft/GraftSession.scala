@@ -15,12 +15,9 @@ object GraftSession {
 
   /** A `local[cores]` session (or the running one) with the confs every
     * graft entry point shares: UTC session time, TIMESTAMP(NANOS) parquet
-    * surfaced as a long (see [[graft.sources.Tables.load]]) and no UI.
-    * Shuffle partitions equal `cores`. Artifact isolation is off: graft
-    * adds no session artifacts, and an isolated session runs its tasks
-    * under a class loader of its own, so every loop session (a new
-    * session per loop) would recompile each generated class of its rounds
-    * (Spark's codegen cache keys on the class loader). */
+    * surfaced as a long (see [[graft.sources.Tables.load]]), no UI, and no
+    * artifact isolation, which would give each loop session a class loader
+    * of its own to recompile its rounds in. Shuffle partitions = `cores`. */
   def apply(cores: Int = cpus): SparkSession =
     SparkSession.builder()
       .master(s"local[$cores]")
@@ -33,16 +30,15 @@ object GraftSession {
       .getOrCreate()
 
   /** Run an iterative operator's rounds on a clone of `spark` with AQE off
-    * at `width` shuffle partitions (each round's exchanges would otherwise
-    * surface as their own AQE stage-jobs), and hand `body`'s result back
-    * bound to `spark`, whose confs never change. `body` gets the
-    * checkpoints `inputs` rebound into the clone, in order. The clone's
-    * graft rules are `spark`'s instances, bound to `spark`; loop bodies
-    * read only checkpoints, so the manifest rules never fire there. The
-    * clone's tasks share the caller's class loader, and so its compiled
-    * classes, only when `spark` has artifact isolation off, as [[apply]]
-    * builds it. A body must not call [[graft.sources.Tables.loadCached]] or `registerAll`:
-    * those maps key on the session and would hold the clone for good. */
+    * at `width` shuffle partitions, and hand `body`'s result back bound to
+    * `spark`, whose confs never change. `body` gets the checkpoints
+    * `inputs` rebound into the clone, in order. The clone's graft rules
+    * are `spark`'s instances, bound to `spark`; loop bodies read only
+    * checkpoints, so the manifest rules never fire there. The clone reuses
+    * `spark`'s compiled classes when `spark` has no artifact isolation (see
+    * [[apply]]). A body must not call [[graft.sources.Tables.loadCached]]
+    * or `registerAll`: those maps key on the session and would hold the
+    * clone for good. */
   def withLoopSession(spark: SparkSession, width: Int, inputs: DataFrame*)(
       body: Seq[DataFrame] => DataFrame): DataFrame = {
     val loop = PlanBridge.cloneSession(spark)

@@ -119,14 +119,9 @@ object Graph {
                        iters: Int = 3,
                        scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // same loop discipline as [[pageRank]]: CHECKPOINT the loop inputs
-    // under the caller's conf (the edges frame is often an LSH/KNN
-    // pipeline — q178 — and wants AQE; LogicalRDD inputs keep the static
-    // planner off per-round BroadcastExchanges, whose children re-execute
-    // per round), run the fixed rounds on a loop session with AQE off at
-    // the materialized width, drain there (each round's three exchanges
-    // otherwise surface as their own AQE stage-jobs at the caller's
-    // drain), hand back checkpointed rows
+    // same loop discipline as [[pageRank]] (q178's edges are an LSH/KNN
+    // pipeline): checkpoint the inputs under the caller's conf, run the
+    // fixed rounds on a loop session, hand back checkpointed rows
     val und = scope.checkpointed(edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
